@@ -192,7 +192,8 @@ def q_rt_alp(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_rt_maponly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Map-only (shuffle='none') encode round trip: zero raw-byte
     shuffle, salt = input partition id — the scale lever for inputs
-    already clustered by the key dimensions (encode.make_map_encode_fn).
+    already clustered by the key dimensions (encode.encode_table's
+    shuffle="none" shape).
     Bit-identity must hold exactly as for the shuffled path."""
     df = _webtext(spark, sf_dir)
     tag = sf_dir.strip("/").replace("/", "_")

@@ -38,9 +38,9 @@ Reader
 
 Writer
 ------
-* Each task encodes ITS OWN partition's rows — the map-only encode path
+* Each task encodes ITS OWN partition's rows — the map-only encode shape
   (salt = partition id, zero raw-byte shuffle; see
-  ``encode.make_map_encode_fn``) — into one parquet file under
+  ``encode.encode_table(shuffle="none")``) — into one parquet file under
   ``data/``. Like ``streaming.encode_stream``, the writer cannot scan
   its own future, so the key geometry is pinned up front via options:
   ``resolution`` (default 6), ``ts_origin`` (default 0),
@@ -389,8 +389,7 @@ class RaquetReader(DataSourceReader):
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        from . import selector
-        from .scan import _blob_plan, _colspecs
+        from .scan import _block_rows, _colspecs
 
         man = self.man
         # equality deletes applicable to THIS file's chunk (chunk <= the
@@ -417,17 +416,16 @@ class RaquetReader(DataSourceReader):
                 )
             )
         specs = _colspecs(man, dec_cols)
-        blob_names, payload_getter = _blob_plan(man, specs)
+        blob_names, block_rows = _block_rows(man, specs)
         pf = pq.ParquetFile(partition.path)
         sch = pf.metadata.schema.to_arrow_schema()
         bi = sch.get_field_index("block")
         # schema evolution: a pre-evolution chunk file lacks the blob
-        # of a later-added column — read what the file has, default-fill
-        # the rest (mirrors decode_blocks)
-        present = [b for b in blob_names if b in sch.names]
-        defaults = {c["name"]: c.get("default") for c in man["columns"]}
-        need = ["block", "n_rows"] + present
-        arrow_types = {f.name: f.type for f in _to_arrow(specs)}
+        # of a later-added column — read what the file has; the block
+        # iterator default-fills the rest
+        need = ["block", "n_rows"] + [b for b in blob_names if b in sch.names]
+        out_schema = _to_arrow(specs)
+        arrow_types = {f.name: f.type for f in out_schema}
         # value arrays pre-cast to the decoded column types, once per
         # partition — the per-block loop only probes. Composite keys
         # become a pandas MultiIndex built from per-column Arrow casts:
@@ -459,40 +457,15 @@ class RaquetReader(DataSourceReader):
                     continue
             tbl = pf.read_row_group(rg, columns=need)
             blocks = tbl.column("block").to_pylist()
-            n_rows = tbl.column("n_rows").to_pylist()
-            blob_cols = {b: tbl.column(b) for b in present}
-            for i, block in enumerate(blocks):
+            for i, _, dec in block_rows(tbl):
+                block = blocks[i]
                 if block == bk.MANIFEST_BLOCK:
                     continue
                 if self.env.ranges and not self.env.may_contain(block, block):
                     continue
-                n = int(n_rows[i])
-
-                def get_raw(b, i=i):
-                    if b not in blob_cols:
-                        return None
-                    v = blob_cols[b][i].as_py()
-                    return None if v is None else bytes(v)
-
-                get = payload_getter(get_raw)
-                arrays = []
-                for name, _t, kind in specs:
-                    raw = get(name)
-                    want = arrow_types[name]
-                    if raw is None:
-                        d = defaults.get(name)
-                        arr = (
-                            pa.nulls(n, want)
-                            if d is None
-                            else pa.array([d] * n, type=want)
-                        )
-                    else:
-                        arr = selector.decode_column_arrow(raw, kind, n)
-                        if arr.type != want:
-                            arr = arr.cast(want)
-                    arrays.append(arr)
                 batch = pa.RecordBatch.from_arrays(
-                    arrays, names=[s[0] for s in specs]
+                    [dec(f.name).cast(f.type) for f in out_schema],
+                    schema=out_schema,
                 )
                 if applicable:
                     import pyarrow.compute as pc

@@ -8,7 +8,7 @@ its phases map onto a declarative plan —
     --------------------------------        ------------------------------
     bind: tile grid + dataset stats         key_col() + choose_resolution
     per-thread tile queue                   shuffle by (block, salt):
-                                              groupBy().applyInPandas
+                                              sorted-partition mapInArrow
     per-tile warp + gzip per band           per-block per-column codec
                                               auto-select (Arrow batches)
     empty-tile skip (:444-483)              .where() before encode
@@ -17,10 +17,11 @@ its phases map onto a declarative plan —
     no skew handling (uniform grid)         explicit salt column splits
                                               oversized blocks
 
-The only shuffle in the job is the groupBy on (block, salt) — there are
-no joins on the encode path, matching the reference's design (SURVEY.md
-§2.3). Skew: block keys are url-hash-spread, so hot *domains* do not
-create hot blocks; hot *time buckets* (crawl bursts) can — the salt
+The only shuffle in the job is the repartition on (block, salt) (or on
+the planned bin key, whose only join is a broadcast of the small
+placement plan), matching the reference's design (SURVEY.md §2.3).
+Skew: block keys are url-hash-spread, so hot *domains* do not create
+hot blocks; hot *time buckets* (crawl bursts) can — the salt
 splits any block above ``max_rows_per_block`` into independently encoded
 sub-blocks that readers treat as row-groups of the same logical block.
 """
@@ -34,7 +35,6 @@ import time
 import uuid
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -42,6 +42,7 @@ from pyspark.sql import types as T
 
 from . import blockkey as bk
 from . import manifest as mf
+from . import placement
 from . import selector
 
 BLOCK = "block"
@@ -158,12 +159,13 @@ def encode_block_arrow(
 ) -> dict:
     """Encode one block's rows (an Arrow table) -> one output row dict.
 
-    THE encode kernel for every path (batch applyInArrow, mask
-    re-encode, streaming). No pandas, no per-value Python objects:
-    string/binary columns never leave Arrow buffers; numerics drop to
-    numpy views. Rows are deterministically ordered (ts, url,
-    nulls first) so re-encoding the same block yields identical bytes
-    (resume idempotency) and timestamp deltas stay small.
+    THE encode kernel for every path (partition encode, mask
+    re-encode, compaction, streaming, the datasource writer). No
+    pandas, no per-value Python objects: string/binary columns never
+    leave Arrow buffers; numerics drop to numpy views. Rows are
+    deterministically ordered (ts, url, nulls first) so re-encoding the
+    same block yields identical bytes (resume idempotency) and
+    timestamp deltas stay small.
     """
     import pyarrow.compute as pc
 
@@ -255,156 +257,21 @@ def encode_block_arrow(
     return row
 
 
-def _pdf_to_arrow(pdf: pd.DataFrame, col_specs: list[tuple[str, str]]) -> "pa.Table":
-    """pandas -> Arrow with the engine's explicit per-kind types (the
-    mask/transform path decodes to pandas; this keeps its re-encode
-    bit-consistent with the batch Arrow path)."""
-    arrays, names = [], []
-    for name, kind, *_ in col_specs:
-        s = pdf[name]
-        if kind == selector.KIND_STRING:
-            arrays.append(pa.array(s, type=pa.large_string()))
-        elif kind == selector.KIND_BINARY:
-            arrays.append(pa.array(s, type=pa.large_binary()))
-        elif kind == selector.KIND_TIMESTAMP:
-            arrays.append(pa.Array.from_pandas(s, type=pa.timestamp("us")))
-        elif kind == selector.KIND_DOUBLE:
-            arrays.append(pa.array(s.to_numpy(dtype=np.float64), type=pa.float64()))
-        else:
-            arrays.append(pa.Array.from_pandas(s, type=pa.int64()))
-        names.append(name)
-    return pa.table(arrays, names=names)
-
-
-def encode_block_pdf(
-    pdf: pd.DataFrame,
-    col_specs: list[tuple[str, str]],
-    sort_cols: list[str],
-    zlib_level: int,
-    block: int,
-    salt: int,
-    ts_col: str | None,
-    effort: str = selector.EFFORT_MAX,
-    groups: dict[str, list[str]] | None = None,
-) -> dict:
-    """pandas wrapper over :func:`encode_block_arrow` (transform path)."""
-    return encode_block_arrow(
-        _pdf_to_arrow(pdf, col_specs), col_specs, sort_cols, zlib_level,
-        block, salt, ts_col, effort, groups
-    )
-
-
 def sort_cols_for(columns: list[dict], url_col: str, ts_col: str | None) -> list[str]:
     names = {c["name"] for c in columns}
     return [c for c in (ts_col, url_col) if c and c in names] or [columns[0]["name"]]
 
 
-def make_encode_fn(
+def make_group_encode_fn(
     columns: list[dict], url_col: str, ts_col: str | None, zlib_level: int,
     effort: str = selector.EFFORT_MAX,
     groups: dict[str, list[str]] | None = None,
 ):
-    """Per-(block, salt) encoder run via applyInArrow: the group arrives
-    as a pa.Table (string/binary data stays in Arrow buffers — no pandas
-    object materialization, which dominated memory traffic and capped
-    multi-core scaling), one block row goes back as a 1-row pa.Table."""
-
-    col_specs = [(c["name"], c["kind"], c.get("codec")) for c in columns]
-    sort_cols = sort_cols_for(columns, url_col, ts_col)
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    arrow_schema = to_arrow_schema(blocks_schema(columns, groups))
-
-    def encode_fn(key: tuple, tbl: "pa.Table") -> "pa.Table":
-        block, salt = (
-            k.as_py() if hasattr(k, "as_py") else int(k) for k in key
-        )
-        row = encode_block_arrow(
-            tbl, col_specs, sort_cols, zlib_level, int(block), int(salt), ts_col,
-            effort, groups,
-        )
-        arrays = [
-            pa.array([row.get(f.name)], type=f.type) for f in arrow_schema
-        ]
-        return pa.Table.from_arrays(arrays, schema=arrow_schema)
-
-    return encode_fn
-
-
-def make_map_encode_fn(
-    columns: list[dict], url_col: str, ts_col: str | None, zlib_level: int,
-    effort: str = selector.EFFORT_MAX,
-    groups: dict[str, list[str]] | None = None,
-):
-    """Per-PARTITION encoder run via mapInArrow — the shuffle-free
-    encode path. Each input partition locally groups its rows by block
-    key and emits one encoded row per (block, salt=partitionId): the
-    raw bytes never cross the network. The salt dimension already
-    models split blocks (hot-key salting), so readers need no changes —
-    a block's rows are simply spread over as many salted rows as input
-    partitions that touched it.
-
-    The trade, explicitly: with K partitions contributing to each block
-    cell, blobs are ~K× smaller, so compression degrades toward the
-    small-blob regime (the reference has the same trade between tile
-    size and ratio). Right when the input is already clustered by the
-    key dimensions (an Iceberg table partitioned by crawl date ~ the
-    time cells) — then K is small and the shuffle saved at 100 TB is
-    the dominant cost. Wrong for uniformly random input at high
-    resolution; use the default hash-shuffle path there."""
-
-    col_specs = [(c["name"], c["kind"], c.get("codec")) for c in columns]
-    sort_cols = sort_cols_for(columns, url_col, ts_col)
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    arrow_schema = to_arrow_schema(blocks_schema(columns, groups))
-    ROWS_PER_OUT_BATCH = 32  # bound driver/exchange batch size (~blobs)
-
-    def encode_partition(batches):
-        from pyspark import TaskContext
-
-        ctx = TaskContext.get()
-        pid = int(ctx.partitionId()) if ctx is not None else 0
-        batches = list(batches)
-        if not batches:
-            return
-        tbl = pa.Table.from_batches(batches).combine_chunks()
-        blocks_np = tbl[BLOCK].to_numpy(zero_copy_only=False)
-        order = np.argsort(blocks_np, kind="stable")
-        tbl = tbl.take(pa.array(order))
-        blocks_np = blocks_np[order]
-        bounds = np.flatnonzero(
-            np.r_[True, blocks_np[1:] != blocks_np[:-1], True]
-        )
-        rows: list[dict] = []
-        for s, e in zip(bounds[:-1], bounds[1:]):
-            sub = tbl.slice(int(s), int(e - s))
-            rows.append(
-                encode_block_arrow(
-                    sub, col_specs, sort_cols, zlib_level,
-                    int(blocks_np[s]), pid, ts_col, effort, groups,
-                )
-            )
-            if len(rows) >= ROWS_PER_OUT_BATCH:
-                yield _rows_to_batch(rows, arrow_schema)
-                rows = []
-        if rows:
-            yield _rows_to_batch(rows, arrow_schema)
-
-    return encode_partition
-
-
-def make_local_group_encode_fn(
-    columns: list[dict], url_col: str, ts_col: str | None, zlib_level: int,
-    effort: str = selector.EFFORT_MAX,
-    groups: dict[str, list[str]] | None = None,
-):
-    """Per-PARTITION encoder for the PLANNED placement path: every
-    (block, salt) group arrives whole in one partition (the driver's
-    LPT assignment + exact murmur targeting guarantee it), so the
-    partition locally sorts by (block, salt) and encodes each complete
-    slice — same per-group bytes as the groupBy/applyInArrow path, no
-    grouping exchange semantics needed from Catalyst."""
+    """THE partition encoder, run via mapInArrow on every encode shape
+    (see :func:`encode_table`): each partition arrives sorted by
+    (block, salt) and holds every (block, salt) group whole, so the
+    contiguous runs of one key are the encode groups — one output row
+    per run, encoded by :func:`encode_block_arrow`."""
 
     col_specs = [(c["name"], c["kind"], c.get("codec")) for c in columns]
     sort_cols = sort_cols_for(columns, url_col, ts_col)
@@ -512,18 +379,22 @@ def encode_table(
 
     ``shuffle`` picks how rows reach their encode group: ``"hash"``
     (default) is one hash repartition on (block, salt) — every block's
-    rows are co-located, one encoded row per (block, salt). ``"none"``
-    is the map-only path (:func:`make_map_encode_fn`): zero raw-byte
-    shuffle, salt = input partition id, K× more (smaller) block rows
-    when K partitions touch a cell — the explicit scale lever for
-    inputs already clustered by the key dimensions.
+    rows are co-located, one encoded row per (block, salt); heavy
+    max-effort jobs instead repartition on a planned ``_px`` key that
+    LPT-packs the groups into byte-near-equal bins. ``"none"`` is the
+    map-only path: no exchange, zero raw-byte shuffle, salt = input
+    partition id, K× more (smaller) block rows when K partitions touch
+    a cell. That trades ratio (blobs ~K× smaller, toward the small-blob
+    regime) for the shuffle — right when the input is already clustered
+    by the key dimensions (an Iceberg table partitioned by crawl date),
+    wrong for uniformly random input at high resolution.
 
-    Returns (blocks_df, unfinalized manifest). The ONLY shuffle is a
-    range repartition on (block, salt) placed BEFORE the groupBy —
-    range partitioning satisfies the grouping's clustered-distribution
-    requirement, so Catalyst adds no second exchange, and the encoded
-    output comes out globally block-ordered for free (row-group pruning
-    needs it; the reference's ORDER BY block, README.md:259-261).
+    Every shape then sorts each partition by (block, salt) and encodes
+    it with the one streaming partition encoder
+    (:func:`make_group_encode_fn`). Returns (blocks_df, unfinalized
+    manifest); the encoded rows come out hash-placed, and
+    :func:`write_blocks` restores global block order on them (row-group
+    pruning needs it; the reference's ORDER BY block, README.md:259-261).
     ``ts_range`` = (min_epoch, max_epoch) skips the bind-time min/max
     scan of the timestamp column. ``chunk`` = (k, n_chunks) restricts
     the plan to one deterministic slice of the key space before the
@@ -623,12 +494,10 @@ def encode_table(
         )
 
     spark = df.sparkSession
-    schema = blocks_schema(columns, groups)
     if shuffle == "none":
-        blocks = keyed.mapInArrow(
-            make_map_encode_fn(columns, url_col, ts_col, zlib_level, effort, groups),
-            schema=schema,
-        )
+        # map-only: no exchange; each input partition encodes its own
+        # sub-row of every block it touches (salt = partition id)
+        keyed = keyed.withColumn(SALT, F.spark_partition_id())
     elif shuffle == "hash":
         p = max(2, spark.sparkContext.defaultParallelism)
         # Group placement. Hashing (block, salt) keys into p partitions
@@ -641,11 +510,8 @@ def encode_table(
         # 19-22 s across n_parts 32..1024, and 2.4 s -> 5.8 s at
         # fast effort). Instead, when the job is heavy enough and the
         # key space enumerable, spend one narrow pre-pass on per-group
-        # row counts, LPT-pack groups into byte-near-equal bins
-        # driver-side, and address each bin's exact shuffle partition
-        # through a searched murmur representative (placement.py);
-        # grouping then happens locally inside each partition
-        # (mapInArrow), since every group lands whole. Guide §8:
+        # row counts and LPT-pack groups into byte-near-equal bins at
+        # their exact shuffle partitions (placement.plan). Guide §8:
         # decide placement with small rows, move the payload bytes
         # once. Light jobs (deltas, micro-batches) and huge key spaces
         # (driver-metadata bound) keep the plain hash placement.
@@ -661,61 +527,37 @@ def encode_table(
             and cells * n_salt <= 65536  # driver-metadata bound
             and est_rows >= 64 * target_rows_per_block  # pre-pass ≪ encode
         )
-        if planned:
-            from . import placement
-
-            counts = (
-                keyed.groupBy(BLOCK, SALT)
-                .agg(F.count(F.lit(1)).alias("_n"))
-                .collect()
-            )
-            # 2 waves of byte-equal bins: one wave leaves the wall
-            # hostage to a single slow bin (measured 16.0-24.6 s noop-
-            # isolated vs 13.3-14.3 s at 2x), four pay ~0.1 s/task
-            # Python-exec overhead for insurance the LPT packing no
-            # longer needs (14.6-15.3 s) — 2x measured best
-            n_parts = 2 * p
-            pids = placement.lpt_bins([int(r["_n"]) for r in counts], n_parts)
-            reps = placement.partition_reps(n_parts)
-            plan_df = spark.createDataFrame(
-                [
-                    (int(r[BLOCK]), int(r[SALT]), reps[pid])
-                    for r, pid in zip(counts, pids)
-                ],
-                schema=f"{BLOCK} long, {SALT} int, _px long",
-            )
+        # 2 waves of byte-equal bins: one wave leaves the wall hostage
+        # to a single slow bin (measured 16.0-24.6 s noop-isolated vs
+        # 13.3-14.3 s at 2x), four pay ~0.1 s/task Python-exec overhead
+        # for insurance the LPT packing no longer needs (14.6-15.3 s)
+        n_parts = 2 * p
+        px = (
+            placement.plan(keyed, [BLOCK, SALT], F.lit(1), n_parts, cap=65536)
+            if planned
+            else None
+        )
+        if px is not None:
             # left join: a group the pre-pass missed (impossible for a
             # deterministic source) still encodes, placed arbitrarily
-            keyed = keyed.join(F.broadcast(plan_df), on=[BLOCK, SALT], how="left")
-            # JVM-side (spillable) per-partition sort so the Python
-            # encoder can STREAM contiguous groups instead of
-            # materializing its whole partition (bins grow with
-            # data at scale; one group is the memory bound either way)
-            blocks = (
-                keyed.repartition(n_parts, "_px")
-                .sortWithinPartitions(BLOCK, SALT)
-                .mapInArrow(
-                    make_local_group_encode_fn(
-                        columns, url_col, ts_col, zlib_level, effort, groups
-                    ),
-                    schema=schema,
-                )
-            )
+            keyed = keyed.join(
+                F.broadcast(px), on=[BLOCK, SALT], how="left"
+            ).repartition(n_parts, "_px")
         else:
-            n_parts = num_partitions or p
-            # hash repartition (satisfies the groupBy's clustered
-            # distribution -> no second exchange) — NOT
-            # repartitionByRange, whose boundary sampling executes the
-            # whole child an extra time (a full input scan here);
-            # global block order is restored cheaply on the encoded
-            # rows in write_blocks, which are ~5x smaller than input
-            keyed = keyed.repartition(n_parts, BLOCK, SALT)
-            encode_fn = make_encode_fn(
-                columns, url_col, ts_col, zlib_level, effort, groups
-            )
-            blocks = keyed.groupBy(BLOCK, SALT).applyInArrow(encode_fn, schema=schema)
+            # hash repartition — NOT repartitionByRange, whose boundary
+            # sampling executes the whole child an extra time (a full
+            # input scan here); global block order is restored cheaply
+            # on the encoded rows in write_blocks, ~5x smaller than input
+            keyed = keyed.repartition(num_partitions or p, BLOCK, SALT)
     else:
         raise ValueError(f"shuffle must be 'hash' or 'none', got {shuffle!r}")
+    # JVM-side (spillable) per-partition sort, so the Python encoder
+    # STREAMS contiguous groups: peak Python memory is one group, never
+    # a whole partition (which grows with data/bins at scale)
+    blocks = keyed.sortWithinPartitions(BLOCK, SALT).mapInArrow(
+        make_group_encode_fn(columns, url_col, ts_col, zlib_level, effort, groups),
+        schema=blocks_schema(columns, groups),
+    )
 
     man = mf.build_manifest(
         columns=columns,

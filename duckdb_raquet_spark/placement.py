@@ -4,8 +4,8 @@ survives the shuffle instead of being re-rolled by the partitioner's
 own hash (balls-into-bins collisions leave some tasks with several
 serial codec groups while cores idle — guide §2.5).
 
-Used by the per-block re-encode spread (scan.py) and the planned
-encode placement (encode.py)."""
+:func:`plan` is the one entry point, shared by the planned encode
+placement (encode.py) and the per-block re-encode spread (scan.py)."""
 
 from __future__ import annotations
 
@@ -80,3 +80,35 @@ def lpt_bins(sizes: list[int], n_bins: int) -> list[int]:
     by_load = sorted(range(n_bins), key=lambda b: -loads[b])
     relabel = {b: pid for pid, b in enumerate(by_load)}
     return [relabel[b] for b in raw]
+
+
+def plan(df, key_cols: list[str], cost_col, n_bins: int, cap: int):
+    """Decide placement on small rows, move the payload once (Jigsaw,
+    SIGMOD'21): aggregate ``cost_col`` per key of ``df`` — keys are
+    unique by construction, so joining the plan back never multiplies
+    rows — LPT-pack the keys into ``n_bins`` cost-near-equal bins, and
+    return the broadcast-sized plan frame ``key_cols + [_px]``, where
+    ``_px`` is the searched murmur representative of the key's bin:
+    ``repartition(n_bins, "_px")`` then lands each key in exactly its
+    bin. ``None`` when there are more than ``cap`` keys (driver-metadata
+    bound) — callers keep their unplanned placement."""
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    rows = (
+        df.groupBy(*key_cols)
+        .agg(F.sum(cost_col).alias("_cost"))
+        .limit(cap + 1)
+        .collect()
+    )
+    if not rows or len(rows) > cap:
+        return None
+    bins = lpt_bins([int(r["_cost"] or 0) for r in rows], n_bins)
+    reps = partition_reps(n_bins)
+    schema = T.StructType(
+        [df.schema[k] for k in key_cols] + [T.StructField("_px", T.LongType())]
+    )
+    return df.sparkSession.createDataFrame(
+        [(*(r[k] for k in key_cols), reps[b]) for r, b in zip(rows, bins)],
+        schema=schema,
+    )

@@ -30,18 +30,16 @@ from pyspark.sql import functions as F
 from . import blockkey as bk
 from . import manifest as mf
 from . import selector
-from .placement import lpt_bins as _lpt_bins
-from .placement import murmur3_hash_long as _murmur3_hash_long  # noqa: F401 (pinned by tests)
-from .placement import partition_reps as _partition_reps
+from . import placement
 from .encode import (
     BLOCK,
     SALT,
     blob_col,
     blocks_schema,
     encode_block_arrow,
-    encode_block_pdf,
     sort_cols_for,
     _data_path,
+    _rows_to_batch,
 )
 
 # ----------------------------------------------------------------- reads ----
@@ -327,74 +325,90 @@ def _colspecs(man: dict, cols: list[str] | None) -> list[tuple[str, str, str]]:
 
 
 
-def _blob_plan(man: dict, specs: list[tuple[str, str, str]]):
-    """Resolve which blob columns the requested logical columns live in
-    (column-group members share one interleaved blob) and build a
-    per-row payload getter that decompresses each touched group ONCE.
+def _block_rows(man: dict, specs: list[tuple[str, str, str]]):
+    """THE per-block decode loop, shared by every block-level read and
+    rewrite. Returns ``(blob_names, rows)``: ``blob_names`` are the
+    payload columns the requested logical ``specs`` live in, and
+    ``rows(batch)`` yields ``(i, n_rows, dec)`` for each block row ``i``
+    of an Arrow batch or table, where ``dec(name) -> pa.Array`` lazily
+    decodes one requested column (a column skipped by the caller never
+    touches its payload).
 
-    Renamed columns: the payload keeps its immutable PHYSICAL name
-    (the Iceberg field-id discipline — old and new chunks then agree on
-    one blob name forever); the manifest's ``physical`` key maps the
-    logical name here, the single payload-resolution choke point."""
-    from .codecs import registry as _registry
+    * Column groups: members share one interleaved blob, decompressed
+      once per block row however many members are decoded.
+    * Renamed columns: the payload keeps its immutable PHYSICAL name
+      (the Iceberg field-id discipline — old and new chunks agree on
+      one blob name forever); the manifest's ``physical`` key maps the
+      logical name here, the single payload-resolution choke point.
+    * Schema evolution: a NULL payload (a chunk older than an added
+      column) or a payload column the batch lacks decodes as the
+      column's recorded default (NULL if unset).
 
-    phys = {c["name"]: c.get("physical", c["name"]) for c in man["columns"]}
-    groups = man.get("column_groups") or {}
-    m2g = {m: g for g, ms in groups.items() for m in ms}
-    blob_names: list[str] = []
-    seen: set[str] = set()
-    for name, _, _ in specs:
-        b = blob_col(m2g.get(name, phys.get(name, name)))
-        if b not in seen:
-            seen.add(b)
-            blob_names.append(b)
-
-    def payload_getter(get_blob):
-        cache: dict[str, list[bytes]] = {}
-
-        def get(name: str) -> bytes | None:
-            g = m2g.get(name)
-            if g is None:
-                return get_blob(blob_col(phys.get(name, name)))
-            if g not in cache:
-                blob = get_blob(blob_col(g))
-                cache[g] = (
-                    [None] * len(groups[g])
-                    if blob is None
-                    else _registry.decode_group(blob)
-                )
-            return cache[g][groups[g].index(name)]
-
-        return get
-
-    return blob_names, payload_getter
-
-
-def _evo_decode_fn(columns: list[dict], specs):
-    """Evolution-aware per-column decode: a NULL payload (chunk older
-    than an added column) yields the column's recorded default instead
-    of crashing. Returns ``dec(get, name, kind, n) -> pa.Array``."""
+    Arrays come back in the decode kernel's type per kind (large
+    strings/binaries, int64, naive timestamp[us], float64); callers
+    cast to their output schema."""
     import pyarrow as pa
 
-    from pyspark.sql import types as _T
-    from pyspark.sql.pandas.types import to_arrow_schema as _tas
+    from .codecs import registry as _registry
 
-    defaults = {c["name"]: c.get("default") for c in columns}
-    logical = _tas(
-        _T._parse_datatype_string(
-            ", ".join(f"`{n}` {t}" for n, t, _ in specs)
-        )
-    )
+    fill_type = {
+        selector.KIND_STRING: pa.large_string(),
+        selector.KIND_BINARY: pa.large_binary(),
+        selector.KIND_INT: pa.int64(),
+        selector.KIND_TIMESTAMP: pa.timestamp("us"),
+        selector.KIND_DOUBLE: pa.float64(),
+    }
+    phys = {c["name"]: c.get("physical", c["name"]) for c in man["columns"]}
+    defaults = {c["name"]: c.get("default") for c in man["columns"]}
+    groups = man.get("column_groups") or {}
+    m2g = {m: g for g, ms in groups.items() for m in ms}
+    kinds = {name: kind for name, _, kind in specs}
+    blob_of = {name: blob_col(m2g.get(name, phys[name])) for name in kinds}
+    blob_names = list(dict.fromkeys(blob_of.values()))
 
-    def dec(get, name: str, kind: str, n: int) -> "pa.Array":
-        raw = get(name)
-        if raw is None:
-            d = defaults.get(name)
-            ft = logical.field(name).type
-            return pa.nulls(n, ft) if d is None else pa.array([d] * n, type=ft)
-        return selector.decode_column_arrow(raw, kind, n)
+    def rows(rb):
+        names = rb.schema.names
+        n_rows = rb.column(names.index("n_rows")).to_pylist()
+        cols = {b: rb.column(names.index(b)) for b in blob_names if b in names}
+        for i, n in enumerate(n_rows):
+            members: dict[str, list] = {}
 
-    return dec
+            def dec(name: str, i=i, n=n, members=members) -> "pa.Array":
+                b = blob_of[name]
+                col = cols.get(b)
+                g = m2g.get(name)
+                if g is None:
+                    raw = None if col is None else col[i].as_py()
+                else:
+                    if b not in members:
+                        blob = None if col is None else col[i].as_py()
+                        members[b] = (
+                            [None] * len(groups[g])
+                            if blob is None
+                            else _registry.decode_group(blob)
+                        )
+                    raw = members[b][groups[g].index(name)]
+                if raw is None:
+                    d = defaults.get(name)
+                    t = fill_type[kinds[name]]
+                    return pa.nulls(n, t) if d is None else pa.array([d] * n, type=t)
+                return selector.decode_column_arrow(raw, kinds[name], n)
+
+            yield i, int(n), dec
+
+    return blob_names, rows
+
+
+def _input_bytes(df: DataFrame) -> int | None:
+    """Bytes of the files ``df`` scans — a file listing, no plan
+    compile. ``None`` when a file is not on the local filesystem
+    (unknown scheme): callers fall back to their size-blind rule."""
+    from urllib.parse import urlparse
+
+    try:
+        return sum(os.path.getsize(urlparse(f).path) for f in df.inputFiles())
+    except OSError:
+        return None
 
 
 def _codec_bound_decode(man: dict, names: list[str], share: float = 0.05) -> bool:
@@ -453,10 +467,7 @@ def decode_blocks(
     specs = _colspecs(man, cols)
     if eq_filter is not None and eq_filter[0] not in {s[0] for s in specs}:
         raise ValueError(f"eq_filter column {eq_filter[0]!r} not in decode set")
-    blob_names, payload_getter = _blob_plan(man, specs)
-    # schema evolution: chunks older than an added column carry a NULL
-    # payload; decode fills the column's recorded default (NULL if unset)
-    defaults = {c["name"]: c.get("default") for c in man["columns"]}
+    blob_names, block_rows = _block_rows(man, specs)
     needed = [BLOCK, SALT, "n_rows"] + blob_names
     if with_chunk:
         # chunk is the partition column of the chunked layout; rows
@@ -492,16 +503,8 @@ def decode_blocks(
         # tables and pruned deltas decode faster than their exchange
         # schedules, and must not even pay the .rdd partition probe;
         # unknown schemes fall back to the partition-count rule alone
-        big_enough = True
-        try:
-            from urllib.parse import urlparse
-            import os as _os
-
-            paths = [urlparse(f).path for f in src.inputFiles()]
-            big_enough = sum(_os.path.getsize(p) for p in paths) >= (32 << 20)
-        except OSError:
-            pass
-        if big_enough:
+        tot = _input_bytes(src)
+        if tot is None or tot >= (32 << 20):
             cur = src.rdd.getNumPartitions()
             if 1 < cur < 4 * sc.defaultParallelism:
                 # keyless round-robin, deliberately NOT the byte-LPT
@@ -521,80 +524,35 @@ def decode_blocks(
     out_schema = ", ".join(schema_parts)
     arrow_schema = to_arrow_schema(T._parse_datatype_string(out_schema))
 
+    key_cols = (["chunk"] if with_chunk else []) + (
+        [BLOCK, SALT] if with_block else []
+    )
+
     def fn(batches):
         for rb in batches:
-            n_rows_col = rb.column(rb.schema.get_field_index("n_rows"))
-            blk_col = rb.column(rb.schema.get_field_index(BLOCK))
-            salt_col = rb.column(rb.schema.get_field_index(SALT))
-            chk_col = (
-                rb.column(rb.schema.get_field_index("chunk"))
-                if with_chunk
-                else None
-            )
-            payload_cols = {
-                b: rb.column(rb.schema.get_field_index(b)) for b in blob_names
-            }
-            for i in range(rb.num_rows):
-                n = n_rows_col[i].as_py()
-
-                def get_raw(b, i=i):
-                    v = payload_cols[b][i].as_py()
-                    return None if v is None else bytes(v)
-
-                get = payload_getter(get_raw)
-
-                def dec(name: str, kind: str, n: int = n) -> pa.Array:
-                    raw = get(name)
-                    if raw is None:  # pre-evolution chunk: default-fill
-                        ftype = arrow_schema.field(name).type
-                        d = defaults.get(name)
-                        if d is None:
-                            return pa.nulls(n, type=ftype)
-                        return pa.array([d] * n, type=ftype)
-                    return selector.decode_column_arrow(raw, kind, n)
-
-                decoded: dict[str, pa.Array] = {}
+            keys = [rb.column(c).to_pylist() for c in key_cols]
+            for i, n, dec in block_rows(rb):
                 take_idx = None
+                decoded: dict[str, pa.Array] = {}
                 if eq_filter is not None:
+                    # decode the filter column FIRST; a block with no
+                    # matching row touches no other payload
                     fname, fval = eq_filter
-                    kind = next(k for nm, _, k in specs if nm == fname)
-                    farr = dec(fname, kind)
+                    farr = dec(fname)
                     eq = pc.equal(farr, pa.scalar(fval, type=farr.type))
                     idx = np.flatnonzero(
                         eq.to_numpy(zero_copy_only=False) == True  # noqa: E712
                     )
                     if len(idx) == 0:
-                        continue  # no other payload is touched
+                        continue
                     take_idx = pa.array(idx)
                     decoded[fname] = farr.take(take_idx)
-                    n_out = len(idx)
-                else:
-                    n_out = n
-                arrays = []
-                if with_chunk:
-                    arrays.append(
-                        pa.array(
-                            np.full(n_out, chk_col[i].as_py(), dtype=np.int32),
-                            type=pa.int32(),
-                        )
-                    )
-                if with_block:
-                    arrays.append(
-                        pa.array(
-                            np.full(n_out, blk_col[i].as_py(), dtype=np.int64),
-                            type=pa.int64(),
-                        )
-                    )
-                    arrays.append(
-                        pa.array(
-                            np.full(n_out, salt_col[i].as_py(), dtype=np.int32),
-                            type=pa.int32(),
-                        )
-                    )
-                for name, _, kind in specs:
+                    n = len(idx)
+                arrays = [pa.array(np.full(n, k[i])) for k in keys]
+                for name, _, _ in specs:
                     arr = decoded.get(name)
                     if arr is None:
-                        arr = dec(name, kind)
+                        arr = dec(name)
                         if take_idx is not None:
                             arr = arr.take(take_idx)
                     arrays.append(arr)
@@ -1707,15 +1665,7 @@ def _spread_block_rows(blocks: DataFrame, needed: list[str]) -> DataFrame:
     sc = spark.sparkContext
     p = max(1, sc.defaultParallelism)
     src = blocks.select(*needed)
-    tot = None
-    try:
-        from urllib.parse import urlparse
-
-        paths = [urlparse(f).path for f in src.inputFiles()]
-        if paths:
-            tot = sum(os.path.getsize(q) for q in paths)
-    except OSError:
-        tot = None
+    tot = _input_bytes(src) or None
     # bin count sized so each bin holds ~2 MB of encoded payload: the
     # per-task Python-exec overhead (~0.1 s) stays a small fraction of
     # a codec-bound bin's work; floored at the session's cores, capped
@@ -1730,34 +1680,91 @@ def _spread_block_rows(blocks: DataFrame, needed: list[str]) -> DataFrame:
     # pruning), so it stays noise next to the codec work it balances
     worth_planning = tot is not None and (p << 21) <= tot <= (1 << 34)
     if worth_planning and "stats" in blocks.columns:
-        cap = 200_000  # driver-metadata bound
-        meta = (
-            blocks.select(BLOCK, SALT, F.col("stats.enc_bytes").alias("_sz"))
-            .limit(cap + 1)
-            .collect()
-        )
-        if 0 < len(meta) <= cap:
-            # LPT greedy: per-bin byte sums near-equal (plain rank-
-            # dealing left bin 0 with 3.3x the median bytes), heaviest
-            # bins scheduled first (lowest partition indices)
-            pids = _lpt_bins([int(r["_sz"] or 0) for r in meta], n)
-            reps = _partition_reps(n)
-            plan = [
-                (int(r[BLOCK]), int(r[SALT]), reps[pid])
-                for r, pid in zip(meta, pids)
-            ]
-            map_df = spark.createDataFrame(
-                plan, schema=f"{BLOCK} long, {SALT} int, _px long"
-            )
+        # LPT greedy: per-bin byte sums near-equal (plain rank-dealing
+        # left bin 0 with 3.3x the median bytes), heaviest bins
+        # scheduled first (lowest partition indices); block rows that
+        # share a (block, salt) key (appended chunks, map-only salts)
+        # share one bin
+        px = placement.plan(blocks, [BLOCK, SALT], "stats.enc_bytes", n, cap=200_000)
+        if px is not None:
             # left join: a block row the metadata pass missed (out of
             # the immutable-table contract) still flows through, with
             # arbitrary placement, rather than being dropped
             return (
-                src.join(F.broadcast(map_df), on=[BLOCK, SALT], how="left")
+                src.join(F.broadcast(px), on=[BLOCK, SALT], how="left")
                 .repartition(n, "_px")
                 .drop("_px")
             )
     return src.repartition(n)
+
+
+def _block_encoder(man: dict, zlib_level: int):
+    """The encode kernel bound to a table's manifest, for rewrites:
+    ``enc(tbl, block, salt) -> row dict`` re-encodes a block given under
+    LOGICAL column names. Payloads are written under the immutable
+    PHYSICAL names (renamed columns), so rewritten blobs line up with
+    blocks_schema and with passthrough rows."""
+    columns = man["columns"]
+    p_of = {c["name"]: c.get("physical", c["name"]) for c in columns}
+    col_specs = [(p_of[c["name"]], c["kind"], c.get("codec")) for c in columns]
+    sort_cols = sort_cols_for(columns, man["url_col"], man["ts_col"])
+    effort = man.get("effort", selector.EFFORT_MAX)
+    groups = man.get("column_groups") or None
+
+    def enc(tbl, block: int, salt: int) -> dict:
+        return encode_block_arrow(
+            tbl.rename_columns([p_of[c] for c in tbl.column_names]),
+            col_specs, sort_cols, zlib_level, block, salt, man["ts_col"],
+            effort, groups,
+        )
+
+    return enc
+
+
+def _reencode_blocks(
+    blocks: DataFrame, man: dict, apply, zlib_level: int
+) -> DataFrame:
+    """THE block rewrite: block rows are spread
+    (:func:`_spread_block_rows`), then one mapInArrow decodes each
+    block row's columns (:func:`_block_rows`), hands them to
+    ``apply(arrays) -> pa.Table | None`` and re-encodes the result
+    under the block's own key. ``None`` drops the block (empty-block
+    elision, read_raster.cpp:444-483)."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    specs = _colspecs(man, None)
+    schema = blocks_schema(man["columns"], man.get("column_groups"))
+    arrow_schema = to_arrow_schema(schema)
+    blob_names, block_rows = _block_rows(man, specs)
+    enc = _block_encoder(man, zlib_level)
+
+    def fn(batches):
+        for rb in batches:
+            blk = rb.column(BLOCK).to_pylist()
+            salt = rb.column(SALT).to_pylist()
+            out = []
+            for i, _, dec in block_rows(rb):
+                tbl = apply({name: dec(name) for name, _, _ in specs})
+                if tbl is not None:
+                    out.append(enc(tbl, blk[i], salt[i]))
+            if out:
+                yield _rows_to_batch(out, arrow_schema)
+
+    src = _spread_block_rows(blocks, [BLOCK, SALT, "n_rows"] + blob_names)
+    return src.mapInArrow(fn, schema=schema)
+
+
+def _predicate_frame(man: dict, filter_cols: list[str] | None):
+    """``frame(arrays) -> pd.DataFrame``: the view a ``row_filter``
+    predicate sees. Only ``filter_cols`` (default: every column) are
+    materialized as pandas; every other column stays in Arrow buffers
+    from decode through re-encode (a full pandas round-trip of
+    text/html payloads was ~5x the codec cost itself)."""
+    kinds = {c["name"]: c["kind"] for c in man["columns"]}
+    fcols = list(filter_cols) if filter_cols else list(kinds)
+    return lambda arrays: pd.DataFrame(
+        {name: _arrow_to_pandas(arrays[name], kinds[name]) for name in fcols}
+    )
 
 
 def transform_blocks(
@@ -1770,77 +1777,26 @@ def transform_blocks(
     """decode -> row mask -> re-encode, block-local (ST_MaskBandValues*
     analog, /root/reference/src/raster/st_value_mask.cpp:116-237 — the
     round-trip pattern that proves encode/decode are bit-exact inverses).
-    ``row_filter(pdf) -> bool mask`` runs on the decoded block frame.
-    Blocks left empty by the mask are dropped (empty-block elision,
-    read_raster.cpp:444-483).
-
-    ``filter_cols`` names the columns the predicate actually reads: only
-    those are materialized as pandas/Python objects; every other column
-    stays in Arrow buffers from decode through re-encode (a full pandas
-    round-trip of text/html payloads was ~5x the codec cost itself)."""
+    ``row_filter(pdf) -> bool mask`` runs on the decoded block frame,
+    which holds only ``filter_cols`` (default: every column). Blocks
+    left empty by the mask are dropped."""
     import pyarrow as pa
 
-    columns = man["columns"]
-    specs = [(c["name"], c["spark_type"], c["kind"]) for c in columns]
-    sort_cols = sort_cols_for(columns, man["url_col"], man["ts_col"])
-    ts_col = man["ts_col"]
-    effort = man.get("effort", selector.EFFORT_MAX)
-    groups = man.get("column_groups") or None
-    schema = blocks_schema(columns, groups)
-    blob_names, payload_getter = _blob_plan(man, specs)
-    fcols = list(filter_cols) if filter_cols else [n for n, _, _ in specs]
-    p_of = {c["name"]: c.get("physical", c["name"]) for c in columns}
-    col_specs = [
-        (p_of[c["name"]], c["kind"], c.get("codec")) for c in columns
-    ]
-    dec = _evo_decode_fn(columns, specs)
+    frame = _predicate_frame(man, filter_cols)
 
-    def fn(batches):
-        for pdf in batches:
-            out_rows = []
-            # plain tuples + an index map: itertuples would mangle group
-            # blob names like "text+html_blob" into positional attrs
-            ix = {c: i for i, c in enumerate(pdf.columns)}
-            for r in pdf.itertuples(index=False, name=None):
-                n = int(r[ix["n_rows"]])
+    def apply(arrays):
+        mask = np.asarray(row_filter(frame(arrays)), dtype=bool)
+        if not mask.any():
+            return None
+        tbl = pa.table(arrays)
+        return tbl if mask.all() else tbl.filter(pa.array(mask))
 
-                def get_raw(b, r=r):
-                    v = r[ix[b]]
-                    return None if v is None else bytes(v)
-
-                get = payload_getter(get_raw)
-                arrays = {
-                    name: dec(get, name, kind, n) for name, _, kind in specs
-                }
-                frame = pd.DataFrame(
-                    {name: _arrow_to_pandas(arrays[name], kindmap[name]) for name in fcols}
-                )
-                mask = np.asarray(row_filter(frame), dtype=bool)
-                if not mask.any():
-                    continue
-                # physical payload names (renamed columns) so re-encoded
-                # blobs line up with blocks_schema
-                tbl = pa.table({p_of[name]: arrays[name] for name, _, _ in specs})
-                if not mask.all():
-                    tbl = tbl.filter(pa.array(mask))
-                out_rows.append(
-                    encode_block_arrow(
-                        tbl, col_specs, sort_cols, zlib_level,
-                        int(r[ix[BLOCK]]), int(r[ix[SALT]]), ts_col, effort, groups,
-                    )
-                )
-            if out_rows:
-                yield pd.DataFrame(out_rows)
-
-    kindmap = {c["name"]: c["kind"] for c in columns}
-    needed = [BLOCK, SALT, "n_rows"] + blob_names
-    src = _spread_block_rows(blocks, needed)
-    return src.mapInPandas(fn, schema=schema)
+    return _reencode_blocks(blocks, man, apply, zlib_level)
 
 
 def _arrow_to_pandas(arr, kind: str):
-    """Arrow decode output -> the pandas view decode_column would give
-    (predicate semantics must not depend on which decode path ran)."""
+    """Decoded Arrow column -> the pandas view a ``row_filter`` sees
+    (integral nullable ints, float doubles, object strings)."""
     import pyarrow as pa
 
     if kind == selector.KIND_STRING:
@@ -2025,63 +1981,21 @@ def transform_blocks_to_null(
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    columns = man["columns"]
-    specs = [(c["name"], c["spark_type"], c["kind"]) for c in columns]
-    sort_cols = sort_cols_for(columns, man["url_col"], man["ts_col"])
-    ts_col = man["ts_col"]
-    effort = man.get("effort", selector.EFFORT_MAX)
-    groups = man.get("column_groups") or None
-    schema = blocks_schema(columns, groups)
-    blob_names, payload_getter = _blob_plan(man, specs)
-    kindmap = {c["name"]: c["kind"] for c in columns}
-    fcols = list(filter_cols) if filter_cols else [n for n, _, _ in specs]
     to_null = set(null_cols)
-    unknown = to_null - {n for n, _, _ in specs}
+    unknown = to_null - {c["name"] for c in man["columns"]}
     if unknown:
         raise ValueError(f"null_cols not in table: {sorted(unknown)}")
-    p_of = {c["name"]: c.get("physical", c["name"]) for c in columns}
-    col_specs = [
-        (p_of[c["name"]], c["kind"], c.get("codec")) for c in columns
-    ]
-    dec = _evo_decode_fn(columns, specs)
+    frame = _predicate_frame(man, filter_cols)
 
-    def fn(batches):
-        for pdf in batches:
-            out_rows = []
-            ix = {c: i for i, c in enumerate(pdf.columns)}
-            for r in pdf.itertuples(index=False, name=None):
-                n = int(r[ix["n_rows"]])
+    def apply(arrays):
+        mask = pa.array(np.asarray(row_filter(frame(arrays)), dtype=bool))
+        return pa.table({
+            name: pc.if_else(mask, arr, pa.scalar(None, type=arr.type))
+            if name in to_null else arr
+            for name, arr in arrays.items()
+        })
 
-                def get_raw(b, r=r):
-                    v = r[ix[b]]
-                    return None if v is None else bytes(v)
-
-                get = payload_getter(get_raw)
-                arrays = {
-                    name: dec(get, name, kind, n) for name, _, kind in specs
-                }
-                frame = pd.DataFrame(
-                    {name: _arrow_to_pandas(arrays[name], kindmap[name]) for name in fcols}
-                )
-                mask = pa.array(np.asarray(row_filter(frame), dtype=bool))
-                cols = {}
-                for name, _, kind in specs:
-                    arr = arrays[name]
-                    if name in to_null:
-                        arr = pc.if_else(mask, arr, pa.scalar(None, type=arr.type))
-                    cols[p_of[name]] = arr
-                out_rows.append(
-                    encode_block_arrow(
-                        pa.table(cols), col_specs, sort_cols, zlib_level,
-                        int(r[ix[BLOCK]]), int(r[ix[SALT]]), ts_col, effort, groups,
-                    )
-                )
-            if out_rows:
-                yield pd.DataFrame(out_rows)
-
-    needed = [BLOCK, SALT, "n_rows"] + blob_names
-    src = _spread_block_rows(blocks, needed)
-    return src.mapInPandas(fn, schema=schema)
+    return _reencode_blocks(blocks, man, apply, zlib_level)
 
 
 def mask_to_null_in(
@@ -2128,29 +2042,22 @@ def column_math_stats(blocks: DataFrame, man: dict, cols: list[str], expr_fn) ->
     a dict of float64 numpy arrays (NULL -> NaN) and returns one array;
     NaN/inf results are excluded from the stats (nodata semantics)."""
     specs = _colspecs(man, cols)
-    blob_names, payload_getter = _blob_plan(man, specs)
-    needed = ["n_rows"] + blob_names
-    src = blocks.select(*needed)
+    blob_names, block_rows = _block_rows(man, specs)
+    src = blocks.select("n_rows", *blob_names)
 
     def fn(batches):
         import pyarrow as pa
 
         for rb in batches:
-            n_rows_col = rb.column(rb.schema.get_field_index("n_rows"))
-            payload_cols = {
-                b: rb.column(rb.schema.get_field_index(b)) for b in blob_names
-            }
             cnt = 0
             s = 0.0
             ss = 0.0
             mn = np.inf
             mx = -np.inf
-            for i in range(rb.num_rows):
-                n = n_rows_col[i].as_py()
+            for _, _, dec in block_rows(rb):
                 arrs = {}
-                get = payload_getter(lambda b, i=i: bytes(payload_cols[b][i].as_py()))
-                for name, _, kind in specs:
-                    a = selector.decode_column_arrow(get(name), kind, n)
+                for name, _, _ in specs:
+                    a = dec(name)
                     if pa.types.is_timestamp(a.type):
                         a = a.cast(pa.int64())  # epoch-us view
                     arrs[name] = a.cast(pa.float64()).to_numpy(zero_copy_only=False)
@@ -2265,71 +2172,29 @@ def compact_blocks(
 
     from pyspark.sql.pandas.types import to_arrow_schema
 
-    columns = man["columns"]
-    specs = [(c["name"], c["spark_type"], c["kind"]) for c in columns]
-    # re-encode under the immutable PHYSICAL payload names (renamed
-    # columns): decode resolves logical->physical via _blob_plan; the
-    # merged table and encode kernel stay physical so rewritten blobs
-    # line up with blocks_schema and with passthrough rows
-    p_of = {c["name"]: c.get("physical", c["name"]) for c in columns}
-    col_specs = [
-        (p_of[c["name"]], c["kind"], c.get("codec")) for c in columns
-    ]
-    sort_cols = sort_cols_for(columns, man["url_col"], man["ts_col"])
-    ts_col = man["ts_col"]
-    effort = man.get("effort", selector.EFFORT_MAX)
-    groups = man.get("column_groups") or None
-    schema = blocks_schema(columns, groups)
-    blob_names, payload_getter = _blob_plan(man, specs)
+    specs = _colspecs(man, None)
+    sort_cols = sort_cols_for(man["columns"], man["url_col"], man["ts_col"])
+    schema = blocks_schema(man["columns"], man.get("column_groups"))
     arrow_schema = to_arrow_schema(schema)
     out_names = [f.name for f in arrow_schema]
-    # schema evolution: pre-evolution blocks carry NULL payloads for
-    # added columns — compaction materializes the default (the physical
-    # backfill step, still block-local)
-    defaults = {c["name"]: c.get("default") for c in columns}
-    from pyspark.sql import types as _T
-
-    logical_arrow = to_arrow_schema(
-        _T._parse_datatype_string(
-            ", ".join(f"`{n}` {t}" for n, t, _ in specs)
-        )
-    )
+    # pre-evolution blocks carry NULL payloads for added columns —
+    # decode fills the default, so compaction is the physical backfill
+    # step, still block-local
+    _, block_rows = _block_rows(man, specs)
+    enc = _block_encoder(man, zlib_level)
 
     def fn(key: tuple, tbl: "pa.Table") -> "pa.Table":
         block = key[0]
         block = int(block.as_py() if hasattr(block, "as_py") else block)
-        n_rows_col = tbl["n_rows"].combine_chunks()
-        total = int(pc.sum(n_rows_col).as_py() or 0)
+        total = int(pc.sum(tbl["n_rows"]).as_py() or 0)
         if tbl.num_rows == 1 and total <= max_rows_per_block:
             return tbl.select(out_names)  # passthrough: no decode
-        per_col: dict[str, list] = {p_of[name]: [] for name, _, _ in specs}
-        for r in range(tbl.num_rows):
-            n = int(n_rows_col[r].as_py())
-            get = payload_getter(lambda b, r=r: tbl[b][r].as_py())
-            for name, _, kind in specs:
-                raw = get(name)
-                if raw is None:
-                    d = defaults.get(name)
-                    ftype = logical_arrow.field(name).type
-                    arr = (
-                        pa.nulls(n, ftype)
-                        if d is None
-                        else pa.array([d] * n, type=ftype)
-                    )
-                else:
-                    arr = selector.decode_column_arrow(
-                        bytes(raw) if not isinstance(raw, bytes) else raw,
-                        kind,
-                        n,
-                    )
-                if isinstance(arr, pa.ChunkedArray):
-                    arr = arr.combine_chunks()
-                per_col[p_of[name]].append(arr)
+        per_col: dict[str, list] = {name: [] for name, _, _ in specs}
+        for _, _, dec in block_rows(tbl):
+            for name in per_col:
+                per_col[name].append(dec(name))
         merged = pa.table(
-            {
-                p_of[name]: pa.concat_arrays(per_col[p_of[name]])
-                for name, _, _ in specs
-            }
+            {name: pa.concat_arrays(arrs) for name, arrs in per_col.items()}
         )
         # one deterministic sort up front; contiguous slices become the
         # salted sub-rows (encode_block_arrow's own sort is then a
@@ -2347,17 +2212,8 @@ def compact_blocks(
             part = merged.slice(salt * per, per)
             if part.num_rows == 0 and total:
                 continue
-            rows.append(
-                encode_block_arrow(
-                    part, col_specs, sort_cols, zlib_level, block, salt,
-                    ts_col, effort, groups,
-                )
-            )
-        arrays = [
-            pa.array([r.get(f.name) for r in rows], type=f.type)
-            for f in arrow_schema
-        ]
-        return pa.Table.from_arrays(arrays, schema=arrow_schema)
+            rows.append(enc(part, block, salt))
+        return pa.Table.from_batches([_rows_to_batch(rows, arrow_schema)])
 
     return blocks.groupBy(BLOCK).applyInArrow(fn, schema=schema)
 

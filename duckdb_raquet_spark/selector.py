@@ -250,8 +250,7 @@ def encode_double_auto(
     the BYTE_STREAM_SPLIT byte-plane transpose (codecs/bss.py) against
     the raw IEEE-754 bit-pattern view, keep the smallest payload — ALP
     wins decimals-in-disguise, BSS wins full-precision smooth series.
-    Shared by the Arrow and pandas encode paths so re-encodes stay
-    bit-consistent; ``force`` pins the bits view (plain int path)."""
+    ``force`` pins the bits view (plain int path)."""
     bits = np.ascontiguousarray(vals).view(np.int64)
     base = encode_int_auto(bits, zlib_level, force=force)
     if force is not None:
@@ -344,29 +343,6 @@ def encode_column_arrow(
     return payload, codec_name(payload), {"raw_bytes": raw, "enc_bytes": len(payload)}
 
 
-def encode_column(
-    series, kind: str, zlib_level: int = 6
-) -> tuple[bytes, str, dict]:
-    """pandas wrapper over :func:`encode_column_arrow` (same bytes for
-    the same logical content — transform/mask re-encode paths go through
-    pandas and must stay bit-consistent with the Arrow encode path)."""
-    if kind == KIND_STRING:
-        arr = pa.array(series, type=pa.large_string())
-    elif kind == KIND_BINARY:
-        arr = pa.array(series, type=pa.large_binary())
-    elif kind == KIND_TIMESTAMP:
-        arr = pa.Array.from_pandas(series, type=pa.timestamp("us"))
-    elif kind == KIND_DOUBLE:
-        # preserve NaN-as-value semantics (from_pandas would null them)
-        vals = np.ascontiguousarray(series.to_numpy(dtype=np.float64))
-        raw = 8 * len(series)
-        payload = encode_double_auto(vals, zlib_level)
-        return payload, codec_name(payload), {"raw_bytes": raw, "enc_bytes": len(payload)}
-    else:
-        arr = pa.Array.from_pandas(series, type=pa.int64())
-    return encode_column_arrow(arr, kind, zlib_level)
-
-
 def decode_column_arrow(payload: bytes, kind: str, n: int) -> pa.Array:
     """payload -> Arrow array of the original logical type (bit-exact),
     staying in Arrow buffers (read-path twin of encode_column_arrow)."""
@@ -386,33 +362,3 @@ def decode_column_arrow(payload: bytes, kind: str, n: int) -> pa.Array:
             return pa.array(value.view(np.float64), type=pa.float64())
         raise ValueError("nullable double payloads are not produced by this engine")
     return ints64
-
-
-def decode_column(payload: bytes, kind: str, n: int):
-    """payload -> pandas Series of the original logical type (bit-exact)."""
-    import pandas as pd
-
-    value = registry.decode_any(payload)
-    if kind in (KIND_STRING, KIND_BINARY):
-        if isinstance(value, np.ndarray):
-            raise ValueError("int payload for string column")
-        if kind == KIND_STRING:
-            return value.cast(pa.large_string()).to_pandas()
-        return value.cast(pa.large_binary()).to_pandas()
-    if isinstance(value, np.ndarray):
-        mask = None
-        filled = value
-    else:  # NULLABLE int payload decoded to arrow int64-with-validity
-        mask = ~value.is_valid().to_numpy(zero_copy_only=False)
-        filled = value.fill_null(0).to_numpy(zero_copy_only=False).astype(np.int64)
-    if kind == KIND_TIMESTAMP:
-        ts = filled.view("datetime64[us]")
-        if mask is not None:
-            ts = ts.copy()
-            ts[mask] = np.datetime64("NaT", "us")
-        return pd.Series(ts)
-    if kind == KIND_DOUBLE:
-        return pd.Series(filled.view(np.float64))
-    if mask is None:
-        return pd.Series(filled)
-    return pd.Series(pd.arrays.IntegerArray(filled, mask))

@@ -60,11 +60,11 @@ def test_learn_bpe_local_equals_distributed(spark):
 
 def test_murmur_matches_spark_hash(spark):
     """_murmur3_hash_long must equal Spark's Murmur3 (seed 42) on longs
-    — the exact-placement shuffle trick (_partition_reps) depends on
+    — the exact-placement shuffle trick (partition_reps) depends on
     replicating HashPartitioning's hash bit for bit."""
     from pyspark.sql import functions as F
 
-    from duckdb_raquet_spark import scan
+    from duckdb_raquet_spark import placement
 
     rng = random.Random(7)
     vals = [0, 1, -1, 2**62, -(2**62), 42] + [
@@ -73,20 +73,20 @@ def test_murmur_matches_spark_hash(spark):
     df = spark.createDataFrame([(v,) for v in vals], "v long")
     got = {r["v"]: r["h"] for r in df.select("v", F.hash("v").alias("h")).collect()}
     for v in vals:
-        h = scan._murmur3_hash_long(v)
+        h = placement.murmur3_hash_long(v)
         signed = h - (1 << 32) if h >= (1 << 31) else h
         assert signed == got[v], v
 
 
 def test_partition_reps_place_exactly(spark):
-    """A row keyed by _partition_reps(n)[p] must land in shuffle
+    """A row keyed by partition_reps(n)[p] must land in shuffle
     partition p — the invariant the LPT block spread builds on."""
     from pyspark.sql import functions as F
 
-    from duckdb_raquet_spark import scan
+    from duckdb_raquet_spark import placement
 
     for n in (7, 64):
-        reps = scan._partition_reps(n)
+        reps = placement.partition_reps(n)
         df = spark.createDataFrame(
             [(p, reps[p]) for p in range(n)], "p int, k long"
         )
@@ -125,9 +125,11 @@ def test_spread_block_rows_keeps_rows(spark, tmp_path):
 
 
 def test_planned_encode_bytes_identical(spark, tmp_path):
-    """The planned (LPT + local-group) encode placement must produce
-    byte-identical block rows to the groupBy/applyInArrow path — only
-    task placement may differ."""
+    """The planned (LPT-binned) encode placement must produce
+    byte-identical block rows to the plain hash placement — only task
+    placement may differ. The mask path's re-encode must too: an
+    all-true predicate rewrites every block to its own payload bytes."""
+    import numpy as np
     from pyspark.sql import functions as F
 
     from duckdb_raquet_spark import encode, scan
@@ -147,18 +149,27 @@ def test_planned_encode_bytes_identical(spark, tmp_path):
     m1 = encode.encode_to_path(
         spark, df, p1, est_rows=n, target_rows_per_block=16
     )
-    # num_partitions pins the plain hash/groupBy path
+    # num_partitions pins the plain hash path
     m2 = encode.encode_to_path(
         spark, df, p2, est_rows=n, target_rows_per_block=16, num_partitions=8
     )
     assert m1["enc_bytes"] == m2["enc_bytes"]
     assert m1["num_blocks"] == m2["num_blocks"] and m1["num_blocks"] > 16
-    b1 = {
-        (r["block"], r["salt"]): (bytes(r["url_blob"]), bytes(r["text_blob"]))
-        for r in scan.read_blocks(spark, p1).collect()
-    }
-    b2 = {
-        (r["block"], r["salt"]): (bytes(r["url_blob"]), bytes(r["text_blob"]))
-        for r in scan.read_blocks(spark, p2).collect()
-    }
+    blobs = [c for c in scan.read_blocks(spark, p1).columns if c.endswith("_blob")]
+
+    def payloads(blocks):
+        return {
+            (r["block"], r["salt"]): tuple(bytes(r[c]) for c in blobs)
+            for r in blocks.collect()
+        }
+
+    b1 = payloads(scan.read_blocks(spark, p1))
+    b2 = payloads(scan.read_blocks(spark, p2))
     assert b1 == b2
+    b3 = payloads(
+        scan.transform_blocks(
+            scan.read_blocks(spark, p2), m2,
+            lambda pdf: np.ones(len(pdf), dtype=bool), filter_cols=["score"],
+        )
+    )
+    assert b3 == b2

@@ -49,8 +49,8 @@ def main() -> None:
 
     sections: list[tuple[str, str, list[str]]] = []
 
-    # 1. encode plan: ONE exchange (hash on block/salt), no second
-    #    exchange before the grouped Arrow kernel
+    # 1. encode plan: ONE exchange (hash on block/salt), then the
+    #    sorted-partition Arrow kernel with no second exchange
     df = synth.synth_webtext(spark, 2000, num_partitions=4)
     blocks, _man = encode.encode_table(df, est_rows=2000, target_rows_per_block=256)
     p = formatted(blocks)
@@ -63,7 +63,7 @@ def main() -> None:
                     "exactly one Exchange",
                     len(re.findall(r"\(\d+\) Exchange", p)) == 1,
                 ),
-                ("grouped Arrow kernel", "FlatMapGroupsInArrow" in p),
+                ("partition Arrow kernel", "MapInArrow" in p),
             ],
         )
     )
