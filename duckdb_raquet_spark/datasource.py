@@ -647,9 +647,9 @@ class RaquetWriter(DataSourceArrowWriter):
         )
 
     def commit(self, messages) -> None:
-        # manifest row + sidecar LAST, from per-task stats — no extra
-        # Spark job, and readers never see a manifest covering
-        # uncommitted data
+        # the table's one commit LAST (snapshot, then manifest row +
+        # sidecar), from per-task stats — no extra Spark job, and
+        # readers never see a manifest covering uncommitted data
         hist: dict = {}
         n_rows = n_blocks = raw = enc_b = 0
         for m in messages:
@@ -678,13 +678,15 @@ class RaquetWriter(DataSourceArrowWriter):
             man, codec_histogram=hist, num_blocks=n_blocks, num_rows=n_rows,
             raw_bytes=raw, enc_bytes=enc_b,
         )
-        from .encode import _append_manifest_row
+        from .encode import _commit
 
         # spark=None: fsio takes the plain-local path; a remote table
         # URI would need a live session, which the DataSource commit
         # hook doesn't receive — local/posix paths only for now
-        _append_manifest_row(None, self.path, final, self.columns)
-        mf.write_sidecar(self.path, final, None)
+        _commit(
+            None, self.path, final, chunks=[0], op="encode",
+            parent=mf.current_snapshot(self.path, None),
+        )
 
     def abort(self, messages) -> None:  # pragma: no cover - best effort
         pass

@@ -12,8 +12,9 @@ its phases map onto a declarative plan —
     per-tile warp + gzip per band           per-block per-column codec
                                               auto-select (Arrow batches)
     empty-tile skip (:444-483)              .where() before encode
-    metadata row emitted last (CAS :1488)   manifest row appended after
-                                              all data commits
+    metadata row emitted last (CAS :1488)   one _commit after all data:
+                                              snapshot CAS, then manifest
+                                              row + sidecar caches
     no skew handling (uniform grid)         explicit salt column splits
                                               oversized blocks
 
@@ -47,10 +48,6 @@ from . import selector
 
 BLOCK = "block"
 SALT = "salt"
-
-# "no CAS requested" sentinel for _commit_snapshot's expected_parent
-# (None is a real value there: "the caller saw an empty snapshot log")
-_NO_CAS = object()
 
 STATS_TYPE = T.StructType(
     [
@@ -573,26 +570,106 @@ def encode_table(
 
 
 # ----------------------------------------------------------------- write ----
+#
+# Every table write lands its data files first and then commits exactly
+# once, through _commit: the snapshot CAS is the commit point, and the
+# manifest row and the sidecar are caches rewritten after it (the
+# reference's metadata-row-last CAS, read_raster.cpp:1488).
 
 
 def _data_path(path: str) -> str:
     return os.path.join(path, "data")
 
 
+def _is_chunked(spark, path: str) -> bool:
+    """True iff the table uses the chunked layout (data/chunk=*/).
+    fsio listing, not a local glob — DML and schema evolution must
+    recognize chunked tables on object stores / HDFS too."""
+    from . import fsio
+
+    return any(
+        d.startswith("chunk=") for d in fsio.list_dirs(spark, _data_path(path))
+    )
+
+
+def _visible_chunks(spark, path: str, snap: dict | None) -> list[int]:
+    """Chunk ids visible at ``snap``; a pre-log table (``None``) sees
+    every completed lineage chunk."""
+    if snap is not None:
+        return sorted(int(c) for c in snap["chunks"])
+    return sorted(mf.read_chunk_lineage(path, spark))
+
+
+def _write_data(blocks: DataFrame, dest: str, n_files: int | None) -> None:
+    """Overwrite ``dest`` with encoded blocks — the one data write.
+
+    ``n_files`` range-partitions + in-file sorts the ENCODED rows into
+    that many globally block-ordered files (file- and row-group-level
+    min/max pruning, the reference's ORDER BY block,
+    README.md:259-261). The range sampler executes the child plan a
+    second time, so the blocks are persisted MEMORY_AND_DISK for the
+    duration — the job's one cluster-memory pressure point.
+
+    ``None`` is the memory-hardened write: each task streams its
+    partition straight to its own file — no persist, no second pass,
+    no exchange after the encode shuffle. Files keep only per-task
+    locality, so scans prune at row-group rather than file granularity
+    until :func:`scan.compact_to_path` rewrites the canonical sorted
+    layout (bit-identical blocks)."""
+    if n_files is None:
+        blocks.sortWithinPartitions(BLOCK, SALT).write.mode("overwrite").parquet(dest)
+        return
+    from pyspark import StorageLevel
+
+    blocks = blocks.persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        (
+            blocks.repartitionByRange(n_files, BLOCK, SALT)
+            .sortWithinPartitions(BLOCK, SALT)
+            .write.mode("overwrite")
+            .parquet(dest)
+        )
+    finally:
+        blocks.unpersist()
+
+
 def _aggregate_written(
-    spark: SparkSession, path: str, visible_chunks: list[int] | None = None
-) -> tuple[dict, dict]:
+    spark: SparkSession,
+    path: str,
+    visible_chunks: list[int] | None = None,
+    new_chunk: int | None = None,
+) -> tuple[dict, dict, dict]:
     """Single columnar pass over stats/codecs (payloads pruned) to
-    finalize the manifest after data commit: grouping by the codecs JSON
-    (few distinct combos) yields totals and the codec histogram from one
-    job. ``visible_chunks`` restricts the pass to a snapshot's chunk set
-    (partition-pruned) so rolled-back chunk dirs never pollute totals."""
-    df = spark.read.parquet(_data_path(path))
+    finalize the manifest after the data write: grouping by the codecs
+    JSON (few distinct combos) yields totals and the codec histogram
+    from one job. ``visible_chunks`` restricts the pass to a snapshot's
+    chunk set (partition-pruned) so rolled-back chunk dirs never pollute
+    totals. ``new_chunk`` also splits the groups on that chunk id, so
+    the same job yields the chunk's own rows/raw/enc bytes for its
+    lineage record. Returns (totals, codec histogram, new chunk's
+    totals).
+
+    The schema is declared, not inferred from a footer: inference opens
+    the first listed file, ``data/chunk=-1``, whose manifest row a
+    concurrent commit may be replacing; declared, the chunk filter
+    prunes that dir before any file is opened."""
+    fields = [
+        T.StructField(BLOCK, T.LongType()),
+        T.StructField("n_rows", T.LongType()),
+        T.StructField("codecs", T.StringType()),
+        T.StructField("stats", STATS_TYPE),
+    ]
+    if visible_chunks is not None:
+        fields.append(T.StructField("chunk", T.IntegerType()))
+    df = spark.read.schema(T.StructType(fields)).parquet(_data_path(path))
     if visible_chunks is not None:
         df = df.where(F.col("chunk").isin([int(c) for c in visible_chunks]))
+    keys = [F.col("codecs")]
+    if new_chunk is not None:
+        keys.append((F.col("chunk") == int(new_chunk)).alias("new"))
     rows = (
         df.where(F.col(BLOCK) != bk.MANIFEST_BLOCK)
-        .groupBy("codecs")
+        .groupBy(*keys)
         .agg(
             F.count("*").alias("num_blocks"),
             F.sum("n_rows").alias("num_rows"),
@@ -603,115 +680,35 @@ def _aggregate_written(
     )
     hist: dict[str, dict[str, int]] = {}
     totals = {"num_blocks": 0, "num_rows": 0, "raw_bytes": 0, "enc_bytes": 0}
+    mine = {"rows": 0, "raw_bytes": 0, "enc_bytes": 0}
     for r in rows:
-        totals["num_blocks"] += r["num_blocks"]
-        totals["num_rows"] += int(r["num_rows"] or 0)
-        totals["raw_bytes"] += int(r["raw_bytes"] or 0)
-        totals["enc_bytes"] += int(r["enc_bytes"] or 0)
+        for k in totals:
+            totals[k] += int(r[k] or 0)
+        if new_chunk is not None and r["new"]:
+            mine["rows"] += int(r["num_rows"] or 0)
+            mine["raw_bytes"] += int(r["raw_bytes"] or 0)
+            mine["enc_bytes"] += int(r["enc_bytes"] or 0)
         for col, codec in json.loads(r["codecs"]).items():
             h = hist.setdefault(col, {})
             h[codec] = h.get(codec, 0) + r["num_blocks"]
-    return totals, hist
+    return totals, hist, mine
 
 
-def _commit_snapshot(
-    spark: SparkSession,
-    path: str,
-    *,
-    chunks: list[int],
-    op: str,
-    final: dict,
-    extra: dict | None = None,
-    expected_parent: dict | None = _NO_CAS,
-) -> dict:
-    """Append the next snapshot to the table's `_snapshots/` log
-    (Iceberg-style history: every commit names its visible chunk set).
-    Idempotent against re-finalization: a resumed encode that re-runs
-    after completion sees an identical current snapshot and writes
-    nothing.
-
-    ``expected_parent`` (a snapshot dict, or None meaning "the caller
-    saw an empty log") turns the commit into a compare-and-swap on the
-    caller's base-manifest read: if another writer advanced the log
-    since, ConcurrentCommitError is raised instead of committing a
-    manifest that silently drops the concurrent change (e.g. an
-    append racing a delete_rows would otherwise re-finalize from a
-    base without the new delete entry). Pass the snapshot returned by
-    ``mf.committed_manifest``. The sentinel ``_NO_CAS`` (default)
-    keeps the legacy last-writer-wins behavior for single-writer
-    paths."""
-    # carry the live delete-file list into EVERY snapshot so readers at
-    # any snapshot id (and after expire_snapshots) resolve row-level
-    # deletes without walking to an older commit
-    if final.get("delete_files") and not (extra or {}).get("delete_files"):
-        extra = dict(extra or {})
-        extra["delete_files"] = final["delete_files"]
-    # the full manifest rides in the snapshot file (mf.committed_manifest)
-    extra = dict(extra or {})
-    extra.setdefault("manifest", final)
-    cur = mf.current_snapshot(path, spark)
-    if (
-        cur is not None
-        and cur["chunks"] == sorted(chunks)
-        and cur["op"] == op
-        # totals must match too: re-encoding DIFFERENT data over an
-        # existing path is an overwrite commit, not a resume no-op
-        and cur.get("num_rows") == final.get("num_rows")
-        and cur.get("enc_bytes") == final.get("enc_bytes")
-        # and the delete-file list: a rollback FORWARD to a delete
-        # snapshot changes only this — swallowing it would desync the
-        # snapshot log from the sidecar (divergent reads, and expiry
-        # could reclaim a delete dir the sidecar still references)
-        and cur.get("delete_files") == (extra or {}).get("delete_files")
-    ):
-        return cur
-    if expected_parent is not _NO_CAS:
-        seen = expected_parent["snapshot_id"] if expected_parent else None
-        now = cur["snapshot_id"] if cur else None
-        if seen != now:
-            raise mf.ConcurrentCommitError(
-                f"snapshot log at {path} advanced from {seen} to {now} "
-                "since this writer read its base manifest; re-read and "
-                "retry the operation"
-            )
-    snap = mf.make_snapshot(
-        snapshot_id=(cur["snapshot_id"] + 1) if cur else 0,
-        chunks=chunks,
-        op=op,
-        parent_id=cur["snapshot_id"] if cur else None,
-        num_rows=final.get("num_rows"),
-        enc_bytes=final.get("enc_bytes"),
-        extra=extra,
-    )
-    mf.write_snapshot(path, snap, spark)
-    return snap
-
-
-def _append_manifest_row(
-    spark: SparkSession,
-    path: str,
-    man: dict,
-    columns: list[dict],
-    *,
-    target: str | None = None,
-    mode: str = "append",
-) -> None:
+def _append_manifest_row(spark, dest: str, man: dict) -> None:
     # written driver-side with pyarrow into the committed data dir: a
     # 1-row DataFrame write costs a whole Spark job (scheduling + commit
     # protocol), measurable against the encode wall at cluster sizes.
     # The bytes route through fsio — plain paths hit the local FS, any
     # ``scheme://`` path goes through the Hadoop FileSystem API, so the
     # manifest-last invariant holds on object stores too.
-    import pyarrow as pa
     import pyarrow.parquet as pq
     from pyspark.sql.pandas.types import to_arrow_schema
 
     from . import fsio
 
-    dest = target or _data_path(path)
-    if mode == "overwrite":
-        fsio.delete_dir(spark, dest)
-    arrow_schema = to_arrow_schema(blocks_schema(columns, man.get("column_groups")))
+    arrow_schema = to_arrow_schema(
+        blocks_schema(man["columns"], man.get("column_groups"))
+    )
     values = {
         BLOCK: bk.MANIFEST_BLOCK,
         SALT: 0,
@@ -729,55 +726,99 @@ def _append_manifest_row(
     )
 
 
-def write_blocks(
-    blocks: DataFrame,
+def _commit(
+    spark: SparkSession | None,
     path: str,
-    man: dict,
-    columns: list[dict],
+    final: dict,
     *,
-    mode: str = "overwrite",
-    sorted: bool = True,
-) -> dict:
-    """Write blocks, then finalize + append the manifest row LAST — the
-    reference's metadata-row-after-all-data invariant, distributed.
+    chunks: list[int],
+    op: str,
+    parent: dict | None,
+    extra: dict | None = None,
+) -> tuple[dict, dict]:
+    """Commit one table write: every writer's single commit step, run
+    after all of its data files have landed.
 
-    ``sorted=True`` (default) range-partitions + in-file sorts the
-    ENCODED rows so output files are globally block-ordered (file- and
-    row-group-level min/max pruning, the reference's ORDER BY block,
-    README.md:259-261). The range sampler executes the child plan a
-    second time, so the encoded blocks are persisted MEMORY_AND_DISK for
-    the duration — the job's one cluster-memory pressure point.
+    1. If ``parent`` already records this exact commit (same ``op``,
+       chunk set and manifest apart from ``created_unix``), it is the
+       commit: a resumed encode or a replayed streaming batch claims
+       nothing new. Two metadata ops never match — their manifests
+       differ.
+    2. Claim snapshot ``parent + 1`` by exclusive create — the CAS.
+       ``parent`` is the snapshot the caller built its manifest and
+       chunk set from (``None``: it saw no log), so a writer that
+       committed since makes this raise ConcurrentCommitError before
+       any shared file changes. The snapshot embeds the manifest and
+       the live delete-file list, and marks a flat table (no
+       ``chunk=*`` dir under ``data/``), whose files carry no chunk
+       partition column for readers to filter on.
+    3. Only then rewrite the caches from the committed manifest: the
+       manifest row — under ``data/`` for a flat table (a ``chunk=-1``
+       dir next to root-level files would flip partition discovery and
+       hide every data file), else overwriting ``data/chunk=-1`` — and
+       the sidecar. Re-running an operation that crashed between 2 and
+       3 heals them.
 
-    ``sorted=False`` is the memory-hardened alternative for encodes
-    whose blocks exceed cluster memory: each encode task streams its
-    partition straight to its own file — no persist, no second pass, no
-    exchange after the encode shuffle. Files keep only per-task locality
-    (hash-partitioned keys), so scans prune at row-group rather than
-    file granularity until :func:`scan.compact_to_path` rewrites the
-    table into the canonical sorted layout (bit-identical blocks)."""
-    spark = blocks.sparkSession
-    if sorted:
-        from pyspark import StorageLevel
+    ``spark=None`` works for local paths. Returns (manifest, snapshot)."""
+    from . import fsio
 
-        blocks = blocks.persist(StorageLevel.MEMORY_AND_DISK)
-        try:
-            n_files = max(2, spark.sparkContext.defaultParallelism)
-            (
-                blocks.repartitionByRange(n_files, BLOCK, SALT)
-                .sortWithinPartitions(BLOCK, SALT)
-                .write.mode(mode)
-                .parquet(_data_path(path))
-            )
-        finally:
-            blocks.unpersist()
+    chunks = sorted(int(c) for c in chunks)
+
+    def bare(m: dict) -> dict:
+        return {k: v for k, v in m.items() if k != "created_unix"}
+
+    if (
+        parent is not None
+        and parent["op"] == op
+        and [int(c) for c in parent["chunks"]] == chunks
+        and isinstance(parent.get("manifest"), dict)
+        and bare(parent["manifest"]) == bare(json.loads(mf.to_json(final)))
+    ):
+        snap = parent
+        final = parent["manifest"]
     else:
-        blocks.sortWithinPartitions(BLOCK, SALT).write.mode(mode).parquet(
-            _data_path(path)
+        extra = dict(extra or {}, manifest=final)
+        # the live delete list rides in EVERY snapshot, so reads at any
+        # id (and expire_snapshots) never walk to an older commit
+        if final.get("delete_files"):
+            extra["delete_files"] = final["delete_files"]
+        if not _is_chunked(spark, path):
+            extra["layout"] = "flat"
+        snap = mf.make_snapshot(
+            snapshot_id=(parent["snapshot_id"] + 1) if parent else 0,
+            chunks=chunks,
+            op=op,
+            parent_id=parent["snapshot_id"] if parent else None,
+            num_rows=final.get("num_rows"),
+            enc_bytes=final.get("enc_bytes"),
+            extra=extra,
         )
-    totals, hist = _aggregate_written(spark, path)
-    final = mf.finalize_manifest(man, codec_histogram=hist, **totals)
-    _append_manifest_row(spark, path, final, columns)
+        mf.write_snapshot(path, snap, spark)
+    row_dir = _data_path(path)
+    if snap.get("layout") != "flat":
+        row_dir = os.path.join(row_dir, "chunk=-1")
+        fsio.delete_dir(spark, row_dir)
+    _append_manifest_row(spark, row_dir, final)
     mf.write_sidecar(path, final, spark)
+    return final, snap
+
+
+def write_blocks(
+    blocks: DataFrame, path: str, man: dict, *, sorted: bool = True
+) -> dict:
+    """Write a fresh flat table: the blocks, then its one commit —
+    the reference's metadata-row-after-all-data invariant, distributed.
+
+    ``sorted=True`` (default) writes globally block-ordered files;
+    ``sorted=False`` is the memory-hardened alternative for encodes
+    whose blocks exceed cluster memory (see :func:`_write_data`)."""
+    spark = blocks.sparkSession
+    parent = mf.current_snapshot(path, spark)
+    n_files = max(2, spark.sparkContext.defaultParallelism) if sorted else None
+    _write_data(blocks, _data_path(path), n_files)
+    totals, hist, _ = _aggregate_written(spark, path)
+    final = mf.finalize_manifest(man, codec_histogram=hist, **totals)
+    final, _ = _commit(spark, path, final, chunks=[0], op="encode", parent=parent)
     return final
 
 
@@ -802,7 +843,6 @@ def encode_to_path(
     derive from (block, salt), so an encode unit never spans chunks.
     """
     est_rows = kwargs.pop("est_rows", None)
-    columns = columns_of(df)
     need_ts = (
         ts_col is not None
         and kwargs.get("ts_range") is None
@@ -829,7 +869,7 @@ def encode_to_path(
         if not sorted_write:
             man["sorted"] = False
         t0 = time.time()
-        final = write_blocks(blocks, path, man, columns, sorted=sorted_write)
+        final = write_blocks(blocks, path, man, sorted=sorted_write)
         mf.write_chunk_lineage(
             path,
             0,
@@ -843,16 +883,13 @@ def encode_to_path(
             },
             spark,
         )
-        _commit_snapshot(
-            spark, path, chunks=[0], op="encode", final=final,
-            extra={"layout": "flat"},
-        )
         return final
 
     # chunked mode: each chunk is an idempotent overwrite of its own
     # chunk=<k> subdirectory — re-running a chunk after a mid-write crash
     # can never duplicate rows (no append anywhere), and the lineage
     # record is written strictly after the chunk's job commit.
+    parent = mf.current_snapshot(path, spark)
     done = mf.read_chunk_lineage(path, spark) if resume else {}
     man = None
     files_per_chunk = max(1, spark.sparkContext.defaultParallelism // chunks)
@@ -871,23 +908,7 @@ def encode_to_path(
             continue
         t0 = time.time()
         part_path = os.path.join(_data_path(path), f"chunk={k}")
-        if sorted_write:
-            from pyspark import StorageLevel
-
-            blocks = blocks.persist(StorageLevel.MEMORY_AND_DISK)
-            try:
-                (
-                    blocks.repartitionByRange(files_per_chunk, BLOCK, SALT)
-                    .sortWithinPartitions(BLOCK, SALT)
-                    .write.mode("overwrite")
-                    .parquet(part_path)
-                )
-            finally:
-                blocks.unpersist()
-        else:
-            blocks.sortWithinPartitions(BLOCK, SALT).write.mode(
-                "overwrite"
-            ).parquet(part_path)
+        _write_data(blocks, part_path, files_per_chunk if sorted_write else None)
         agg = (
             spark.read.parquet(part_path)
             .agg(F.count("*"), F.sum("n_rows"), F.sum("stats.raw_bytes"), F.sum("stats.enc_bytes"))
@@ -912,23 +933,13 @@ def encode_to_path(
     # aggregate ONLY this encode's chunk set: a stale orphan chunk dir
     # (a crashed append, a rollback awaiting expiry) must not inflate
     # the fresh table's totals
-    totals, hist = _aggregate_written(
+    totals, hist, _ = _aggregate_written(
         spark, path, visible_chunks=list(range(chunks))
     )
     final = mf.finalize_manifest(man, codec_histogram=hist, **totals)
-    # manifest row last, in its own chunk=-1 partition, overwrite =
-    # exactly-once (the CAS analog, read_raster.cpp:1488)
-    _append_manifest_row(
-        spark,
-        path,
-        final,
-        columns,
-        target=os.path.join(_data_path(path), "chunk=-1"),
-        mode="overwrite",
-    )
-    mf.write_sidecar(path, final, spark)
-    _commit_snapshot(
-        spark, path, chunks=list(range(chunks)), op="encode", final=final
+    final, _ = _commit(
+        spark, path, final, chunks=list(range(chunks)), op="encode",
+        parent=parent,
     )
     return final
 
@@ -945,14 +956,14 @@ def append_chunk(
     staged: bool = False,
     _replace_chunks: list[int] | None = None,
     _op: str = "append",
-    _expected_parent=_NO_CAS,
+    _base: tuple[dict, dict | None] | None = None,
 ) -> dict:
     """Append new rows to a committed CHUNKED table as the next chunk —
     the sanctioned append path (the datasource rejects ``mode('append')``
     because task-level appends would desync the manifest; this one
-    re-finalizes the manifest strictly AFTER the chunk's data commit,
-    the same invariant as streaming ingest, whose per-micro-batch commit
-    is exactly one append_chunk).
+    commits strictly AFTER the chunk's data write, the same invariant
+    as streaming ingest, whose per-micro-batch commit is exactly one
+    append).
 
     Key geometry (resolution / bucket / origin) is pinned from the
     existing manifest so old and new chunks share one block-key space;
@@ -961,25 +972,28 @@ def append_chunk(
     (a flat table's data files sit where partition discovery would put
     the chunk dirs) — encode with ``chunks>=1``? flat tables raise.
 
-    Concurrency: the final commit is a CAS on the snapshot observed
-    here — if another writer (e.g. a delete_rows) commits in between,
-    ConcurrentCommitError is raised; the already-written chunk dir and
-    lineage record are harmless (the chunk id is burned, the dir is
-    unreferenced until expiry) and re-running the append succeeds
-    under a fresh id with the concurrent change folded in.
+    Concurrency: the commit is a CAS on the snapshot read here — if
+    another writer (e.g. a delete_rows) commits in between,
+    ConcurrentCommitError is raised before the manifest row or the
+    sidecar change; the already-written chunk dir and lineage record
+    are harmless (the chunk id is burned, the dir is unreferenced until
+    expiry) and re-running the append succeeds under a fresh id with
+    the concurrent change folded in. ``staged=True`` stops before the
+    commit and parks it under ``_staged/`` (write-audit-publish).
 
-    The private ``_replace_chunks`` / ``_op`` / ``_expected_parent``
-    hooks serve :func:`compact_chunks`: the new chunk's commit then
-    REPLACES the given visible chunks instead of adding to them, and
-    the CAS anchors to the snapshot at which the caller derived the
-    replacement set (its decode + delete-entry capture point), not to
-    this function's own re-read — a delete committed between the two
-    reads must fail the compaction, or its keys would be missing from
-    the rewritten chunk while its entry (seq < new chunk id) no longer
+    The private hooks serve :func:`compact_chunks`: ``_replace_chunks``
+    makes the new chunk REPLACE the given visible chunks instead of
+    adding to them, committed as op ``_op``; ``_base`` is the
+    ``(manifest, snapshot)`` pair from ``mf.committed_manifest`` at
+    which the caller derived the replacement rows (its decode +
+    delete-entry capture point). That snapshot, not a re-read here, is
+    the CAS parent — a delete committed between the two reads must
+    fail the compaction, or its keys would be missing from the
+    rewritten chunk while its entry (seq < new chunk id) no longer
     applies to it."""
     if staged and (_replace_chunks or _op != "append"):
         raise ValueError("only plain appends can be staged")
-    man, base_snap = mf.committed_manifest(path, spark)
+    man, base_snap = _base or mf.committed_manifest(path, spark)
     if staged and base_snap is None:
         # pre-snapshot-log readers plan every chunk dir on disk, so a
         # "staged" chunk would be visible immediately — the opposite of
@@ -988,14 +1002,6 @@ def append_chunk(
             "staged appends need a snapshot-log table (pre-log tables "
             "read all chunk dirs); append once to create the log first"
         )
-    if _expected_parent is not _NO_CAS:
-        seen = _expected_parent["snapshot_id"] if _expected_parent else None
-        now = base_snap["snapshot_id"] if base_snap else None
-        if seen != now:
-            raise mf.ConcurrentCommitError(
-                f"snapshot log at {path} advanced from {seen} to {now} "
-                "since the replacement set was derived; re-read and retry"
-            )
     if man is None:
         raise FileNotFoundError(f"no committed manifest at {path}")
     # layout check must look at the DATA directory, not lineage: the
@@ -1007,7 +1013,11 @@ def append_chunk(
             "append_chunk needs a chunked-layout table (data/chunk=*/); "
             "this table was written flat — compact or re-encode chunked"
         )
-    done = mf.read_chunk_lineage(path, spark)
+    # visible set comes from the snapshot log when present (a rollback
+    # leaves orphaned chunk dirs on disk that must not rejoin the table
+    # through an append's re-finalization); pre-log tables see all
+    # lineage chunks, exactly the old behavior
+    visible = _visible_chunks(spark, path, base_snap)
     claimed = mf.read_chunk_lineage(path, spark, include_claims=True)
     k = max(claimed, default=-1) + 1
     # claim the chunk id EXCLUSIVELY before any data write: two racing
@@ -1031,21 +1041,15 @@ def append_chunk(
             break
         except FileExistsError:
             k += 1
-    # visible set comes from the snapshot log when present (a rollback
-    # leaves orphaned chunk dirs on disk that must not rejoin the table
-    # through an append's re-finalization); pre-log tables see all
-    # lineage chunks, exactly the old behavior
-    cur_snap = base_snap
-    visible = cur_snap["chunks"] if cur_snap else sorted(done)
     replace = sorted(int(c) for c in (_replace_chunks or []))
     if replace:
-        missing = set(replace) - {int(c) for c in visible}
+        missing = set(replace) - set(visible)
         if missing:
             raise ValueError(
                 f"chunks {sorted(missing)} are not visible at the current "
-                f"snapshot (visible: {sorted(int(c) for c in visible)})"
+                f"snapshot (visible: {visible})"
             )
-    visible = [int(c) for c in visible if int(c) not in set(replace)]
+    visible = [c for c in visible if c not in set(replace)]
     # schema evolution: an appended frame may omit columns added after
     # the original encode — fill their recorded defaults, then align
     # column order to the manifest's
@@ -1097,44 +1101,21 @@ def append_chunk(
         if _k in man:
             chunk_man[_k] = man[_k]
     part = os.path.join(_data_path(path), f"chunk={k}")
-    blocks.sortWithinPartitions(BLOCK, SALT).write.mode("overwrite").parquet(part)
-    totals, hist = _aggregate_written(
-        spark, path, visible_chunks=list(visible) + [k]
+    _write_data(blocks, part, None)
+    chunks = sorted(visible + [k])
+    totals, hist, mine = _aggregate_written(
+        spark, path, visible_chunks=chunks, new_chunk=k
     )
     chunk_man["lineage_chunks"] = k + 1
     final = mf.finalize_manifest(chunk_man, codec_histogram=hist, **totals)
-    if not staged:
-        # staged commits must stay invisible: the chunk=-1 manifest
-        # row and the sidecar are what pre-log readers plan from
-        _append_manifest_row(
-            spark,
-            path,
-            final,
-            man["columns"],
-            target=os.path.join(_data_path(path), "chunk=-1"),
-            mode="overwrite",
-        )
-        mf.write_sidecar(path, final, spark)
-    # lineage records THIS chunk's bytes (aggregate the chunk=<k>
-    # partition alone, as the chunked encode loop does) — the finalized
-    # manifest's raw/enc_bytes are whole-table totals and would
-    # over-report the appended chunk
-    crow = (
-        spark.read.parquet(part)
-        .agg(
-            F.sum("stats.raw_bytes").alias("raw"),
-            F.sum("stats.enc_bytes").alias("enc"),
-        )
-        .collect()[0]
-    )
+    # lineage records THIS chunk's bytes — the finalized manifest's
+    # raw/enc_bytes are whole-table totals and would over-report it
     mf.write_chunk_lineage(
         path,
         k,
         {
             "chunk": k,
-            "rows": n,
-            "raw_bytes": int(crow["raw"] or 0),
-            "enc_bytes": int(crow["enc"] or 0),
+            **mine,
             "wall_seconds": round(time.time() - t0, 3),
             **(
                 {"compacted_from": replace} if replace else {"appended": True}
@@ -1145,9 +1126,9 @@ def append_chunk(
     )
     if staged:
         # write-audit-publish: park the would-be commit under _staged/
-        # instead of the snapshot log — no reader of the table sees the
-        # new chunk until publish_staged turns this record into a real
-        # snapshot (under the same CAS as any commit)
+        # instead of committing it — no reader of the table sees the
+        # new chunk until publish_staged commits this record (under
+        # the same CAS as any commit)
         rec = {
             "token": uuid.uuid4().hex[:12],
             "op": _op,
@@ -1155,15 +1136,14 @@ def append_chunk(
             "parent_snapshot_id": (
                 base_snap["snapshot_id"] if base_snap else None
             ),
-            "chunks": sorted(list(visible) + [k]),
+            "chunks": chunks,
             "manifest": final,
             "created_unix": int(time.time()),
         }
         mf.write_staged(path, rec, spark)
         return rec
-    _commit_snapshot(
-        spark, path, chunks=list(visible) + [k], op=_op, final=final,
-        expected_parent=base_snap,
+    final, _ = _commit(
+        spark, path, final, chunks=chunks, op=_op, parent=base_snap,
         extra={"compacted_from": replace, "into": k} if replace else None,
     )
     return final
@@ -1212,28 +1192,14 @@ def rollback_to_snapshot(spark: SparkSession, path: str, snapshot_id: int) -> di
         man["delete_files"] = dl
     else:
         man.pop("delete_files", None)
-    totals, hist = _aggregate_written(
+    totals, hist, _ = _aggregate_written(
         spark, path, visible_chunks=target["chunks"]
     )
     man["lineage_chunks"] = max(target["chunks"]) + 1
     final = mf.finalize_manifest(man, codec_histogram=hist, **totals)
-    _append_manifest_row(
-        spark,
-        path,
-        final,
-        man["columns"],
-        target=os.path.join(_data_path(path), "chunk=-1"),
-        mode="overwrite",
-    )
-    mf.write_sidecar(path, final, spark)
-    _commit_snapshot(
-        spark,
-        path,
-        chunks=list(target["chunks"]),
-        op="rollback",
-        final=final,
-        extra={"rolled_back_to": snapshot_id},
-        expected_parent=base_snap,
+    final, _ = _commit(
+        spark, path, final, chunks=target["chunks"], op="rollback",
+        parent=base_snap, extra={"rolled_back_to": snapshot_id},
     )
     return final
 
@@ -1318,7 +1284,7 @@ def publish_staged(
                 "since staging; drop_staged and re-stage"
             )
         chunks = sorted({int(c) for c in cur_snap["chunks"]} | {k})
-        totals, hist = _aggregate_written(
+        totals, hist, _ = _aggregate_written(
             spark, path, visible_chunks=chunks
         )
         # current manifest is the base: it carries the delete files and
@@ -1326,18 +1292,9 @@ def publish_staged(
         final = mf.finalize_manifest(
             dict(cur_man), codec_histogram=hist, **totals
         )
-    _append_manifest_row(
-        spark,
-        path,
-        final,
-        final["columns"],
-        target=os.path.join(_data_path(path), "chunk=-1"),
-        mode="overwrite",
-    )
-    mf.write_sidecar(path, final, spark)
-    _commit_snapshot(
-        spark, path, chunks=chunks, op="append", final=final,
-        expected_parent=cur_snap, extra={"staged_token": token},
+    final, _ = _commit(
+        spark, path, final, chunks=chunks, op="append", parent=cur_snap,
+        extra={"staged_token": token},
     )
     mf.delete_staged(path, token, spark)
     return final
@@ -1381,10 +1338,9 @@ def _publish_staged_delete(
             )
         man = dict(cur_man)
         man["delete_files"] = list(man.get("delete_files", [])) + [entry]
-    man, _ = _meta_commit(
-        spark, path, man, "delete",
-        {"delete_files": man["delete_files"], "staged_token": token},
-        parent=cur_snap,
+    man, _ = _commit(
+        spark, path, man, chunks=_visible_chunks(spark, path, cur_snap),
+        op="delete", parent=cur_snap, extra={"staged_token": token},
     )
     mf.delete_staged(path, token, spark)
     return man
@@ -1502,110 +1458,17 @@ def expire_snapshots(
 
 # ------------------------------------------------------ schema evolution ----
 #
-# Iceberg-style METADATA-ONLY schema changes over the chunked layout:
-# no data file is rewritten, so evolving a 100 TB table costs two JSON
-# writes regardless of size. The manifest's `columns` list is the
-# single source of schema truth; evolved tables set `schema_evolved`
-# so readers switch to an explicit manifest-derived Parquet schema
-# (inferred schemas would silently drop a column that only newer
-# chunks carry — Spark picks an arbitrary file's footer otherwise).
-# Old chunks' missing payloads decode as the column's recorded default
-# (NULL unless set). Dropped names are tombstoned and may never be
-# reused: old files still hold `<name>_blob` bytes, and a reused name
-# would resurface those stale payloads as the new column's data.
-
-
-def _meta_commit(spark, path, man, op: str, extra: dict, *, parent) -> dict:
-    """Metadata-only commit: claim snapshot id ``parent + 1``
-    (exclusive-create = the concurrency gate), then rewrite manifest
-    row + sidecar. ``parent`` is the snapshot observed when the CALLER
-    read the sidecar it mutated — claiming parent+1 (not
-    current_snapshot()+1 re-read here) makes the exclusive create a
-    true compare-and-swap on the caller's view: a concurrent commit
-    that advanced the log since the sidecar read already holds
-    parent+1, so this writer raises ConcurrentCommitError instead of
-    silently overwriting the other writer's manifest change (the
-    lost-update race between e.g. evolve_add_column and delete_rows).
-    A writer crashing between snapshot and sidecar writes leaves a
-    metadata-op snapshot with an unchanged manifest — re-running the
-    operation is safe (it claims a fresh id). Direct snapshot write,
-    NOT _commit_snapshot: its resume-idempotency check (same chunks +
-    op + totals) would wrongly swallow the second of two consecutive
-    metadata ops — they change none of those fields, only the
-    manifest."""
-    extra = dict(extra)
-    # every commit snapshots the table's live delete-file list so a
-    # reader at any snapshot (and expire_snapshots) never loses it
-    if "delete_files" not in extra and man.get("delete_files"):
-        extra["delete_files"] = man["delete_files"]
-    # the FULL manifest rides in the snapshot file, so it commits
-    # atomically with the exclusive-create CAS (mf.committed_manifest)
-    extra["manifest"] = man
-    # metadata ops on a flat (chunks=1) table must keep the layout
-    # marker: read_all skips the chunk-visibility filter for flat
-    # tables, whose files carry no chunk partition column. A pre-log
-    # table has no parent to inherit it from, so probe the data dir —
-    # writing chunk=-1 next to a flat table's root-level files would
-    # flip partition discovery and hide every data file
-    if "layout" not in extra:
-        if parent is not None and parent.get("layout"):
-            extra["layout"] = parent["layout"]
-        elif parent is None and not _is_chunked(spark, path):
-            extra["layout"] = "flat"
-    if parent is not None:
-        chunks = [int(c) for c in parent["chunks"]]
-    else:
-        chunks = sorted(mf.read_chunk_lineage(path, spark))
-    snap = mf.make_snapshot(
-        snapshot_id=(parent["snapshot_id"] + 1) if parent else 0,
-        chunks=chunks,
-        op=op,
-        parent_id=parent["snapshot_id"] if parent else None,
-        num_rows=man.get("num_rows"),
-        enc_bytes=man.get("enc_bytes"),
-        extra=extra,
-    )
-    mf.write_snapshot(path, snap, spark)
-    if extra.get("layout") == "flat":
-        # flat tables keep the manifest row directly under data/ — a
-        # chunk=-1 subdir next to root-level parquet files would flip
-        # Spark's partition discovery and hide every data file
-        _append_manifest_row(spark, path, man, man["columns"])
-    else:
-        _append_manifest_row(
-            spark,
-            path,
-            man,
-            man["columns"],
-            target=os.path.join(_data_path(path), "chunk=-1"),
-            mode="overwrite",
-        )
-    mf.write_sidecar(path, man, spark)
-    return man, snap
-
-
-def _evolve_commit(spark, path, man, op: str, extra: dict, *, parent) -> dict:
-    man = dict(man)
-    man["schema_evolved"] = True
-    return _meta_commit(spark, path, man, op, extra, parent=parent)
-
-
-def _is_chunked(spark, path: str) -> bool:
-    """True iff the table uses the chunked layout (data/chunk=*/).
-    fsio listing, not a local glob — DML and schema evolution must
-    recognize chunked tables on object stores / HDFS too."""
-    from . import fsio
-
-    return any(
-        d.startswith("chunk=") for d in fsio.list_dirs(spark, _data_path(path))
-    )
-
-
-def _visible_chunks(spark, path) -> list[int]:
-    cur = mf.current_snapshot(path, spark)
-    if cur is not None:
-        return [int(c) for c in cur["chunks"]]
-    return sorted(mf.read_chunk_lineage(path, spark))
+# Iceberg-style METADATA-ONLY schema changes over the chunked layout: no
+# data file is rewritten, so evolving a 100 TB table costs one _commit
+# (three small files) regardless of size. The manifest's `columns` list
+# is the single source of schema truth; each op sets `schema_evolved` so
+# readers switch to an explicit manifest-derived Parquet schema
+# (inferred schemas would silently drop a column that only newer chunks
+# carry — Spark picks an arbitrary file's footer otherwise). Old chunks'
+# missing payloads decode as the column's recorded default (NULL unless
+# set). Dropped names are tombstoned and may never be reused: old files
+# still hold `<name>_blob` bytes, and a reused name would resurface
+# those stale payloads as the new column's data.
 
 
 def evolve_add_column(
@@ -1651,11 +1514,12 @@ def evolve_add_column(
     }
     if default is not None:
         spec["default"] = default
-    man = dict(man)
+    man = dict(man, schema_evolved=True)
     man["columns"] = list(man["columns"]) + [spec]
-    man, _ = _evolve_commit(
-        spark, path, man, "add-column",
-        {"column": name, "spark_type": spark_type}, parent=cur,
+    man, _ = _commit(
+        spark, path, man, chunks=_visible_chunks(spark, path, cur),
+        op="add-column", parent=cur,
+        extra={"column": name, "spark_type": spark_type},
     )
     return man
 
@@ -1694,7 +1558,7 @@ def evolve_rename_column(
             f"{in_group[old]!r}; rename is only supported for standalone "
             "columns"
         )
-    man = dict(man)
+    man = dict(man, schema_evolved=True)
     cols = []
     for c in man["columns"]:
         if c["name"] == old:
@@ -1719,8 +1583,9 @@ def evolve_rename_column(
             else e
             for e in man["delete_files"]
         ]
-    man, _ = _evolve_commit(
-        spark, path, man, "rename-column", {"from": old, "to": new}, parent=cur
+    man, _ = _commit(
+        spark, path, man, chunks=_visible_chunks(spark, path, cur),
+        op="rename-column", parent=cur, extra={"from": old, "to": new},
     )
     return man
 
@@ -1755,7 +1620,7 @@ def evolve_drop_column(spark: SparkSession, path: str, name: str) -> dict:
             "files; purge_deletes first (dropping it would strand "
             "unresolvable deletes)"
         )
-    man = dict(man)
+    man = dict(man, schema_evolved=True)
     spec = next(c for c in man["columns"] if c["name"] == name)
     man["columns"] = [c for c in man["columns"] if c["name"] != name]
     # tombstone the physical payload name too: that is the blob whose
@@ -1764,8 +1629,9 @@ def evolve_drop_column(spark: SparkSession, path: str, name: str) -> dict:
         set(man.get("dropped_columns", []))
         | {name, spec.get("physical", name)}
     )
-    man, _ = _evolve_commit(
-        spark, path, man, "drop-column", {"column": name}, parent=cur
+    man, _ = _commit(
+        spark, path, man, chunks=_visible_chunks(spark, path, cur),
+        op="drop-column", parent=cur, extra={"column": name},
     )
     return man
 
@@ -1816,14 +1682,15 @@ def evolve_widen_column(
             "(narrowing or cross-kind changes need a rewrite)"
         )
     assert selector.kind_of_spark_type(new_type) == spec["kind"]
-    man = dict(man)
+    man = dict(man, schema_evolved=True)
     man["columns"] = [
         {**c, "spark_type": new_type} if c["name"] == name else c
         for c in man["columns"]
     ]
-    man, _ = _evolve_commit(
-        spark, path, man, "widen-column",
-        {"column": name, "from": old_type, "to": new_type}, parent=cur,
+    man, _ = _commit(
+        spark, path, man, chunks=_visible_chunks(spark, path, cur),
+        op="widen-column", parent=cur,
+        extra={"column": name, "from": old_type, "to": new_type},
     )
     return man
 
@@ -1902,11 +1769,7 @@ def delete_rows(
         if c not in by_name:
             raise ValueError(f"no column {c!r}; have {sorted(by_name)}")
         specs.append(by_name[c])
-    visible = (
-        [int(c) for c in cur["chunks"]]
-        if cur is not None
-        else sorted(mf.read_chunk_lineage(path, spark))
-    )
+    visible = _visible_chunks(spark, path, cur)
     seq = max(visible) if visible else 0
     snap_id = (cur["snapshot_id"] + 1) if cur else 0
     # UNIQUE dir token (not the contended snapshot id): two racing
@@ -2008,17 +1871,15 @@ def delete_rows(
             "op": "delete",
             "entry": entry,
             "parent_snapshot_id": cur["snapshot_id"],
-            "chunks": sorted(int(c) for c in visible),
+            "chunks": visible,
             "manifest": man,
             "created_unix": int(time.time()),
         }
         mf.write_staged(path, rec, spark)
         return rec
     try:
-        man, _ = _meta_commit(
-            spark, path, man, "delete",
-            {"delete_files": man["delete_files"]},
-            parent=cur,
+        man, _ = _commit(
+            spark, path, man, chunks=visible, op="delete", parent=cur
         )
     except mf.ConcurrentCommitError:
         # lost the CAS: our value file is unreferenced — reclaim it now
@@ -2209,10 +2070,10 @@ def compact_delete_files(spark: SparkSession, path: str) -> dict:
     man = dict(man)
     man["delete_files"] = new_entries
     try:
-        man, _ = _meta_commit(
-            spark, path, man, "compact-deletes",
-            {"delete_files": new_entries, "compacted_files": n_merged},
-            parent=cur,
+        man, _ = _commit(
+            spark, path, man, chunks=_visible_chunks(spark, path, cur),
+            op="compact-deletes", parent=cur,
+            extra={"compacted_files": n_merged},
         )
     except mf.ConcurrentCommitError:
         for dest in written:  # lost the CAS: reclaim our orphans now
@@ -2279,11 +2140,7 @@ def compact_chunks(
         raise ValueError(
             "compact_chunks needs a chunked-layout table (data/chunk=*/)"
         )
-    visible = (
-        [int(c) for c in cur["chunks"]]
-        if cur is not None
-        else sorted(mf.read_chunk_lineage(path, spark))
-    )
+    visible = _visible_chunks(spark, path, cur)
     if chunk_ids is not None:
         sel = sorted({int(c) for c in chunk_ids})
         unknown = set(sel) - set(visible)
@@ -2316,7 +2173,7 @@ def compact_chunks(
     names = [c["name"] for c in man["columns"]]
     # current-snapshot merge-on-read view of ONLY the selected chunks:
     # chunk filter + delete entries are captured eagerly here, and the
-    # append's CAS (expected_parent=cur) rejects the commit if any
+    # append's CAS (parent = cur) rejects the commit if any
     # writer advanced the log after this capture point
     blocks = _scan.read_blocks(spark, path).where(F.col("chunk").isin(sel))
     entries = _scan.read_delete_entries(spark, path)
@@ -2333,5 +2190,5 @@ def compact_chunks(
         shuffle=shuffle,
         _replace_chunks=sel,
         _op="compact-chunks",
-        _expected_parent=cur,
+        _base=(man, cur),
     )

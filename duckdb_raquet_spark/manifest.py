@@ -253,8 +253,9 @@ def write_snapshot(path: str, snap: dict, spark=None) -> None:
         )
     except FileExistsError as e:
         raise ConcurrentCommitError(
-            f"snapshot {snap['snapshot_id']} already committed at {path}; "
-            "re-read the snapshot log and retry"
+            f"snapshot log at {path} advanced: snapshot "
+            f"{snap['snapshot_id']} is already committed; re-read the "
+            "snapshot log and retry"
         ) from e
 
 

@@ -943,7 +943,7 @@ def purge_deletes(
         "enc_bytes": None, "codec_histogram": {}, "created_unix": None,
         "purged_from": src, "shuffle": "hash",
     })
-    final = enc.write_blocks(merged, dst, base, man["columns"])
+    final = enc.write_blocks(merged, dst, base)
     mf.write_chunk_lineage(
         dst, 0,
         {"chunk": 0, "rows": final["num_rows"],
@@ -2247,7 +2247,7 @@ def compact_to_path(
     })
     # clear the reused destination only right before the overwrite
     _clear_stale_table_meta(spark, src, dst)
-    final = enc.write_blocks(compacted, dst, base, man["columns"])
+    final = enc.write_blocks(compacted, dst, base)
     mf.write_chunk_lineage(
         dst, 0,
         {"chunk": 0, "rows": final["num_rows"], "raw_bytes": final["raw_bytes"],

@@ -9,9 +9,9 @@ twin keeps both invariants per micro-batch:
     an idempotent overwrite, so Spark's at-least-once foreachBatch
     replay after a failure can never duplicate rows (the same batch id
     rewrites the same directory);
-  * the manifest row + sidecar are re-finalized strictly AFTER the
-    batch's data commit, so readers always see a manifest that covers
-    only fully committed blocks;
+  * the batch commits (snapshot CAS, then manifest row + sidecar)
+    strictly AFTER its data write, so readers always see a manifest
+    that covers only fully written blocks;
   * a lineage record per batch (rows/bytes/wall) makes progress
     observable and resumable, same shape as batch-mode chunk lineage.
 
@@ -65,6 +65,9 @@ def encode_stream(
         n = batch_df.count()
         if n == 0:
             return
+        # the CAS parent: a writer committing during this batch fails
+        # it loudly; a replayed batch re-commits as a no-op
+        parent = mf.current_snapshot(path, spark)
         blocks, man = enc.encode_table(
             batch_df,
             url_col=url_col,
@@ -81,65 +84,33 @@ def encode_stream(
         # pin ts_origin explicitly (ts_range above fixes the origin; the
         # effective bucket stays the caller's bucket_seconds)
         man["key"]["ts_origin"] = ts_origin
-        part = f"{enc._data_path(path)}/chunk={batch_id}"
-        blocks.sortWithinPartitions(enc.BLOCK, enc.SALT).write.mode(
-            "overwrite"
-        ).parquet(part)
+        enc._write_data(blocks, f"{enc._data_path(path)}/chunk={batch_id}", None)
         # visibility from the snapshot log (a replayed batch after a
         # checkpoint restart overwrites its own chunk dir and must not
         # double-count it; a rollback's orphans must stay out)
-        cur = mf.current_snapshot(path, spark)
-        if cur is not None:
-            visible = sorted(set(cur["chunks"]) | {batch_id})
-        else:
-            # pre-log table (or very first batch): everything committed
-            # so far, from lineage, plus this batch
-            visible = sorted(
-                set(mf.read_chunk_lineage(path, spark)) | {batch_id}
-            )
-        totals, hist = enc._aggregate_written(
-            spark, path, visible_chunks=visible
+        visible = sorted(
+            set(enc._visible_chunks(spark, path, parent)) | {batch_id}
+        )
+        totals, hist, mine = enc._aggregate_written(
+            spark, path, visible_chunks=visible, new_chunk=batch_id
         )
         final = mf.finalize_manifest(man, codec_histogram=hist, **totals)
         final["lineage_chunks"] = batch_id + 1
-        enc._append_manifest_row(
-            spark,
-            path,
-            final,
-            man["columns"],
-            target=f"{enc._data_path(path)}/chunk=-1",
-            mode="overwrite",
-        )
-        mf.write_sidecar(path, final, spark)
         # lineage records THIS batch's bytes (the finalized manifest
         # carries whole-table totals), matching encode/append lineage
-        crow = (
-            spark.read.parquet(part)
-            .agg(
-                F.sum("stats.raw_bytes").alias("raw"),
-                F.sum("stats.enc_bytes").alias("enc"),
-            )
-            .collect()[0]
-        )
         mf.write_chunk_lineage(
             path,
             batch_id,
             {
                 "chunk": batch_id,
-                "rows": n,
-                "raw_bytes": int(crow["raw"] or 0),
-                "enc_bytes": int(crow["enc"] or 0),
+                **mine,
                 "wall_seconds": round(time.time() - t0, 3),
                 "streaming": True,
             },
             spark,
         )
-        enc._commit_snapshot(
-            spark,
-            path,
-            chunks=visible,
-            op="append",
-            final=final,
+        enc._commit(
+            spark, path, final, chunks=visible, op="append", parent=parent,
             extra={"streaming_batch": batch_id},
         )
 

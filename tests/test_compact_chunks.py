@@ -137,7 +137,7 @@ def test_concurrent_commit_fails_the_compaction(spark, tmp_path):
     df = synth.synth_webtext(spark, 120, num_partitions=2)
     encode.encode_to_path(spark, df, path, chunks=2, target_rows_per_block=64)
     names = ["url", "warc_ts", "html", "text", "lang"]
-    _, stale = mf.committed_manifest(path, spark)
+    stale = mf.committed_manifest(path, spark)
     rows = scan.read_rows(spark, path, names)
     # the interleaved commit
     encode.delete_rows(spark, path, "url", df.select("url").limit(5))
@@ -145,7 +145,7 @@ def test_concurrent_commit_fails_the_compaction(spark, tmp_path):
         encode.append_chunk(
             spark, rows, path,
             _replace_chunks=[0, 1], _op="compact-chunks",
-            _expected_parent=stale,
+            _base=stale,
         )
     # the retry path: a fresh capture succeeds and folds the delete in
     before = _rows(spark, path)

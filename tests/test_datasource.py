@@ -1,7 +1,7 @@
 """Python Data Source surface: spark.read/write.format("raquet").
 
 The writer is the map-only encode through Spark's own commit protocol
-(manifest row + sidecar written LAST in commit()); the reader serves the
+(the table's one commit written LAST in commit()); the reader serves the
 LOGICAL schema with url/warc_ts predicates pruning files and row groups
 via parquet footer statistics on the sorted block column."""
 
@@ -51,6 +51,25 @@ def test_datasource_write_read_roundtrip(registered, tmp_path):
     # column selection option prunes decoded payloads
     two = spark.read.format("raquet").option("columns", "url,text").load(out)
     assert two.columns == ["url", "text"] and two.count() == 200
+
+
+def test_datasource_overwrite_of_logged_table(registered, tmp_path):
+    """Overwriting a table that has a snapshot log commits a new (flat)
+    snapshot: the manifest, the engine read and the datasource read all
+    see the new 50-row, 4-column table, not the old chunked one."""
+    spark = registered
+    path = str(tmp_path / "tbl")
+    df = synth.synth_webtext(spark, 200, num_partitions=2)
+    encode.encode_to_path(spark, df, path, chunks=2, target_rows_per_block=64)
+    new = synth.synth_webtext(spark, 50, num_partitions=1).drop("lang")
+    new.write.format("raquet").mode("overwrite").save(path)
+    man = scan.read_manifest(spark, path)
+    assert man["num_rows"] == 50 and len(man["columns"]) == 4
+    rows = scan.read_rows(spark, path)
+    assert rows.count() == 50 and len(rows.columns) == 4
+    back = spark.read.format("raquet").load(path)
+    assert back.count() == 50 and len(back.columns) == 4
+    assert back.exceptAll(new.select(*back.columns)).count() == 0
 
 
 def test_datasource_reads_engine_tables_with_pushdown(registered, tmp_path):

@@ -315,6 +315,8 @@ def test_append_chunk_extends_table(spark, tmp_path):
     """append_chunk adds a new chunk under the existing key geometry and
     re-finalizes the manifest; readers see old+new rows; a flat table
     refuses; mismatched schema refuses."""
+    from pyspark.sql import functions as F
+
     from duckdb_raquet_spark import encode, scan, synth
 
     df = synth.synth_webtext(spark, 200, num_partitions=2)
@@ -337,7 +339,17 @@ def test_append_chunk_extends_table(spark, tmp_path):
     from duckdb_raquet_spark import manifest as mf
 
     lineage = mf.read_chunk_lineage(tbl, spark)
-    assert lineage[max(lineage)]["appended"] is True
+    k = max(lineage)
+    assert lineage[k]["appended"] is True
+    # ... with the new chunk's own bytes, which compact_chunks' smallest-
+    # first selection reads
+    stats = (
+        spark.read.parquet(os.path.join(tbl, "data", f"chunk={k}"))
+        .agg(F.sum("stats.raw_bytes"), F.sum("stats.enc_bytes"))
+        .first()
+    )
+    assert (lineage[k]["raw_bytes"], lineage[k]["enc_bytes"]) == tuple(stats)
+    assert lineage[k]["rows"] == 100
     # schema mismatch refused
     with pytest.raises(ValueError, match="columns"):
         encode.append_chunk(spark, extra.drop("lang"), tbl)

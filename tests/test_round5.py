@@ -294,9 +294,8 @@ def test_compact_merges_v1_entries(spark, comp_table, tmp_path):
     man["delete_files"] = list(man["delete_files"]) + [
         {"dir": f"{encode.DELETES_DIR}/{rel}", "col": "lang", "seq": 1, "n": 1}
     ]
-    encode._meta_commit(
-        spark, path, man, "delete",
-        {"delete_files": man["delete_files"]}, parent=cur,
+    encode._commit(
+        spark, path, man, chunks=cur["chunks"], op="delete", parent=cur
     )
     want = {
         r["doc_id"]
@@ -725,9 +724,9 @@ def test_widen_then_delete_multipath_read(spark, tmp_path):
 
 
 def test_widen_prelog_flat_table_keeps_layout(spark, tmp_path):
-    """Widening a PRE-LOG flat table (no _snapshots dir, so _meta_commit
-    has no parent to inherit the layout marker from) must probe the data
-    dir and keep the flat layout — writing the manifest row into a
+    """Widening a PRE-LOG flat table (no _snapshots dir, so the commit
+    has no parent snapshot) must probe the data dir and keep the flat
+    layout — writing the manifest row into a
     chunk=-1 subdir next to root-level parquet files would flip partition
     discovery and hide every data file."""
     import shutil

@@ -302,6 +302,37 @@ def test_concurrent_commit_detected(spark, tt_table, tmp_path):
     assert mf.current_snapshot(path, spark)["num_rows"] == cur["num_rows"]
 
 
+def test_append_losing_cas_leaves_caches_at_tip(spark, tmp_path, monkeypatch):
+    """An append racing a delete that commits after the append read its
+    base loses the CAS — and loses it before it touches any shared
+    file: the sidecar and the chunk=-1 manifest row still equal the tip
+    snapshot's manifest (remote datasource reads plan from the
+    sidecar)."""
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "tbl")
+    df = synth.synth_webtext(spark, 200, num_partitions=2)
+    encode.encode_to_path(spark, df, path, chunks=2, target_rows_per_block=64)
+    orig = encode.encode_table
+    calls = {"n": 0}
+
+    def racing(*a, **k):
+        calls["n"] += 1
+        if calls["n"] == 1:  # the other writer commits mid-append
+            encode.delete_rows(spark, path, "lang", ["en"])
+        return orig(*a, **k)
+
+    monkeypatch.setattr(encode, "encode_table", racing)
+    extra = synth.synth_webtext(spark, 40, num_partitions=1, start=1_000_000)
+    with pytest.raises(mf.ConcurrentCommitError):
+        encode.append_chunk(spark, extra, path)
+    tip, _ = mf.committed_manifest(path, spark)
+    assert tip["num_rows"] == 200 and len(tip["delete_files"]) == 1
+    assert mf.read_sidecar(path, spark) == tip
+    row = pq.read_table(os.path.join(path, "data", "chunk=-1"))
+    assert mf.from_json(row.column("metadata")[0].as_py()) == tip
+
+
 # -------------------------------------------------------- tags (refs) ----
 
 
