@@ -77,7 +77,9 @@ def _enc_path(sf_dir: str) -> str:
     return f"/tmp/raquet_entry_{tag}_v{drs.__version__}"
 
 
-_ENC_GLOB = _enc_path(DRIVER_SF_DIR) + "/data/*.parquet"
+# every table is chunked: the data files and the manifest row (block 0)
+# sit one level down, in data/chunk=<k>/
+_ENC_GLOB = _enc_path(DRIVER_SF_DIR) + "/data/*/*.parquet"
 
 
 def _ivf_tmp_path(sf_dir: str) -> str:

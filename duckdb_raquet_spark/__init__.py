@@ -15,7 +15,7 @@ as idiomatic Spark DataFrame plans plus Arrow-vectorized pandas UDF
 codec kernels (numpy/pyarrow inside, zero per-row Python).
 """
 
-__version__ = "0.5.4"
+__version__ = "0.5.5"
 
 # current manifest generation written by this engine; readers accept
 # every generation in SUPPORTED_FORMAT_VERSIONS (multi-generation parse,

@@ -284,19 +284,6 @@ def cover_keys_for_ts_range(
     return sorted(int(k) for k in keys)
 
 
-def cover_keys_for_x(x26: int, res: int) -> list[int]:
-    """All cells at ``res`` sharing the hash coordinate of ``x26`` —
-    the cover set for a url point-lookup when the timestamp is unknown
-    (one cell per time bucket; 4^res/2^res = 2^res keys)."""
-    shift = COORD_BITS - res
-    xr = int(x26) >> shift
-    ys = np.arange(1 << res, dtype=np.uint64)
-    keys = key_from_parts(
-        np.full(1 << res, xr << shift, dtype=np.uint64), ys << _U64(shift), res
-    )
-    return sorted(int(k) for k in keys)
-
-
 # ---------------------------------------------------------------- Spark ----
 
 

@@ -334,15 +334,16 @@ class RaquetReader(DataSourceReader):
 
         data = os.path.join(self.path, "data")
         # visibility: only chunks of the selected snapshot (rolled-back
-        # orphan dirs awaiting expiry must not be planned); pre-log and
-        # flat tables have no snapshot/chunk dirs and walk everything
+        # orphan dirs awaiting expiry must not be planned); pre-log
+        # tables walk everything, and legacy flat files sit outside any
+        # chunk dir
         snap = (
             self.snapshot
             if self.snapshot is not None
             else mf.current_snapshot(self.path, None)
         )
         visible = None
-        if snap is not None and snap.get("layout") != "flat":
+        if snap is not None:
             visible = {int(c) for c in snap["chunks"]} | {-1}
         files = []
         for root, _dirs, names in os.walk(data):
@@ -549,8 +550,10 @@ class RaquetWriter(DataSourceArrowWriter):
             )
         import shutil
 
+        # a fresh one-chunk table: every task writes into data/chunk=0
         shutil.rmtree(os.path.join(self.path, "data"), ignore_errors=True)
-        os.makedirs(os.path.join(self.path, "data"), exist_ok=True)
+        self.chunk_dir = os.path.join(self.path, "data", "chunk=0")
+        os.makedirs(self.chunk_dir, exist_ok=True)
         # column specs from the WRITER schema (the df being saved)
         from .encode import columns_of_schema
 
@@ -569,7 +572,7 @@ class RaquetWriter(DataSourceArrowWriter):
         pid = int(ctx.partitionId()) if ctx is not None else 0
         attempt = int(ctx.taskAttemptId()) if ctx is not None else 0
         batches = [b for b in iterator]
-        out_file = os.path.join(self.path, "data", f"part-{pid:05d}.parquet")
+        out_file = os.path.join(self.chunk_dir, f"part-{pid:05d}.parquet")
         # speculative execution: two attempts of the same partition must
         # not interleave writes to the final path — stage to an
         # attempt-unique temp name and atomically rename at task end

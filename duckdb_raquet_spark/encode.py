@@ -34,6 +34,7 @@ import math
 import os
 import time
 import uuid
+from collections import Counter
 
 import numpy as np
 import pyarrow as pa
@@ -581,15 +582,79 @@ def _data_path(path: str) -> str:
     return os.path.join(path, "data")
 
 
-def _is_chunked(spark, path: str) -> bool:
-    """True iff the table uses the chunked layout (data/chunk=*/).
-    fsio listing, not a local glob — DML and schema evolution must
-    recognize chunked tables on object stores / HDFS too."""
+def _refuse_flat(spark, path: str, snap: dict | None) -> None:
+    """The one write-side test for the legacy flat layout (data files
+    directly under ``data/``, no ``chunk`` partition): tables from
+    before the snapshot log, and tables whose snapshot says ``layout:
+    flat``. They stay readable but are read-only — every writer calls
+    this with the snapshot it builds on, before any file changes.
+    fsio listing, not a local glob, so object stores answer too."""
     from . import fsio
 
-    return any(
-        d.startswith("chunk=") for d in fsio.list_dirs(spark, _data_path(path))
-    )
+    if snap is not None:
+        flat = snap.get("layout") == "flat"
+    else:
+        flat = any(
+            f.endswith(".parquet")
+            for f in fsio.list_files(spark, _data_path(path))
+        )
+    if flat:
+        raise ValueError(
+            f"{path} is a legacy flat table (data files directly under "
+            "data/) and is read-only; rewrite it into a new path with "
+            "scan.compact_to_path to get a writable copy"
+        )
+
+
+def _writable_base(spark, path: str) -> tuple[dict, dict | None]:
+    """(manifest, snapshot) a table write builds on, from
+    ``mf.committed_manifest``; refuses a missing or legacy flat table."""
+    man, snap = mf.committed_manifest(path, spark)
+    if man is None:
+        raise FileNotFoundError(f"no committed manifest at {path}")
+    _refuse_flat(spark, path, snap)
+    return man, snap
+
+
+def _claim_chunk(
+    spark, path: str, snap: dict | None, batch: list | None = None
+) -> int:
+    """Claim a chunk id EXCLUSIVELY before any data write: two racing
+    writers that saw the same table would otherwise both overwrite
+    ``data/chunk=<k>`` — the snapshot CAS protects metadata, but the
+    loser's in-flight overwrite could clobber the winner's committed
+    files. The claim is the lineage filename itself (create-or-fail,
+    like the snapshot CAS); the writer overwrites it with the real
+    record after the data lands, and a crash in between burns the id
+    exactly like a lost snapshot CAS does.
+
+    Ids start past every claimed lineage id AND every chunk of
+    ``snap``: a table written without lineage records (the datasource
+    writer) still has its chunks skipped. ``batch`` (a streaming
+    ``[checkpoint_dir, batch_id]``) is stored in the claim; a claim or
+    record carrying the same ``batch`` is returned as is, so a replayed
+    micro-batch rewrites its own chunk instead of adding a copy."""
+    from . import fsio
+
+    claimed = mf.read_chunk_lineage(path, spark, include_claims=True)
+    if batch is not None:
+        for k, rec in claimed.items():
+            if rec.get("batch") == batch:
+                return k
+    k = 1 + max([*claimed, *(snap["chunks"] if snap else [])], default=-1)
+    while True:
+        try:
+            fsio.write_bytes_exclusive(
+                spark,
+                mf.lineage_dir(path),
+                f"chunk-{k:05d}.json",
+                json.dumps(
+                    {"chunk": k, "claimed": True, **({"batch": batch} if batch else {})}
+                ).encode(),
+            )
+            return k
+        except FileExistsError:
+            k += 1
 
 
 def _visible_chunks(spark, path: str, snap: dict | None) -> list[int]:
@@ -749,15 +814,10 @@ def _commit(
        chunk set from (``None``: it saw no log), so a writer that
        committed since makes this raise ConcurrentCommitError before
        any shared file changes. The snapshot embeds the manifest and
-       the live delete-file list, and marks a flat table (no
-       ``chunk=*`` dir under ``data/``), whose files carry no chunk
-       partition column for readers to filter on.
+       the live delete-file list.
     3. Only then rewrite the caches from the committed manifest: the
-       manifest row — under ``data/`` for a flat table (a ``chunk=-1``
-       dir next to root-level files would flip partition discovery and
-       hide every data file), else overwriting ``data/chunk=-1`` — and
-       the sidecar. Re-running an operation that crashed between 2 and
-       3 heals them.
+       manifest row (overwriting ``data/chunk=-1``) and the sidecar.
+       Re-running an operation that crashed between 2 and 3 heals them.
 
     ``spark=None`` works for local paths. Returns (manifest, snapshot)."""
     from . import fsio
@@ -782,8 +842,6 @@ def _commit(
         # id (and expire_snapshots) never walk to an older commit
         if final.get("delete_files"):
             extra["delete_files"] = final["delete_files"]
-        if not _is_chunked(spark, path):
-            extra["layout"] = "flat"
         snap = mf.make_snapshot(
             snapshot_id=(parent["snapshot_id"] + 1) if parent else 0,
             chunks=chunks,
@@ -794,20 +852,49 @@ def _commit(
             extra=extra,
         )
         mf.write_snapshot(path, snap, spark)
-    row_dir = _data_path(path)
-    if snap.get("layout") != "flat":
-        row_dir = os.path.join(row_dir, "chunk=-1")
-        fsio.delete_dir(spark, row_dir)
+    row_dir = os.path.join(_data_path(path), "chunk=-1")
+    fsio.delete_dir(spark, row_dir)
     _append_manifest_row(spark, row_dir, final)
     mf.write_sidecar(path, final, spark)
     return final, snap
 
 
+def _write_chunk(
+    spark: SparkSession, path: str, k: int, blocks: DataFrame,
+    n_files: int | None,
+) -> tuple[dict, dict]:
+    """Land chunk ``k`` — an idempotent overwrite of ``data/chunk=<k>``
+    (re-running it after a mid-write crash can never duplicate rows) —
+    then its lineage record, strictly after the data. One aggregate job
+    over the chunk yields the record's figures; returns the chunk's
+    (totals, codec histogram) for the commit's manifest."""
+    t0 = time.time()
+    _write_data(blocks, os.path.join(_data_path(path), f"chunk={k}"), n_files)
+    totals, hist, _ = _aggregate_written(spark, path, visible_chunks=[k])
+    mf.write_chunk_lineage(
+        path,
+        k,
+        {
+            "chunk": k,
+            "wall_seconds": round(time.time() - t0, 3),
+            "blocks": totals["num_blocks"],
+            "rows": totals["num_rows"],
+            "raw_bytes": totals["raw_bytes"],
+            "enc_bytes": totals["enc_bytes"],
+        },
+        spark,
+    )
+    return totals, hist
+
+
 def write_blocks(
     blocks: DataFrame, path: str, man: dict, *, sorted: bool = True
 ) -> dict:
-    """Write a fresh flat table: the blocks, then its one commit —
-    the reference's metadata-row-after-all-data invariant, distributed.
+    """Write a fresh one-chunk table: the blocks into ``data/chunk=0``,
+    its lineage record, then its one commit — the reference's
+    metadata-row-after-all-data invariant, distributed. A reused path
+    must be cleared first (``scan.compact_to_path`` and
+    ``scan.purge_deletes`` do).
 
     ``sorted=True`` (default) writes globally block-ordered files;
     ``sorted=False`` is the memory-hardened alternative for encodes
@@ -815,8 +902,7 @@ def write_blocks(
     spark = blocks.sparkSession
     parent = mf.current_snapshot(path, spark)
     n_files = max(2, spark.sparkContext.defaultParallelism) if sorted else None
-    _write_data(blocks, _data_path(path), n_files)
-    totals, hist, _ = _aggregate_written(spark, path)
+    totals, hist = _write_chunk(spark, path, 0, blocks, n_files)
     final = mf.finalize_manifest(man, codec_histogram=hist, **totals)
     final, _ = _commit(spark, path, final, chunks=[0], op="encode", parent=parent)
     return final
@@ -833,15 +919,18 @@ def encode_to_path(
     ts_col: str | None = "warc_ts",
     **kwargs,
 ) -> dict:
-    """End-to-end encode job with optional chunked checkpoint-resume.
+    """End-to-end encode job with chunked checkpoint-resume.
 
-    ``chunks > 1`` splits the block-key space into deterministic chunk
-    ids; each chunk is an independently committed Spark job followed by a
-    per-chunk lineage record (rows, bytes, wall seconds). ``resume=True``
-    skips chunks whose lineage record exists — re-running a half-finished
-    encode does not duplicate or re-encode completed chunks. Chunk ids
-    derive from (block, salt), so an encode unit never spans chunks.
-    """
+    Every table is chunked: chunk ``k`` lands in ``data/chunk=<k>``,
+    each an independently written Spark job followed by its lineage
+    record (rows, bytes, wall seconds), and the encode commits once
+    over ``chunks`` 0..n-1. One chunk (the default) encodes the whole
+    input with the table-wide placement; ``chunks > 1`` splits the
+    block-key space into deterministic chunk ids, derived from
+    (block, salt) so an encode unit never spans chunks.
+    ``resume=True`` skips chunks whose lineage record exists —
+    re-running a half-finished encode does not duplicate or re-encode
+    completed chunks. A legacy flat table at ``path`` is refused."""
     est_rows = kwargs.pop("est_rows", None)
     need_ts = (
         ts_col is not None
@@ -861,81 +950,46 @@ def encode_to_path(
             kwargs["ts_range"] = (int(r[1] or 0), int(r[2] or 0))
 
     sorted_write = kwargs.pop("sorted_write", True)
-    if chunks <= 1:
-        blocks, man = encode_table(
-            df, url_col=url_col, ts_col=ts_col, est_rows=est_rows, **kwargs
-        )
-        man["lineage_chunks"] = 1
-        if not sorted_write:
-            man["sorted"] = False
-        t0 = time.time()
-        final = write_blocks(blocks, path, man, sorted=sorted_write)
-        mf.write_chunk_lineage(
-            path,
-            0,
-            {
-                "chunk": 0,
-                "rows": final["num_rows"],
-                "raw_bytes": final["raw_bytes"],
-                "enc_bytes": final["enc_bytes"],
-                "wall_seconds": round(time.time() - t0, 3),
-                "input_rows": est_rows,
-            },
-            spark,
-        )
-        return final
-
-    # chunked mode: each chunk is an idempotent overwrite of its own
-    # chunk=<k> subdirectory — re-running a chunk after a mid-write crash
-    # can never duplicate rows (no append anywhere), and the lineage
-    # record is written strictly after the chunk's job commit.
     parent = mf.current_snapshot(path, spark)
+    _refuse_flat(spark, path, parent)
     done = mf.read_chunk_lineage(path, spark) if resume else {}
-    man = None
-    files_per_chunk = max(1, spark.sparkContext.defaultParallelism // chunks)
+    chunks = max(1, chunks)
+    one = chunks == 1
+    p = spark.sparkContext.defaultParallelism
+    # one chunk keeps the table-wide placement (the planned-placement
+    # gate, max(2, cores) sorted files); each of n chunks gets 1/n
+    n_files = max(2, p) if one else max(1, p // chunks)
+    if not one:
+        kwargs["num_partitions"] = n_files
+    parts: list[tuple[dict, dict]] = []
     for k in range(chunks):
-        blocks, chunk_man = encode_table(
+        blocks, man = encode_table(
             df,
             url_col=url_col,
             ts_col=ts_col,
             est_rows=est_rows,
-            chunk=(k, chunks),
-            num_partitions=files_per_chunk,
+            chunk=None if one else (k, chunks),
             **kwargs,
         )
-        man = chunk_man
-        if k in done:
-            continue
-        t0 = time.time()
-        part_path = os.path.join(_data_path(path), f"chunk={k}")
-        _write_data(blocks, part_path, files_per_chunk if sorted_write else None)
-        agg = (
-            spark.read.parquet(part_path)
-            .agg(F.count("*"), F.sum("n_rows"), F.sum("stats.raw_bytes"), F.sum("stats.enc_bytes"))
-            .first()
-        )
-        mf.write_chunk_lineage(
-            path,
-            k,
-            {
-                "chunk": k,
-                "wall_seconds": round(time.time() - t0, 3),
-                "blocks": agg[0],
-                "rows": int(agg[1] or 0),
-                "raw_bytes": int(agg[2] or 0),
-                "enc_bytes": int(agg[3] or 0),
-            },
-            spark,
-        )
+        if k not in done:
+            parts.append(
+                _write_chunk(spark, path, k, blocks, n_files if sorted_write else None)
+            )
+    skipped = [k for k in range(chunks) if k in done]
+    if skipped:
+        # resumed chunks' figures: one pass over just those, partition-
+        # pruned — a stale orphan chunk dir (a crashed append, a
+        # rollback awaiting expiry) never inflates the fresh totals
+        parts.append(_aggregate_written(spark, path, visible_chunks=skipped)[:2])
+    totals: Counter = Counter()
+    hist: dict[str, Counter] = {}
+    for t, h in parts:
+        totals.update(t)
+        for col, codecs in h.items():
+            hist.setdefault(col, Counter()).update(codecs)
     man["lineage_chunks"] = chunks
     if not sorted_write:
         man["sorted"] = False
-    # aggregate ONLY this encode's chunk set: a stale orphan chunk dir
-    # (a crashed append, a rollback awaiting expiry) must not inflate
-    # the fresh table's totals
-    totals, hist, _ = _aggregate_written(
-        spark, path, visible_chunks=list(range(chunks))
-    )
     final = mf.finalize_manifest(man, codec_histogram=hist, **totals)
     final, _ = _commit(
         spark, path, final, chunks=list(range(chunks)), op="encode",
@@ -958,8 +1012,8 @@ def append_chunk(
     _op: str = "append",
     _base: tuple[dict, dict | None] | None = None,
 ) -> dict:
-    """Append new rows to a committed CHUNKED table as the next chunk —
-    the sanctioned append path (the datasource rejects ``mode('append')``
+    """Append new rows to a committed table as the next chunk — the
+    sanctioned append path (the datasource rejects ``mode('append')``
     because task-level appends would desync the manifest; this one
     commits strictly AFTER the chunk's data write, the same invariant
     as streaming ingest, whose per-micro-batch commit is exactly one
@@ -968,9 +1022,10 @@ def append_chunk(
     Key geometry (resolution / bucket / origin) is pinned from the
     existing manifest so old and new chunks share one block-key space;
     the appended chunk is an idempotent overwrite of its own
-    ``chunk=<k>`` directory. Only chunked-layout tables can append
-    (a flat table's data files sit where partition discovery would put
-    the chunk dirs) — encode with ``chunks>=1``? flat tables raise.
+    ``chunk=<k>`` directory, under an id claimed past every lineage
+    id and every chunk of the base snapshot (:func:`_claim_chunk`).
+    Every table any writer produces can append; legacy flat tables are
+    read-only and raise.
 
     Concurrency: the commit is a CAS on the snapshot read here — if
     another writer (e.g. a delete_rows) commits in between,
@@ -993,7 +1048,7 @@ def append_chunk(
     applies to it."""
     if staged and (_replace_chunks or _op != "append"):
         raise ValueError("only plain appends can be staged")
-    man, base_snap = _base or mf.committed_manifest(path, spark)
+    man, base_snap = _base or _writable_base(spark, path)
     if staged and base_snap is None:
         # pre-snapshot-log readers plan every chunk dir on disk, so a
         # "staged" chunk would be visible immediately — the opposite of
@@ -1002,45 +1057,12 @@ def append_chunk(
             "staged appends need a snapshot-log table (pre-log tables "
             "read all chunk dirs); append once to create the log first"
         )
-    if man is None:
-        raise FileNotFoundError(f"no committed manifest at {path}")
-    # layout check must look at the DATA directory, not lineage: the
-    # flat (chunks=1) encode also writes a chunk-00000.json lineage
-    # record, but its parquet files sit directly under data/ where a
-    # chunk=<k> subdirectory would break partition discovery
-    if not _is_chunked(spark, path):
-        raise ValueError(
-            "append_chunk needs a chunked-layout table (data/chunk=*/); "
-            "this table was written flat — compact or re-encode chunked"
-        )
     # visible set comes from the snapshot log when present (a rollback
     # leaves orphaned chunk dirs on disk that must not rejoin the table
     # through an append's re-finalization); pre-log tables see all
     # lineage chunks, exactly the old behavior
     visible = _visible_chunks(spark, path, base_snap)
-    claimed = mf.read_chunk_lineage(path, spark, include_claims=True)
-    k = max(claimed, default=-1) + 1
-    # claim the chunk id EXCLUSIVELY before any data write: two racing
-    # appenders that both saw max(done)=k-1 would otherwise both
-    # overwrite data/chunk=<k> — the snapshot CAS protects metadata,
-    # but the loser's in-flight overwrite could clobber the winner's
-    # committed files. The claim is the lineage filename itself
-    # (create-or-fail, like the snapshot CAS); it is overwritten with
-    # the real record after the data lands, and a crash in between
-    # burns the id exactly like a lost snapshot CAS does.
-    from . import fsio as _fsio
-
-    while True:
-        try:
-            _fsio.write_bytes_exclusive(
-                spark,
-                mf.lineage_dir(path),
-                f"chunk-{k:05d}.json",
-                json.dumps({"chunk": k, "claimed": True}).encode(),
-            )
-            break
-        except FileExistsError:
-            k += 1
+    k = _claim_chunk(spark, path, base_snap)
     replace = sorted(int(c) for c in (_replace_chunks or []))
     if replace:
         missing = set(replace) - set(visible)
@@ -1160,7 +1182,7 @@ def rollback_to_tag(spark: SparkSession, path: str, name: str) -> dict:
 
 
 def rollback_to_snapshot(spark: SparkSession, path: str, snapshot_id: int) -> dict:
-    """Roll a chunked table back to an earlier snapshot's visible chunk
+    """Roll a table back to an earlier snapshot's visible chunk
     set (Iceberg rollback semantics: a NEW snapshot is committed whose
     chunk set equals the target's — history is append-only, nothing is
     deleted, and the rolled-back chunks' directories stay on disk,
@@ -1174,11 +1196,7 @@ def rollback_to_snapshot(spark: SparkSession, path: str, snapshot_id: int) -> di
             f"no snapshot {snapshot_id} at {path}; have {sorted(snaps)}"
         )
     target = snaps[snapshot_id]
-    if target.get("layout") == "flat":
-        raise ValueError("flat tables have a single snapshot; nothing to roll back")
-    man, base_snap = mf.committed_manifest(path, spark)
-    if man is None:
-        raise FileNotFoundError(f"no committed manifest at {path}")
+    man, base_snap = _writable_base(spark, path)
     man = dict(man)
     # restore the delete-file list VISIBLE AT the target snapshot
     # (every commit since row-level deletes carries the live list; a
@@ -1253,7 +1271,7 @@ def publish_staged(
     payloads are self-contained; only the visible set and totals
     change) provided the schema is unchanged."""
     rec = mf.get_staged(path, token, spark)
-    cur_man, cur_snap = mf.committed_manifest(path, spark)
+    cur_man, cur_snap = _writable_base(spark, path)
     cur_id = cur_snap["snapshot_id"] if cur_snap else None
     if rec["op"] == "delete":
         return _publish_staged_delete(
@@ -1487,13 +1505,7 @@ def evolve_add_column(
     payloads; the stats-proof mask fast paths assume materialized
     payloads and per-block stats — run ``compact_to_path`` first to
     physically backfill an added column before masking on it."""
-    man, cur = mf.committed_manifest(path, spark)
-    if man is None:
-        raise FileNotFoundError(f"no committed manifest at {path}")
-    if not _is_chunked(spark, path):
-        raise ValueError(
-            "schema evolution needs a chunked-layout table (data/chunk=*/)"
-        )
+    man, cur = _writable_base(spark, path)
     names = [c["name"] for c in man["columns"]]
     physicals = {c.get("physical", c["name"]) for c in man["columns"]}
     if name in names or name in physicals:
@@ -1534,9 +1546,7 @@ def evolve_rename_column(
     through the ``physical`` mapping. The old logical name is tombstoned
     (its payload bytes live on under the physical name). Key columns
     (url/ts) and column-group members cannot be renamed."""
-    man, cur = mf.committed_manifest(path, spark)
-    if man is None:
-        raise FileNotFoundError(f"no committed manifest at {path}")
+    man, cur = _writable_base(spark, path)
     names = [c["name"] for c in man["columns"]]
     physicals = {c.get("physical", c["name"]) for c in man["columns"]}
     if old not in names:
@@ -1596,9 +1606,7 @@ def evolve_drop_column(spark: SparkSession, path: str, name: str) -> dict:
     touches them; ``compact_to_path`` physically sheds them since it
     re-encodes through the manifest's column list). The name is
     tombstoned against reuse. Returns the updated manifest."""
-    man, cur = mf.committed_manifest(path, spark)
-    if man is None:
-        raise FileNotFoundError(f"no committed manifest at {path}")
+    man, cur = _writable_base(spark, path)
     names = [c["name"] for c in man["columns"]]
     if name not in names:
         raise ValueError(f"no column {name!r}; have {names}")
@@ -1662,9 +1670,7 @@ def evolve_widen_column(
     is unchanged, only the declared logical type moves) and any later
     ``purge_deletes``/``transform_blocks`` compaction backfills the
     physical payloads as a side effect of its rewrite."""
-    man, cur = mf.committed_manifest(path, spark)
-    if man is None:
-        raise FileNotFoundError(f"no committed manifest at {path}")
+    man, cur = _writable_base(spark, path)
     spec = next((c for c in man["columns"] if c["name"] == name), None)
     if spec is None:
         raise ValueError(
@@ -1756,13 +1762,7 @@ def delete_rows(
         raise ValueError("need at least one key column")
     if len(set(cols)) != len(cols):
         raise ValueError(f"duplicate key columns in {cols}")
-    man, cur = mf.committed_manifest(path, spark)
-    if man is None:
-        raise FileNotFoundError(f"no committed manifest at {path}")
-    if not _is_chunked(spark, path):
-        raise ValueError(
-            "row-level deletes need a chunked-layout table (data/chunk=*/)"
-        )
+    man, cur = _writable_base(spark, path)
     by_name = {c["name"]: c for c in man["columns"]}
     specs = []
     for c in cols:
@@ -1919,9 +1919,7 @@ def upsert_rows(
 
     Returns the final manifest (after the append's re-finalization)."""
     keys = [key_col] if isinstance(key_col, str) else list(key_col)
-    man, _ = mf.committed_manifest(path, spark)
-    if man is None:
-        raise FileNotFoundError(f"no committed manifest at {path}")
+    man, _ = _writable_base(spark, path)
     names = [c["name"] for c in man["columns"]]
     for k in keys:
         if k not in names:
@@ -1993,9 +1991,7 @@ def compact_delete_files(spark: SparkSession, path: str) -> dict:
 
     from . import fsio
 
-    man, cur = mf.committed_manifest(path, spark)
-    if man is None:
-        raise FileNotFoundError(f"no committed manifest at {path}")
+    man, cur = _writable_base(spark, path)
     entries = list(man.get("delete_files") or [])
     if not entries:
         raise ValueError(f"no delete files to compact at {path}")
@@ -2133,13 +2129,7 @@ def compact_chunks(
     """
     from . import scan as _scan
 
-    man, cur = mf.committed_manifest(path, spark)
-    if man is None:
-        raise FileNotFoundError(f"no committed manifest at {path}")
-    if not _is_chunked(spark, path):
-        raise ValueError(
-            "compact_chunks needs a chunked-layout table (data/chunk=*/)"
-        )
+    man, cur = _writable_base(spark, path)
     visible = _visible_chunks(spark, path, cur)
     if chunk_ids is not None:
         sel = sorted({int(c) for c in chunk_ids})

@@ -52,10 +52,6 @@ def _fdct(block: np.ndarray) -> np.ndarray:
     return _M @ block @ _M.T
 
 
-def _idct(coef: np.ndarray) -> np.ndarray:
-    return _M.T @ coef @ _M
-
-
 def _quant_table(quality: int) -> np.ndarray:
     """Textbook ramp table Q[u,v] = 1 + (1+u+v)*scale — any table is
     valid JPEG since DQT ships it; scale maps quality 1..100."""

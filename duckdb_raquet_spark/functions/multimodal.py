@@ -298,15 +298,6 @@ def synth_mixed_image_column(
     return _append_column(df, out_col, "binary", cell)
 
 
-def synth_webp_column(df: DataFrame, id_col: str, out_col: str = "webp") -> DataFrame:
-    """Append a real lossless-WebP binary column rendered from the id —
-    the webp twin of synth_png_column."""
-    i = df.columns.index(id_col)
-    return _append_column(
-        df, out_col, "binary", lambda row: synth_webp_bytes(int(row[i]))
-    )
-
-
 def synth_webp_lossy_bytes(key: int) -> bytes:
     """Structurally valid LOSSY (VP8) WebP: correct RIFF container,
     frame tag, 9d 01 2a start code and dims — but an undecodable

@@ -668,10 +668,6 @@ def quantize_embeddings(
     )
 
 
-def dequantize_col(q_col: Column, scale_col: Column) -> Column:
-    return F.transform(q_col, lambda x: x.cast("double") * scale_col)
-
-
 # --------------------------------------------------------------- PQ ----
 #
 # Product quantization (Jégou et al. 2011): split each vector into m

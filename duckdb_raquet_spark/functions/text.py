@@ -182,22 +182,6 @@ def fingerprint_md5_col(text: Column | str) -> Column:
     return F.md5((F.col(text) if isinstance(text, str) else text).cast("binary"))
 
 
-def fingerprint_rolling_col(text: Column | str, window: int = 8) -> Column:
-    """Rolling polynomial fingerprint: min of rolling hashes over token
-    windows (winnowing-style document sketch). Pure Column expression:
-    xxhash64 over sliding token n-grams, take the minimum. Token array
-    let-bound (same O(len) rationale as the md5 variant)."""
-    return let_col(
-        tokens_col(text),
-        lambda t: F.array_min(
-            F.transform(
-                F.sequence(F.lit(0), F.greatest(F.size(t) - window, F.lit(0))),
-                lambda i: F.xxhash64(F.concat_ws(" ", F.slice(t, i + 1, window))),
-            )
-        ),
-    )
-
-
 def langid_udf():
     """Arrow-vectorized language id: per-language stopword-hit counts via
     C-backed regex ``Series.str.count``; argmax over the score matrix.
@@ -220,10 +204,6 @@ def langid_udf():
         return best
 
     return _langid
-
-
-def add_quality(df: DataFrame, text_col: str = "text") -> DataFrame:
-    return df.select("*", *quality_columns(text_col))
 
 
 # Gopher-style document quality rules (Rae et al. 2021, "Scaling
@@ -758,7 +738,7 @@ def fuzzy_decontaminate(
 
     def _buckets(src: DataFrame, idc: str, hsc: str) -> DataFrame:
         sig = src.selectExpr(
-            idc, *minhash_cols_from_hashed(hsc, k)
+            f"`{idc}`", *minhash_cols_from_hashed(hsc, k)
         )
         return sig.select(
             idc,

@@ -150,10 +150,6 @@ def from_json(s: str) -> dict:
 SIDECAR = "_raquet_manifest.json"
 
 
-def sidecar_path(path: str) -> str:
-    return os.path.join(path, SIDECAR)
-
-
 def write_sidecar(path: str, manifest: dict, spark=None) -> None:
     """Sidecar copy for cheap driver-side access. Remote (``://``) paths
     need a live session to reach the Hadoop FileSystem; without one the

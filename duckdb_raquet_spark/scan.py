@@ -68,12 +68,13 @@ def read_all(spark: SparkSession, path: str) -> DataFrame:
     """All rows visible at the CURRENT snapshot. Every ordinary read
     path routes through here, so a rollback is immediately effective
     for point lookups, scans, the datasource view and compaction —
-    not just for explicit read_blocks_at calls. Pre-snapshot-log and
-    flat tables read unfiltered, as always; the manifest row
-    (chunk=-1) is always visible."""
+    not just for explicit read_blocks_at calls. Pre-snapshot-log
+    tables, and legacy flat ones (no ``chunk`` partition column), read
+    unfiltered, as always; the manifest row (chunk=-1) is always
+    visible."""
     df = _read_raw(spark, path)
     snap = mf.current_snapshot(path, spark)
-    if snap is not None and snap.get("layout") != "flat" and "chunk" in df.columns:
+    if snap is not None and "chunk" in df.columns:
         df = df.where(
             F.col("chunk").isin([int(c) for c in snap["chunks"]] + [-1])
         )
@@ -126,15 +127,13 @@ def read_blocks_at(
             raise KeyError(f"no snapshot at or before {as_of_unix} in {path}")
     else:
         snap = snaps[max(snaps)]
-    if snap.get("layout") == "flat":
-        return read_blocks(spark, path)
     # raw read, NOT read_blocks: a pre-rollback snapshot may reference
     # chunks the current snapshot no longer shows (still on disk until
     # expire_snapshots reclaims them)
-    return _read_raw(spark, path).where(
-        (F.col(BLOCK) != bk.MANIFEST_BLOCK)
-        & F.col("chunk").isin([int(c) for c in snap["chunks"]])
-    )
+    df = _read_raw(spark, path).where(F.col(BLOCK) != bk.MANIFEST_BLOCK)
+    if "chunk" in df.columns:  # legacy flat tables have one snapshot
+        df = df.where(F.col("chunk").isin([int(c) for c in snap["chunks"]]))
+    return df
 
 
 def _guard_rewrites(snaps: dict, from_id: int, to_id: int, what: str) -> None:
@@ -253,7 +252,7 @@ def read_appended_between(
         set(snaps[to_id]["chunks"]) - set(snaps[from_snapshot_id]["chunks"])
     )
     if not new_chunks:
-        # no delta (also the flat-layout case, which has no chunk column)
+        # no delta (also every legacy flat table: it has one snapshot)
         return read_blocks(spark, path).where(F.lit(False))
     # raw read: the delta of a historical snapshot pair may include
     # chunks rolled back since (valid until expired)
@@ -828,17 +827,19 @@ def read_staged_rows(
     return _decode_with_entries(spark, path, blocks, man, cols, entries)
 
 
-def _clear_stale_table_meta(spark: SparkSession, src: str, dst: str) -> None:
+def _clear_reused_dest(spark: SparkSession, src: str, dst: str) -> None:
     """Writing a fresh table into a reused path must not inherit the
-    old occupant's snapshot log or delete files — readers prefer the
-    `_snapshots/` log over the sidecar, so stale metadata would
-    override the new data (wrong chunk visibility, phantom deletes)."""
+    old occupant's data, snapshot log or delete files — readers prefer
+    the `_snapshots/` log over the sidecar, so stale metadata would
+    override the new data (wrong chunk visibility, phantom deletes),
+    and a legacy flat occupant's files would sit next to the new
+    chunk dirs."""
     from . import fsio
 
     if os.path.abspath(src) == os.path.abspath(dst):
         raise ValueError("src and dst must differ (in-place rewrite "
                          "would read the files it is overwriting)")
-    for sub in ("_snapshots", "_deletes", "_lineage"):
+    for sub in ("data", "_snapshots", "_deletes", "_lineage"):
         fsio.delete_dir(spark, os.path.join(dst, sub))
 
 
@@ -891,7 +892,7 @@ def purge_deletes(
     # clear the reused destination only after every src-side read above
     # succeeded — failing earlier must leave dst's previous occupant
     # intact, not half-stripped of its metadata
-    _clear_stale_table_meta(spark, src, dst)
+    _clear_reused_dest(spark, src, dst)
     groups: dict[tuple, list[int]] = {}
     for c in chunks:
         key = tuple(i for i, (_, s, _) in enumerate(sets) if s >= c)
@@ -943,15 +944,7 @@ def purge_deletes(
         "enc_bytes": None, "codec_histogram": {}, "created_unix": None,
         "purged_from": src, "shuffle": "hash",
     })
-    final = enc.write_blocks(merged, dst, base)
-    mf.write_chunk_lineage(
-        dst, 0,
-        {"chunk": 0, "rows": final["num_rows"],
-         "raw_bytes": final["raw_bytes"], "enc_bytes": final["enc_bytes"],
-         "purged_from": src, "applied_delete_files": len(entries)},
-        spark,
-    )
-    return final
+    return enc.write_blocks(merged, dst, base)
 
 
 def read_changes(
@@ -2222,8 +2215,10 @@ def compact_to_path(
     spark: SparkSession, src: str, dst: str, zlib_level: int = 6,
     max_rows_per_block: int = 262144,
 ) -> dict:
-    """Compact a raquet table into a new committed table (sorted write,
-    manifest row last — same write protocol as the encode job)."""
+    """Compact a raquet table into a new committed one-chunk table
+    (sorted write, manifest row last — same write protocol as the
+    encode job). A legacy flat ``src`` comes out writable: this is its
+    upgrade path."""
     from . import encode as enc
 
     man = read_manifest(spark, src)
@@ -2246,15 +2241,8 @@ def compact_to_path(
         "compacted_from": src, "shuffle": "hash",
     })
     # clear the reused destination only right before the overwrite
-    _clear_stale_table_meta(spark, src, dst)
-    final = enc.write_blocks(compacted, dst, base)
-    mf.write_chunk_lineage(
-        dst, 0,
-        {"chunk": 0, "rows": final["num_rows"], "raw_bytes": final["raw_bytes"],
-         "enc_bytes": final["enc_bytes"], "compacted_from": src},
-        spark,
-    )
-    return final
+    _clear_reused_dest(spark, src, dst)
+    return enc.write_blocks(compacted, dst, base)
 
 
 # ------------------------------------------------------------- overviews ----

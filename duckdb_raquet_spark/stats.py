@@ -16,8 +16,6 @@ required for checkpoint-resume idempotency.
 
 from __future__ import annotations
 
-import math
-
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
@@ -91,30 +89,4 @@ def int_column_stats(values: np.ndarray) -> dict:
         "range_bits": (hi - lo).bit_length(),
         "min": lo,
         "max": hi,
-    }
-
-
-def merge_moments(
-    a: tuple[int, float, float], b: tuple[int, float, float]
-) -> tuple[int, float, float]:
-    """Parallel Welford combine — the same parallel-variance merge the
-    reference uses in its UDAF Combine step
-    (/root/reference/src/raster/st_region_stats.cpp:382-411)."""
-    (na, ma, m2a), (nb, mb, m2b) = a, b
-    if na == 0:
-        return b
-    if nb == 0:
-        return a
-    n = na + nb
-    delta = mb - ma
-    mean = ma + delta * nb / n
-    m2 = m2a + m2b + delta * delta * na * nb / n
-    return n, mean, m2
-
-
-def finalize_moments(n: int, mean: float, m2: float) -> dict:
-    return {
-        "count": n,
-        "mean": mean if n else None,
-        "stddev": math.sqrt(m2 / (n - 1)) if n > 1 else None,
     }

@@ -5,10 +5,12 @@ two-phase pipelined producer with the manifest row emitted last
 (/root/reference/src/raster/read_raster.cpp:1486-1590). The streaming
 twin keeps both invariants per micro-batch:
 
-  * each micro-batch becomes its own ``chunk=<batch_id>`` subdirectory —
-    an idempotent overwrite, so Spark's at-least-once foreachBatch
-    replay after a failure can never duplicate rows (the same batch id
-    rewrites the same directory);
+  * each micro-batch becomes its own ``chunk=<k>`` subdirectory under
+    an id claimed exactly like ``encode.append_chunk``'s, so streaming
+    onto an existing table never overwrites its chunks; the claim
+    records ``(checkpoint_dir, batch_id)``, so Spark's at-least-once
+    foreachBatch replay after a failure rewrites the same directory and
+    can never duplicate rows;
   * the batch commits (snapshot CAS, then manifest row + sidecar)
     strictly AFTER its data write, so readers always see a manifest
     that covers only fully written blocks;
@@ -68,6 +70,10 @@ def encode_stream(
         # the CAS parent: a writer committing during this batch fails
         # it loudly; a replayed batch re-commits as a no-op
         parent = mf.current_snapshot(path, spark)
+        enc._refuse_flat(spark, path, parent)
+        # without a checkpoint no restart replays a batch
+        batch = [checkpoint_dir, batch_id] if checkpoint_dir else None
+        k = enc._claim_chunk(spark, path, parent, batch)
         blocks, man = enc.encode_table(
             batch_df,
             url_col=url_col,
@@ -84,28 +90,28 @@ def encode_stream(
         # pin ts_origin explicitly (ts_range above fixes the origin; the
         # effective bucket stays the caller's bucket_seconds)
         man["key"]["ts_origin"] = ts_origin
-        enc._write_data(blocks, f"{enc._data_path(path)}/chunk={batch_id}", None)
+        enc._write_data(blocks, f"{enc._data_path(path)}/chunk={k}", None)
         # visibility from the snapshot log (a replayed batch after a
         # checkpoint restart overwrites its own chunk dir and must not
         # double-count it; a rollback's orphans must stay out)
-        visible = sorted(
-            set(enc._visible_chunks(spark, path, parent)) | {batch_id}
-        )
+        visible = sorted(set(enc._visible_chunks(spark, path, parent)) | {k})
         totals, hist, mine = enc._aggregate_written(
-            spark, path, visible_chunks=visible, new_chunk=batch_id
+            spark, path, visible_chunks=visible, new_chunk=k
         )
         final = mf.finalize_manifest(man, codec_histogram=hist, **totals)
-        final["lineage_chunks"] = batch_id + 1
+        final["lineage_chunks"] = k + 1
         # lineage records THIS batch's bytes (the finalized manifest
-        # carries whole-table totals), matching encode/append lineage
+        # carries whole-table totals), matching encode/append lineage;
+        # it keeps the claim's batch tag for replays after completion
         mf.write_chunk_lineage(
             path,
-            batch_id,
+            k,
             {
-                "chunk": batch_id,
+                "chunk": k,
                 **mine,
                 "wall_seconds": round(time.time() - t0, 3),
                 "streaming": True,
+                **({"batch": batch} if batch else {}),
             },
             spark,
         )

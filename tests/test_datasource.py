@@ -54,9 +54,9 @@ def test_datasource_write_read_roundtrip(registered, tmp_path):
 
 
 def test_datasource_overwrite_of_logged_table(registered, tmp_path):
-    """Overwriting a table that has a snapshot log commits a new (flat)
-    snapshot: the manifest, the engine read and the datasource read all
-    see the new 50-row, 4-column table, not the old chunked one."""
+    """Overwriting a table that has a snapshot log commits a new
+    one-chunk snapshot: the manifest, the engine read and the datasource
+    read all see the new 50-row, 4-column table, not the old one."""
     spark = registered
     path = str(tmp_path / "tbl")
     df = synth.synth_webtext(spark, 200, num_partitions=2)

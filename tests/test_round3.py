@@ -313,8 +313,8 @@ def test_unsorted_write_decodes_and_compacts(spark, tmp_path):
 
 def test_append_chunk_extends_table(spark, tmp_path):
     """append_chunk adds a new chunk under the existing key geometry and
-    re-finalizes the manifest; readers see old+new rows; a flat table
-    refuses; mismatched schema refuses."""
+    re-finalizes the manifest; readers see old+new rows; a default
+    one-chunk encode appends too; mismatched schema refuses."""
     from pyspark.sql import functions as F
 
     from duckdb_raquet_spark import encode, scan, synth
@@ -353,12 +353,12 @@ def test_append_chunk_extends_table(spark, tmp_path):
     # schema mismatch refused
     with pytest.raises(ValueError, match="columns"):
         encode.append_chunk(spark, extra.drop("lang"), tbl)
-    # flat (non-chunked) table refused — by DATA layout, even though the
-    # flat encode also writes a lineage record
-    flat = str(tmp_path / "flat")
-    encode.encode_to_path(spark, df, flat, target_rows_per_block=64, resolution=4)
-    with pytest.raises(ValueError, match="chunked"):
-        encode.append_chunk(spark, extra, flat)
+    # a default (one-chunk) encode appends too: every table is chunked
+    one = str(tmp_path / "one")
+    encode.encode_to_path(spark, df, one, target_rows_per_block=64, resolution=4)
+    final = encode.append_chunk(spark, extra, one)
+    assert final["num_rows"] == 300
+    assert scan.read_rows(spark, one, ["url"]).count() == 300
 
 
 def test_sampled_salt_splits_hot_cell(spark, tmp_path):

@@ -724,11 +724,13 @@ def test_widen_then_delete_multipath_read(spark, tmp_path):
 
 
 def test_widen_prelog_flat_table_keeps_layout(spark, tmp_path):
-    """Widening a PRE-LOG flat table (no _snapshots dir, so the commit
-    has no parent snapshot) must probe the data dir and keep the flat
-    layout — writing the manifest row into a
-    chunk=-1 subdir next to root-level parquet files would flip partition
-    discovery and hide every data file."""
+    """A PRE-LOG flat table (no _snapshots dir, data files directly
+    under data/) is legacy and read-only: widening it raises the one
+    write guard before any file changes — no chunk=-1 dir appears next
+    to the root-level parquet files, which would flip partition
+    discovery and hide every data file — and compact_to_path upgrades
+    it to a writable copy."""
+    import glob
     import shutil
 
     path = str(tmp_path / "flat")
@@ -736,15 +738,27 @@ def test_widen_prelog_flat_table_keeps_layout(spark, tmp_path):
         "doc_id", F.col("doc_id").cast("int")
     )
     encode.encode_to_path(spark, web, path, chunks=1, target_rows_per_block=32)
-    shutil.rmtree(mf.snapshots_dir(path))  # simulate a 1.0-era table
-    man = encode.evolve_widen_column(spark, path, "doc_id", "bigint")
+    # rewrite it as a 1.0-era table: flat files, no snapshot log
+    data = os.path.join(path, "data")
+    for sub in ("chunk=0", "chunk=-1"):
+        for f in glob.glob(os.path.join(data, sub, "*.parquet")):
+            shutil.move(f, data)
+        shutil.rmtree(os.path.join(data, sub))
+    shutil.rmtree(mf.snapshots_dir(path))
+    with pytest.raises(ValueError, match="legacy flat table"):
+        encode.evolve_widen_column(spark, path, "doc_id", "bigint")
+    assert not os.path.isdir(os.path.join(data, "chunk=-1"))
+    assert scan.read_rows(spark, path, ["doc_id"]).count() == 40
+
+    upgraded = str(tmp_path / "upgraded")
+    scan.compact_to_path(spark, path, upgraded)
+    man = encode.evolve_widen_column(spark, upgraded, "doc_id", "bigint")
     assert next(
         c for c in man["columns"] if c["name"] == "doc_id"
     )["spark_type"] == "bigint"
-    assert not os.path.isdir(os.path.join(path, "data", "chunk=-1"))
-    out = scan.read_rows(spark, path, ["doc_id"])
+    out = scan.read_rows(spark, upgraded, ["doc_id"])
     assert dict(out.dtypes)["doc_id"] == "bigint"
-    assert out.count() == 40  # every data file still discoverable
+    assert out.count() == 40
 
 
 def test_concurrent_append_append_race(spark, tmp_path):
@@ -2419,6 +2433,25 @@ def test_fuzzy_decontaminate_short_docs(spark):
     }
     assert out[1]["contaminated"] == 1 and out[1]["max_jac"] == 1.0
     assert out[2]["contaminated"] == 0
+
+
+def test_fuzzy_decontaminate_id_column_needing_quotes(spark):
+    """An id column whose name needs SQL quoting (``doc-id``) is a
+    column name, not an expression, all the way through."""
+    from duckdb_raquet_spark.functions import text as tx
+
+    train = spark.createDataFrame(
+        [(1, "a b c d e f g h i j"), (2, "k l m n o p q r s t")],
+        ["doc-id", "text"],
+    )
+    ev = spark.createDataFrame([("a b c d e f g h i j",)], ["text"])
+    out = {
+        r["id"]: (r["max_jac"], r["contaminated"])
+        for r in tx.fuzzy_decontaminate(
+            train, ev, "doc-id", "text", threshold=0.5
+        ).collect()
+    }
+    assert out == {1: (1.0, 1), 2: (0.0, 0)}
 
 
 # ---------------------------------------------------------------------------

@@ -131,17 +131,20 @@ def test_rollback_and_append_after(spark, tt_table, tmp_path):
 
 
 def test_flat_table_snapshot(spark, tmp_path):
+    """A default encode (chunks=1) is a one-chunk table, not a flat
+    one: its snapshot lists chunk 0, and rollback works."""
     path = str(tmp_path / "flat")
     df = synth.synth_webtext(spark, 80, num_partitions=2)
     encode.encode_to_path(spark, df, path, target_rows_per_block=64)
     snaps = mf.read_snapshots(path, spark)
     assert sorted(snaps) == [0]
-    assert snaps[0]["layout"] == "flat"
+    assert snaps[0]["chunks"] == [0]
     man = scan.read_manifest(spark, path)
     got = _decode_urls(scan.read_blocks_at(spark, path, snapshot_id=0), man)
     assert got == _urls_of(df)
-    with pytest.raises(ValueError):
-        encode.rollback_to_snapshot(spark, path, 0)
+    final = encode.rollback_to_snapshot(spark, path, 0)
+    assert final["num_rows"] == 80
+    assert mf.current_snapshot(path, spark)["chunks"] == [0]
 
 
 def test_pre_log_table_reads_fully(spark):
