@@ -259,6 +259,42 @@ def keys_from_arrays(
     return key_from_parts(x, y, res)
 
 
+def hash_cell_span(x26: int, res: int) -> tuple[int, int, int]:
+    """``(cell, lo, hi)`` for a url-hash x coordinate at ``res``: the
+    hash cell ``x26 >> (26 - res)`` and the Morton BETWEEN envelope
+    ``[lo, hi]`` holding every key of that cell (one per time cell)."""
+    shift = COORD_BITS - res
+    xr = int(x26) >> shift
+    lo = int(key_from_parts(_U64(xr << shift), _U64(0), res))
+    hi = int(key_from_parts(_U64(xr << shift), _U64(COORD_MAX), res))
+    return xr, lo, hi
+
+
+def ts_cell_span(
+    lo_epoch: int | None,
+    hi_epoch: int | None,
+    res: int,
+    bucket_seconds: int = DEFAULT_BUCKET_SECONDS,
+    ts_origin: int = 0,
+) -> tuple[int, int, int, int]:
+    """``(ylr, yhr, lo, hi)`` for an inclusive epoch-second range at
+    ``res``: the clipped time cells it touches and the Morton BETWEEN
+    envelope ``[lo, hi]`` holding every key of those cells. ``None``
+    leaves that side open."""
+    shift = COORD_BITS - res
+    max_cell = (1 << res) - 1
+
+    def cell(e, open_cell):
+        if e is None:
+            return open_cell
+        return min(max(0, (int(e) - ts_origin) // bucket_seconds), max_cell)
+
+    ylr, yhr = cell(lo_epoch, 0), cell(hi_epoch, max_cell)
+    lo = int(key_from_parts(_U64(0), _U64(ylr << shift), res))
+    hi = int(key_from_parts(_U64(COORD_MAX), _U64(yhr << shift), res))
+    return ylr, yhr, lo, hi
+
+
 def cover_keys_for_ts_range(
     ylr: int, yhr: int, res: int, x_prefix: tuple[int, int] | None = None
 ) -> list[int]:

@@ -18,13 +18,20 @@ underneath the DataFrame API.
 Reader
 ------
 * Schema comes from the manifest sidecar (block=0 row fallback).
+* Listing, pruning, decode and equality deletes are the in-process
+  block reader's (``reader.py``), the same code that serves the
+  driver-local ``scan.point_lookup`` / ``range_scan_ts``. One
+  partition is one visible data file; ``read`` runs in a Python
+  worker. ``chunk=-1`` is never opened.
 * ``pushFilters`` maps url equality and warc_ts range predicates onto
-  the sargable block-key envelopes (the same math as
-  ``scan.prune_blocks_for_url_hash`` / ``prune_blocks_for_ts``); files
-  and row groups whose ``block`` min/max fall outside the envelope are
-  skipped via parquet footer statistics — before any payload byte is
-  read. Every filter is also handed back to Spark, which re-applies
-  them exactly on the decoded rows (pruning is a superset guarantee).
+  a ``reader.Envelope`` (the math of ``scan.prune_blocks_for_url_hash``
+  / ``prune_blocks_for_ts``): files and row groups whose ``block``
+  min/max fall outside it are skipped via parquet footer statistics,
+  and the exact hash-cell / ts-bucket / ``stats.ts_min..ts_max`` match
+  drops block rows — before any payload byte is read. A filtered read
+  plans only the files holding a selected block row. Every filter is
+  also handed back to Spark, which re-applies them exactly on the
+  decoded rows (pruning is a superset guarantee).
 * The Python DataSource API has no column-pruning hook yet, so
   ``.option("columns", "url,text")`` selects which payloads decode;
   the default decodes all.
@@ -77,10 +84,12 @@ from pyspark.sql.types import StructType
 
 from . import blockkey as bk
 from . import manifest as mf
+from . import reader
 
 
 @dataclasses.dataclass
 class _FilePart(InputPartition):
+    chunk: int | None
     path: str
 
 
@@ -124,27 +133,6 @@ def _load_manifest(path: str) -> dict:
     return max(mans, key=lambda m: m.get("created_unix") or 0)
 
 
-def _datatype(type_str: str):
-    """spark_type string -> DataType, session-free (the DataSource
-    planning hooks run in a bare Python worker where
-    _parse_datatype_string's JVM round-trip is unavailable)."""
-    from pyspark.sql import types as T
-
-    m = {
-        "string": T.StringType(), "binary": T.BinaryType(),
-        "bigint": T.LongType(), "long": T.LongType(), "int": T.IntegerType(),
-        "integer": T.IntegerType(), "smallint": T.ShortType(),
-        "tinyint": T.ByteType(), "double": T.DoubleType(),
-        "float": T.FloatType(), "boolean": T.BooleanType(),
-    }
-    t = type_str.lower()
-    if t in m:
-        return m[t]
-    if t.startswith("timestamp"):
-        return T.TimestampType()
-    raise ValueError(f"unsupported raquet column type {type_str!r}")
-
-
 def _spark_schema(man: dict, cols: list[str] | None) -> StructType:
     from pyspark.sql import types as T
 
@@ -154,26 +142,18 @@ def _spark_schema(man: dict, cols: list[str] | None) -> StructType:
         specs = sorted(
             (s for s in specs if s[0] in order), key=lambda s: order[s[0]]
         )
-    return T.StructType([T.StructField(n, _datatype(t)) for n, t in specs])
-
-
-class _Envelope:
-    """Conjunction of block-key ranges derived from pushed filters; a
-    row group survives if its [block_min, block_max] intersects every
-    range (superset-of-matches guarantee — Spark re-applies the exact
-    predicates on the decoded rows)."""
-
-    def __init__(self) -> None:
-        self.ranges: list[tuple[int, int]] = []
-
-    def add(self, lo: int, hi: int) -> None:
-        self.ranges.append((lo, hi))
-
-    def may_contain(self, bmin: int, bmax: int) -> bool:
-        return all(bmax >= lo and bmin <= hi for lo, hi in self.ranges)
+    return T.StructType([T.StructField(n, reader.datatype(t)) for n, t in specs])
 
 
 class RaquetReader(DataSourceReader):
+    """``format("raquet")`` reads through the in-process block reader
+    (``reader.py``): ``partitions`` lists the snapshot's visible data
+    files on the driver (a filtered read keeps only the files holding a
+    selected block row) and ``read`` selects, decodes and applies the
+    equality deletes of one file in a Python worker. Unlike
+    ``scan.point_lookup``, it never runs the whole read on the driver:
+    Spark schedules the partitions."""
+
     def __init__(self, options: dict, schema: StructType) -> None:
         self.path = options.get("path")
         if not self.path:
@@ -181,7 +161,7 @@ class RaquetReader(DataSourceReader):
         self.man = _load_manifest(self.path)
         cols_opt = options.get("columns")
         self.cols = [c.strip() for c in cols_opt.split(",")] if cols_opt else None
-        self.env = _Envelope()
+        self.env = reader.Envelope(self.man)
         # time travel: .option("snapshotId", 3) or .option("ref",
         # "corpus-v1") pins chunk visibility AND the delete set to that
         # snapshot; the read schema stays the current manifest's, same
@@ -236,288 +216,79 @@ class RaquetReader(DataSourceReader):
             snap_entries = mf.remap_delete_entries(
                 snaps, sid, list(self.snapshot.get("delete_files", []))
             )
-        # equality-delete files (encode.delete_rows): value sets load
+        # equality-delete key sets (encode.delete_rows) load
         # driver-side and ship with the pickled reader — the same
-        # broadcast-sized contract as scan._apply_delete_entries.
-        # Each element is (key columns, seq, value set) — scalars for
-        # single-column keys, tuples for composite keys; v2 files carry
-        # a per-ROW sequence, so one file can yield several groups.
-        self.deletes: list[tuple[tuple[str, ...], int, set]] = []
+        # broadcast-sized contract as scan._apply_delete_entries
         entries = (
             snap_entries
             if snap_entries is not None
             else self.man.get("delete_files", [])
         )
-        for e in entries:
-            import pyarrow.dataset as pa_ds
-
-            from .manifest import delete_entry_cols
-
-            cols = tuple(delete_entry_cols(e))
-            tbl = pa_ds.dataset(
-                os.path.join(self.path, e["dir"]), format="parquet"
-            ).to_table()
-            if e.get("v", 1) >= 2:
-                k = len(cols)
-                seqs = tbl.column("_dseq").to_pylist()
-                keys = [tbl.column(f"_k{i}").to_pylist() for i in range(k)]
-                by_seq: dict[int, set] = {}
-                for j, s in enumerate(seqs):
-                    v = keys[0][j] if k == 1 else tuple(kl[j] for kl in keys)
-                    by_seq.setdefault(int(s), set()).add(v)
-                for s, vals in sorted(by_seq.items()):
-                    self.deletes.append((cols, s, vals))
-            else:
-                # column 0 positionally: a v1 file's internal name may
-                # predate an evolve_rename_column of e["col"]
-                self.deletes.append(
-                    (cols, int(e["seq"]), set(tbl.column(0).to_pylist()))
-                )
+        self.deletes = reader.load_deletes(self.path, entries)
 
     # ------------------------------------------------------ pushdown ----
     def pushFilters(self, filters: list[Filter]) -> Iterator[Filter]:
-        key = self.man["key"]
-        res = key["resolution"]
-        bucket = key["bucket_seconds"]
-        origin = key.get("ts_origin", 0)
-        shift = bk.COORD_BITS - res
-        max_cell = (1 << res) - 1
         url_col = (self.man["url_col"],)
         ts_col = (self.man["ts_col"],) if self.man["ts_col"] else None
-        ts_lo, ts_hi = None, None
-        import numpy as np
-
         for f in filters:
             if isinstance(f, EqualTo) and f.attribute == url_col and isinstance(
                 f.value, str
             ):
-                xr = bk.hash_x_from_url(f.value) >> shift
-                lo = int(bk.key_from_parts(np.uint64(xr << shift), np.uint64(0), res))
-                hi = int(
-                    bk.key_from_parts(
-                        np.uint64(xr << shift), np.uint64(bk.COORD_MAX), res
-                    )
-                )
-                self.env.add(lo, hi)
+                self.env.url(f.value)
             elif ts_col and getattr(f, "attribute", None) == ts_col and hasattr(
                 f, "value"
             ):
-                ep = _epoch_of(f.value)
-                if ep is None:
+                us = _epoch_us(f.value)
+                if us is None:
                     pass
                 elif isinstance(f, (GreaterThan, GreaterThanOrEqual)):
-                    ts_lo = ep if ts_lo is None else max(ts_lo, ep)
+                    self.env.ts(lo_us=us)
                 elif isinstance(f, (LessThan, LessThanOrEqual)):
-                    ts_hi = ep if ts_hi is None else min(ts_hi, ep)
+                    self.env.ts(hi_us=us)
                 elif isinstance(f, EqualTo):
-                    ts_lo = ts_hi = ep
+                    self.env.ts(us, us)
             # every filter is returned: Spark re-applies them exactly
             yield f
-        if ts_lo is not None or ts_hi is not None:
-            ylr = 0 if ts_lo is None else min(
-                max(0, (ts_lo - origin) // bucket), max_cell
-            )
-            yhr = max_cell if ts_hi is None else min(
-                max(0, (ts_hi - origin) // bucket), max_cell
-            )
-            lo = int(bk.key_from_parts(np.uint64(0), np.uint64(ylr << shift), res))
-            hi = int(
-                bk.key_from_parts(
-                    np.uint64(bk.COORD_MAX), np.uint64(yhr << shift), res
-                )
-            )
-            self.env.add(lo, hi)
 
     # ---------------------------------------------------- partitions ----
     def partitions(self) -> list[InputPartition]:
-        import pyarrow.parquet as pq
-
-        data = os.path.join(self.path, "data")
         # visibility: only chunks of the selected snapshot (rolled-back
-        # orphan dirs awaiting expiry must not be planned); pre-log
-        # tables walk everything, and legacy flat files sit outside any
-        # chunk dir
+        # orphan dirs awaiting expiry must not be planned); a filtered
+        # read plans only the files holding a block row it selects
         snap = (
             self.snapshot
             if self.snapshot is not None
             else mf.current_snapshot(self.path, None)
         )
-        visible = None
-        if snap is not None:
-            visible = {int(c) for c in snap["chunks"]} | {-1}
-        files = []
-        for root, _dirs, names in os.walk(data):
-            base = os.path.basename(root)
-            if (
-                visible is not None
-                and base.startswith("chunk=")
-                and int(base.split("=", 1)[1]) not in visible
-            ):
-                continue
-            for n in sorted(names):
-                if n.endswith(".parquet"):
-                    files.append(os.path.join(root, n))
-        if not self.env.ranges:
-            return [_FilePart(f) for f in files]
-        keep = []
-        for f in files:
-            # file-level prune on the block column's footer min/max —
-            # the table is block-sorted, so this is effective
-            md = pq.ParquetFile(f).metadata
-            sch = md.schema.to_arrow_schema()
-            # get_field_index returns -1 (not KeyError) for a missing
-            # field; a -1 would silently prune on the LAST column's stats
-            bi = sch.get_field_index("block")
-            if bi < 0:
-                keep.append(f)
-                continue
-            lo, hi = None, None
-            for rg in range(md.num_row_groups):
-                st = md.row_group(rg).column(bi).statistics
-                if st is None or not st.has_min_max:
-                    lo = None
-                    break
-                lo = st.min if lo is None else min(lo, st.min)
-                hi = st.max if hi is None else max(hi, st.max)
-            if lo is None or self.env.may_contain(int(lo), int(hi)):
-                keep.append(f)
-        return [_FilePart(f) for f in keep]
+        files = reader.visible_files(self.path, snap)
+        if self.env:
+            keep = {
+                s.path for s in reader.select_block_rows(files, self.man, self.env)
+            }
+            files = [f for f in files if f[1] in keep]
+        return [_FilePart(k, f) for k, f in files]
 
     # ---------------------------------------------------------- read ----
     def read(self, partition: _FilePart):
-        import numpy as np
-        import pandas as pd
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        from .scan import _block_rows, _colspecs
-
-        man = self.man
-        # equality deletes applicable to THIS file's chunk (chunk <= the
-        # delete's sequence number; data files of delete-bearing tables
-        # always sit under chunk=N — delete_rows enforces the layout)
-        applicable: list[tuple[tuple[str, ...], set]] = []
-        if self.deletes:
-            import re as _re
-
-            # LAST match: the partition directory component — an
-            # enclosing path may itself contain "chunk=<digits>"
-            ms = _re.findall(r"chunk=(\d+)", partition.path)
-            chunk = int(ms[-1]) if ms else 0
-            merged: dict[tuple, set] = {}
-            for kc, seq, vals in self.deletes:
-                if chunk <= seq:
-                    merged.setdefault(kc, set()).update(vals)
-            applicable = sorted(merged.items())
-        dec_cols = self.cols
-        if applicable and dec_cols is not None:
-            dec_cols = list(
-                dict.fromkeys(
-                    dec_cols + [c for kc, _ in applicable for c in kc]
-                )
-            )
-        specs = _colspecs(man, dec_cols)
-        blob_names, block_rows = _block_rows(man, specs)
-        pf = pq.ParquetFile(partition.path)
-        sch = pf.metadata.schema.to_arrow_schema()
-        bi = sch.get_field_index("block")
-        # schema evolution: a pre-evolution chunk file lacks the blob
-        # of a later-added column — read what the file has; the block
-        # iterator default-fills the rest
-        need = ["block", "n_rows"] + [b for b in blob_names if b in sch.names]
-        out_schema = _to_arrow(specs)
-        arrow_types = {f.name: f.type for f in out_schema}
-        # value arrays pre-cast to the decoded column types, once per
-        # partition — the per-block loop only probes. Composite keys
-        # become a pandas MultiIndex built from per-column Arrow casts:
-        # the cast normalizes dtype mismatches between the delete file
-        # and the decoded batch (e.g. Spark writes tz-aware parquet
-        # timestamps while decode yields naive epoch-us), which a raw
-        # python-tuple probe would silently miss.
-        value_sets = {}
-        multi_sets = {}
-        for kc, vals in applicable:
-            if len(kc) == 1:
-                value_sets[kc] = pa.array(sorted(vals)).cast(
-                    arrow_types[kc[0]]
-                )
-            else:
-                per_col = list(zip(*sorted(vals, key=repr)))
-                multi_sets[kc] = pd.MultiIndex.from_arrays(
-                    [
-                        pa.array(list(cl)).cast(arrow_types[c]).to_pandas()
-                        for cl, c in zip(per_col, kc)
-                    ]
-                )
-        for rg in range(pf.metadata.num_row_groups):
-            if self.env.ranges and bi >= 0:
-                st = pf.metadata.row_group(rg).column(bi).statistics
-                if st is not None and st.has_min_max and not self.env.may_contain(
-                    int(st.min), int(st.max)
-                ):
-                    continue
-            tbl = pf.read_row_group(rg, columns=need)
-            blocks = tbl.column("block").to_pylist()
-            for i, _, dec in block_rows(tbl):
-                block = blocks[i]
-                if block == bk.MANIFEST_BLOCK:
-                    continue
-                if self.env.ranges and not self.env.may_contain(block, block):
-                    continue
-                batch = pa.RecordBatch.from_arrays(
-                    [dec(f.name).cast(f.type) for f in out_schema],
-                    schema=out_schema,
-                )
-                if applicable:
-                    import pyarrow.compute as pc
-
-                    names = batch.schema.names
-                    drop = None
-                    for kc, vals in applicable:
-                        if len(kc) == 1:
-                            col = batch.column(names.index(kc[0]))
-                            # value arrays built once per partition
-                            # (read prologue), not per block — cast only
-                            vs = value_sets[kc]
-                            if vs.type != col.type:
-                                vs = vs.cast(col.type)
-                            hit = pc.fill_null(
-                                pc.is_in(col, value_set=vs), False
-                            )
-                        else:
-                            mi = pd.MultiIndex.from_arrays(
-                                [
-                                    batch.column(names.index(c)).to_pandas()
-                                    for c in kc
-                                ]
-                            )
-                            hit = pa.array(
-                                np.asarray(mi.isin(multi_sets[kc]))
-                            )
-                        drop = hit if drop is None else pc.or_(drop, hit)
-                    batch = batch.filter(pc.invert(drop))
-                    if self.cols is not None and dec_cols != self.cols:
-                        batch = batch.select(self.cols)
-                yield batch
+        sels = reader.select_block_rows(
+            [(partition.chunk, partition.path)], self.man, self.env
+        )
+        yield from reader.iter_blocks(
+            sels, self.man, self.cols, deletes=self.deletes
+        )
 
 
-def _to_arrow(specs):
-    from pyspark.sql import types as T
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    st = T.StructType([T.StructField(n, _datatype(t)) for n, t, _ in specs])
-    return to_arrow_schema(st)
-
-
-def _epoch_of(v) -> int | None:
+def _epoch_us(v) -> int | None:
+    """A pushed timestamp literal as epoch microseconds (naive = UTC)."""
     import datetime
 
     if isinstance(v, datetime.datetime):
         if v.tzinfo is None:
             v = v.replace(tzinfo=datetime.timezone.utc)
-        return int(v.timestamp())
+        epoch = datetime.datetime(1970, 1, 1, tzinfo=datetime.timezone.utc)
+        return (v - epoch) // datetime.timedelta(microseconds=1)
     if isinstance(v, (int, float)):
-        return int(v)
+        return int(v * 1_000_000)
     return None
 
 
@@ -550,8 +321,12 @@ class RaquetWriter(DataSourceArrowWriter):
             )
         import shutil
 
-        # a fresh one-chunk table: every task writes into data/chunk=0
-        shutil.rmtree(os.path.join(self.path, "data"), ignore_errors=True)
+        # a fresh one-chunk table: every task writes into data/chunk=0.
+        # The old chunks' lineage records go with their data (appends
+        # and compact_chunks read them); _snapshots/ stays, so the
+        # overwrite commits parent + 1 on a logged table
+        for sub in ("data", "_lineage"):
+            shutil.rmtree(os.path.join(self.path, sub), ignore_errors=True)
         self.chunk_dir = os.path.join(self.path, "data", "chunk=0")
         os.makedirs(self.chunk_dir, exist_ok=True)
         # column specs from the WRITER schema (the df being saved)

@@ -714,21 +714,27 @@ def _aggregate_written(
     lineage record. Returns (totals, codec histogram, new chunk's
     totals).
 
-    The schema is declared, not inferred from a footer: inference opens
-    the first listed file, ``data/chunk=-1``, whose manifest row a
-    concurrent commit may be replacing; declared, the chunk filter
-    prunes that dir before any file is opened."""
+    The schema is declared, not inferred from a footer, and only the
+    ``visible_chunks`` dirs are listed: inference opens the first
+    listed file, and a listing of all of ``data/`` walks
+    ``data/chunk=-1``, which a concurrent commit deletes and rewrites,
+    and other writers' chunk dirs while they are being written."""
     fields = [
         T.StructField(BLOCK, T.LongType()),
         T.StructField("n_rows", T.LongType()),
         T.StructField("codecs", T.StringType()),
         T.StructField("stats", STATS_TYPE),
     ]
-    if visible_chunks is not None:
+    data = _data_path(path)
+    if visible_chunks is None:
+        df = spark.read.schema(T.StructType(fields)).parquet(data)
+    else:
         fields.append(T.StructField("chunk", T.IntegerType()))
-    df = spark.read.schema(T.StructType(fields)).parquet(_data_path(path))
-    if visible_chunks is not None:
-        df = df.where(F.col("chunk").isin([int(c) for c in visible_chunks]))
+        df = (
+            spark.read.schema(T.StructType(fields))
+            .option("basePath", data)
+            .parquet(*[os.path.join(data, f"chunk={int(c)}") for c in visible_chunks])
+        )
     keys = [F.col("codecs")]
     if new_chunk is not None:
         keys.append((F.col("chunk") == int(new_chunk)).alias("new"))

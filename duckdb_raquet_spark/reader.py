@@ -1,0 +1,386 @@
+"""In-process block reader: a raquet table read with pyarrow, no Spark.
+
+The reference reads a value by decoding only the touched block,
+in-process (reference ``src/raster/st_raster_value.cpp:352-354``).
+This module is that read. It serves the datasource's partitions
+(``datasource.RaquetReader``) and the driver-local point and range
+reads of ``scan.point_lookup`` / ``scan.range_scan_ts``, in three
+steps:
+
+1. :func:`visible_files`: the parquet files of the chunks a snapshot
+   lists. The ``chunk=-1`` manifest-row dir is never opened.
+2. :func:`select_block_rows`: the block rows an :class:`Envelope`
+   admits, from the ``block`` and ``stats`` columns only. Row groups are
+   pruned by footer min/max; the exact hash-cell / ts-bucket /
+   ``stats.ts_min..ts_max`` match runs in numpy. No payload is read.
+3. :func:`iter_blocks`: reads the selected rows' payload columns and
+   decodes them through ``scan._block_rows``. An equality filter
+   decodes first, and a block it misses reads no other payload. The
+   table's equality deletes (:func:`load_deletes`) apply by the
+   sequence rule: a delete with sequence ``seq`` removes matching rows
+   of chunks ``<= seq``. This is the one in-process delete rule; Spark
+   plans apply the same rule as a broadcast anti-join
+   (``scan._apply_delete_entries``).
+
+Nothing here needs a session: datasource partitions run it in Python
+workers, and only local (no ``scheme://``) paths are read.
+"""
+
+from __future__ import annotations
+
+import dataclasses
+import os
+from typing import Iterator
+
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
+
+from . import blockkey as bk
+from . import manifest as mf
+
+# ------------------------------------------------------------- schema ----
+
+
+def datatype(type_str: str):
+    """spark_type string -> DataType, session-free (the DataSource
+    planning hooks run in a bare Python worker where
+    _parse_datatype_string's JVM round-trip is unavailable)."""
+    from pyspark.sql import types as T
+
+    m = {
+        "string": T.StringType(), "binary": T.BinaryType(),
+        "bigint": T.LongType(), "long": T.LongType(), "int": T.IntegerType(),
+        "integer": T.IntegerType(), "smallint": T.ShortType(),
+        "tinyint": T.ByteType(), "double": T.DoubleType(),
+        "float": T.FloatType(), "boolean": T.BooleanType(),
+    }
+    t = type_str.lower()
+    if t in m:
+        return m[t]
+    if t.startswith("timestamp"):
+        return T.TimestampType()
+    raise ValueError(f"unsupported raquet column type {type_str!r}")
+
+
+def arrow_schema(specs: list[tuple[str, str, str]]) -> pa.Schema:
+    """The Arrow schema Spark exchanges for decoded ``specs`` columns
+    (timestamps as tz-aware UTC microseconds, so a session time zone
+    never shifts them)."""
+    from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    st = T.StructType([T.StructField(n, datatype(t)) for n, t, _ in specs])
+    return to_arrow_schema(st)
+
+
+# ----------------------------------------------------------- envelope ----
+
+
+class Envelope:
+    """The block rows a read may touch, as a conjunction of block-key
+    ranges (footer min/max prune files and row groups), url hash cells
+    and one time window (exact per block row, the time window also on
+    ``stats.ts_min/ts_max``). An empty envelope admits every data
+    block. Selection is a superset of the matching rows' blocks:
+    callers filter the decoded rows exactly."""
+
+    def __init__(self, man: dict) -> None:
+        key = man["key"]
+        self.res = key["resolution"]
+        self.bucket = key["bucket_seconds"]
+        self.origin = key.get("ts_origin", 0)
+        self.ranges: list[tuple[int, int]] = []
+        self.cells: list[int] = []
+        self.window: tuple[int | None, int | None] | None = None
+
+    def key(self, key: int) -> None:
+        """Exactly one block key (a point with its timestamp)."""
+        self.ranges.append((int(key), int(key)))
+
+    def url(self, url: str) -> None:
+        """The blocks of ``url``'s hash cell, one per time cell."""
+        xr, lo, hi = bk.hash_cell_span(bk.hash_x_from_url(url), self.res)
+        self.cells.append(xr)
+        self.ranges.append((lo, hi))
+
+    def ts(self, lo_us: int | None = None, hi_us: int | None = None) -> None:
+        """Rows with ``lo_us <= ts <= hi_us`` (epoch microseconds,
+        ``None`` = open); repeated calls intersect."""
+        lo0, hi0 = self.window or (None, None)
+        if lo_us is not None and (lo0 is None or lo_us > lo0):
+            lo0 = lo_us
+        if hi_us is not None and (hi0 is None or hi_us < hi0):
+            hi0 = hi_us
+        self.window = (lo0, hi0)
+
+    def __bool__(self) -> bool:
+        return bool(self.ranges) or self.window is not None
+
+    def _ts_span(self) -> tuple[int, int, int, int]:
+        lo_us, hi_us = self.window
+        return bk.ts_cell_span(
+            None if lo_us is None else lo_us // 1_000_000,
+            None if hi_us is None else hi_us // 1_000_000,
+            self.res, self.bucket, self.origin,
+        )
+
+    def key_ranges(self) -> list[tuple[int, int]]:
+        if self.window is None:
+            return self.ranges
+        _, _, lo, hi = self._ts_span()
+        return self.ranges + [(lo, hi)]
+
+    def may_contain(self, bmin: int, bmax: int) -> bool:
+        return all(bmax >= lo and bmin <= hi for lo, hi in self.key_ranges())
+
+    def match(self, blocks, stats) -> np.ndarray:
+        """Per block row: admitted and not the manifest row. ``stats``
+        is the rows' ``stats`` struct (``None`` or a missing field:
+        that test is skipped)."""
+        b = np.asarray(blocks, dtype=np.int64)
+        m = b != bk.MANIFEST_BLOCK
+        for lo, hi in self.key_ranges():
+            m &= (b >= lo) & (b <= hi)
+        shift = np.uint64(bk.COORD_BITS - self.res)
+        u = b.astype(np.uint64)
+        for xr in self.cells:
+            m &= (bk.key_x(u) >> shift) == np.uint64(xr)
+        if self.window is None:
+            return m
+        ylr, yhr, _, _ = self._ts_span()
+        y = bk.key_y(u) >> shift
+        m &= (y >= np.uint64(ylr)) & (y <= np.uint64(yhr))
+        lo_us, hi_us = self.window
+        fields = set() if stats is None else {f.name for f in stats.type}
+        for field, op, bound in (
+            ("ts_min", pc.less_equal, hi_us), ("ts_max", pc.greater_equal, lo_us)
+        ):
+            if bound is not None and field in fields:
+                ok = pc.fill_null(op(pc.struct_field(stats, field), bound), False)
+                m &= ok.to_numpy(zero_copy_only=False)
+        return m
+
+
+# -------------------------------------------------------------- files ----
+
+
+def visible_files(path: str, snap: dict | None) -> list[tuple[int | None, str]]:
+    """``(chunk, file)`` for every data file visible at ``snap``: the
+    files of each ``data/chunk=<k>`` the snapshot lists (every ``k >= 0``
+    when ``snap`` is None, a table from before the snapshot log), plus
+    any legacy flat files directly under ``data/`` (chunk ``None``).
+    Hidden (``.``/``_``) names are skipped, as Spark's listing does."""
+    data = os.path.join(path, "data")
+    keep = None if snap is None else {int(c) for c in snap["chunks"]}
+    out: list[tuple[int | None, str]] = []
+    for name in sorted(os.listdir(data)):
+        full = os.path.join(data, name)
+        if name.startswith("chunk="):
+            k = int(name.split("=", 1)[1])
+            if k < 0 or (keep is not None and k not in keep):
+                continue
+            out += [(k, f) for f in _parquet_files(full)]
+        elif name.endswith(".parquet") and not name.startswith(("_", ".")):
+            out.append((None, full))
+    return out
+
+
+def _parquet_files(d: str) -> list[str]:
+    return [
+        os.path.join(d, n)
+        for n in sorted(os.listdir(d))
+        if n.endswith(".parquet") and not n.startswith(("_", "."))
+    ]
+
+
+@dataclasses.dataclass
+class Selection:
+    """The block rows of one data file a read touches."""
+
+    path: str
+    chunk: int | None
+    rows: list[tuple[int, list[int]]]  # (row group, row offsets in it)
+    n_blocks: int
+    raw_bytes: int
+
+
+def select_block_rows(
+    files: list[tuple[int | None, str]], man: dict, env: Envelope
+) -> list[Selection]:
+    """The block rows of ``files`` that ``env`` admits, one
+    :class:`Selection` per file with any. Reads the footer, then only
+    ``block`` and the ``stats`` fields it needs of the row groups whose
+    footer ``block`` min/max intersect ``env``."""
+    out = []
+    for chunk, f in files:
+        pf = pq.ParquetFile(f)
+        md = pf.metadata
+        leaves = {md.schema.column(i).path: i for i in range(md.num_columns)}
+        bi = leaves.get("block")
+        cols = ["block"] + [
+            p for p in ("stats.raw_bytes", "stats.ts_min", "stats.ts_max")
+            if p in leaves
+        ]
+        rows: list[tuple[int, list[int]]] = []
+        n = raw = 0
+        for rg in range(md.num_row_groups):
+            if env and bi is not None:
+                st = md.row_group(rg).column(bi).statistics
+                if (
+                    st is not None
+                    and st.has_min_max
+                    and not env.may_contain(int(st.min), int(st.max))
+                ):
+                    continue
+            t = pf.read_row_group(rg, columns=cols)
+            stats = t["stats"] if "stats" in t.column_names else None
+            idx = np.flatnonzero(env.match(t["block"], stats))
+            if not len(idx):
+                continue
+            rows.append((rg, idx.tolist()))
+            n += len(idx)
+            if stats is not None and "raw_bytes" in {x.name for x in stats.type}:
+                rb = pc.struct_field(stats, "raw_bytes").take(pa.array(idx))
+                raw += int(pc.sum(rb).as_py() or 0)
+        if rows:
+            out.append(Selection(f, chunk, rows, n, raw))
+    return out
+
+
+# ------------------------------------------------------------ deletes ----
+
+
+def load_deletes(path: str, entries: list[dict]) -> list[tuple[tuple[str, ...], int, pa.Table]]:
+    """Equality-delete key sets of ``entries`` as ``(key columns, seq,
+    keys)``, ``keys`` a table with one column per key column. A v2 file
+    carries a sequence per row, so it can give several sets; a v1 file
+    gives one, its single value column read by position (its name may
+    predate a column rename)."""
+    import pyarrow.dataset as pa_ds
+
+    out = []
+    for e in entries:
+        kc = tuple(mf.delete_entry_cols(e))
+        tbl = pa_ds.dataset(os.path.join(path, e["dir"]), format="parquet").to_table()
+        if e.get("v", 1) >= 2:
+            keys = tbl.select([f"_k{i}" for i in range(len(kc))]).rename_columns(list(kc))
+            seqs = tbl["_dseq"]
+            for s in sorted(pc.unique(seqs).to_pylist()):
+                out.append((kc, int(s), keys.filter(pc.equal(seqs, s))))
+        else:
+            out.append((kc, int(e["seq"]), tbl.select([0]).rename_columns(list(kc))))
+    return out
+
+
+def _live_deletes(deletes, chunk: int | None) -> list[tuple[tuple[str, ...], list[pa.Table]]]:
+    """The key sets that apply to rows of ``chunk``: sequence ``>=``
+    the chunk id (rows appended after a delete stay visible)."""
+    by: dict[tuple[str, ...], list[pa.Table]] = {}
+    for kc, seq, keys in deletes:
+        if (chunk or 0) <= seq:
+            by.setdefault(kc, []).append(keys)
+    return sorted(by.items())
+
+
+def _drop_deleted(batch: pa.RecordBatch, live) -> pa.RecordBatch:
+    """``batch`` without the rows whose key tuple is in a live key set
+    (Arrow semi-join: NULL keys never match, as in the Spark anti-join)."""
+    n = batch.num_rows
+    hit = np.zeros(n, dtype=bool)
+    for kc, tables in live:
+        probe = pa.table(
+            [batch.column(c) for c in kc] + [pa.array(np.arange(n))],
+            names=[*kc, "__row"],
+        )
+        key_schema = pa.schema([probe.schema.field(c) for c in kc])
+        for keys in tables:
+            m = probe.join(keys.cast(key_schema), keys=list(kc), join_type="left semi")
+            hit[m["__row"].to_numpy()] = True
+    return batch.filter(pa.array(~hit)) if hit.any() else batch
+
+
+# -------------------------------------------------------------- decode ----
+
+
+def iter_blocks(
+    sels: list[Selection],
+    man: dict,
+    cols: list[str] | None = None,
+    *,
+    eq_filter: tuple[str, object] | None = None,
+    deletes: list = (),
+) -> Iterator[pa.RecordBatch]:
+    """Decoded rows of the selected block rows, one batch per block
+    row, columns ``cols`` (default: all) in :func:`arrow_schema` types.
+
+    ``eq_filter=(col, value)`` keeps only rows with ``col == value``:
+    that column's payload is read and decoded first, and a block with
+    no match reads no other payload. ``deletes`` (from
+    :func:`load_deletes`) drop deleted rows; their key columns are
+    decoded even when ``cols`` leaves them out."""
+    from .scan import _block_rows, _colspecs, _eq_rows
+
+    out_names = [s[0] for s in _colspecs(man, cols)]
+    dec_cols = None
+    if cols is not None:
+        dcols = [c for kc, _, _ in deletes for c in kc]
+        dec_cols = list(dict.fromkeys(list(cols) + dcols))
+    specs = _colspecs(man, dec_cols)
+    schema = arrow_schema(specs)
+    blob_names, block_rows = _block_rows(man, specs)
+    first: list[str] = []
+    if eq_filter is not None:
+        fname, fval = eq_filter
+        first, first_rows = _block_rows(man, [s for s in specs if s[0] == fname])
+    for sel in sels:
+        live = _live_deletes(deletes, sel.chunk)
+        pf = pq.ParquetFile(sel.path)
+        have = set(pf.schema_arrow.names)
+
+        def read(rg, blobs, offsets):
+            cols_ = ["n_rows"] + [b for b in blobs if b in have]
+            return pf.read_row_group(rg, columns=cols_).take(pa.array(offsets))
+
+        for rg, offsets in sel.rows:
+            hits = None
+            if eq_filter is None:
+                t = read(rg, blob_names, offsets)
+            else:
+                t = read(rg, first, offsets)
+                found = {}
+                for i, _, dec in first_rows(t):
+                    arr = dec(fname)
+                    j = _eq_rows(arr, fval)
+                    if len(j):
+                        found[i] = (pa.array(j), arr.take(pa.array(j)))
+                if not found:
+                    continue
+                keep = sorted(found)
+                t = t.take(pa.array(keep))
+                rest = [b for b in blob_names if b not in first]
+                if rest:
+                    t2 = read(rg, rest, [offsets[i] for i in keep])
+                    for b in t2.column_names[1:]:
+                        t = t.append_column(b, t2[b])
+                hits = [found[i] for i in keep]
+            for i, _, dec in block_rows(t):
+                if hits is None:
+                    arrays = [dec(name) for name, _, _ in specs]
+                else:
+                    j, farr = hits[i]
+                    arrays = [
+                        farr if name == fname else dec(name).take(j)
+                        for name, _, _ in specs
+                    ]
+                batch = pa.RecordBatch.from_arrays(
+                    [a.cast(f.type) if a.type != f.type else a
+                     for a, f in zip(arrays, schema)],
+                    schema=schema,
+                )
+                if live:
+                    batch = _drop_deleted(batch, live)
+                if batch.num_rows:
+                    yield batch.select(out_names)
+

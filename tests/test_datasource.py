@@ -12,7 +12,7 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
-from duckdb_raquet_spark import encode, scan, synth
+from duckdb_raquet_spark import encode, manifest as mf, scan, synth
 from duckdb_raquet_spark.datasource import RaquetDataSource, RaquetReader
 
 pytestmark = pytest.mark.spark
@@ -72,6 +72,28 @@ def test_datasource_overwrite_of_logged_table(registered, tmp_path):
     assert back.exceptAll(new.select(*back.columns)).count() == 0
 
 
+def test_datasource_overwrite_clears_old_lineage(registered, tmp_path):
+    """An overwrite drops the old chunks' lineage records with their
+    data: after a 200-row chunks=3 table is overwritten with 20 rows,
+    no record describes an old chunk, and a later append's record is
+    the only one (compact_chunks sizes its selection from them)."""
+    spark = registered
+    path = str(tmp_path / "ow")
+    old = synth.synth_webtext(spark, 200, num_partitions=2)
+    encode.encode_to_path(spark, old, path, chunks=3, target_rows_per_block=32)
+    assert sorted(mf.read_chunk_lineage(path, spark)) == [0, 1, 2]
+    new = synth.synth_webtext(spark, 20, num_partitions=1)
+    new.write.format("raquet").mode("overwrite").save(path)
+    assert mf.read_chunk_lineage(path, spark) == {}
+    extra = synth.synth_webtext(spark, 10, num_partitions=1, start=900)
+    encode.append_chunk(spark, extra, path)
+    lin = mf.read_chunk_lineage(path, spark)
+    snap = mf.current_snapshot(path, spark)
+    assert sorted(lin) == sorted(set(snap["chunks"]) - {0})
+    assert [r["rows"] for r in lin.values()] == [10]
+    assert scan.read_rows(spark, path).count() == 30
+
+
 def test_datasource_reads_engine_tables_with_pushdown(registered, tmp_path):
     """Interop: format('raquet') reads encode_to_path tables, and url /
     warc_ts predicates return exactly the right rows (pruning is a
@@ -93,23 +115,32 @@ def test_datasource_reads_engine_tables_with_pushdown(registered, tmp_path):
 
 def test_reader_prunes_partitions_on_sorted_layout(registered, tmp_path):
     """On a block-sorted table (multiple range-partitioned files), a url
-    equality must prune file partitions via footer min/max."""
+    equality pinned to its capture time (one block key) must prune file
+    partitions via footer min/max. A url alone selects one block per
+    time cell, which this table spreads over every file; the data
+    files of an unfiltered read exclude the chunk=-1 manifest row."""
     spark = registered
     df = synth.synth_webtext(spark, 400, num_partitions=4)
     path = str(tmp_path / "sorted_table")
     encode.encode_to_path(
         spark, df, path, target_rows_per_block=16, resolution=5, num_partitions=4
     )
-    url = df.orderBy("url").first()["url"]
+    row = df.orderBy("url").first()
     r_all = RaquetReader({"path": path}, None)
-    n_all = len(r_all.partitions())
+    parts = r_all.partitions()
+    n_all = len(parts)
+    assert all("chunk=-1" not in p.path for p in parts)
     r = RaquetReader({"path": path}, None)
     from pyspark.sql.datasource import EqualTo
 
-    list(r.pushFilters([EqualTo(("url",), url)]))
-    n_pruned = len(r.partitions())
+    list(r.pushFilters([EqualTo(("url",), row["url"]),
+                        EqualTo(("warc_ts",), row["warc_ts"])]))
+    pruned = r.partitions()
     assert n_all >= 2
-    assert n_pruned < n_all
+    assert 1 <= len(pruned) < n_all
+    got = [b for p in pruned for b in r.read(p)]
+    urls = [u for b in got for u in b.column("url").to_pylist()]
+    assert row["url"] in urls
 
 
 def test_datasource_and_compact_on_column_groups(registered, tmp_path):

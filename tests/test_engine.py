@@ -66,10 +66,12 @@ def test_compression_beats_zlib_baseline_total(spark, table):
     assert final["enc_bytes"] <= final["raw_bytes"]
 
 
-def test_point_lookup_touches_one_block(spark, table):
+def test_point_lookup_touches_one_block(spark, table, monkeypatch):
     df, _ = table
     row = df.where(F.col("url").endswith("doc-42")).first()
     es = int(row["warc_ts"].replace(tzinfo=datetime.timezone.utc).timestamp())
+    # the Spark side of the driver-local read gate: its plan is asserted
+    monkeypatch.setattr(scan, "_read_on_driver", lambda *a: False)
     got = scan.point_lookup(spark, PATH, row["url"], es, cols=["text", "lang"])
     plan = got._jdf.queryExecution().executedPlan().toString()
     assert "PushedFilters: [IsNotNull(block), EqualTo(block," in plan
@@ -78,6 +80,13 @@ def test_point_lookup_touches_one_block(spark, table):
     # url-only lookup (cover set over time cells)
     r2 = scan.point_lookup(spark, PATH, row["url"], cols=["text"]).first()
     assert r2["text"] == row["text"]
+    # the driver-local side returns the same row
+    monkeypatch.setattr(scan, "_read_on_driver", lambda *a: True)
+    local = scan.point_lookup(spark, PATH, row["url"], es, cols=["text", "lang"])
+    assert local.schema == got.schema
+    assert local.collect() == got.collect()
+    r3 = scan.point_lookup(spark, PATH, row["url"], cols=["text"]).first()
+    assert r3["text"] == row["text"]
 
 
 def test_range_scan_matches_raw_filter(spark, table):

@@ -14,6 +14,7 @@ import io
 import os
 import re
 import sys
+from unittest import mock
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -74,7 +75,13 @@ def main() -> None:
         entry._encoded(spark, args.sf_dir)
     man = scan.read_manifest(spark, enc_path)
     url0 = "https://example-0.com/page/0"
-    p = formatted(scan.point_lookup(spark, enc_path, url0, cols=["text"], man=man))
+    # lookups and ranges small enough run on the driver, without a plan:
+    # the plans audited here are the Spark side of that gate
+    spark_side = mock.patch.object(scan, "_read_on_driver", lambda *a: False)
+    with spark_side:
+        p = formatted(
+            scan.point_lookup(spark, enc_path, url0, cols=["text"], man=man)
+        )
     sections.append(
         (
             "point_lookup",
@@ -88,9 +95,12 @@ def main() -> None:
 
     # 3. time-range scan: sargable bucket predicate, pushed range
     lo, hi = 1704067200 + 86400, 1704067200 + 3 * 86400
-    p = formatted(
-        scan.range_scan_ts(spark, enc_path, lo, hi, cols=["url", "lang"], man=man)
-    )
+    with spark_side:
+        p = formatted(
+            scan.range_scan_ts(
+                spark, enc_path, lo, hi, cols=["url", "lang"], man=man
+            )
+        )
     sections.append(
         (
             "range_scan_ts",
