@@ -47,6 +47,14 @@ COORD_MAX = (1 << COORD_BITS) - 1
 HASH_SHIFT = 64 - COORD_BITS  # top 26 bits of xxhash64(url)
 DEFAULT_BUCKET_SECONDS = 86400  # one day per time bucket
 MANIFEST_BLOCK = 0
+# Default raw bytes per cell. The reference's block is a 256x256 raster
+# tile of at most 512 KB; a webtext row is 1-2 KB raw, so taking its
+# 65,536 pixels as rows made 86-140 MB blocks, each decoded and
+# re-encoded as one serial task. A 4 MiB ceiling lands every cell in
+# (1, 4] MiB, around the ~2 MB blocks whose ratio bench.py validates;
+# smaller cells pay more parquet footers and drop more payloads under
+# selector.BZ2_MIN_BYTES.
+TARGET_CELL_BYTES = 4 << 20
 
 _SPREAD = [
     (16, 0x0000FFFF0000FFFF),
@@ -405,6 +413,28 @@ def hash_cell_col(block: Column, res: int) -> Column:
     return F.shiftrightunsigned(x, COORD_BITS - res)
 
 
+def chunk_col(x: Column, y: Column, res: int, n: int) -> Column:
+    """Chunk id in ``[0, n)`` of the res-``res`` cell holding the 26-bit
+    coordinates ``x``/``y`` (:func:`x_col_from_url`,
+    :func:`y_col_from_ts`, as :func:`key_col` takes them): the 4^res
+    cells in url-hash-major order (hash cell, then time cell), cut into
+    ``n`` contiguous ranges of equal width. Every salt of a block lands
+    in its chunk. With ``n <= 2^res`` every range spans at least 2^res
+    cells, so it meets each time cell in some hash cell; url hashing
+    fills every hash cell, so no chunk is left empty.
+
+    Not Morton order: the Morton index's top bit is the time bit, so a
+    table without a time column, or inside one time cell, would leave
+    every upper chunk empty."""
+    if n << (2 * res) >= 1 << 63:
+        raise ValueError(f"{n} chunks at resolution {res} overflow a long")
+    shift = COORD_BITS - res
+    cell = F.shiftleft(F.shiftrightunsigned(x, shift), res).bitwiseOR(
+        F.shiftrightunsigned(y, shift)
+    )
+    return F.shiftrightunsigned(cell * F.lit(n), 2 * res).cast("int")
+
+
 def _key_from_cells_col(xcell: Column, ycell: Column, res: int) -> Column:
     """Key from (x, y) CELL indices at ``res`` — Column twin of
     key_from_parts on shifted coords."""
@@ -475,15 +505,17 @@ def kring_col(block: Column, res: int, k: int = 1) -> Column:
     )
 
 
-def choose_resolution(est_rows: int, target_rows_per_block: int = 65536) -> int:
-    """Pick a resolution so cells hold ~target rows (2 bits per res step).
+def choose_resolution(amount: int, per_cell: int = TARGET_CELL_BYTES) -> int:
+    """The smallest resolution at which ``amount / 4^res <= per_cell``
+    (2 bits per res step), capped at ``MAX_RES``.
 
-    At 10^12 documents and 64K rows/block this lands around res 12
-    (~16.8M cells); the 26-res ceiling leaves headroom for 10^15+ rows.
+    By default ``amount`` is the input's raw bytes and each cell holds
+    at most ``TARGET_CELL_BYTES``; pass a row count and a rows-per-cell
+    target for row semantics. At 10^12 documents and 64K rows per cell
+    this lands at res 12 (~16.8M cells); the 26-res ceiling leaves
+    headroom for 10^15+ rows.
     """
     res = 0
-    cells = 1
-    while res < MAX_RES and est_rows / cells > target_rows_per_block:
+    while res < MAX_RES and amount > per_cell << (2 * res):
         res += 1
-        cells = 1 << (2 * res)
     return res

@@ -49,6 +49,9 @@ from . import selector
 
 BLOCK = "block"
 SALT = "salt"
+# lineage tag of the chunk split rule (blockkey.chunk_col); resume
+# refuses chunks written under any other
+CHUNK_SPLIT = "cells"
 
 STATS_TYPE = T.StructType(
     [
@@ -341,6 +344,36 @@ def _rows_to_batch(rows: list[dict], arrow_schema) -> "pa.RecordBatch":
     return pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)
 
 
+def bind_stats(
+    df: DataFrame, *, ts_col: str | None = None, raw: bool = True
+) -> tuple[int, int | None, tuple[int, int] | None]:
+    """One column-pruned job: ``(rows, raw_bytes, ts_range)``.
+
+    ``raw_bytes`` counts what :func:`encode_block_arrow` records in
+    ``stats.raw_bytes``: the byte length of every string/binary value
+    plus 8 bytes per fixed-width value, so the estimate is exact for
+    file scans and in-memory frames alike (``None`` unless ``raw``).
+    ``ts_range`` is ``ts_col``'s (min, max) epoch (``None`` without
+    ``ts_col``). On Iceberg these come free from table and column
+    metadata."""
+    aggs = [F.count("*")]
+    if raw:
+        var, fixed = [], 0
+        for c in columns_of(df):
+            if c["kind"] in (selector.KIND_STRING, selector.KIND_BINARY):
+                var.append(F.coalesce(F.octet_length(F.col(c["name"])), F.lit(0)))
+            else:
+                fixed += 8
+        aggs.append(F.sum(sum(var, F.lit(fixed).cast("long"))))
+    if ts_col is not None:
+        aggs += [F.min(F.unix_timestamp(ts_col)), F.max(F.unix_timestamp(ts_col))]
+    r = df.agg(*aggs).first()
+    rows = int(r[0])
+    raw_bytes = int(r[1] or 0) if raw else None
+    ts_range = (int(r[-2] or 0), int(r[-1] or 0)) if ts_col is not None else None
+    return rows, raw_bytes, ts_range
+
+
 def encode_table(
     df: DataFrame,
     *,
@@ -349,9 +382,10 @@ def encode_table(
     resolution: int | None = None,
     bucket_seconds: int = bk.DEFAULT_BUCKET_SECONDS,
     est_rows: int | None = None,
+    est_raw_bytes: int | None = None,
     ts_range: tuple[int, int] | None = None,
-    target_rows_per_block: int = 65536,
-    max_rows_per_block: int = 262144,
+    target_rows_per_block: int | None = None,
+    max_rows_per_block: int | None = None,
     zlib_level: int = 6,
     chunk: tuple[int, int] | None = None,
     num_partitions: int | None = None,
@@ -362,6 +396,18 @@ def encode_table(
     salt_mode: str = "avg",
 ) -> tuple[DataFrame, dict]:
     """Lazy encode plan: input rows -> one row per (block, salt).
+
+    Geometry: by default the resolution is the smallest at which each
+    cell holds at most ``blockkey.TARGET_CELL_BYTES`` (4 MiB) of raw
+    bytes, from ``est_raw_bytes`` (``bind_stats`` runs when it or
+    ``est_rows`` is missing). That yields one rows-per-cell figure,
+    ``est_rows * 4 MiB / est_raw_bytes``, which also sizes the salt cap
+    (``max_rows_per_block`` defaults to 4x it, 16 MiB raw) and the
+    planned-placement gate (>= 64 cells' worth of rows). Blocks of ~2 MB
+    keep every encode, mask and read parallel across cells; 65,536-row
+    blocks (the reference tile's pixel count) are 86-140 MB of webtext,
+    one serial task. An explicit ``target_rows_per_block`` replaces that
+    figure and keeps row semantics.
 
     ``salt_mode`` picks how the salt fan-out is sized. ``"avg"``
     (default) divides the row estimate by the cell count — free, and
@@ -395,8 +441,8 @@ def encode_table(
     pruning needs it; the reference's ORDER BY block, README.md:259-261).
     ``ts_range`` = (min_epoch, max_epoch) skips the bind-time min/max
     scan of the timestamp column. ``chunk`` = (k, n_chunks) restricts
-    the plan to one deterministic slice of the key space before the
-    shuffle (checkpoint-resume granule).
+    the plan to one contiguous range of cells (``blockkey.chunk_col``)
+    before the shuffle (checkpoint-resume granule).
     """
     columns = columns_of(df)
     names = {c["name"] for c in columns}
@@ -435,12 +481,22 @@ def encode_table(
                 c["codec"] = codec_overrides[c["name"]]
     if ts_col is not None and ts_col not in names:
         ts_col = None
-    if est_rows is None:
-        est_rows = df.count()
+    if target_rows_per_block is None:
+        if est_rows is None or est_raw_bytes is None:
+            est_rows, est_raw_bytes, _ = bind_stats(df)
+        # the byte rule, and the one rows-per-cell figure it implies
+        amount, per_cell = est_raw_bytes, bk.TARGET_CELL_BYTES
+        target_rows_per_block = max(1, est_rows * per_cell // max(1, est_raw_bytes))
+    else:
+        if est_rows is None:
+            est_rows = df.count()
+        amount, per_cell = est_rows, target_rows_per_block
+    if max_rows_per_block is None:
+        max_rows_per_block = 4 * target_rows_per_block
     res = (
         resolution
         if resolution is not None
-        else bk.choose_resolution(est_rows, target_rows_per_block)
+        else bk.choose_resolution(amount, per_cell)
     )
     if ts_col is None:
         ts_origin, eff_bucket = 0, bucket_seconds
@@ -487,9 +543,13 @@ def encode_table(
     keyed = df.withColumn(BLOCK, key).withColumn(SALT, salt)
     if chunk is not None:
         k, n_chunks = chunk
-        keyed = keyed.where(
-            F.pmod(F.xxhash64(F.col(BLOCK), F.col(SALT)), F.lit(n_chunks)) == k
+        y = (
+            bk.y_col_from_ts(F.col(ts_col), res, eff_bucket, ts_origin)
+            if ts_col
+            else F.lit(0)
         )
+        x = bk.x_col_from_url(F.col(url_col))
+        keyed = keyed.where(bk.chunk_col(x, y, res, n_chunks) == k)
 
     spark = df.sparkSession
     if shuffle == "none":
@@ -887,6 +947,7 @@ def _write_chunk(
             "rows": totals["num_rows"],
             "raw_bytes": totals["raw_bytes"],
             "enc_bytes": totals["enc_bytes"],
+            "split": CHUNK_SPLIT,
         },
         spark,
     )
@@ -931,35 +992,52 @@ def encode_to_path(
     each an independently written Spark job followed by its lineage
     record (rows, bytes, wall seconds), and the encode commits once
     over ``chunks`` 0..n-1. One chunk (the default) encodes the whole
-    input with the table-wide placement; ``chunks > 1`` splits the
-    block-key space into deterministic chunk ids, derived from
-    (block, salt) so an encode unit never spans chunks.
+    input with the table-wide placement; ``chunks > 1`` cuts the cells
+    into ``chunks`` contiguous ranges (``blockkey.chunk_col``), so an
+    encode unit never spans chunks and no chunk is empty while there
+    are at least as many hash cells as chunks.
     ``resume=True`` skips chunks whose lineage record exists —
     re-running a half-finished encode does not duplicate or re-encode
-    completed chunks. A legacy flat table at ``path`` is refused."""
+    completed chunks. A legacy flat table at ``path`` is refused.
+
+    Geometry comes from one bind-time stats job (:func:`bind_stats`):
+    its raw-byte total picks the smallest resolution with at most 4 MiB
+    raw per cell (see :func:`encode_table`), unless the caller passes
+    ``target_rows_per_block`` or ``resolution``."""
     est_rows = kwargs.pop("est_rows", None)
     need_ts = (
         ts_col is not None
         and kwargs.get("ts_range") is None
         and ts_col in {f.name for f in df.schema.fields}
     )
-    if est_rows is None or need_ts:
-        # one bind-time stats job for count + ts min/max (on Iceberg these
-        # come free from table/column metadata; here a column-pruned scan)
-        aggs = [F.count("*")]
+    need_raw = (
+        kwargs.get("target_rows_per_block") is None
+        and kwargs.get("est_raw_bytes") is None
+    )
+    if est_rows is None or need_ts or need_raw:
+        n, raw, ts_range = bind_stats(
+            df, ts_col=ts_col if need_ts else None, raw=need_raw
+        )
+        est_rows = n if est_rows is None else est_rows
+        if need_raw:
+            kwargs["est_raw_bytes"] = raw
         if need_ts:
-            aggs += [F.min(F.unix_timestamp(ts_col)), F.max(F.unix_timestamp(ts_col))]
-        r = df.agg(*aggs).first()
-        if est_rows is None:
-            est_rows = int(r[0])
-        if need_ts:
-            kwargs["ts_range"] = (int(r[1] or 0), int(r[2] or 0))
+            kwargs["ts_range"] = ts_range
 
     sorted_write = kwargs.pop("sorted_write", True)
     parent = mf.current_snapshot(path, spark)
     _refuse_flat(spark, path, parent)
     done = mf.read_chunk_lineage(path, spark) if resume else {}
     chunks = max(1, chunks)
+    if chunks > 1 and any(
+        done[k].get("split") != CHUNK_SPLIT for k in range(chunks) if k in done
+    ):
+        # a chunk landed under the old (block, salt) hash split: resuming
+        # under another rule would drop or duplicate rows
+        raise ValueError(
+            f"cannot resume {path}: its chunks were split by an older rule; "
+            "re-encode without resume"
+        )
     one = chunks == 1
     p = spark.sparkContext.defaultParallelism
     # one chunk keeps the table-wide placement (the planned-placement
@@ -1097,6 +1175,8 @@ def append_chunk(
             df = df.withColumnRenamed(c["name"], p)
     key = man["key"]
     n = df.count()
+    # the table's own raw bytes per row size the salt cap: no column scan
+    raw = n * (man.get("raw_bytes") or 0) // max(1, man.get("num_rows") or 0)
     t0 = time.time()
     blocks, chunk_man = encode_table(
         df,
@@ -1106,6 +1186,7 @@ def append_chunk(
         bucket_seconds=key["bucket_seconds"],
         ts_range=(key["ts_origin"], key["ts_origin"]),  # pinned geometry
         est_rows=n,
+        est_raw_bytes=raw,
         zlib_level=zlib_level,
         effort=effort,
         codec_overrides=codec_overrides,

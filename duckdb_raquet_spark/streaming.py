@@ -64,7 +64,7 @@ def encode_stream(
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         t0 = time.time()
-        n = batch_df.count()
+        n, raw, _ = enc.bind_stats(batch_df)
         if n == 0:
             return
         # the CAS parent: a writer committing during this batch fails
@@ -82,6 +82,7 @@ def encode_stream(
             bucket_seconds=bucket_seconds,
             ts_range=(ts_origin, ts_origin),  # pinned geometry
             est_rows=n,
+            est_raw_bytes=raw,
             zlib_level=zlib_level,
             effort=effort,
             codec_overrides=codec_overrides,

@@ -39,7 +39,13 @@ def main() -> None:
     ap.add_argument("--resume", action="store_true")
     ap.add_argument("--url-col", default="url")
     ap.add_argument("--ts-col", default="warc_ts")
-    ap.add_argument("--target-rows-per-block", type=int, default=65536)
+    ap.add_argument(
+        "--target-rows-per-block",
+        type=int,
+        default=None,
+        help="rows per cell; default: size cells by raw bytes, the smallest "
+        "resolution with at most 4 MiB raw per cell (~2 MB blocks)",
+    )
     ap.add_argument("--zlib-level", type=int, default=6)
     ap.add_argument(
         "--codec",

@@ -96,6 +96,8 @@ def test_choose_resolution_scales():
     assert 0 < r1 <= 26
     # 10^12 docs at 64K/block needs ~16M cells -> res 12
     assert r1 == 12
+    assert bk.choose_resolution(65537, 65536) == 1
+    assert bk.choose_resolution(10**30) == bk.MAX_RES
 
 
 @pytest.mark.spark

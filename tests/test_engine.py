@@ -186,6 +186,17 @@ def test_chunked_encode_and_resume(spark):
     assert dec2.count() == 800
     assert dec2.distinct().count() == 800
 
+    # a chunk landed under the older (block, salt) hash split carries no
+    # split tag: resuming under the cell-range split would mix the rules
+    rec = mf.read_chunk_lineage(path)[0]
+    del rec["split"]
+    mf.write_chunk_lineage(path, 0, rec)
+    with pytest.raises(ValueError, match="older rule"):
+        encode.encode_to_path(
+            spark, df, path, chunks=3, resume=True, target_rows_per_block=128,
+            resolution=3,
+        )
+
 
 def test_decode_only_requested_columns_plan(spark, table):
     man = scan.read_manifest(spark, PATH)
