@@ -95,13 +95,7 @@ class _FilePart(InputPartition):
 
 @dataclasses.dataclass
 class _TaskStats(WriterCommitMessage):
-    n_rows: int
-    n_blocks: int
-    raw_bytes: int
-    enc_bytes: int
-    codec_histogram: dict
-    ts_min: int | None
-    ts_max: int | None
+    figures: dict  # one task's blocks, as a chunk lineage record sums them
 
 
 def _load_manifest(path: str) -> dict:
@@ -322,9 +316,10 @@ class RaquetWriter(DataSourceArrowWriter):
         import shutil
 
         # a fresh one-chunk table: every task writes into data/chunk=0.
-        # The old chunks' lineage records go with their data (appends
-        # and compact_chunks read them); _snapshots/ stays, so the
-        # overwrite commits parent + 1 on a logged table
+        # The old chunks' lineage records go with their data, and
+        # commit() writes chunk 0's (commits, appends and compact_chunks
+        # read them); _snapshots/ stays, so the overwrite commits
+        # parent + 1 on a logged table
         for sub in ("data", "_lineage"):
             shutil.rmtree(os.path.join(self.path, sub), ignore_errors=True)
         self.chunk_dir = os.path.join(self.path, "data", "chunk=0")
@@ -361,7 +356,7 @@ class RaquetWriter(DataSourceArrowWriter):
             )
             pq.write_table(empty, tmp_file)
             os.replace(tmp_file, out_file)
-            return _TaskStats(0, 0, 0, 0, {}, None, None)
+            return _TaskStats(enc._sum_figures([]))
         tbl = pa.Table.from_batches(batches).combine_chunks()
         # block keys for the partition's rows (numpy kernel — the same
         # math as the Column expression in encode_table)
@@ -406,41 +401,39 @@ class RaquetWriter(DataSourceArrowWriter):
         out = pa.Table.from_arrays(arrays, schema=arrow_schema)
         pq.write_table(out, tmp_file)
         os.replace(tmp_file, out_file)
-        hist: dict = {}
-        raw = enc_b = 0
-        ts_min = ts_max = None
-        for r in rows:
-            st = r["stats"]
-            raw += st["raw_bytes"]
-            enc_b += st["enc_bytes"]
-            if st["ts_min"] is not None:
-                ts_min = st["ts_min"] if ts_min is None else min(ts_min, st["ts_min"])
-                ts_max = st["ts_max"] if ts_max is None else max(ts_max, st["ts_max"])
-            for cname, codec in json.loads(r["codecs"]).items():
-                hist.setdefault(cname, {})
-                hist[cname][codec] = hist[cname].get(codec, 0) + 1
         return _TaskStats(
-            int(sum(r["n_rows"] for r in rows)), len(rows), raw, enc_b,
-            hist, ts_min, ts_max,
+            enc._sum_figures(
+                {
+                    "blocks": 1,
+                    "rows": r["n_rows"],
+                    "raw_bytes": r["stats"]["raw_bytes"],
+                    "enc_bytes": r["stats"]["enc_bytes"],
+                    "codec_histogram": {
+                        c: {codec: 1} for c, codec in json.loads(r["codecs"]).items()
+                    },
+                }
+                for r in rows
+            )
         )
 
     def commit(self, messages) -> None:
-        # the table's one commit LAST (snapshot, then manifest row +
-        # sidecar), from per-task stats — no extra Spark job, and
-        # readers never see a manifest covering uncommitted data
-        hist: dict = {}
-        n_rows = n_blocks = raw = enc_b = 0
-        for m in messages:
-            if m is None:
-                continue
-            n_rows += m.n_rows
-            n_blocks += m.n_blocks
-            raw += m.raw_bytes
-            enc_b += m.enc_bytes
-            for cname, inner in m.codec_histogram.items():
-                hist.setdefault(cname, {})
-                for codec, k in inner.items():
-                    hist[cname][codec] = hist[cname].get(codec, 0) + k
+        # chunk 0's lineage record from the task stats, then the table's
+        # one commit LAST (snapshot, then manifest row + sidecar), its
+        # totals summed from that record like every commit's — no extra
+        # Spark job, and readers never see a manifest covering
+        # uncommitted data. spark=None: fsio takes the plain-local path;
+        # a remote table URI would need a live session, which the
+        # DataSource commit hook doesn't receive — local/posix paths
+        # only for now
+        from . import encode as enc
+
+        mf.write_chunk_lineage(
+            self.path, 0,
+            {"chunk": 0, **enc._sum_figures(
+                m.figures for m in messages if m is not None
+            )},
+        )
+        totals, hist = enc._chunk_totals(None, self.path, [0])
         man = mf.build_manifest(
             columns=self.columns,
             resolution=self.resolution,
@@ -452,16 +445,8 @@ class RaquetWriter(DataSourceArrowWriter):
             extra={"effort": self.effort, "shuffle": "none",
                    "writer": "datasource"},
         )
-        final = mf.finalize_manifest(
-            man, codec_histogram=hist, num_blocks=n_blocks, num_rows=n_rows,
-            raw_bytes=raw, enc_bytes=enc_b,
-        )
-        from .encode import _commit
-
-        # spark=None: fsio takes the plain-local path; a remote table
-        # URI would need a live session, which the DataSource commit
-        # hook doesn't receive — local/posix paths only for now
-        _commit(
+        final = mf.finalize_manifest(man, codec_histogram=hist, **totals)
+        enc._commit(
             None, self.path, final, chunks=[0], op="encode",
             parent=mf.current_snapshot(self.path, None),
         )

@@ -34,7 +34,6 @@ import math
 import os
 import time
 import uuid
-from collections import Counter
 
 import numpy as np
 import pyarrow as pa
@@ -758,21 +757,38 @@ def _write_data(blocks: DataFrame, dest: str, n_files: int | None) -> None:
         blocks.unpersist()
 
 
+# A chunk's figures, as its lineage record carries them; a commit's
+# manifest totals are their sum over the commit's chunk set.
+FIGURES = ("blocks", "rows", "raw_bytes", "enc_bytes", "codec_histogram")
+
+
+def _sum_figures(records) -> dict:
+    """Sum figure records (``FIGURES`` keys): counts add, and codec
+    histograms add per column and codec. The one summing rule for
+    chunk records, task stats and block rows."""
+    out = {k: 0 for k in FIGURES if k != "codec_histogram"}
+    hist: dict[str, dict[str, int]] = {}
+    for r in records:
+        for k in out:
+            out[k] += int(r[k] or 0)
+        for col, codecs in r["codec_histogram"].items():
+            h = hist.setdefault(col, {})
+            for codec, n in codecs.items():
+                h[codec] = h.get(codec, 0) + int(n)
+    out["codec_histogram"] = hist
+    return out
+
+
 def _aggregate_written(
-    spark: SparkSession,
-    path: str,
-    visible_chunks: list[int] | None = None,
-    new_chunk: int | None = None,
-) -> tuple[dict, dict, dict]:
-    """Single columnar pass over stats/codecs (payloads pruned) to
-    finalize the manifest after the data write: grouping by the codecs
-    JSON (few distinct combos) yields totals and the codec histogram
-    from one job. ``visible_chunks`` restricts the pass to a snapshot's
-    chunk set (partition-pruned) so rolled-back chunk dirs never pollute
-    totals. ``new_chunk`` also splits the groups on that chunk id, so
-    the same job yields the chunk's own rows/raw/enc bytes for its
-    lineage record. Returns (totals, codec histogram, new chunk's
-    totals).
+    spark: SparkSession, path: str, visible_chunks: list[int]
+) -> dict:
+    """The figures (``FIGURES``) of the blocks written in
+    ``visible_chunks``, recounted from their stats/codecs columns
+    (payloads pruned) in one job: grouping by the codecs JSON (few
+    distinct combos) yields the counts and the codec histogram.
+    :func:`_write_chunk` runs it over its one new chunk, and
+    :func:`_chunk_totals` over chunks whose lineage record lacks
+    figures.
 
     The schema is declared, not inferred from a footer, and only the
     ``visible_chunks`` dirs are listed: inference opens the first
@@ -784,45 +800,62 @@ def _aggregate_written(
         T.StructField("n_rows", T.LongType()),
         T.StructField("codecs", T.StringType()),
         T.StructField("stats", STATS_TYPE),
+        T.StructField("chunk", T.IntegerType()),
     ]
     data = _data_path(path)
-    if visible_chunks is None:
-        df = spark.read.schema(T.StructType(fields)).parquet(data)
-    else:
-        fields.append(T.StructField("chunk", T.IntegerType()))
-        df = (
-            spark.read.schema(T.StructType(fields))
-            .option("basePath", data)
-            .parquet(*[os.path.join(data, f"chunk={int(c)}") for c in visible_chunks])
-        )
-    keys = [F.col("codecs")]
-    if new_chunk is not None:
-        keys.append((F.col("chunk") == int(new_chunk)).alias("new"))
     rows = (
-        df.where(F.col(BLOCK) != bk.MANIFEST_BLOCK)
-        .groupBy(*keys)
+        spark.read.schema(T.StructType(fields))
+        .option("basePath", data)
+        .parquet(*[os.path.join(data, f"chunk={int(c)}") for c in visible_chunks])
+        .where(F.col(BLOCK) != bk.MANIFEST_BLOCK)
+        .groupBy("codecs")
         .agg(
-            F.count("*").alias("num_blocks"),
-            F.sum("n_rows").alias("num_rows"),
+            F.count("*").alias("blocks"),
+            F.sum("n_rows").alias("rows"),
             F.sum("stats.raw_bytes").alias("raw_bytes"),
             F.sum("stats.enc_bytes").alias("enc_bytes"),
         )
         .collect()
     )
-    hist: dict[str, dict[str, int]] = {}
-    totals = {"num_blocks": 0, "num_rows": 0, "raw_bytes": 0, "enc_bytes": 0}
-    mine = {"rows": 0, "raw_bytes": 0, "enc_bytes": 0}
-    for r in rows:
-        for k in totals:
-            totals[k] += int(r[k] or 0)
-        if new_chunk is not None and r["new"]:
-            mine["rows"] += int(r["num_rows"] or 0)
-            mine["raw_bytes"] += int(r["raw_bytes"] or 0)
-            mine["enc_bytes"] += int(r["enc_bytes"] or 0)
-        for col, codec in json.loads(r["codecs"]).items():
-            h = hist.setdefault(col, {})
-            h[codec] = h.get(codec, 0) + r["num_blocks"]
-    return totals, hist, mine
+    return _sum_figures(
+        {
+            **r.asDict(),
+            "codec_histogram": {
+                col: {codec: r["blocks"]}
+                for col, codec in json.loads(r["codecs"]).items()
+            },
+        }
+        for r in rows
+    )
+
+
+def _chunk_totals(
+    spark: SparkSession | None, path: str, chunks: list[int]
+) -> tuple[dict, dict]:
+    """A commit's manifest totals and codec histogram: the sum of the
+    lineage records of exactly ``chunks``, the chunk set it commits —
+    Iceberg's snapshot summary rule, with no table scan. Chunks whose
+    record lacks figures (tables written before records carried them)
+    are recounted by one :func:`_aggregate_written` over just those
+    dirs. Returns ``(totals, hist)`` for ``mf.finalize_manifest``."""
+    lin = mf.read_chunk_lineage(path, spark)
+    recs, missing = [], []
+    for c in sorted(int(c) for c in chunks):
+        rec = lin.get(c, {})
+        if all(k in rec for k in FIGURES):
+            recs.append(rec)
+        else:
+            missing.append(c)
+    if missing:
+        recs.append(_aggregate_written(spark, path, missing))
+    fig = _sum_figures(recs)
+    totals = {
+        "num_blocks": fig["blocks"],
+        "num_rows": fig["rows"],
+        "raw_bytes": fig["raw_bytes"],
+        "enc_bytes": fig["enc_bytes"],
+    }
+    return totals, fig["codec_histogram"]
 
 
 def _append_manifest_row(spark, dest: str, man: dict) -> None:
@@ -927,31 +960,26 @@ def _commit(
 
 def _write_chunk(
     spark: SparkSession, path: str, k: int, blocks: DataFrame,
-    n_files: int | None,
-) -> tuple[dict, dict]:
-    """Land chunk ``k`` — an idempotent overwrite of ``data/chunk=<k>``
-    (re-running it after a mid-write crash can never duplicate rows) —
-    then its lineage record, strictly after the data. One aggregate job
-    over the chunk yields the record's figures; returns the chunk's
-    (totals, codec histogram) for the commit's manifest."""
+    n_files: int | None, **extra,
+) -> dict:
+    """Land chunk ``k`` — the one place a chunk is written: an
+    idempotent overwrite of ``data/chunk=<k>`` (re-running it after a
+    mid-write crash can never duplicate rows), then its lineage record,
+    strictly after the data. One aggregate job over this chunk's dir
+    only yields the record's figures (``FIGURES``), from which every
+    commit over the chunk sums its totals (:func:`_chunk_totals`);
+    ``extra`` adds the writer's own fields (``appended``, ``batch``,
+    ...). Returns the record."""
     t0 = time.time()
     _write_data(blocks, os.path.join(_data_path(path), f"chunk={k}"), n_files)
-    totals, hist, _ = _aggregate_written(spark, path, visible_chunks=[k])
-    mf.write_chunk_lineage(
-        path,
-        k,
-        {
-            "chunk": k,
-            "wall_seconds": round(time.time() - t0, 3),
-            "blocks": totals["num_blocks"],
-            "rows": totals["num_rows"],
-            "raw_bytes": totals["raw_bytes"],
-            "enc_bytes": totals["enc_bytes"],
-            "split": CHUNK_SPLIT,
-        },
-        spark,
-    )
-    return totals, hist
+    rec = {
+        "chunk": k,
+        **_aggregate_written(spark, path, [k]),
+        "wall_seconds": round(time.time() - t0, 3),
+        **extra,
+    }
+    mf.write_chunk_lineage(path, k, rec, spark)
+    return rec
 
 
 def write_blocks(
@@ -969,7 +997,8 @@ def write_blocks(
     spark = blocks.sparkSession
     parent = mf.current_snapshot(path, spark)
     n_files = max(2, spark.sparkContext.defaultParallelism) if sorted else None
-    totals, hist = _write_chunk(spark, path, 0, blocks, n_files)
+    _write_chunk(spark, path, 0, blocks, n_files, split=CHUNK_SPLIT)
+    totals, hist = _chunk_totals(spark, path, [0])
     final = mf.finalize_manifest(man, codec_histogram=hist, **totals)
     final, _ = _commit(spark, path, final, chunks=[0], op="encode", parent=parent)
     return final
@@ -1045,7 +1074,6 @@ def encode_to_path(
     n_files = max(2, p) if one else max(1, p // chunks)
     if not one:
         kwargs["num_partitions"] = n_files
-    parts: list[tuple[dict, dict]] = []
     for k in range(chunks):
         blocks, man = encode_table(
             df,
@@ -1056,21 +1084,14 @@ def encode_to_path(
             **kwargs,
         )
         if k not in done:
-            parts.append(
-                _write_chunk(spark, path, k, blocks, n_files if sorted_write else None)
+            _write_chunk(
+                spark, path, k, blocks, n_files if sorted_write else None,
+                split=CHUNK_SPLIT,
             )
-    skipped = [k for k in range(chunks) if k in done]
-    if skipped:
-        # resumed chunks' figures: one pass over just those, partition-
-        # pruned — a stale orphan chunk dir (a crashed append, a
-        # rollback awaiting expiry) never inflates the fresh totals
-        parts.append(_aggregate_written(spark, path, visible_chunks=skipped)[:2])
-    totals: Counter = Counter()
-    hist: dict[str, Counter] = {}
-    for t, h in parts:
-        totals.update(t)
-        for col, codecs in h.items():
-            hist.setdefault(col, Counter()).update(codecs)
+    # resumed chunks count from their records like the fresh ones; a
+    # stale orphan chunk dir (a crashed append, a rollback awaiting
+    # expiry) is outside the chunk set and never inflates the totals
+    totals, hist = _chunk_totals(spark, path, list(range(chunks)))
     man["lineage_chunks"] = chunks
     if not sorted_write:
         man["sorted"] = False
@@ -1109,7 +1130,10 @@ def append_chunk(
     ``chunk=<k>`` directory, under an id claimed past every lineage
     id and every chunk of the base snapshot (:func:`_claim_chunk`).
     Every table any writer produces can append; legacy flat tables are
-    read-only and raise.
+    read-only and raise. The chunk lands through :func:`_write_chunk`,
+    whose one aggregate job covers only the new chunk; the commit's
+    totals are the sum of its chunk set's lineage records
+    (:func:`_chunk_totals`), so no append re-scans the older chunks.
 
     Concurrency: the commit is a CAS on the snapshot read here — if
     another writer (e.g. a delete_rows) commits in between,
@@ -1177,7 +1201,6 @@ def append_chunk(
     n = df.count()
     # the table's own raw bytes per row size the salt cap: no column scan
     raw = n * (man.get("raw_bytes") or 0) // max(1, man.get("num_rows") or 0)
-    t0 = time.time()
     blocks, chunk_man = encode_table(
         df,
         url_col=man["url_col"],
@@ -1209,30 +1232,15 @@ def append_chunk(
     for _k in ("schema_evolved", "dropped_columns", "delete_files"):
         if _k in man:
             chunk_man[_k] = man[_k]
-    part = os.path.join(_data_path(path), f"chunk={k}")
-    _write_data(blocks, part, None)
-    chunks = sorted(visible + [k])
-    totals, hist, mine = _aggregate_written(
-        spark, path, visible_chunks=chunks, new_chunk=k
+    _write_chunk(
+        spark, path, k, blocks, None,
+        **({"compacted_from": replace} if replace else {"appended": True}),
+        **({"staged": True} if staged else {}),
     )
+    chunks = sorted(visible + [k])
+    totals, hist = _chunk_totals(spark, path, chunks)
     chunk_man["lineage_chunks"] = k + 1
     final = mf.finalize_manifest(chunk_man, codec_histogram=hist, **totals)
-    # lineage records THIS chunk's bytes — the finalized manifest's
-    # raw/enc_bytes are whole-table totals and would over-report it
-    mf.write_chunk_lineage(
-        path,
-        k,
-        {
-            "chunk": k,
-            **mine,
-            "wall_seconds": round(time.time() - t0, 3),
-            **(
-                {"compacted_from": replace} if replace else {"appended": True}
-            ),
-            **({"staged": True} if staged else {}),
-        },
-        spark,
-    )
     if staged:
         # write-audit-publish: park the would-be commit under _staged/
         # instead of committing it — no reader of the table sees the
@@ -1273,10 +1281,11 @@ def rollback_to_snapshot(spark: SparkSession, path: str, snapshot_id: int) -> di
     set (Iceberg rollback semantics: a NEW snapshot is committed whose
     chunk set equals the target's — history is append-only, nothing is
     deleted, and the rolled-back chunks' directories stay on disk,
-    unreferenced). The manifest row and sidecar are re-finalized over
-    the target's chunks only, so totals/codec histogram reflect the
-    restored table; a later append_chunk picks a fresh chunk id and
-    aggregates the visible set, never resurrecting orphans."""
+    unreferenced). The manifest's totals and codec histogram are the
+    sum of the target chunks' lineage records (:func:`_chunk_totals`),
+    so they describe the restored table; a later append_chunk picks a
+    fresh chunk id and sums its own chunk set, never resurrecting
+    orphans."""
     snaps = mf.read_snapshots(path, spark)
     if snapshot_id not in snaps:
         raise KeyError(
@@ -1297,9 +1306,7 @@ def rollback_to_snapshot(spark: SparkSession, path: str, snapshot_id: int) -> di
         man["delete_files"] = dl
     else:
         man.pop("delete_files", None)
-    totals, hist, _ = _aggregate_written(
-        spark, path, visible_chunks=target["chunks"]
-    )
+    totals, hist = _chunk_totals(spark, path, target["chunks"])
     man["lineage_chunks"] = max(target["chunks"]) + 1
     final = mf.finalize_manifest(man, codec_histogram=hist, **totals)
     final, _ = _commit(
@@ -1389,9 +1396,7 @@ def publish_staged(
                 "since staging; drop_staged and re-stage"
             )
         chunks = sorted({int(c) for c in cur_snap["chunks"]} | {k})
-        totals, hist, _ = _aggregate_written(
-            spark, path, visible_chunks=chunks
-        )
+        totals, hist = _chunk_totals(spark, path, chunks)
         # current manifest is the base: it carries the delete files and
         # evolution state committed since staging
         final = mf.finalize_manifest(

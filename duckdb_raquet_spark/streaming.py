@@ -14,8 +14,9 @@ twin keeps both invariants per micro-batch:
   * the batch commits (snapshot CAS, then manifest row + sidecar)
     strictly AFTER its data write, so readers always see a manifest
     that covers only fully written blocks;
-  * a lineage record per batch (rows/bytes/wall) makes progress
-    observable and resumable, same shape as batch-mode chunk lineage.
+  * a lineage record per batch (blocks/rows/bytes/codecs/wall) makes
+    progress observable and resumable, same shape as batch-mode chunk
+    lineage, and the batch's commit sums its chunk set's records.
 
 Block keys use a FIXED (resolution, ts_origin, bucket_seconds) from the
 caller — a stream cannot scan its own future to size the time cells, so
@@ -24,8 +25,6 @@ exactly like the reference pins tiling zoom at bind time.
 """
 
 from __future__ import annotations
-
-import time
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -63,7 +62,6 @@ def encode_stream(
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        t0 = time.time()
         n, raw, _ = enc.bind_stats(batch_df)
         if n == 0:
             return
@@ -91,31 +89,19 @@ def encode_stream(
         # pin ts_origin explicitly (ts_range above fixes the origin; the
         # effective bucket stays the caller's bucket_seconds)
         man["key"]["ts_origin"] = ts_origin
-        enc._write_data(blocks, f"{enc._data_path(path)}/chunk={k}", None)
+        # the record keeps the claim's batch tag for replays after
+        # completion
+        enc._write_chunk(
+            spark, path, k, blocks, None, streaming=True,
+            **({"batch": batch} if batch else {}),
+        )
         # visibility from the snapshot log (a replayed batch after a
         # checkpoint restart overwrites its own chunk dir and must not
         # double-count it; a rollback's orphans must stay out)
         visible = sorted(set(enc._visible_chunks(spark, path, parent)) | {k})
-        totals, hist, mine = enc._aggregate_written(
-            spark, path, visible_chunks=visible, new_chunk=k
-        )
+        totals, hist = enc._chunk_totals(spark, path, visible)
         final = mf.finalize_manifest(man, codec_histogram=hist, **totals)
         final["lineage_chunks"] = k + 1
-        # lineage records THIS batch's bytes (the finalized manifest
-        # carries whole-table totals), matching encode/append lineage;
-        # it keeps the claim's batch tag for replays after completion
-        mf.write_chunk_lineage(
-            path,
-            k,
-            {
-                "chunk": k,
-                **mine,
-                "wall_seconds": round(time.time() - t0, 3),
-                "streaming": True,
-                **({"batch": batch} if batch else {}),
-            },
-            spark,
-        )
         enc._commit(
             spark, path, final, chunks=visible, op="append", parent=parent,
             extra={"streaming_batch": batch_id},

@@ -75,8 +75,8 @@ def test_datasource_overwrite_of_logged_table(registered, tmp_path):
 def test_datasource_overwrite_clears_old_lineage(registered, tmp_path):
     """An overwrite drops the old chunks' lineage records with their
     data: after a 200-row chunks=3 table is overwritten with 20 rows,
-    no record describes an old chunk, and a later append's record is
-    the only one (compact_chunks sizes its selection from them)."""
+    the only record is the new chunk 0's, and a later append adds its
+    own (compact_chunks sizes its selection from them)."""
     spark = registered
     path = str(tmp_path / "ow")
     old = synth.synth_webtext(spark, 200, num_partitions=2)
@@ -84,14 +84,47 @@ def test_datasource_overwrite_clears_old_lineage(registered, tmp_path):
     assert sorted(mf.read_chunk_lineage(path, spark)) == [0, 1, 2]
     new = synth.synth_webtext(spark, 20, num_partitions=1)
     new.write.format("raquet").mode("overwrite").save(path)
-    assert mf.read_chunk_lineage(path, spark) == {}
+    lin = mf.read_chunk_lineage(path, spark)
+    assert {c: r["rows"] for c, r in lin.items()} == {0: 20}
+    # the record carries the figures the commit summed
+    man = scan.read_manifest(spark, path)
+    assert (lin[0]["blocks"], lin[0]["enc_bytes"], lin[0]["codec_histogram"]) == (
+        man["num_blocks"], man["enc_bytes"], man["codec_histogram"]
+    )
     extra = synth.synth_webtext(spark, 10, num_partitions=1, start=900)
     encode.append_chunk(spark, extra, path)
     lin = mf.read_chunk_lineage(path, spark)
     snap = mf.current_snapshot(path, spark)
-    assert sorted(lin) == sorted(set(snap["chunks"]) - {0})
-    assert [r["rows"] for r in lin.values()] == [10]
+    assert sorted(lin) == sorted(snap["chunks"])
+    assert {c: r["rows"] for c, r in lin.items() if c != 0} == {
+        max(snap["chunks"]): 10
+    }
     assert scan.read_rows(spark, path).count() == 30
+
+
+def test_datasource_chunk_sized_for_compaction(registered, tmp_path):
+    """compact_chunks(small_bytes=...) sizes chunks from their lineage
+    records: a datasource-written chunk 0 larger than the bound is not
+    selected, only the two small appended chunks are merged."""
+    spark = registered
+    path = str(tmp_path / "sel")
+    synth.synth_webtext(spark, 400, num_partitions=2).write.format(
+        "raquet"
+    ).mode("overwrite").option("resolution", 2).save(path)
+    base_bytes = scan.read_manifest(spark, path)["enc_bytes"]
+    for start in (5_000, 6_000):
+        encode.append_chunk(
+            spark, synth.synth_webtext(spark, 10, num_partitions=1, start=start),
+            path,
+        )
+    lin = mf.read_chunk_lineage(path, spark)
+    small = max(lin[1]["enc_bytes"], lin[2]["enc_bytes"]) + 1
+    assert base_bytes > small
+    encode.compact_chunks(spark, path, small_bytes=small)
+    snap = mf.current_snapshot(path, spark)
+    assert snap["compacted_from"] == [1, 2]
+    assert sorted(snap["chunks"]) == [0, 3]
+    assert scan.read_rows(spark, path).count() == 420
 
 
 def test_datasource_reads_engine_tables_with_pushdown(registered, tmp_path):
