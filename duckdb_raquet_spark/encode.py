@@ -393,6 +393,7 @@ def encode_table(
     column_groups: list[list[str]] | None = None,
     shuffle: str = "hash",
     salt_mode: str = "avg",
+    _ts_key: tuple[int, int] | None = None,
 ) -> tuple[DataFrame, dict]:
     """Lazy encode plan: input rows -> one row per (block, salt).
 
@@ -441,7 +442,8 @@ def encode_table(
     ``ts_range`` = (min_epoch, max_epoch) skips the bind-time min/max
     scan of the timestamp column. ``chunk`` = (k, n_chunks) restricts
     the plan to one contiguous range of cells (``blockkey.chunk_col``)
-    before the shuffle (checkpoint-resume granule).
+    before the shuffle (checkpoint-resume granule). ``_ts_key`` =
+    (ts_origin, bucket) is an existing table's time key, used as is.
     """
     columns = columns_of(df)
     names = {c["name"] for c in columns}
@@ -497,7 +499,9 @@ def encode_table(
         if resolution is not None
         else bk.choose_resolution(amount, per_cell)
     )
-    if ts_col is None:
+    if _ts_key is not None:
+        ts_origin, eff_bucket = _ts_key
+    elif ts_col is None:
         ts_origin, eff_bucket = 0, bucket_seconds
     else:
         if ts_range is None:
@@ -1116,13 +1120,13 @@ def append_chunk(
     _replace_chunks: list[int] | None = None,
     _op: str = "append",
     _base: tuple[dict, dict | None] | None = None,
+    _batch: list | None = None,
 ) -> dict:
-    """Append new rows to a committed table as the next chunk — the
-    sanctioned append path (the datasource rejects ``mode('append')``
-    because task-level appends would desync the manifest; this one
-    commits strictly AFTER the chunk's data write, the same invariant
-    as streaming ingest, whose per-micro-batch commit is exactly one
-    append).
+    """Append new rows to a committed table as the next chunk: every new
+    chunk of an existing table lands here, whether appended, streamed
+    (one call per micro-batch), upserted or compacted. It commits
+    strictly AFTER the chunk's data write. A plain append of zero rows
+    claims no chunk, commits nothing and returns the base manifest.
 
     Key geometry (resolution / bucket / origin) is pinned from the
     existing manifest so old and new chunks share one block-key space;
@@ -1144,16 +1148,18 @@ def append_chunk(
     the concurrent change folded in. ``staged=True`` stops before the
     commit and parks it under ``_staged/`` (write-audit-publish).
 
-    The private hooks serve :func:`compact_chunks`: ``_replace_chunks``
-    makes the new chunk REPLACE the given visible chunks instead of
-    adding to them, committed as op ``_op``; ``_base`` is the
-    ``(manifest, snapshot)`` pair from ``mf.committed_manifest`` at
-    which the caller derived the replacement rows (its decode +
+    The private hooks serve :func:`compact_chunks` and the stream:
+    ``_replace_chunks`` makes the new chunk REPLACE the given visible
+    chunks instead of adding to them, committed as op ``_op``; ``_base``
+    is the ``(manifest, snapshot)`` pair from ``mf.committed_manifest``
+    at which the caller derived the replacement rows (its decode +
     delete-entry capture point). That snapshot, not a re-read here, is
     the CAS parent — a delete committed between the two reads must
     fail the compaction, or its keys would be missing from the
     rewritten chunk while its entry (seq < new chunk id) no longer
-    applies to it."""
+    applies to it. ``_batch`` is a stream's replay tag (see
+    :func:`_claim_chunk`); a replay of a committed batch commits
+    nothing new."""
     if staged and (_replace_chunks or _op != "append"):
         raise ValueError("only plain appends can be staged")
     man, base_snap = _base or _writable_base(spark, path)
@@ -1167,10 +1173,8 @@ def append_chunk(
         )
     # visible set comes from the snapshot log when present (a rollback
     # leaves orphaned chunk dirs on disk that must not rejoin the table
-    # through an append's re-finalization); pre-log tables see all
-    # lineage chunks, exactly the old behavior
+    # through an append's re-finalization)
     visible = _visible_chunks(spark, path, base_snap)
-    k = _claim_chunk(spark, path, base_snap)
     replace = sorted(int(c) for c in (_replace_chunks or []))
     if replace:
         missing = set(replace) - set(visible)
@@ -1179,7 +1183,6 @@ def append_chunk(
                 f"chunks {sorted(missing)} are not visible at the current "
                 f"snapshot (visible: {visible})"
             )
-    visible = [c for c in visible if c not in set(replace)]
     # schema evolution: an appended frame may omit columns added after
     # the original encode — fill their recorded defaults, then align
     # column order to the manifest's
@@ -1198,16 +1201,19 @@ def append_chunk(
         if p != c["name"] and c["name"] in df.columns:
             df = df.withColumnRenamed(c["name"], p)
     key = man["key"]
-    n = df.count()
-    # the table's own raw bytes per row size the salt cap: no column scan
-    raw = n * (man.get("raw_bytes") or 0) // max(1, man.get("num_rows") or 0)
+    # one sizing job; a table with rows scales its raw bytes per row
+    n, raw, _ = bind_stats(df, raw=not man.get("num_rows"))
+    if n == 0 and not (staged or replace):
+        return man
+    if raw is None:
+        raw = n * (man.get("raw_bytes") or 0) // man["num_rows"]
+    k = _claim_chunk(spark, path, base_snap, _batch)
     blocks, chunk_man = encode_table(
         df,
         url_col=man["url_col"],
         ts_col=man["ts_col"],
         resolution=key["resolution"],
-        bucket_seconds=key["bucket_seconds"],
-        ts_range=(key["ts_origin"], key["ts_origin"]),  # pinned geometry
+        _ts_key=(key["ts_origin"], key["bucket_seconds"]),  # pinned geometry
         est_rows=n,
         est_raw_bytes=raw,
         zlib_level=zlib_level,
@@ -1215,7 +1221,6 @@ def append_chunk(
         codec_overrides=codec_overrides,
         shuffle=shuffle,
     )
-    chunk_man["key"]["ts_origin"] = key["ts_origin"]
     expected = [
         (c.get("physical", c["name"]), c["spark_type"]) for c in man["columns"]
     ]
@@ -1236,8 +1241,10 @@ def append_chunk(
         spark, path, k, blocks, None,
         **({"compacted_from": replace} if replace else {"appended": True}),
         **({"staged": True} if staged else {}),
+        **({"batch": _batch} if _batch else {}),
     )
-    chunks = sorted(visible + [k])
+    # a set: a replayed stream batch's chunk may already be visible
+    chunks = sorted(set(visible) - set(replace) | {k})
     totals, hist = _chunk_totals(spark, path, chunks)
     chunk_man["lineage_chunks"] = k + 1
     final = mf.finalize_manifest(chunk_man, codec_histogram=hist, **totals)

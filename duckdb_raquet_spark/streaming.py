@@ -2,26 +2,21 @@
 
 The reference is strictly batch; its incremental machinery is the
 two-phase pipelined producer with the manifest row emitted last
-(/root/reference/src/raster/read_raster.cpp:1486-1590). The streaming
-twin keeps both invariants per micro-batch:
-
-  * each micro-batch becomes its own ``chunk=<k>`` subdirectory under
-    an id claimed exactly like ``encode.append_chunk``'s, so streaming
-    onto an existing table never overwrites its chunks; the claim
-    records ``(checkpoint_dir, batch_id)``, so Spark's at-least-once
-    foreachBatch replay after a failure rewrites the same directory and
-    can never duplicate rows;
-  * the batch commits (snapshot CAS, then manifest row + sidecar)
-    strictly AFTER its data write, so readers always see a manifest
-    that covers only fully written blocks;
-  * a lineage record per batch (blocks/rows/bytes/codecs/wall) makes
-    progress observable and resumable, same shape as batch-mode chunk
-    lineage, and the batch's commit sums its chunk set's records.
+(/root/reference/src/raster/read_raster.cpp:1486-1590). The stream
+keeps that one write protocol because a micro-batch IS an append:
+each batch is one :func:`encode.append_chunk` call, so it claims its
+own ``chunk=<k>``, lands the data, then commits (snapshot CAS, then
+manifest row + sidecar), and carries everything an append carries —
+live deletes, added-column defaults, renamed columns, the table's key
+geometry. The claim records ``(checkpoint_dir, batch_id)``, so Spark's
+at-least-once foreachBatch replay rewrites the same chunk and never
+duplicates rows. An empty batch commits nothing.
 
 Block keys use a FIXED (resolution, ts_origin, bucket_seconds) from the
 caller — a stream cannot scan its own future to size the time cells, so
 the caller pins the key geometry up front (e.g. from the crawl window),
-exactly like the reference pins tiling zoom at bind time.
+exactly like the reference pins tiling zoom at bind time. The pins only
+create a table; onto an existing table they must equal its key.
 """
 
 from __future__ import annotations
@@ -29,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from . import blockkey as bk
 from . import encode as enc
 from . import manifest as mf
 
@@ -52,59 +48,55 @@ def encode_stream(
     """Start the streaming encode; returns the StreamingQuery.
 
     ``stream_df`` is any streaming DataFrame with the webtext schema
-    (file source, Kafka + parse, rate + synth, ...). ``shuffle="none"``
-    pairs naturally with streaming ingest: each micro-batch partition
+    (file source, Kafka + parse, rate + synth, ...). Each micro-batch
+    is one :func:`encode.append_chunk`; an empty batch commits nothing.
+    The geometry arguments (and ``url_col`` / ``ts_col``) only create a
+    table, keyed as ``blockkey.ts_params`` maps them; onto an existing
+    table they must equal its key, or the batch raises ValueError.
+    ``shuffle="none"`` pairs naturally with streaming ingest: each
+    micro-batch partition
     encodes locally (zero raw-byte shuffle in the hot ingest path) and
     a background :func:`duckdb_raquet_spark.scan.compact_to_path` pass
     merges the salted sub-rows into the canonical layout later."""
     if not stream_df.isStreaming:
         raise ValueError("encode_stream needs a streaming DataFrame")
+    # what a fresh table records, so its keys and manifest agree
+    origin, bucket = bk.ts_params(ts_origin, ts_origin, resolution, bucket_seconds)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        n, raw, _ = enc.bind_stats(batch_df)
-        if n == 0:
-            return
-        # the CAS parent: a writer committing during this batch fails
-        # it loudly; a replayed batch re-commits as a no-op
-        parent = mf.current_snapshot(path, spark)
-        enc._refuse_flat(spark, path, parent)
-        # without a checkpoint no restart replays a batch
-        batch = [checkpoint_dir, batch_id] if checkpoint_dir else None
-        k = enc._claim_chunk(spark, path, parent, batch)
-        blocks, man = enc.encode_table(
-            batch_df,
-            url_col=url_col,
-            ts_col=ts_col,
-            resolution=resolution,
-            bucket_seconds=bucket_seconds,
-            ts_range=(ts_origin, ts_origin),  # pinned geometry
-            est_rows=n,
-            est_raw_bytes=raw,
-            zlib_level=zlib_level,
-            effort=effort,
-            codec_overrides=codec_overrides,
-            shuffle=shuffle,
-        )
-        # pin ts_origin explicitly (ts_range above fixes the origin; the
-        # effective bucket stays the caller's bucket_seconds)
-        man["key"]["ts_origin"] = ts_origin
-        # the record keeps the claim's batch tag for replays after
-        # completion
-        enc._write_chunk(
-            spark, path, k, blocks, None, streaming=True,
-            **({"batch": batch} if batch else {}),
-        )
-        # visibility from the snapshot log (a replayed batch after a
-        # checkpoint restart overwrites its own chunk dir and must not
-        # double-count it; a rollback's orphans must stay out)
-        visible = sorted(set(enc._visible_chunks(spark, path, parent)) | {k})
-        totals, hist = enc._chunk_totals(spark, path, visible)
-        final = mf.finalize_manifest(man, codec_histogram=hist, **totals)
-        final["lineage_chunks"] = k + 1
-        enc._commit(
-            spark, path, final, chunks=visible, op="append", parent=parent,
-            extra={"streaming_batch": batch_id},
+        # one read: the geometry check's key is the append's CAS parent
+        man, snap = mf.committed_manifest(path, spark)
+        enc._refuse_flat(spark, path, snap)
+        if man is None:
+            # geometry only: append_chunk's encode fills in the rest
+            cols = enc.columns_of(batch_df)
+            for c in cols:
+                if c["name"] in (codec_overrides or {}):
+                    c["codec"] = codec_overrides[c["name"]]
+            man = mf.build_manifest(
+                columns=cols, resolution=resolution, bucket_seconds=bucket,
+                ts_origin=origin, url_col=url_col, ts_col=ts_col, n_salt=1,
+            )
+        else:
+            # the caller's pins, or what a fresh stream made of them;
+            # without a time column they key nothing
+            key = man["key"]
+            t = (key["ts_origin"], key["bucket_seconds"])
+            if key["resolution"] != resolution or man["ts_col"] and t not in (
+                (ts_origin, bucket_seconds), (origin, bucket)
+            ):
+                raise ValueError(
+                    f"stream geometry {(resolution, ts_origin, bucket_seconds)} "
+                    f"does not match the table's key {key}"
+                )
+        enc.append_chunk(
+            spark, batch_df, path,
+            zlib_level=zlib_level, effort=effort,
+            codec_overrides=codec_overrides, shuffle=shuffle,
+            _base=(man, snap),
+            # without a checkpoint no restart replays a batch
+            _batch=[checkpoint_dir, batch_id] if checkpoint_dir else None,
         )
 
     writer = stream_df.writeStream.foreachBatch(process_batch).outputMode("append")

@@ -139,10 +139,14 @@ def test_stream_onto_existing_table_keeps_its_chunks(spark, tmp_path):
     for f in (str(last), f".{last}.crc"):
         if os.path.exists(os.path.join(commits, f)):
             os.remove(os.path.join(commits, f))
+    n_snaps = len(mf.read_snapshots(path, spark))
     _stream_into(spark, path, src, ckpt)
     assert os.stat(streamed).st_mtime_ns > first_run  # the batch re-ran
     assert sorted(mf.read_chunk_lineage(path, spark)) == [0, 1, 2]
     assert _live(spark, path) == want
+    # the replay re-commits as a no-op: its chunk is counted once
+    assert len(mf.read_snapshots(path, spark)) == n_snaps
+    assert scan.read_manifest(spark, path)["num_rows"] == 110
 
 
 def _legacy_flat(path, *, keep_log):
