@@ -17,7 +17,9 @@ underneath the DataFrame API.
 
 Reader
 ------
-* Schema comes from the manifest sidecar (block=0 row fallback).
+* Schema comes from the committed manifest (``mf.committed_manifest``:
+  the snapshot log's, then the sidecar's); a ``scheme://`` path reads
+  the sidecar, and the block=0 manifest row is the last fallback.
 * Listing, pruning, decode and equality deletes are the in-process
   block reader's (``reader.py``), the same code that serves the
   driver-local ``scan.point_lookup`` / ``range_scan_ts``. One
@@ -47,12 +49,14 @@ Writer
 ------
 * Each task encodes ITS OWN partition's rows — the map-only encode shape
   (salt = partition id, zero raw-byte shuffle; see
-  ``encode.encode_table(shuffle="none")``) — into one parquet file under
-  ``data/``. Like ``streaming.encode_stream``, the writer cannot scan
-  its own future, so the key geometry is pinned up front via options:
-  ``resolution`` (default 6), ``ts_origin`` (default 0),
-  ``bucket_seconds`` (default 86400), plus ``url_col``/``ts_col``/
-  ``effort``/``zlib_level``/``target_rows_per_block``-free knobs.
+  ``encode.encode_table(shuffle="none")``), key-sorted through the
+  shared partition encoder (``encode.make_group_encode_fn``) — into one
+  parquet file under ``data/chunk=0``. Like ``streaming.encode_stream``,
+  the writer cannot scan its own future, so the key geometry is pinned
+  up front via options: ``resolution`` (default 6), ``ts_origin``
+  (default 0), ``bucket_seconds`` (default 86400), plus ``url_col``/
+  ``ts_col``/``effort``/``zlib_level``/``target_rows_per_block``-free
+  knobs.
 * The driver-side ``commit()`` aggregates per-task stats from the
   commit messages and writes the manifest row + sidecar LAST — the
   reference's metadata-row-after-all-data invariant expressed through
@@ -347,59 +351,47 @@ class RaquetWriter(DataSourceArrowWriter):
         # not interleave writes to the final path — stage to an
         # attempt-unique temp name and atomically rename at task end
         tmp_file = f"{out_file}.tmp-{attempt}"
-        man_schema = enc.blocks_schema(self.columns)
-        arrow_schema = to_arrow_schema(man_schema)
-        if not batches:
-            empty = pa.Table.from_arrays(
-                [pa.array([], type=f.type) for f in arrow_schema],
-                schema=arrow_schema,
-            )
-            pq.write_table(empty, tmp_file)
-            os.replace(tmp_file, out_file)
-            return _TaskStats(enc._sum_figures([]))
-        tbl = pa.Table.from_batches(batches).combine_chunks()
-        # block keys for the partition's rows (numpy kernel — the same
-        # math as the Column expression in encode_table)
-        urls = tbl.column(self.url_col).cast(pa.large_string()).to_pylist()
-        from .xxh64 import to_unsigned64, xxh64_str
+        arrow_schema = to_arrow_schema(enc.blocks_schema(self.columns))
+        out = []
+        if batches:
+            tbl = pa.Table.from_batches(batches).combine_chunks()
+            # block keys for the partition's rows (numpy kernel — the
+            # same math as the Column expression in encode_table)
+            urls = tbl.column(self.url_col).cast(pa.large_string()).to_pylist()
+            from .xxh64 import to_unsigned64, xxh64_str
 
-        hx = np.array(
-            [to_unsigned64(xxh64_str(u)) if u is not None else 0 for u in urls],
-            dtype=np.uint64,
-        )
-        if self.ts_col is not None:
-            ts = (
-                tbl.column(self.ts_col)
-                .cast(pa.timestamp("us"))
-                .cast(pa.int64())
-                .to_numpy(zero_copy_only=False)
+            hx = np.array(
+                [to_unsigned64(xxh64_str(u)) if u is not None else 0 for u in urls],
+                dtype=np.uint64,
             )
-            ts_epoch = ts // 1_000_000
-        else:
-            ts_epoch = np.zeros(len(urls), dtype=np.int64)
-        keys = bk.keys_from_arrays(
-            hx, ts_epoch, self.resolution, self.bucket_seconds, self.ts_origin
-        ).astype(np.int64)
-        order = np.argsort(keys, kind="stable")
-        tbl = tbl.take(pa.array(order))
-        keys = keys[order]
-        bounds = np.flatnonzero(np.r_[True, keys[1:] != keys[:-1], True])
-        col_specs = [(c["name"], c["kind"], None) for c in self.columns]
-        sort_cols = enc.sort_cols_for(self.columns, self.url_col, self.ts_col)
-        rows = []
-        for s, e in zip(bounds[:-1], bounds[1:]):
-            rows.append(
-                enc.encode_block_arrow(
-                    tbl.slice(int(s), int(e - s)), col_specs, sort_cols,
-                    self.zlib_level, int(keys[s]), pid, self.ts_col, self.effort,
+            if self.ts_col is not None:
+                ts = (
+                    tbl.column(self.ts_col)
+                    .cast(pa.timestamp("us"))
+                    .cast(pa.int64())
+                    .to_numpy(zero_copy_only=False)
                 )
+                ts_epoch = ts // 1_000_000
+            else:
+                ts_epoch = np.zeros(len(urls), dtype=np.int64)
+            keys = bk.keys_from_arrays(
+                hx, ts_epoch, self.resolution, self.bucket_seconds, self.ts_origin
+            ).astype(np.int64)
+            # key-sorted, salt = partition id: every (block, salt) run
+            # is one encode group of the shared partition encoder
+            order = np.argsort(keys, kind="stable")
+            tbl = (
+                tbl.take(pa.array(order))
+                .append_column(enc.BLOCK, pa.array(keys[order]))
+                .append_column(enc.SALT, pa.array(np.full(len(keys), pid, np.int32)))
             )
-        arrays = [
-            pa.array([r.get(f.name) for r in rows], type=f.type)
-            for f in arrow_schema
-        ]
-        out = pa.Table.from_arrays(arrays, schema=arrow_schema)
-        pq.write_table(out, tmp_file)
+            encode = enc.make_group_encode_fn(
+                self.columns, self.url_col, self.ts_col, self.zlib_level,
+                self.effort,
+            )
+            out = list(encode(tbl.to_batches()))
+        blocks = pa.Table.from_batches(out, schema=arrow_schema).combine_chunks()
+        pq.write_table(blocks, tmp_file)
         os.replace(tmp_file, out_file)
         return _TaskStats(
             enc._sum_figures(
@@ -412,7 +404,7 @@ class RaquetWriter(DataSourceArrowWriter):
                         c: {codec: 1} for c, codec in json.loads(r["codecs"]).items()
                     },
                 }
-                for r in rows
+                for r in blocks.select(["n_rows", "stats", "codecs"]).to_pylist()
             )
         )
 

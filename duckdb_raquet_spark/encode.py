@@ -986,21 +986,15 @@ def _write_chunk(
     return rec
 
 
-def write_blocks(
-    blocks: DataFrame, path: str, man: dict, *, sorted: bool = True
-) -> dict:
-    """Write a fresh one-chunk table: the blocks into ``data/chunk=0``,
-    its lineage record, then its one commit — the reference's
-    metadata-row-after-all-data invariant, distributed. A reused path
-    must be cleared first (``scan.compact_to_path`` and
-    ``scan.purge_deletes`` do).
-
-    ``sorted=True`` (default) writes globally block-ordered files;
-    ``sorted=False`` is the memory-hardened alternative for encodes
-    whose blocks exceed cluster memory (see :func:`_write_data`)."""
+def write_blocks(blocks: DataFrame, path: str, man: dict) -> dict:
+    """Write a fresh one-chunk table: the blocks into ``data/chunk=0``
+    as globally block-ordered files, its lineage record, then its one
+    commit — the reference's metadata-row-after-all-data invariant,
+    distributed. A reused path must be cleared first
+    (``scan.compact_to_path`` and ``scan.purge_deletes`` do)."""
     spark = blocks.sparkSession
     parent = mf.current_snapshot(path, spark)
-    n_files = max(2, spark.sparkContext.defaultParallelism) if sorted else None
+    n_files = max(2, spark.sparkContext.defaultParallelism)
     _write_chunk(spark, path, 0, blocks, n_files, split=CHUNK_SPLIT)
     totals, hist = _chunk_totals(spark, path, [0])
     final = mf.finalize_manifest(man, codec_histogram=hist, **totals)
@@ -1766,9 +1760,8 @@ def evolve_widen_column(
     promotion set: int->bigint and float->double families). No data
     file is rewritten — widening a 100 TB table costs two JSON writes;
     old payloads decode straight to the widened type (the column kind
-    is unchanged, only the declared logical type moves) and any later
-    ``purge_deletes``/``transform_blocks`` compaction backfills the
-    physical payloads as a side effect of its rewrite."""
+    is unchanged, only the declared logical type moves), so no rewrite
+    is ever needed."""
     man, cur = _writable_base(spark, path)
     spec = next((c for c in man["columns"] if c["name"] == name), None)
     if spec is None:
@@ -2089,6 +2082,7 @@ def compact_delete_files(spark: SparkSession, path: str) -> dict:
     import uuid
 
     from . import fsio
+    from . import scan as _scan
 
     man, cur = _writable_base(spark, path)
     entries = list(man.get("delete_files") or [])
@@ -2110,30 +2104,10 @@ def compact_delete_files(spark: SparkSession, path: str) -> dict:
             new_entries.append(es[0])
             continue
         knames = [f"_k{i}" for i in range(len(cols))]
-        v2_dirs = [
-            os.path.join(path, e["dir"]) for e in es if e.get("v", 1) >= 2
-        ]
-        dd = None
-        if v2_dirs:
-            # widening-robust grouped read (scan._read_v2_delete_dirs):
-            # post-widen int64 key files can sit next to pre-widen
-            # int32 ones in the same key set
-            from . import scan as _scan
-
-            dd = _scan._read_v2_delete_dirs(spark, v2_dirs).select(
-                *knames, "_dseq"
-            )
-        for e in es:
-            if e.get("v", 1) >= 2:
-                continue
-            d0 = spark.read.parquet(os.path.join(path, e["dir"]))
-            # v1 files: one value column (any internal name — it may
-            # predate a rename), constant per-file sequence
-            d = d0.select(
-                F.col(d0.columns[0]).alias("_k0"),
-                F.lit(int(e["seq"])).cast("long").alias("_dseq"),
-            )
-            dd = d if dd is None else dd.unionByName(d)
+        # the read path's delete frame (v1/v2 union, widening-robust
+        # grouped v2 scan), its _dv{i} value columns renamed back
+        [(_, dd)] = _scan._delete_sides(spark, path, es)
+        dd = dd.toDF(*knames, "_dseq")
         merged = dd.groupBy(*knames).agg(F.max("_dseq").alias("_dseq"))
         rel = f"merged-{snap_id:05d}-{uuid.uuid4().hex[:10]}"
         dest = os.path.join(path, DELETES_DIR, rel)

@@ -20,10 +20,13 @@ steps:
    sequence rule: a delete with sequence ``seq`` removes matching rows
    of chunks ``<= seq``. This is the one in-process delete rule; Spark
    plans apply the same rule as a broadcast anti-join
-   (``scan._apply_delete_entries``).
+   (``scan._apply_delete_entries``). ``scan.compact_to_path`` and
+   ``scan.purge_deletes`` rewrite a table by this rule too.
 
-Nothing here needs a session: datasource partitions run it in Python
-workers, and only local (no ``scheme://``) paths are read.
+Nothing here needs a session on a local table: datasource partitions
+run it in Python workers. Of a ``scheme://`` table only the delete
+sets are read here (:func:`load_deletes`, driver-side, through
+``fsio``).
 """
 
 from __future__ import annotations
@@ -257,13 +260,33 @@ def load_deletes(path: str, entries: list[dict]) -> list[tuple[tuple[str, ...], 
     keys)``, ``keys`` a table with one column per key column. A v2 file
     carries a sequence per row, so it can give several sets; a v1 file
     gives one, its single value column read by position (its name may
-    predate a column rename)."""
+    predate a column rename).
+
+    The sets are loaded whole into this process: delete sets are
+    broadcast-sized by contract, the bound the Spark broadcast
+    anti-join (``scan._apply_delete_entries``) relies on too. A
+    ``scheme://`` table's delete dirs are read through ``fsio`` with
+    the process's session; a local one's directly, with no session."""
     import pyarrow.dataset as pa_ds
+
+    from . import fsio
+
+    def read(d: str) -> pa.Table:
+        if not fsio.is_remote(d):
+            return pa_ds.dataset(d, format="parquet").to_table()
+        from pyspark.sql import SparkSession
+
+        spark = SparkSession.active()
+        return pa.concat_tables(
+            pq.read_table(pa.BufferReader(fsio.read_bytes(spark, d, f)))
+            for f in fsio.list_files(spark, d)
+            if f.endswith(".parquet")
+        )
 
     out = []
     for e in entries:
         kc = tuple(mf.delete_entry_cols(e))
-        tbl = pa_ds.dataset(os.path.join(path, e["dir"]), format="parquet").to_table()
+        tbl = read(os.path.join(path, e["dir"]))
         if e.get("v", 1) >= 2:
             keys = tbl.select([f"_k{i}" for i in range(len(kc))]).rename_columns(list(kc))
             seqs = tbl["_dseq"]

@@ -877,103 +877,20 @@ def purge_deletes(
 ) -> dict:
     """Physically apply a table's equality-delete files into a NEW
     committed table (merge-on-read -> copy-on-write compaction step):
-    per-block decode -> drop matching rows -> re-encode via
-    :func:`transform_blocks`. A delete file applies to chunk ``c`` iff
-    ``c <= seq`` — monotone in ``c`` — so chunks group into intervals
-    by which files apply; chunks no file touches pass through with
-    payloads unread. The output table carries no delete files (and
-    fresh chunk ids), so its reads skip the anti-join entirely."""
-    from functools import reduce
-
-    from . import encode as enc
-
+    the :func:`compact_to_path` rewrite with the live deletes applied
+    by the in-process reader's rule (``reader._live_deletes`` /
+    ``_drop_deleted``), so the output is compacted too: one row per
+    block key under the row cap. Blocks no live delete touches and
+    that are already one row pass through with payloads unread. The
+    output table carries no delete files (and fresh chunk ids), so its
+    reads skip the anti-join entirely."""
     man = read_manifest(spark, src)
-    entries = man.get("delete_files") or []
-    if not entries:
+    if not man.get("delete_files"):
         raise ValueError(
             f"no delete files at {src}; use compact_to_path for plain "
             "compaction"
         )
-    blocks = read_blocks(spark, src)
-    # delete sets are broadcast-sized by contract (delete_rows doc).
-    # v2 files carry a PER-ROW sequence (compact_delete_files merges
-    # commits with different horizons into one file), so one file can
-    # yield several (key-set, seq, values) groups — a value deleted at
-    # seq 2 must NOT purge a matching row re-inserted in chunk 3 just
-    # because a different value in the same file has seq 5.
-    sets: list[tuple[tuple[str, ...], int, set]] = []
-    for e in entries:
-        cols = tuple(mf.delete_entry_cols(e))
-        drows = spark.read.parquet(os.path.join(src, e["dir"])).collect()
-        if e.get("v", 1) >= 2:
-            k = len(cols)
-            by_seq: dict[int, set] = {}
-            for r in drows:
-                key = r[0] if k == 1 else tuple(r[i] for i in range(k))
-                by_seq.setdefault(int(r["_dseq"]), set()).add(key)
-            for s, vals in sorted(by_seq.items()):
-                sets.append((cols, s, vals))
-        else:
-            sets.append((cols, int(e["seq"]), {r[0] for r in drows}))
-    chunks = sorted(
-        int(r["chunk"]) for r in blocks.select("chunk").distinct().collect()
-    )
-    # clear the reused destination only after every src-side read above
-    # succeeded — failing earlier must leave dst's previous occupant
-    # intact, not half-stripped of its metadata
-    _clear_reused_dest(spark, src, dst)
-    groups: dict[tuple, list[int]] = {}
-    for c in chunks:
-        key = tuple(i for i, (_, s, _) in enumerate(sets) if s >= c)
-        groups.setdefault(key, []).append(c)
-    out_names = enc.blocks_schema(
-        man["columns"], man.get("column_groups")
-    ).fieldNames()
-    parts: list[DataFrame] = []
-    for key, cs in sorted(groups.items()):
-        sub = blocks.where(F.col("chunk").isin(cs))
-        if not key:
-            parts.append(sub.select(*out_names))  # payloads untouched
-            continue
-        by_key: dict[tuple, set] = {}
-        for i in key:
-            kc, _, vals = sets[i]
-            by_key.setdefault(kc, set()).update(vals)
-        # materialize each key set's probe values ONCE per chunk group
-        # (they ship in the closure, converted per executor at
-        # deserialization) — not rebuilt on every per-block call
-        preds = [
-            (list(kc), sorted(vals) if len(kc) == 1 else set(vals))
-            for kc, vals in sorted(by_key.items())
-        ]
-
-        def row_filter(frame, preds=preds):
-            keep = np.ones(len(frame), dtype=bool)
-            for kc, vals in preds:
-                if len(kc) == 1:
-                    keep &= ~frame[kc[0]].isin(vals).to_numpy(dtype=bool)
-                else:  # composite: tuple-membership via MultiIndex
-                    mi = pd.MultiIndex.from_frame(frame[kc])
-                    keep &= ~np.asarray(mi.isin(vals))
-            return keep
-
-        parts.append(
-            transform_blocks(
-                sub, man, row_filter, zlib_level,
-                filter_cols=sorted({c for kc, _ in preds for c in kc}),
-            )
-        )
-    merged = reduce(DataFrame.unionByName, parts)
-    base = {k: v for k, v in man.items() if k not in (
-        "num_blocks", "num_rows", "raw_bytes", "enc_bytes",
-        "codec_histogram", "created_unix", "delete_files",
-    )}
-    base.update({
-        "num_blocks": None, "num_rows": None, "raw_bytes": None,
-        "enc_bytes": None, "codec_histogram": {}, "created_unix": None,
-        "purged_from": src, "shuffle": "hash",
-    })
-    return enc.write_blocks(merged, dst, base)
+    return _rewrite_to_path(spark, src, dst, man, zlib_level, purged_from=src)
 
 
 def read_changes(
@@ -2270,6 +2187,8 @@ def compact_blocks(
     man: dict,
     zlib_level: int = 6,
     max_rows_per_block: int = 262144,
+    *,
+    _deletes=(),
 ) -> DataFrame:
     """Merge every block key's rows into canonical rows — the Iceberg
     ``rewrite_data_files`` / OPTIMIZE analog (the reference's answer is
@@ -2287,6 +2206,14 @@ def compact_blocks(
     payloads untouched (no decode — the stats-passthrough discipline of
     the mask path). Merges larger than ``max_rows_per_block`` split into
     contiguous salted sub-rows of the block-local sort order.
+
+    ``_deletes`` (``reader.load_deletes`` sets, shipped in the closure)
+    are dropped from each decoded block row by the in-process reader's
+    rule: the sets live for the row's chunk (``reader._live_deletes``),
+    then an Arrow semi-join (``reader._drop_deleted``). A row any set
+    applies to is decoded even when it is alone in its block, and a
+    block left with no rows emits none. Legacy flat tables (no
+    ``chunk`` column) carry no deletes.
     """
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -2307,16 +2234,19 @@ def compact_blocks(
     def fn(key: tuple, tbl: "pa.Table") -> "pa.Table":
         block = key[0]
         block = int(block.as_py() if hasattr(block, "as_py") else block)
+        chunks = tbl["chunk"].to_pylist() if _deletes else [None] * tbl.num_rows
+        live = [reader._live_deletes(_deletes, c) for c in chunks]
         total = int(pc.sum(tbl["n_rows"]).as_py() or 0)
-        if tbl.num_rows == 1 and total <= max_rows_per_block:
+        if tbl.num_rows == 1 and total <= max_rows_per_block and not live[0]:
             return tbl.select(out_names)  # passthrough: no decode
-        per_col: dict[str, list] = {name: [] for name, _, _ in specs}
-        for _, _, dec in block_rows(tbl):
-            for name in per_col:
-                per_col[name].append(dec(name))
-        merged = pa.table(
-            {name: pa.concat_arrays(arrs) for name, arrs in per_col.items()}
-        )
+        parts = []
+        for i, _, dec in block_rows(tbl):
+            part = pa.table({name: dec(name) for name, _, _ in specs})
+            parts.append(reader._drop_deleted(part, live[i]) if live[i] else part)
+        merged = pa.concat_tables(parts).combine_chunks()
+        total = merged.num_rows
+        if not total:
+            return arrow_schema.empty_table()
         # one deterministic sort up front; contiguous slices become the
         # salted sub-rows (encode_block_arrow's own sort is then a
         # stable no-op per slice)
@@ -2326,14 +2256,13 @@ def compact_blocks(
             null_placement="at_start",
         )
         merged = merged.take(idx)
-        n_out = math.ceil(total / max_rows_per_block) if total else 1
-        per = math.ceil(total / n_out) if total else 0
+        n_out = math.ceil(total / max_rows_per_block)
+        per = math.ceil(total / n_out)
         rows = []
         for salt in range(n_out):
             part = merged.slice(salt * per, per)
-            if part.num_rows == 0 and total:
-                continue
-            rows.append(enc(part, block, salt))
+            if part.num_rows:
+                rows.append(enc(part, block, salt))
         return pa.Table.from_batches([_rows_to_batch(rows, arrow_schema)])
 
     return blocks.groupBy(BLOCK).applyInArrow(fn, schema=schema)
@@ -2346,31 +2275,49 @@ def compact_to_path(
     """Compact a raquet table into a new committed one-chunk table
     (sorted write, manifest row last — same write protocol as the
     encode job). A legacy flat ``src`` comes out writable: this is its
-    upgrade path."""
-    from . import encode as enc
-
+    upgrade path. A table with delete files is refused: compaction
+    collapses chunk ids, so :func:`purge_deletes` (the same rewrite,
+    deletes applied) is the way to compact it."""
     man = read_manifest(spark, src)
     if man.get("delete_files"):
-        # compaction collapses chunk ids, which would re-expose deleted
-        # rows to the sequence rule (old keys land in chunk 0 <= seq)
         raise ValueError(
             f"{src} has equality-delete files; use purge_deletes to "
             "compact with deletes applied"
         )
+    return _rewrite_to_path(
+        spark, src, dst, man, zlib_level, max_rows_per_block,
+        compacted_from=src,
+    )
+
+
+def _rewrite_to_path(
+    spark: SparkSession, src: str, dst: str, man: dict, zlib_level: int,
+    max_rows_per_block: int = 262144, **lineage,
+) -> dict:
+    """THE whole-table rewrite into a new path, behind
+    :func:`compact_to_path` and :func:`purge_deletes`: the current
+    snapshot's blocks through :func:`compact_blocks`, the manifest's
+    live deletes (``reader.load_deletes``, loaded once on the driver)
+    applied, written as a fresh one-chunk table with no delete files.
+    ``lineage`` names the source in the new manifest."""
+    from . import encode as enc
+
+    deletes = reader.load_deletes(src, man.get("delete_files") or [])
     blocks = read_blocks(spark, src)
-    compacted = compact_blocks(blocks, man, zlib_level, max_rows_per_block)
-    base = {k: v for k, v in man.items() if k not in (
-        "num_blocks", "num_rows", "raw_bytes", "enc_bytes",
-        "codec_histogram", "created_unix",
-    )}
+    out = compact_blocks(
+        blocks, man, zlib_level, max_rows_per_block, _deletes=deletes
+    )
+    base = {k: v for k, v in man.items() if k != "delete_files"}
     base.update({
         "num_blocks": None, "num_rows": None, "raw_bytes": None,
         "enc_bytes": None, "codec_histogram": {}, "created_unix": None,
-        "compacted_from": src, "shuffle": "hash",
+        "shuffle": "hash", **lineage,
     })
-    # clear the reused destination only right before the overwrite
+    # clear the reused destination only after every src-side read
+    # succeeded and right before the overwrite — failing earlier must
+    # leave dst's previous occupant intact
     _clear_reused_dest(spark, src, dst)
-    return enc.write_blocks(compacted, dst, base)
+    return enc.write_blocks(out, dst, base)
 
 
 # ------------------------------------------------------------- overviews ----
