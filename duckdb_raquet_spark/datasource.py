@@ -15,11 +15,18 @@ its LOGICAL schema (url, warc_ts, html, text, lang, ...), decode
 happens lazily per partition, and the engine's block-key pruning runs
 underneath the DataFrame API.
 
+Paths
+-----
+The source reads and writes with local I/O: a plain path or a
+``file://`` URI (resolved to its path). Any other scheme raises a
+``ValueError`` that points to ``scan.read_rows`` (and
+``encode.encode_to_path`` for writes), which run as Spark plans.
+
 Reader
 ------
 * Schema comes from the committed manifest (``mf.committed_manifest``:
-  the snapshot log's, then the sidecar's); a ``scheme://`` path reads
-  the sidecar, and the block=0 manifest row is the last fallback.
+  the snapshot log's, then the sidecar's); the block=0 manifest row is
+  the last fallback.
 * Listing, pruning, decode and equality deletes are the in-process
   block reader's (``reader.py``), the same code that serves the
   driver-local ``scan.point_lookup`` / ``range_scan_ts``. One
@@ -49,9 +56,10 @@ Writer
 ------
 * Each task encodes ITS OWN partition's rows — the map-only encode shape
   (salt = partition id, zero raw-byte shuffle; see
-  ``encode.encode_table(shuffle="none")``), key-sorted through the
-  shared partition encoder (``encode.make_group_encode_fn``) — into one
-  parquet file under ``data/chunk=0``. Like ``streaming.encode_stream``,
+  ``encode.encode_table(shuffle="none")``) — with the in-process
+  encoder the driver-side append uses (``encode.encode_rows``: block
+  keys, key sort, the shared partition encoder) into one parquet file
+  under ``data/chunk=0``. Like ``streaming.encode_stream``,
   the writer cannot scan its own future, so the key geometry is pinned
   up front via options: ``resolution`` (default 6), ``ts_origin``
   (default 0), ``bucket_seconds`` (default 86400), plus ``url_col``/
@@ -102,17 +110,28 @@ class _TaskStats(WriterCommitMessage):
     figures: dict  # one task's blocks, as a chunk lineage record sums them
 
 
-def _load_manifest(path: str) -> dict:
-    from . import fsio
+def _table_path(options: dict, usage: str) -> str:
+    """The local path of the table ``options["path"]`` names: a plain
+    path, or a ``file://`` URI resolved to its path. The datasource reads
+    and writes with local I/O only, so any other scheme raises."""
+    from urllib.parse import unquote, urlparse
 
-    if fsio.is_remote(path):
-        # no session is available here and the snapshot-log listing
-        # needs the JVM gateway for remote schemes — fall back to the
-        # sidecar cache (rewritten on every commit) rather than
-        # dereferencing a None session inside committed_manifest
-        man = mf.read_sidecar(path, None)
-    else:
-        man, _ = mf.committed_manifest(path, None)
+    path = options.get("path")
+    if not path:
+        raise ValueError(f"raquet datasource needs a path: {usage}")
+    if "://" not in path:
+        return path
+    uri = urlparse(path)
+    if uri.scheme != "file":
+        raise ValueError(
+            f"the raquet datasource reads local tables only, not {path!r}; "
+            "read it with scan.read_rows (write with encode.encode_to_path)"
+        )
+    return unquote(uri.path)
+
+
+def _load_manifest(path: str) -> dict:
+    man, _ = mf.committed_manifest(path, None)
     if man is not None:
         return man
     # fall back to the block=0 manifest row via pyarrow (no Spark here:
@@ -153,9 +172,7 @@ class RaquetReader(DataSourceReader):
     Spark schedules the partitions."""
 
     def __init__(self, options: dict, schema: StructType) -> None:
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("raquet reader needs a path: .load('/table')")
+        self.path = _table_path(options, ".load('/table')")
         self.man = _load_manifest(self.path)
         cols_opt = options.get("columns")
         self.cols = [c.strip() for c in cols_opt.split(",")] if cols_opt else None
@@ -292,9 +309,7 @@ def _epoch_us(v) -> int | None:
 
 class RaquetWriter(DataSourceArrowWriter):
     def __init__(self, options: dict, schema: StructType, overwrite: bool) -> None:
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("raquet writer needs a path: .save('/table')")
+        self.path = _table_path(options, ".save('/table')")
         self.url_col = options.get("url_col", "url")
         self.ts_col = options.get("ts_col", "warc_ts")
         self.resolution = int(options.get("resolution", 6))
@@ -302,7 +317,6 @@ class RaquetWriter(DataSourceArrowWriter):
         self.bucket_seconds = int(options.get("bucket_seconds", 86400))
         self.effort = options.get("effort", "max")
         self.zlib_level = int(options.get("zlib_level", 6))
-        self.schema = schema
         if self.ts_col not in schema.fieldNames():
             self.ts_col = None
         if self.url_col not in schema.fieldNames():
@@ -331,10 +345,19 @@ class RaquetWriter(DataSourceArrowWriter):
         # column specs from the WRITER schema (the df being saved)
         from .encode import columns_of_schema
 
-        self.columns = columns_of_schema(schema)
+        self.man = mf.build_manifest(
+            columns=columns_of_schema(schema),
+            resolution=self.resolution,
+            bucket_seconds=self.bucket_seconds,
+            ts_origin=self.ts_origin,
+            url_col=self.url_col,
+            ts_col=self.ts_col,
+            n_salt=1,
+            extra={"effort": self.effort, "shuffle": "none",
+                   "writer": "datasource"},
+        )
 
     def write(self, iterator) -> _TaskStats:
-        import numpy as np
         import pyarrow as pa
         import pyarrow.parquet as pq
         from pyspark import TaskContext
@@ -345,99 +368,42 @@ class RaquetWriter(DataSourceArrowWriter):
         ctx = TaskContext.get()
         pid = int(ctx.partitionId()) if ctx is not None else 0
         attempt = int(ctx.taskAttemptId()) if ctx is not None else 0
-        batches = [b for b in iterator]
         out_file = os.path.join(self.chunk_dir, f"part-{pid:05d}.parquet")
         # speculative execution: two attempts of the same partition must
         # not interleave writes to the final path — stage to an
         # attempt-unique temp name and atomically rename at task end
         tmp_file = f"{out_file}.tmp-{attempt}"
-        arrow_schema = to_arrow_schema(enc.blocks_schema(self.columns))
-        out = []
+        # the in-process encoder, salt = partition id: every block this
+        # partition touches is one encode group
+        batches = list(iterator)
         if batches:
-            tbl = pa.Table.from_batches(batches).combine_chunks()
-            # block keys for the partition's rows (numpy kernel — the
-            # same math as the Column expression in encode_table)
-            urls = tbl.column(self.url_col).cast(pa.large_string()).to_pylist()
-            from .xxh64 import to_unsigned64, xxh64_str
-
-            hx = np.array(
-                [to_unsigned64(xxh64_str(u)) if u is not None else 0 for u in urls],
-                dtype=np.uint64,
+            blocks = enc.encode_rows(
+                pa.Table.from_batches(batches), self.man, self.zlib_level,
+                salt=pid,
             )
-            if self.ts_col is not None:
-                ts = (
-                    tbl.column(self.ts_col)
-                    .cast(pa.timestamp("us"))
-                    .cast(pa.int64())
-                    .to_numpy(zero_copy_only=False)
-                )
-                ts_epoch = ts // 1_000_000
-            else:
-                ts_epoch = np.zeros(len(urls), dtype=np.int64)
-            keys = bk.keys_from_arrays(
-                hx, ts_epoch, self.resolution, self.bucket_seconds, self.ts_origin
-            ).astype(np.int64)
-            # key-sorted, salt = partition id: every (block, salt) run
-            # is one encode group of the shared partition encoder
-            order = np.argsort(keys, kind="stable")
-            tbl = (
-                tbl.take(pa.array(order))
-                .append_column(enc.BLOCK, pa.array(keys[order]))
-                .append_column(enc.SALT, pa.array(np.full(len(keys), pid, np.int32)))
-            )
-            encode = enc.make_group_encode_fn(
-                self.columns, self.url_col, self.ts_col, self.zlib_level,
-                self.effort,
-            )
-            out = list(encode(tbl.to_batches()))
-        blocks = pa.Table.from_batches(out, schema=arrow_schema).combine_chunks()
+        else:
+            blocks = to_arrow_schema(enc.blocks_schema(self.man["columns"])).empty_table()
         pq.write_table(blocks, tmp_file)
         os.replace(tmp_file, out_file)
-        return _TaskStats(
-            enc._sum_figures(
-                {
-                    "blocks": 1,
-                    "rows": r["n_rows"],
-                    "raw_bytes": r["stats"]["raw_bytes"],
-                    "enc_bytes": r["stats"]["enc_bytes"],
-                    "codec_histogram": {
-                        c: {codec: 1} for c, codec in json.loads(r["codecs"]).items()
-                    },
-                }
-                for r in blocks.select(["n_rows", "stats", "codecs"]).to_pylist()
-            )
-        )
+        return _TaskStats(enc._block_figures(blocks))
 
     def commit(self, messages) -> None:
         # chunk 0's lineage record from the task stats, then the table's
         # one commit LAST (snapshot, then manifest row + sidecar), its
         # totals summed from that record like every commit's — no extra
         # Spark job, and readers never see a manifest covering
-        # uncommitted data. spark=None: fsio takes the plain-local path;
-        # a remote table URI would need a live session, which the
-        # DataSource commit hook doesn't receive — local/posix paths
-        # only for now
+        # uncommitted data. spark=None: fsio takes the plain-local path
+        # (the datasource resolves its path to a local one)
         from . import encode as enc
 
         mf.write_chunk_lineage(
             self.path, 0,
-            {"chunk": 0, **enc._sum_figures(
+            {"chunk": 0, "writer": "spark", **enc._sum_figures(
                 m.figures for m in messages if m is not None
             )},
         )
         totals, hist = enc._chunk_totals(None, self.path, [0])
-        man = mf.build_manifest(
-            columns=self.columns,
-            resolution=self.resolution,
-            bucket_seconds=self.bucket_seconds,
-            ts_origin=self.ts_origin,
-            url_col=self.url_col,
-            ts_col=self.ts_col,
-            n_salt=1,
-            extra={"effort": self.effort, "shuffle": "none",
-                   "writer": "datasource"},
-        )
-        final = mf.finalize_manifest(man, codec_histogram=hist, **totals)
+        final = mf.finalize_manifest(self.man, codec_histogram=hist, **totals)
         enc._commit(
             None, self.path, final, chunks=[0], op="encode",
             parent=mf.current_snapshot(self.path, None),
@@ -453,7 +419,7 @@ class RaquetDataSource(DataSource):
         return "raquet"
 
     def schema(self):
-        man = _load_manifest(self.options["path"])
+        man = _load_manifest(_table_path(self.options, ".load('/table')"))
         cols_opt = self.options.get("columns")
         cols = [c.strip() for c in cols_opt.split(",")] if cols_opt else None
         return _spark_schema(man, cols)

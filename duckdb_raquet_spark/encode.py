@@ -45,6 +45,7 @@ from . import blockkey as bk
 from . import manifest as mf
 from . import placement
 from . import selector
+from .xxh64 import to_signed64, xxh64, xxh64_str
 
 BLOCK = "block"
 SALT = "salt"
@@ -343,6 +344,105 @@ def _rows_to_batch(rows: list[dict], arrow_schema) -> "pa.RecordBatch":
     return pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)
 
 
+def row_keys(tbl: "pa.Table", man: dict) -> np.ndarray:
+    """Block key of every row of ``tbl`` under ``man``'s key geometry,
+    in-process: the numpy twin of :func:`blockkey.key_col`, equal to it
+    row for row. As in Spark, a NULL url hashes to the hash seed, a NULL
+    timestamp keys as ``ts_origin`` (time cell 0) and epoch seconds
+    truncate toward zero; the timestamp stays int64 throughout (a float
+    round trip would turn a NULL into NaN and wrap into the last cell)."""
+    key = man["key"]
+    origin = key["ts_origin"]
+    hx = np.fromiter(
+        (42 if u is None else xxh64_str(u)
+         for u in tbl.column(man["url_col"]).to_pylist()),
+        dtype=np.uint64, count=tbl.num_rows,
+    )
+    ts_col = man["ts_col"]
+    if ts_col is not None and ts_col in tbl.column_names:
+        import pyarrow.compute as pc
+
+        us = pc.fill_null(
+            tbl.column(ts_col).cast(pa.timestamp("us")).cast(pa.int64()),
+            origin * 1_000_000,
+        ).to_numpy()
+        secs = np.where(us < 0, -(-us // 1_000_000), us // 1_000_000)
+    else:
+        secs = np.zeros(tbl.num_rows, dtype=np.int64)
+    return bk.keys_from_arrays(
+        hx, secs, key["resolution"], key["bucket_seconds"], origin
+    ).astype(np.int64)
+
+
+def _hash_salts(urls: list, n_salt: int) -> np.ndarray:
+    """``pmod(xxhash64(url, 7), n_salt)`` (encode_table's salt column)
+    in-process: Spark chains the int 7 through XXH64 seeded with the
+    url's hash. A driver-branch chunk can need it: an append sizes its
+    salt count from the table's raw bytes per row, so a delta of rows
+    smaller than the table's mean can get ``n_salt > 1`` under the
+    16 MiB cap."""
+    seven = (7).to_bytes(4, "little")
+    return np.array(
+        [to_signed64(xxh64(seven, 42 if u is None else xxh64_str(u))) % n_salt
+         for u in urls],
+        dtype=np.int32,
+    )
+
+
+def encode_rows(
+    tbl: "pa.Table", man: dict, zlib_level: int = 6, salt: int | None = None
+) -> "pa.Table":
+    """THE in-process encode: rows (an Arrow table) -> block rows (an
+    Arrow table in (block, salt) order) under ``man``'s columns, column
+    groups, effort and key geometry (:func:`_encode_spec`), by the
+    partition encoder Spark runs (:func:`make_group_encode_fn`): the
+    same input gives the same payload bytes on both paths. ``salt`` is
+    a map-only writer's constant salt (the datasource's partition id);
+    ``None`` salts as :func:`encode_table`'s hash shuffle does (0 while
+    the manifest's ``n_salt`` is 1)."""
+    keys = row_keys(tbl, man)
+    n_salt = man["key"]["n_salt"]
+    if salt is not None or n_salt == 1:
+        salts = np.full(tbl.num_rows, salt or 0, dtype=np.int32)
+    else:
+        salts = _hash_salts(tbl.column(man["url_col"]).to_pylist(), n_salt)
+    order = np.lexsort((salts, keys))
+    tbl = (
+        tbl.take(pa.array(order))
+        .append_column(BLOCK, pa.array(keys[order]))
+        .append_column(SALT, pa.array(salts[order]))
+    )
+    groups = man.get("column_groups")
+    encode = make_group_encode_fn(
+        man["columns"], man["url_col"], man["ts_col"], zlib_level,
+        man.get("effort", selector.EFFORT_MAX), groups,
+    )
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    return pa.Table.from_batches(
+        list(encode(tbl.to_batches())),
+        schema=to_arrow_schema(blocks_schema(man["columns"], groups)),
+    )
+
+
+def _block_figures(blocks: "pa.Table") -> dict:
+    """The figures (``FIGURES``) of encoded block rows, from their
+    ``n_rows``/``stats``/``codecs`` columns — what
+    :func:`_aggregate_written` recounts from a written chunk."""
+    return _sum_figures(
+        {
+            "blocks": 1,
+            "rows": r["n_rows"],
+            "raw_bytes": r["stats"]["raw_bytes"],
+            "enc_bytes": r["stats"]["enc_bytes"],
+            "codec_histogram": {
+                c: {codec: 1} for c, codec in json.loads(r["codecs"]).items()
+            },
+        }
+        for r in blocks.select(["n_rows", "stats", "codecs"]).to_pylist()
+    )
+
+
 def bind_stats(
     df: DataFrame, *, ts_col: str | None = None, raw: bool = True
 ) -> tuple[int, int | None, tuple[int, int] | None]:
@@ -371,6 +471,106 @@ def bind_stats(
     raw_bytes = int(r[1] or 0) if raw else None
     ts_range = (int(r[-2] or 0), int(r[-1] or 0)) if ts_col is not None else None
     return rows, raw_bytes, ts_range
+
+
+def _encode_spec(
+    columns: list[dict],
+    *,
+    url_col: str,
+    ts_col: str | None,
+    resolution: int | None,
+    bucket_seconds: int = bk.DEFAULT_BUCKET_SECONDS,
+    est_rows: int,
+    est_raw_bytes: int | None,
+    ts_range: tuple[int, int] | None = None,
+    target_rows_per_block: int | None = None,
+    max_rows_per_block: int | None = None,
+    codec_overrides: dict[str, str] | None = None,
+    effort: str = selector.EFFORT_MAX,
+    column_groups: list[list[str]] | None = None,
+    shuffle: str = "hash",
+    _ts_key: tuple[int, int] | None = None,
+) -> tuple[dict, int, int]:
+    """What an encode writes, from the input's columns and size alone:
+    ``(manifest, rows per cell, salt cap in rows)``. The manifest holds
+    the validated column specs (codec overrides applied), the column
+    groups, the key geometry and the ``avg`` salt count; both encoders,
+    :func:`encode_table`'s Spark plan and :func:`encode_rows`, encode
+    under it. No Spark job: the caller supplies ``est_rows`` (and
+    ``est_raw_bytes`` for the byte rule) and, for a time key not pinned
+    by ``_ts_key``, ``ts_range``. See :func:`encode_table`."""
+    columns = [dict(c) for c in columns]
+    names = {c["name"] for c in columns}
+    if url_col not in names:
+        raise ValueError(f"url_col {url_col!r} not in {sorted(names)}")
+    if shuffle not in ("hash", "none"):
+        raise ValueError(f"shuffle must be 'hash' or 'none', got {shuffle!r}")
+    groups: dict[str, list[str]] | None = None
+    if column_groups:
+        groups = {}
+        seen: set[str] = set()
+        for members in column_groups:
+            if len(members) < 2:
+                raise ValueError("a column group needs >= 2 members")
+            for m in members:
+                if m not in names:
+                    raise ValueError(f"group member {m!r} not a column")
+                if m in seen:
+                    raise ValueError(f"column {m!r} in more than one group")
+                if codec_overrides and m in codec_overrides:
+                    raise ValueError(
+                        f"column {m!r} cannot have both a codec override "
+                        "and a group (the group owns its compression)"
+                    )
+                seen.add(m)
+            groups["+".join(members)] = list(members)
+    if codec_overrides:
+        # explicit per-column codec, the reference encoder's `compression`
+        # parameter re-expressed per column (read_raster named param,
+        # /root/reference/src/raster/read_raster.cpp:733-1100); recorded
+        # in the manifest so mask/streaming re-encodes honor it too
+        unknown = set(codec_overrides) - names
+        if unknown:
+            raise ValueError(f"codec_overrides for unknown columns {sorted(unknown)}")
+        for c in columns:
+            if c["name"] in codec_overrides:
+                selector.validate_override(c["kind"], codec_overrides[c["name"]])
+                c["codec"] = codec_overrides[c["name"]]
+    if ts_col is not None and ts_col not in names:
+        ts_col = None
+    if target_rows_per_block is None:
+        # the byte rule, and the one rows-per-cell figure it implies
+        amount, per_cell = est_raw_bytes, bk.TARGET_CELL_BYTES
+        target_rows_per_block = max(1, est_rows * per_cell // max(1, est_raw_bytes))
+    else:
+        amount, per_cell = est_rows, target_rows_per_block
+    if max_rows_per_block is None:
+        max_rows_per_block = 4 * target_rows_per_block
+    res = (
+        resolution
+        if resolution is not None
+        else bk.choose_resolution(amount, per_cell)
+    )
+    if _ts_key is not None:
+        ts_origin, eff_bucket = _ts_key
+    elif ts_col is None:
+        ts_origin, eff_bucket = 0, bucket_seconds
+    else:
+        ts_origin, eff_bucket = bk.ts_params(
+            ts_range[0], ts_range[1], res, bucket_seconds
+        )
+    n_salt = max(1, math.ceil(est_rows / 4**res / max_rows_per_block))
+    man = mf.build_manifest(
+        columns=columns,
+        resolution=res,
+        bucket_seconds=eff_bucket,
+        ts_origin=ts_origin,
+        url_col=url_col,
+        ts_col=ts_col,
+        n_salt=n_salt,
+        extra={"effort": effort, "column_groups": groups, "shuffle": shuffle},
+    )
+    return man, target_rows_per_block, max_rows_per_block
 
 
 def encode_table(
@@ -446,74 +646,40 @@ def encode_table(
     (ts_origin, bucket) is an existing table's time key, used as is.
     """
     columns = columns_of(df)
-    names = {c["name"] for c in columns}
-    if url_col not in names:
-        raise ValueError(f"url_col {url_col!r} not in {sorted(names)}")
-    groups: dict[str, list[str]] | None = None
-    if column_groups:
-        groups = {}
-        seen: set[str] = set()
-        for members in column_groups:
-            if len(members) < 2:
-                raise ValueError("a column group needs >= 2 members")
-            for m in members:
-                if m not in names:
-                    raise ValueError(f"group member {m!r} not a column")
-                if m in seen:
-                    raise ValueError(f"column {m!r} in more than one group")
-                if codec_overrides and m in codec_overrides:
-                    raise ValueError(
-                        f"column {m!r} cannot have both a codec override "
-                        "and a group (the group owns its compression)"
-                    )
-                seen.add(m)
-            groups["+".join(members)] = list(members)
-    if codec_overrides:
-        # explicit per-column codec, the reference encoder's `compression`
-        # parameter re-expressed per column (read_raster named param,
-        # /root/reference/src/raster/read_raster.cpp:733-1100); recorded
-        # in the manifest so mask/streaming re-encodes honor it too
-        unknown = set(codec_overrides) - names
-        if unknown:
-            raise ValueError(f"codec_overrides for unknown columns {sorted(unknown)}")
-        for c in columns:
-            if c["name"] in codec_overrides:
-                selector.validate_override(c["kind"], codec_overrides[c["name"]])
-                c["codec"] = codec_overrides[c["name"]]
-    if ts_col is not None and ts_col not in names:
-        ts_col = None
     if target_rows_per_block is None:
         if est_rows is None or est_raw_bytes is None:
             est_rows, est_raw_bytes, _ = bind_stats(df)
-        # the byte rule, and the one rows-per-cell figure it implies
-        amount, per_cell = est_raw_bytes, bk.TARGET_CELL_BYTES
-        target_rows_per_block = max(1, est_rows * per_cell // max(1, est_raw_bytes))
-    else:
-        if est_rows is None:
-            est_rows = df.count()
-        amount, per_cell = est_rows, target_rows_per_block
-    if max_rows_per_block is None:
-        max_rows_per_block = 4 * target_rows_per_block
-    res = (
-        resolution
-        if resolution is not None
-        else bk.choose_resolution(amount, per_cell)
+    elif est_rows is None:
+        est_rows = df.count()
+    timed = ts_col is not None and ts_col in {c["name"] for c in columns}
+    if _ts_key is None and timed and ts_range is None:
+        r = df.agg(
+            F.min(F.unix_timestamp(ts_col)), F.max(F.unix_timestamp(ts_col))
+        ).first()
+        ts_range = (int(r[0] or 0), int(r[1] or 0))
+    man, target_rows_per_block, max_rows_per_block = _encode_spec(
+        columns,
+        url_col=url_col,
+        ts_col=ts_col,
+        resolution=resolution,
+        bucket_seconds=bucket_seconds,
+        est_rows=est_rows,
+        est_raw_bytes=est_raw_bytes,
+        ts_range=ts_range,
+        target_rows_per_block=target_rows_per_block,
+        max_rows_per_block=max_rows_per_block,
+        codec_overrides=codec_overrides,
+        effort=effort,
+        column_groups=column_groups,
+        shuffle=shuffle,
+        _ts_key=_ts_key,
     )
-    if _ts_key is not None:
-        ts_origin, eff_bucket = _ts_key
-    elif ts_col is None:
-        ts_origin, eff_bucket = 0, bucket_seconds
-    else:
-        if ts_range is None:
-            r = df.agg(
-                F.min(F.unix_timestamp(ts_col)), F.max(F.unix_timestamp(ts_col))
-            ).first()
-            ts_range = (int(r[0] or 0), int(r[1] or 0))
-        ts_origin, eff_bucket = bk.ts_params(
-            ts_range[0], ts_range[1], res, bucket_seconds
-        )
+    columns, groups, ts_col = man["columns"], man["column_groups"], man["ts_col"]
+    key_geo = man["key"]
+    res, eff_bucket, ts_origin = (
+        key_geo["resolution"], key_geo["bucket_seconds"], key_geo["ts_origin"]
+    )
     cells = 4**res
-
     key = bk.key_col(
         F.col(url_col),
         F.col(ts_col) if ts_col else None,
@@ -533,11 +699,10 @@ def encode_table(
             or 0
         )
         est_max_cell = int(hot / frac)
-        n_salt = max(1, math.ceil(est_max_cell / max_rows_per_block))
-    elif salt_mode == "avg":
-        n_salt = max(1, math.ceil(est_rows / max(cells, 1) / max_rows_per_block))
-    else:
+        key_geo["n_salt"] = max(1, math.ceil(est_max_cell / max_rows_per_block))
+    elif salt_mode != "avg":
         raise ValueError(f"salt_mode must be 'avg' or 'sampled', got {salt_mode!r}")
+    n_salt = key_geo["n_salt"]
     salt = (
         F.pmod(F.xxhash64(F.col(url_col), F.lit(7)), F.lit(n_salt)).cast("int")
         if n_salt > 1
@@ -559,7 +724,7 @@ def encode_table(
         # map-only: no exchange; each input partition encodes its own
         # sub-row of every block it touches (salt = partition id)
         keyed = keyed.withColumn(SALT, F.spark_partition_id())
-    elif shuffle == "hash":
+    else:
         p = max(2, spark.sparkContext.defaultParallelism)
         # Group placement. Hashing (block, salt) keys into p partitions
         # leaves the codec-bound encode stage straggler-bound: group
@@ -610,8 +775,6 @@ def encode_table(
             # input scan here); global block order is restored cheaply
             # on the encoded rows in write_blocks, ~5x smaller than input
             keyed = keyed.repartition(num_partitions or p, BLOCK, SALT)
-    else:
-        raise ValueError(f"shuffle must be 'hash' or 'none', got {shuffle!r}")
     # JVM-side (spillable) per-partition sort, so the Python encoder
     # STREAMS contiguous groups: peak Python memory is one group, never
     # a whole partition (which grows with data/bins at scale)
@@ -620,16 +783,6 @@ def encode_table(
         schema=blocks_schema(columns, groups),
     )
 
-    man = mf.build_manifest(
-        columns=columns,
-        resolution=res,
-        bucket_seconds=eff_bucket,
-        ts_origin=ts_origin,
-        url_col=url_col,
-        ts_col=ts_col,
-        n_salt=n_salt,
-        extra={"effort": effort, "column_groups": groups, "shuffle": shuffle},
-    )
     return blocks, man
 
 
@@ -699,12 +852,13 @@ def _claim_chunk(
     micro-batch rewrites its own chunk instead of adding a copy."""
     from . import fsio
 
-    claimed = mf.read_chunk_lineage(path, spark, include_claims=True)
     if batch is not None:
+        claimed = mf.read_chunk_lineage(path, spark, include_claims=True)
         for k, rec in claimed.items():
             if rec.get("batch") == batch:
                 return k
-    k = 1 + max([*claimed, *(snap["chunks"] if snap else [])], default=-1)
+    ids = mf.lineage_ids(path, spark)
+    k = 1 + max([*ids, *(snap["chunks"] if snap else [])], default=-1)
     while True:
         try:
             fsio.write_bytes_exclusive(
@@ -842,7 +996,7 @@ def _chunk_totals(
     record lacks figures (tables written before records carried them)
     are recounted by one :func:`_aggregate_written` over just those
     dirs. Returns ``(totals, hist)`` for ``mf.finalize_manifest``."""
-    lin = mf.read_chunk_lineage(path, spark)
+    lin = mf.read_chunk_lineage(path, spark, chunks=chunks)
     recs, missing = [], []
     for c in sorted(int(c) for c in chunks):
         rec = lin.get(c, {})
@@ -963,27 +1117,80 @@ def _commit(
 
 
 def _write_chunk(
-    spark: SparkSession, path: str, k: int, blocks: DataFrame,
-    n_files: int | None, **extra,
+    spark: SparkSession, path: str, k: int, blocks, n_files: int | None,
+    **extra,
 ) -> dict:
     """Land chunk ``k`` — the one place a chunk is written: an
     idempotent overwrite of ``data/chunk=<k>`` (re-running it after a
     mid-write crash can never duplicate rows), then its lineage record,
-    strictly after the data. One aggregate job over this chunk's dir
-    only yields the record's figures (``FIGURES``), from which every
-    commit over the chunk sums its totals (:func:`_chunk_totals`);
-    ``extra`` adds the writer's own fields (``appended``, ``batch``,
-    ...). Returns the record."""
+    strictly after the data. ``extra`` adds the writer's own fields
+    (``appended``, ``batch``, ...). Returns the record.
+
+    ``blocks`` is a Spark plan (written by :func:`_write_data`; one
+    aggregate job over this chunk's dir yields the record's figures,
+    ``FIGURES``) or, from the driver branch of :func:`append_chunk`,
+    encoded block rows in an Arrow table: the dir is cleared and the
+    rows land as one parquet file through a temp name and a rename,
+    their figures taken from the rows, with no Spark job. Either way the
+    dir holds only this write's files, whichever branch wrote it
+    before. The record's ``writer`` says which branch ran (``"spark"``
+    or ``"driver"``); every commit over the chunk sums its totals from
+    the record (:func:`_chunk_totals`)."""
     t0 = time.time()
-    _write_data(blocks, os.path.join(_data_path(path), f"chunk={k}"), n_files)
+    dest = os.path.join(_data_path(path), f"chunk={k}")
+    if isinstance(blocks, pa.Table):
+        import pyarrow.parquet as pq
+
+        from . import fsio
+
+        fsio.delete_dir(spark, dest)
+        os.makedirs(dest)
+        tmp = os.path.join(dest, ".part-00000.parquet.tmp")
+        pq.write_table(blocks, tmp)
+        os.replace(tmp, os.path.join(dest, "part-00000.parquet"))
+        figures, writer = _block_figures(blocks), "driver"
+    else:
+        _write_data(blocks, dest, n_files)
+        figures, writer = _aggregate_written(spark, path, [k]), "spark"
     rec = {
         "chunk": k,
-        **_aggregate_written(spark, path, [k]),
+        **figures,
         "wall_seconds": round(time.time() - t0, 3),
+        "writer": writer,
         **extra,
     }
     mf.write_chunk_lineage(path, k, rec, spark)
     return rec
+
+
+# The largest chunk the driver encodes: the salt cap (4 cells' worth),
+# so the driver branch's one collect stays bounded.
+DRIVER_WRITE_MAX_RAW = 4 * bk.TARGET_CELL_BYTES
+
+
+def _write_on_driver(
+    raw_bytes: int, rows: int, resolution: int, parallelism: int,
+    effort: str, *, decode: bool = False,
+) -> bool:
+    """The driver-side write gate of :func:`append_chunk` and
+    :func:`compact_chunks`: True when encoding ``rows`` rows of
+    ``raw_bytes`` raw bytes (and, for a compaction, ``decode`` decoding
+    them first) takes no longer in the driver than as a Spark write, and
+    the rows are at most ``DRIVER_WRITE_MAX_RAW`` (16 MiB). That is
+    ``placement.driver_wins`` with the one-core kernel time at
+    ``R_ENC[effort]`` (plus ``R_DEC``), spread by the plan over the
+    ``min(4^resolution, rows)`` encode groups, against the write plan's
+    fixed cost ``F_WRITE`` less the driver's own per-row keying
+    (``T_KEY``)."""
+    if raw_bytes > DRIVER_WRITE_MAX_RAW:
+        return False
+    kernel_s = raw_bytes / placement.R_ENC.get(effort, placement.R_ENC["max"])
+    if decode:
+        kernel_s += raw_bytes / placement.R_DEC
+    return placement.driver_wins(
+        kernel_s, min(4**resolution, rows), parallelism,
+        placement.F_WRITE - rows * placement.T_KEY,
+    )
 
 
 def write_blocks(blocks: DataFrame, path: str, man: dict) -> dict:
@@ -1115,6 +1322,7 @@ def append_chunk(
     _op: str = "append",
     _base: tuple[dict, dict | None] | None = None,
     _batch: list | None = None,
+    _rows: "pa.Table | None" = None,
 ) -> dict:
     """Append new rows to a committed table as the next chunk: every new
     chunk of an existing table lands here, whether appended, streamed
@@ -1128,10 +1336,21 @@ def append_chunk(
     ``chunk=<k>`` directory, under an id claimed past every lineage
     id and every chunk of the base snapshot (:func:`_claim_chunk`).
     Every table any writer produces can append; legacy flat tables are
-    read-only and raise. The chunk lands through :func:`_write_chunk`,
-    whose one aggregate job covers only the new chunk; the commit's
-    totals are the sum of its chunk set's lineage records
-    (:func:`_chunk_totals`), so no append re-scans the older chunks.
+    read-only and raise. The commit's totals are the sum of its chunk
+    set's lineage records (:func:`_chunk_totals`), so no append
+    re-scans the older chunks.
+
+    One sizing job (:func:`bind_stats`) gives the delta's rows and exact
+    raw bytes; the write gate (:func:`_write_on_driver`) then picks the
+    branch. On a local table with the hash shuffle, a delta whose
+    encode is cheaper in-process than a Spark write's fixed cost (at
+    most 16 MiB raw) is collected once (``toArrow``) and encoded on the
+    driver by :func:`encode_rows`; otherwise :func:`encode_table` plans
+    the encode and :func:`_write_chunk` writes it with one aggregate
+    job over the new chunk. Both encode under the same manifest
+    (:func:`_encode_spec`), so both give the same payload bytes, and
+    both land through :func:`_write_chunk`, whose lineage record says
+    which branch ran (``writer``).
 
     Concurrency: the commit is a CAS on the snapshot read here — if
     another writer (e.g. a delete_rows) commits in between,
@@ -1153,7 +1372,9 @@ def append_chunk(
     rewritten chunk while its entry (seq < new chunk id) no longer
     applies to it. ``_batch`` is a stream's replay tag (see
     :func:`_claim_chunk`); a replay of a committed batch commits
-    nothing new."""
+    nothing new. ``_rows`` are :func:`compact_chunks`' rows decoded
+    in-process (an Arrow table, logical names in manifest order; ``df``
+    is then unused): they take the driver branch."""
     if staged and (_replace_chunks or _op != "append"):
         raise ValueError("only plain appends can be staged")
     man, base_snap = _base or _writable_base(spark, path)
@@ -1177,44 +1398,63 @@ def append_chunk(
                 f"chunks {sorted(missing)} are not visible at the current "
                 f"snapshot (visible: {visible})"
             )
-    # schema evolution: an appended frame may omit columns added after
-    # the original encode — fill their recorded defaults, then align
-    # column order to the manifest's
-    for c in man["columns"]:
-        if c["name"] not in df.columns and "added_snapshot" in c:
-            df = df.withColumn(
-                c["name"], F.lit(c.get("default")).cast(c["spark_type"])
-            )
-    man_names = [c["name"] for c in man["columns"]]
-    if df.columns != man_names and set(df.columns) == set(man_names):
-        df = df.select(*man_names)
-    # renamed columns: encode under the immutable PHYSICAL payload name
-    # so this chunk's blobs line up with every older chunk's
-    for c in man["columns"]:
-        p = c.get("physical", c["name"])
-        if p != c["name"] and c["name"] in df.columns:
-            df = df.withColumnRenamed(c["name"], p)
     key = man["key"]
-    # one sizing job; a table with rows scales its raw bytes per row
-    n, raw, _ = bind_stats(df, raw=not man.get("num_rows"))
+    if _rows is None:
+        # schema evolution: an appended frame may omit columns added
+        # after the original encode — fill their recorded defaults, then
+        # align column order to the manifest's
+        for c in man["columns"]:
+            if c["name"] not in df.columns and "added_snapshot" in c:
+                df = df.withColumn(
+                    c["name"], F.lit(c.get("default")).cast(c["spark_type"])
+                )
+        man_names = [c["name"] for c in man["columns"]]
+        if df.columns != man_names and set(df.columns) == set(man_names):
+            df = df.select(*man_names)
+        # renamed columns: encode under the immutable PHYSICAL payload
+        # name so this chunk's blobs line up with every older chunk's
+        for c in man["columns"]:
+            p = c.get("physical", c["name"])
+            if p != c["name"] and c["name"] in df.columns:
+                df = df.withColumnRenamed(c["name"], p)
+        columns = columns_of(df)
+        # the one sizing job: the rows and their exact raw bytes
+        n, raw, _ = bind_stats(df)
+    else:
+        # compact_chunks' decoded rows: every column, logical names in
+        # manifest order
+        _rows = _rows.rename_columns(
+            [c.get("physical", c["name"]) for c in man["columns"]]
+        )
+        columns = [
+            {"name": f.name, "spark_type": c["spark_type"],
+             "kind": selector.kind_of_spark_type(c["spark_type"])}
+            for f, c in zip(_rows.schema, man["columns"])
+        ]
+        n, raw = _rows.num_rows, None
     if n == 0 and not (staged or replace):
         return man
-    if raw is None:
-        raw = n * (man.get("raw_bytes") or 0) // man["num_rows"]
-    k = _claim_chunk(spark, path, base_snap, _batch)
-    blocks, chunk_man = encode_table(
-        df,
+    # a table with rows scales its raw bytes per row for the geometry,
+    # as it always has, so the payload bytes of either branch match
+    est = (
+        n * (man.get("raw_bytes") or 0) // man["num_rows"]
+        if man.get("num_rows") else raw or 0
+    )
+    # pinned geometry and column groups: old and new chunks share one
+    # block-key space and one payload layout
+    geometry = dict(
         url_col=man["url_col"],
         ts_col=man["ts_col"],
         resolution=key["resolution"],
-        _ts_key=(key["ts_origin"], key["bucket_seconds"]),  # pinned geometry
+        _ts_key=(key["ts_origin"], key["bucket_seconds"]),
         est_rows=n,
-        est_raw_bytes=raw,
-        zlib_level=zlib_level,
-        effort=effort,
+        est_raw_bytes=est,
         codec_overrides=codec_overrides,
+        effort=effort,
+        column_groups=list((man.get("column_groups") or {}).values()) or None,
         shuffle=shuffle,
     )
+    chunk_man, *_ = _encode_spec(columns, **geometry)
     expected = [
         (c.get("physical", c["name"]), c["spark_type"]) for c in man["columns"]
     ]
@@ -1224,6 +1464,24 @@ def append_chunk(
             f"{[(c['name'], c['spark_type']) for c in chunk_man['columns']]} "
             f"vs {expected}"
         )
+    from . import fsio
+
+    on_driver = _rows is not None or (
+        shuffle == "hash"
+        and not fsio.is_remote(path)
+        and _write_on_driver(
+            raw, n, key["resolution"], spark.sparkContext.defaultParallelism,
+            effort,
+        )
+    )
+    k = _claim_chunk(spark, path, base_snap, _batch)
+    if on_driver:
+        # the driver branch: one bounded collect (or the compaction's
+        # decoded rows), encoded in-process under the same manifest
+        rows = _rows if _rows is not None else df.toArrow()
+        blocks = encode_rows(rows, chunk_man, zlib_level)
+    else:
+        blocks, _ = encode_table(df, zlib_level=zlib_level, **geometry)
     # carry evolution metadata through re-finalization: the new chunk's
     # plain column specs would otherwise shed added_snapshot/default
     # annotations and the schema_evolved reader switch
@@ -2178,6 +2436,14 @@ def compact_chunks(
     chunks by encoded bytes — every chunk under ``small_bytes``, capped
     at ``max_chunks`` (smallest first). At least 2 chunks must qualify.
 
+    Branch: on a local table with the hash shuffle, a selection whose
+    decode plus encode is cheaper in-process than a Spark write's fixed
+    cost (:func:`_write_on_driver` on the selected chunks' lineage
+    ``raw_bytes``, at most 16 MiB) is read by the in-process reader
+    (``reader.iter_blocks`` with its delete rule) and re-encoded on the
+    driver with no Spark job; larger selections decode and re-encode as
+    a Spark plan. Both give the same chunk.
+
     Semantics:
 
     * rows are read at the CURRENT snapshot with equality deletes
@@ -2218,7 +2484,7 @@ def compact_chunks(
                 "pass chunk_ids, small_bytes or max_chunks to select "
                 "what to compact"
             )
-        lin = mf.read_chunk_lineage(path, spark)
+        lin = mf.read_chunk_lineage(path, spark, chunks=visible)
         sized = sorted(
             (int(lin.get(c, {}).get("enc_bytes") or 0), c) for c in visible
         )
@@ -2234,18 +2500,45 @@ def compact_chunks(
             f"(visible: {sorted(visible)})"
         )
     names = [c["name"] for c in man["columns"]]
-    # current-snapshot merge-on-read view of ONLY the selected chunks:
-    # chunk filter + delete entries are captured eagerly here, and the
-    # append's CAS (parent = cur) rejects the commit if any
+    # the merge-on-read view of ONLY the selected chunks at the captured
+    # snapshot: chunk set and delete entries are taken from (man, cur),
+    # and the append's CAS (parent = cur) rejects the commit if any
     # writer advanced the log after this capture point
-    blocks = _scan.read_blocks(spark, path).where(F.col("chunk").isin(sel))
-    entries = _scan.read_delete_entries(spark, path)
-    rows = _scan.decode_blocks(blocks, man, names, with_chunk=True)
-    if entries:
-        rows = _scan._apply_delete_entries(spark, path, rows, entries)
+    entries = _scan.read_delete_entries(
+        spark, path, snapshot_id=cur["snapshot_id"] if cur else None
+    )
+    lin = mf.read_chunk_lineage(path, spark, chunks=sel)
+    figs = [lin.get(c, {}) for c in sel]
+    from . import fsio, reader
+
+    if (
+        shuffle == "hash"
+        and not fsio.is_remote(path)
+        and all("raw_bytes" in f and "rows" in f for f in figs)
+        and _write_on_driver(
+            sum(int(f["raw_bytes"]) for f in figs),
+            sum(int(f["rows"]) for f in figs), man["key"]["resolution"],
+            spark.sparkContext.defaultParallelism, effort, decode=True,
+        )
+    ):
+        # the driver branch: decode in-process by the reader's delete
+        # rule; no Spark plan is built
+        files = [f for f in reader.visible_files(path, cur) if f[0] in sel]
+        sels = reader.select_block_rows(files, man, reader.Envelope(man))
+        deletes = reader.load_deletes(path, entries)
+        rows, local = None, pa.Table.from_batches(
+            list(reader.iter_blocks(sels, man, names, deletes=deletes)),
+            schema=reader.arrow_schema(_scan._colspecs(man, names)),
+        )
+    else:
+        blocks = _scan.read_blocks(spark, path).where(F.col("chunk").isin(sel))
+        rows = _scan.decode_blocks(blocks, man, names, with_chunk=True)
+        if entries:
+            rows = _scan._apply_delete_entries(spark, path, rows, entries)
+        rows, local = rows.select(*names), None
     return append_chunk(
         spark,
-        rows.select(*names),
+        rows,
         path,
         zlib_level=zlib_level,
         effort=effort,
@@ -2254,4 +2547,5 @@ def compact_chunks(
         _replace_chunks=sel,
         _op="compact-chunks",
         _base=(man, cur),
+        _rows=local,
     )

@@ -191,24 +191,42 @@ def write_chunk_lineage(
     )
 
 
+def lineage_ids(path: str, spark=None) -> list[int]:
+    """Chunk ids that have a lineage file (a record or a claim), from
+    the filenames alone: no record is read."""
+    from . import fsio
+
+    return [
+        int(fn[6:-5])
+        for fn in fsio.list_files(spark, lineage_dir(path))
+        if fn.startswith("chunk-") and fn.endswith(".json")
+    ]
+
+
 def read_chunk_lineage(
-    path: str, spark=None, include_claims: bool = False
+    path: str, spark=None, include_claims: bool = False,
+    chunks: list[int] | None = None,
 ) -> dict[int, dict]:
     """Lineage records by chunk id. A record with ``claimed: True`` is
     an appender's exclusive chunk-id CLAIM (written before its data,
     overwritten with the real record after) — not a completed chunk, so
     it is hidden unless ``include_claims`` (the id-selection path wants
-    to see claims so racing appenders skip past each other)."""
+    to see claims so racing appenders skip past each other).
+    ``chunks`` reads exactly those ids' records (a missing one is
+    absent from the result) instead of listing every record ever
+    written."""
     from . import fsio
 
     d = lineage_dir(path)
     out: dict[int, dict] = {}
-    for fn in fsio.list_files(spark, d):
-        if fn.startswith("chunk-") and fn.endswith(".json"):
-            rec = json.loads(fsio.read_bytes(spark, d, fn))
-            if rec.get("claimed") and not include_claims:
-                continue
-            out[int(fn[6:-5])] = rec
+    for c in lineage_ids(path, spark) if chunks is None else chunks:
+        fn = f"chunk-{int(c):05d}.json"
+        if chunks is not None and not fsio.exists(spark, d, fn):
+            continue
+        rec = json.loads(fsio.read_bytes(spark, d, fn))
+        if rec.get("claimed") and not include_claims:
+            continue
+        out[int(c)] = rec
     return out
 
 

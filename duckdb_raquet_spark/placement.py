@@ -5,7 +5,12 @@ own hash (balls-into-bins collisions leave some tasks with several
 serial codec groups while cores idle — guide §2.5).
 
 :func:`plan` is the one entry point, shared by the planned encode
-placement (encode.py) and the per-block re-encode spread (scan.py)."""
+placement (encode.py) and the per-block re-encode spread (scan.py).
+
+:func:`driver_wins` is the other placement decision: whether a small
+read or write runs in the driver process or as a Spark plan. Its one
+inequality gates both the driver-local read (``scan._read_on_driver``)
+and the driver-side chunk write (``encode._write_on_driver``)."""
 
 from __future__ import annotations
 
@@ -112,3 +117,36 @@ def plan(df, key_cols: list[str], cost_col, n_bins: int, cap: int):
         [(*(r[k] for k in key_cols), reps[b]) for r, b in zip(rows, bins)],
         schema=schema,
     )
+
+
+# ------------------------------------------------- driver or plan ----
+#
+# Kernel rates and fixed plan costs, measured on a 4-core VM at
+# local[4] on the benchmark's webtext (1-2 KB raw per row):
+#
+# * R_DEC: one core decoded a whole 7.9 MB-raw block row in 0.34 s, and
+#   ~2 MB block rows at 20-21.5 MB/s.
+# * R_ENC: one core encodes 600-1,500-row groups at ~6.6 MB/s at max
+#   effort (bz2-led) and 50-90 MB/s at fast effort (zstd-led).
+# * F_READ: a url lookup or one-day range costs 0.46-0.61 s more as a
+#   Spark plan than in-process (medians of 10).
+# * F_WRITE: a 150-row append took 0.99-1.36 s as a Spark write and
+#   0.20-0.37 s from the driver; the plan's encode, write and recount
+#   jobs cost ~0.9 s more.
+# * T_KEY: the driver keys each row with a pure-Python XXH64 of its url
+#   (14 us for a 34-byte url), work the Spark plan does in the JVM.
+R_DEC = 23e6
+R_ENC = {"max": 6.6e6, "fast": 50e6}
+F_READ = 0.55
+F_WRITE = 0.9
+T_KEY = 15e-6
+
+
+def driver_wins(kernel_s: float, units: int, parallelism: int, fixed_s: float) -> bool:
+    """True when ``kernel_s`` seconds of one-core kernel work run no
+    slower in the driver than as a Spark plan. The plan can spread the
+    work over ``min(units, parallelism)`` cores, saving ``kernel_s *
+    (1 - 1 / min(units, P))``, and pays ``fixed_s`` for its jobs; the
+    driver wins while that saving is at most ``fixed_s``."""
+    spread = max(1, min(units, parallelism))
+    return kernel_s * (1 - 1 / spread) <= fixed_s

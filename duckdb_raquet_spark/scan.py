@@ -1036,32 +1036,21 @@ def read_changes(
 def _read_on_driver(raw_bytes: int, n_blocks: int, parallelism: int) -> bool:
     """The driver-local read gate: True when decoding ``n_blocks``
     selected block rows holding ``raw_bytes`` raw bytes in-process is
-    no slower than a Spark plan. The only parallelism the Spark path
-    offers is across block rows, so against one core it saves
-    ``raw / R * (1 - 1 / min(n, P))`` of decode time and pays a fixed
-    ``F`` per read; the driver wins while that saving is at most ``F``.
+    no slower than a Spark plan (``placement.driver_wins`` with the
+    decode rate ``R_DEC`` and the read plan's fixed cost ``F_READ``).
+    The only parallelism the Spark path offers is across block rows.
 
     Measured on a 4-core VM at ``local[4]``, on the benchmark's
-    6,000-row webtext table (7.9 MB raw):
-
-    * R: as one block row, one core decoded every column in 0.34 s,
-      23 MB/s of raw bytes. At the default byte geometry (4 block rows
-      of 1.84-2.14 MB) one block row decodes in 0.08-0.14 s, 20-21.5
-      MB/s (medians of 12, two runs);
-    * F: as one block row, a url lookup took 1.06 s as a Spark plan and
-      0.45 s on the driver, a one-day range 1.04 s and 0.49 s (medians
-      of 10 each, manifest read and ``toArrow`` included). On the
-      4-block table a lookup takes 0.77-0.81 s against 0.23-0.24 s and
-      a range 0.73-0.74 s against 0.27-0.28 s, so the plan costs
-      0.46-0.56 s more per read.
-
-    Both re-measurements sit within ~15% of the constants, which are
-    kept.
+    6,000-row webtext table (7.9 MB raw): as one block row, a url
+    lookup took 1.06 s as a Spark plan and 0.45 s on the driver, a
+    one-day range 1.04 s and 0.49 s (medians of 10 each, manifest read
+    and ``toArrow`` included). On the 4-block table a lookup takes
+    0.77-0.81 s against 0.23-0.24 s and a range 0.73-0.74 s against
+    0.27-0.28 s, so the plan costs 0.46-0.56 s more per read.
     """
-    decode_bytes_per_s = 23e6
-    spark_fixed_s = 0.55
-    spread = max(1, min(n_blocks, parallelism))
-    return raw_bytes / decode_bytes_per_s * (1 - 1 / spread) <= spark_fixed_s
+    return placement.driver_wins(
+        raw_bytes / placement.R_DEC, n_blocks, parallelism, placement.F_READ
+    )
 
 
 def _driver_read(

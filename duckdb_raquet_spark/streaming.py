@@ -8,9 +8,11 @@ each batch is one :func:`encode.append_chunk` call, so it claims its
 own ``chunk=<k>``, lands the data, then commits (snapshot CAS, then
 manifest row + sidecar), and carries everything an append carries —
 live deletes, added-column defaults, renamed columns, the table's key
-geometry. The claim records ``(checkpoint_dir, batch_id)``, so Spark's
-at-least-once foreachBatch replay rewrites the same chunk and never
-duplicates rows. An empty batch commits nothing.
+geometry. A small batch takes the append's driver branch: one bounded
+collect, encoded in-process, no Spark write job. The claim records
+``(checkpoint_dir, batch_id)``, so Spark's at-least-once foreachBatch
+replay rewrites the same chunk (its dir cleared first, whichever branch
+wrote it) and never duplicates rows. An empty batch commits nothing.
 
 Block keys use a FIXED (resolution, ts_origin, bucket_seconds) from the
 caller — a stream cannot scan its own future to size the time cells, so
@@ -49,7 +51,9 @@ def encode_stream(
 
     ``stream_df`` is any streaming DataFrame with the webtext schema
     (file source, Kafka + parse, rate + synth, ...). Each micro-batch
-    is one :func:`encode.append_chunk`; an empty batch commits nothing.
+    is one :func:`encode.append_chunk`, so a small batch is encoded on
+    the driver after one bounded collect (its write gate); an empty
+    batch commits nothing.
     The geometry arguments (and ``url_col`` / ``ts_col``) only create a
     table, keyed as ``blockkey.ts_params`` maps them; onto an existing
     table they must equal its key, or the batch raises ValueError.

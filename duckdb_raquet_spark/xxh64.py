@@ -6,9 +6,11 @@ value driver-side so a point lookup can compute its block key without a
 Spark job (the reference computes its QUADBIN key O(1) on the query
 thread — /root/reference/src/include/quadbin.hpp:118-122).
 
-This is an O(1)-per-lookup driver-side helper, never applied per row of
-data — bulk hashing always runs JVM-side via ``F.xxhash64``.
-``tests/test_blockkey.py`` asserts parity with Spark's output.
+Per row it runs only in the in-process encoder (``encode.row_keys``),
+which writes chunks small enough that Python hashing is a small share
+of the encode; bulk hashing runs JVM-side via ``F.xxhash64``.
+``tests/test_blockkey.py`` and ``tests/test_write_gate.py`` assert
+parity with Spark's output.
 """
 
 from __future__ import annotations

@@ -130,6 +130,9 @@ def test_fallback_recounts_records_without_figures(spark, tmp_path, monkeypatch)
             del rec[k]
         mf.write_chunk_lineage(old, c, rec, spark)
 
+    # the Spark write branch: its new chunk's figures come from one
+    # aggregate (the driver branch takes them from the encoded rows)
+    monkeypatch.setattr(encode, "_write_on_driver", lambda *a, **k: False)
     calls = _count_aggregates(monkeypatch)
     for p in (path, old):
         extra = synth.synth_webtext(spark, 15, num_partitions=1, start=5_000)

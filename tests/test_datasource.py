@@ -127,6 +127,28 @@ def test_datasource_chunk_sized_for_compaction(registered, tmp_path):
     assert scan.read_rows(spark, path).count() == 420
 
 
+def test_datasource_file_uri_and_other_schemes(registered, tmp_path):
+    """A ``file://`` URI reads and writes the local table it names;
+    any other scheme raises a ValueError naming ``scan.read_rows``."""
+    spark = registered
+    path = str(tmp_path / "uri")
+    df = synth.synth_webtext(spark, 120, num_partitions=2)
+    encode.encode_to_path(spark, df, path, chunks=2, target_rows_per_block=32)
+    back = spark.read.format("raquet").load("file://" + path)
+    assert back.count() == 120
+    out = str(tmp_path / "uri-out")
+    back.write.format("raquet").mode("overwrite").save("file://" + out)
+    assert scan.read_rows(spark, out).count() == 120
+    url = df.first()["url"]
+    got = spark.read.format("raquet").load("file://" + out).where(F.col("url") == url)
+    assert got.count() == 1
+    for uri in ("s3a://bucket/t", "hdfs://nn/t"):
+        with pytest.raises(ValueError, match="scan.read_rows"):
+            RaquetReader({"path": uri}, None)
+        with pytest.raises(Exception, match="scan.read_rows"):
+            spark.read.format("raquet").load(uri).count()
+
+
 def test_datasource_reads_engine_tables_with_pushdown(registered, tmp_path):
     """Interop: format('raquet') reads encode_to_path tables, and url /
     warc_ts predicates return exactly the right rows (pruning is a

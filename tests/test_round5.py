@@ -761,11 +761,15 @@ def test_widen_prelog_flat_table_keeps_layout(spark, tmp_path):
     assert out.count() == 40
 
 
-def test_concurrent_append_append_race(spark, tmp_path):
+@pytest.mark.parametrize("writer", ["driver", "spark"])
+def test_concurrent_append_append_race(spark, tmp_path, monkeypatch, writer):
     """Two appenders racing the same lineage view must NOT both write
     data/chunk=<k> (the loser's overwrite would clobber the winner's
     committed files): the exclusive lineage CLAIM forces distinct chunk
-    ids, and both row sets land."""
+    ids, and both row sets land. Run on both sides of the write gate."""
+    monkeypatch.setattr(
+        encode, "_write_on_driver", lambda *a, **k: writer == "driver"
+    )
     path = str(tmp_path / "aa")
     base = _webtext(spark, n=40)
     encode.encode_to_path(spark, base, path, chunks=2, target_rows_per_block=32)

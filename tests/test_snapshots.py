@@ -326,6 +326,8 @@ def test_append_losing_cas_leaves_caches_at_tip(spark, tmp_path, monkeypatch):
         return orig(*a, **k)
 
     monkeypatch.setattr(encode, "encode_table", racing)
+    # the race is injected through encode_table: the Spark write branch
+    monkeypatch.setattr(encode, "_write_on_driver", lambda *a, **k: False)
     extra = synth.synth_webtext(spark, 40, num_partitions=1, start=1_000_000)
     with pytest.raises(mf.ConcurrentCommitError):
         encode.append_chunk(spark, extra, path)
