@@ -304,11 +304,10 @@ def q_rt_pinned_zstd(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_rt_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The Spark 4.1 Python Data Source surface: format('raquet') reads
     the shared encoded fixture as its LOGICAL schema (decode inside the
-    source, filter pushdown available) — must reproduce plain SQL over
-    the raw table like every other engine path."""
+    source) — must reproduce plain SQL over the raw table like every
+    other engine path."""
     from duckdb_raquet_spark.datasource import RaquetDataSource
 
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     spark.dataSource.register(RaquetDataSource)
     path, _man = _encoded(spark, sf_dir)
     return (

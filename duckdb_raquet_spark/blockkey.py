@@ -435,6 +435,17 @@ def chunk_col(x: Column, y: Column, res: int, n: int) -> Column:
     return F.shiftrightunsigned(cell * F.lit(n), 2 * res).cast("int")
 
 
+def chunk_of_keys(keys, res: int, n: int) -> np.ndarray:
+    """Numpy twin of :func:`chunk_col` on block keys: a key holds its
+    cell's top ``res`` bits of x and y, which are all the chunk rule
+    reads, so every row and salt of a block gets the block's chunk."""
+    if n << (2 * res) >= 1 << 63:
+        raise ValueError(f"{n} chunks at resolution {res} overflow a long")
+    shift = _U64(COORD_BITS - res)
+    cell = ((key_x(keys) >> shift) << _U64(res)) | (key_y(keys) >> shift)
+    return ((cell * _U64(n)) >> _U64(2 * res)).astype(np.int32)
+
+
 def _key_from_cells_col(xcell: Column, ycell: Column, res: int) -> Column:
     """Key from (x, y) CELL indices at ``res`` — Column twin of
     key_from_parts on shifted coords."""

@@ -2,8 +2,6 @@
 
     from duckdb_raquet_spark.datasource import RaquetDataSource
     spark.dataSource.register(RaquetDataSource)
-    # filter pushdown requires (Spark 4.1):
-    #   spark.conf: spark.sql.python.filterPushdown.enabled=true
 
     df = spark.read.format("raquet").load("/path/table")           # decoded rows
     (df.write.format("raquet").mode("overwrite")
@@ -11,9 +9,8 @@
 
 The idiomatic-Spark twin of the reference's `read_raquet` macro
 (/root/reference/src/raquet_extension.cpp:36-45): the table shows up as
-its LOGICAL schema (url, warc_ts, html, text, lang, ...), decode
-happens lazily per partition, and the engine's block-key pruning runs
-underneath the DataFrame API.
+its LOGICAL schema (url, warc_ts, html, text, lang, ...) and decode
+happens lazily per partition.
 
 Paths
 -----
@@ -27,20 +24,17 @@ Reader
 * Schema comes from the committed manifest (``mf.committed_manifest``:
   the snapshot log's, then the sidecar's); the block=0 manifest row is
   the last fallback.
-* Listing, pruning, decode and equality deletes are the in-process
-  block reader's (``reader.py``), the same code that serves the
-  driver-local ``scan.point_lookup`` / ``range_scan_ts``. One
-  partition is one visible data file; ``read`` runs in a Python
-  worker. ``chunk=-1`` is never opened.
-* ``pushFilters`` maps url equality and warc_ts range predicates onto
-  a ``reader.Envelope`` (the math of ``scan.prune_blocks_for_url_hash``
-  / ``prune_blocks_for_ts``): files and row groups whose ``block``
-  min/max fall outside it are skipped via parquet footer statistics,
-  and the exact hash-cell / ts-bucket / ``stats.ts_min..ts_max`` match
-  drops block rows — before any payload byte is read. A filtered read
-  plans only the files holding a selected block row. Every filter is
-  also handed back to Spark, which re-applies them exactly on the
-  decoded rows (pruning is a superset guarantee).
+* Listing, decode and equality deletes are the in-process block
+  reader's (``reader.py``), the same code that serves the driver-local
+  reads of ``scan``. One partition is one visible data file; ``read``
+  runs in a Python worker. ``chunk=-1`` is never opened.
+* No filter is pushed: Spark applies every predicate to the decoded
+  rows. Spark 4.1 keeps the partitions and read function of a
+  DataFrame's last filter-pushdown planning and reuses them, without
+  calling the source, for a later query of that DataFrame that pushes
+  no filter, so a reader narrowed by ``pushFilters`` would serve a
+  filtered subset to the next unfiltered count or write. Pruned reads
+  are ``scan.point_lookup`` / ``scan.range_scan_ts``.
 * The Python DataSource API has no column-pruning hook yet, so
   ``.option("columns", "url,text")`` selects which payloads decode;
   the default decodes all.
@@ -75,21 +69,13 @@ Writer
 from __future__ import annotations
 
 import dataclasses
-import json
 import os
-from typing import Iterator
 
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceArrowWriter,
     DataSourceReader,
-    EqualTo,
-    Filter,
-    GreaterThan,
-    GreaterThanOrEqual,
     InputPartition,
-    LessThan,
-    LessThanOrEqual,
     WriterCommitMessage,
 )
 from pyspark.sql.types import StructType
@@ -165,18 +151,16 @@ def _spark_schema(man: dict, cols: list[str] | None) -> StructType:
 class RaquetReader(DataSourceReader):
     """``format("raquet")`` reads through the in-process block reader
     (``reader.py``): ``partitions`` lists the snapshot's visible data
-    files on the driver (a filtered read keeps only the files holding a
-    selected block row) and ``read`` selects, decodes and applies the
-    equality deletes of one file in a Python worker. Unlike
-    ``scan.point_lookup``, it never runs the whole read on the driver:
-    Spark schedules the partitions."""
+    files on the driver and ``read`` decodes one file and applies its
+    equality deletes in a Python worker. Unlike ``scan.read_rows``, it
+    never runs the whole read on the driver: Spark schedules the
+    partitions."""
 
     def __init__(self, options: dict, schema: StructType) -> None:
         self.path = _table_path(options, ".load('/table')")
         self.man = _load_manifest(self.path)
         cols_opt = options.get("columns")
         self.cols = [c.strip() for c in cols_opt.split(",")] if cols_opt else None
-        self.env = reader.Envelope(self.man)
         # time travel: .option("snapshotId", 3) or .option("ref",
         # "corpus-v1") pins chunk visibility AND the delete set to that
         # snapshot; the read schema stays the current manifest's, same
@@ -241,70 +225,25 @@ class RaquetReader(DataSourceReader):
         )
         self.deletes = reader.load_deletes(self.path, entries)
 
-    # ------------------------------------------------------ pushdown ----
-    def pushFilters(self, filters: list[Filter]) -> Iterator[Filter]:
-        url_col = (self.man["url_col"],)
-        ts_col = (self.man["ts_col"],) if self.man["ts_col"] else None
-        for f in filters:
-            if isinstance(f, EqualTo) and f.attribute == url_col and isinstance(
-                f.value, str
-            ):
-                self.env.url(f.value)
-            elif ts_col and getattr(f, "attribute", None) == ts_col and hasattr(
-                f, "value"
-            ):
-                us = _epoch_us(f.value)
-                if us is None:
-                    pass
-                elif isinstance(f, (GreaterThan, GreaterThanOrEqual)):
-                    self.env.ts(lo_us=us)
-                elif isinstance(f, (LessThan, LessThanOrEqual)):
-                    self.env.ts(hi_us=us)
-                elif isinstance(f, EqualTo):
-                    self.env.ts(us, us)
-            # every filter is returned: Spark re-applies them exactly
-            yield f
-
     # ---------------------------------------------------- partitions ----
     def partitions(self) -> list[InputPartition]:
         # visibility: only chunks of the selected snapshot (rolled-back
-        # orphan dirs awaiting expiry must not be planned); a filtered
-        # read plans only the files holding a block row it selects
+        # orphan dirs awaiting expiry must not be planned)
         snap = (
             self.snapshot
             if self.snapshot is not None
             else mf.current_snapshot(self.path, None)
         )
-        files = reader.visible_files(self.path, snap)
-        if self.env:
-            keep = {
-                s.path for s in reader.select_block_rows(files, self.man, self.env)
-            }
-            files = [f for f in files if f[1] in keep]
-        return [_FilePart(k, f) for k, f in files]
+        return [_FilePart(k, f) for k, f in reader.visible_files(self.path, snap)]
 
     # ---------------------------------------------------------- read ----
     def read(self, partition: _FilePart):
         sels = reader.select_block_rows(
-            [(partition.chunk, partition.path)], self.man, self.env
+            [(partition.chunk, partition.path)], self.man, reader.Envelope(self.man)
         )
         yield from reader.iter_blocks(
             sels, self.man, self.cols, deletes=self.deletes
         )
-
-
-def _epoch_us(v) -> int | None:
-    """A pushed timestamp literal as epoch microseconds (naive = UTC)."""
-    import datetime
-
-    if isinstance(v, datetime.datetime):
-        if v.tzinfo is None:
-            v = v.replace(tzinfo=datetime.timezone.utc)
-        epoch = datetime.datetime(1970, 1, 1, tzinfo=datetime.timezone.utc)
-        return (v - epoch) // datetime.timedelta(microseconds=1)
-    if isinstance(v, (int, float)):
-        return int(v * 1_000_000)
-    return None
 
 
 class RaquetWriter(DataSourceArrowWriter):

@@ -267,12 +267,15 @@ def make_group_encode_fn(
     columns: list[dict], url_col: str, ts_col: str | None, zlib_level: int,
     effort: str = selector.EFFORT_MAX,
     groups: dict[str, list[str]] | None = None,
+    threads: int = 1,
 ):
     """THE partition encoder, run via mapInArrow on every encode shape
     (see :func:`encode_table`): each partition arrives sorted by
     (block, salt) and holds every (block, salt) group whole, so the
     contiguous runs of one key are the encode groups — one output row
-    per run, encoded by :func:`encode_block_arrow`."""
+    per run, encoded by :func:`encode_block_arrow`, in run order.
+    ``threads > 1`` (the driver's :func:`encode_rows` only) encodes the
+    runs on one bounded pool (``placement.driver_map``)."""
 
     col_specs = [(c["name"], c["kind"], c.get("codec")) for c in columns]
     sort_cols = sort_cols_for(columns, url_col, ts_col)
@@ -281,59 +284,53 @@ def make_group_encode_fn(
     arrow_schema = to_arrow_schema(blocks_schema(columns, groups))
     ROWS_PER_OUT_BATCH = 32
 
+    def encode_run(run) -> dict:
+        (block, salt), slices = run
+        return encode_block_arrow(
+            pa.Table.from_batches(slices), col_specs, sort_cols, zlib_level,
+            block, salt, ts_col, effort, groups,
+        )
+
     def encode_partition(batches):
         # the plan sorts each partition by (block, salt) JVM-side
-        # (spillable sort), so groups arrive CONTIGUOUS and this
-        # streams them: peak Python memory is one group's slices —
+        # (spillable sort), so groups arrive CONTIGUOUS and, serially,
+        # this streams them: peak Python memory is one group's slices —
         # the same bound as the grouped-exec path — never the whole
         # partition (which grows with data/bins at scale)
         rows: list[dict] = []
-        cur: tuple[int, int] | None = None
-        cur_slices: list["pa.RecordBatch"] = []
-
-        def flush() -> dict | None:
-            nonlocal cur_slices
-            if cur is None or not cur_slices:
-                return None
-            tbl = pa.Table.from_batches(cur_slices)
-            cur_slices = []
-            return encode_block_arrow(
-                tbl, col_specs, sort_cols, zlib_level,
-                cur[0], cur[1], ts_col, effort, groups,
-            )
-
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            names = batch.schema.names
-            b_np = batch.column(names.index(BLOCK)).to_numpy(
-                zero_copy_only=False
-            )
-            s_np = batch.column(names.index(SALT)).to_numpy(
-                zero_copy_only=False
-            )
-            changed = np.flatnonzero(
-                (b_np[1:] != b_np[:-1]) | (s_np[1:] != s_np[:-1])
-            ) + 1
-            bounds = np.r_[0, changed, len(b_np)]
-            for s, e in zip(bounds[:-1], bounds[1:]):
-                key = (int(b_np[s]), int(s_np[s]))
-                if key != cur:
-                    row = flush()
-                    if row is not None:
-                        rows.append(row)
-                        if len(rows) >= ROWS_PER_OUT_BATCH:
-                            yield _rows_to_batch(rows, arrow_schema)
-                            rows = []
-                    cur = key
-                cur_slices.append(batch.slice(int(s), int(e - s)))
-        row = flush()
-        if row is not None:
+        for row in placement.driver_map(encode_run, _group_runs(batches), threads):
             rows.append(row)
+            if len(rows) >= ROWS_PER_OUT_BATCH:
+                yield _rows_to_batch(rows, arrow_schema)
+                rows = []
         if rows:
             yield _rows_to_batch(rows, arrow_schema)
 
     return encode_partition
+
+
+def _group_runs(batches):
+    """``((block, salt), slices)`` for each contiguous run of one key in
+    (block, salt)-sorted batches: the encode groups, in order."""
+    cur: tuple[int, int] | None = None
+    slices: list["pa.RecordBatch"] = []
+    for batch in batches:
+        if batch.num_rows == 0:
+            continue
+        names = batch.schema.names
+        b_np = batch.column(names.index(BLOCK)).to_numpy(zero_copy_only=False)
+        s_np = batch.column(names.index(SALT)).to_numpy(zero_copy_only=False)
+        changed = np.flatnonzero((b_np[1:] != b_np[:-1]) | (s_np[1:] != s_np[:-1])) + 1
+        bounds = np.r_[0, changed, len(b_np)]
+        for s, e in zip(bounds[:-1], bounds[1:]):
+            key = (int(b_np[s]), int(s_np[s]))
+            if key != cur:
+                if slices:
+                    yield cur, slices
+                cur, slices = key, []
+            slices.append(batch.slice(int(s), int(e - s)))
+    if slices:
+        yield cur, slices
 
 
 def _rows_to_batch(rows: list[dict], arrow_schema) -> "pa.RecordBatch":
@@ -390,7 +387,8 @@ def _hash_salts(urls: list, n_salt: int) -> np.ndarray:
 
 
 def encode_rows(
-    tbl: "pa.Table", man: dict, zlib_level: int = 6, salt: int | None = None
+    tbl: "pa.Table", man: dict, zlib_level: int = 6, salt: int | None = None,
+    threads: int = 1,
 ) -> "pa.Table":
     """THE in-process encode: rows (an Arrow table) -> block rows (an
     Arrow table in (block, salt) order) under ``man``'s columns, column
@@ -399,7 +397,8 @@ def encode_rows(
     same input gives the same payload bytes on both paths. ``salt`` is
     a map-only writer's constant salt (the datasource's partition id);
     ``None`` salts as :func:`encode_table`'s hash shuffle does (0 while
-    the manifest's ``n_salt`` is 1)."""
+    the manifest's ``n_salt`` is 1). ``threads`` is the driver plane's
+    pool size (``placement.driver_threads``); executors keep 1."""
     keys = row_keys(tbl, man)
     n_salt = man["key"]["n_salt"]
     if salt is not None or n_salt == 1:
@@ -415,7 +414,7 @@ def encode_rows(
     groups = man.get("column_groups")
     encode = make_group_encode_fn(
         man["columns"], man["url_col"], man["ts_col"], zlib_level,
-        man.get("effort", selector.EFFORT_MAX), groups,
+        man.get("effort", selector.EFFORT_MAX), groups, threads,
     )
     from pyspark.sql.pandas.types import to_arrow_schema
 
@@ -454,8 +453,14 @@ def bind_stats(
     file scans and in-memory frames alike (``None`` unless ``raw``).
     ``ts_range`` is ``ts_col``'s (min, max) epoch (``None`` without
     ``ts_col``). On Iceberg these come free from table and column
-    metadata."""
-    aggs = [F.count("*")]
+    metadata.
+
+    The aggregates are observed metrics of one ``noop`` write, so the
+    scan stays parallel and no exchange runs: a global aggregate is
+    two jobs under AQE (its shuffle stage, then the final stage)."""
+    from pyspark.sql import Observation
+
+    aggs = [F.count(F.lit(1))]
     if raw:
         var, fixed = [], 0
         for c in columns_of(df):
@@ -466,7 +471,14 @@ def bind_stats(
         aggs.append(F.sum(sum(var, F.lit(fixed).cast("long"))))
     if ts_col is not None:
         aggs += [F.min(F.unix_timestamp(ts_col)), F.max(F.unix_timestamp(ts_col))]
-    r = df.agg(*aggs).first()
+    obs = Observation(f"bind_stats_{uuid.uuid4().hex}")
+    (
+        df.observe(obs, *[a.alias(f"_a{i}") for i, a in enumerate(aggs)])
+        .select(F.lit(0).alias("_"))
+        .write.format("noop").mode("overwrite").save()
+    )
+    got = obs.get
+    r = [got[f"_a{i}"] for i in range(len(aggs))]
     rows = int(r[0])
     raw_bytes = int(r[1] or 0) if raw else None
     ts_range = (int(r[-2] or 0), int(r[-1] or 0)) if ts_col is not None else None
@@ -478,10 +490,10 @@ def _encode_spec(
     *,
     url_col: str,
     ts_col: str | None,
-    resolution: int | None,
+    resolution: int | None = None,
     bucket_seconds: int = bk.DEFAULT_BUCKET_SECONDS,
     est_rows: int,
-    est_raw_bytes: int | None,
+    est_raw_bytes: int | None = None,
     ts_range: tuple[int, int] | None = None,
     target_rows_per_block: int | None = None,
     max_rows_per_block: int | None = None,
@@ -1128,14 +1140,16 @@ def _write_chunk(
 
     ``blocks`` is a Spark plan (written by :func:`_write_data`; one
     aggregate job over this chunk's dir yields the record's figures,
-    ``FIGURES``) or, from the driver branch of :func:`append_chunk`,
-    encoded block rows in an Arrow table: the dir is cleared and the
-    rows land as one parquet file through a temp name and a rename,
-    their figures taken from the rows, with no Spark job. Either way the
-    dir holds only this write's files, whichever branch wrote it
-    before. The record's ``writer`` says which branch ran (``"spark"``
-    or ``"driver"``); every commit over the chunk sums its totals from
-    the record (:func:`_chunk_totals`)."""
+    ``FIGURES``) or, from a driver branch, encoded block rows in an
+    Arrow table in (block, salt) order: the dir is cleared and the rows
+    land as the block-ordered files :func:`_write_data` would cut them
+    into (:func:`_range_cuts`; one file for ``n_files=None``), each
+    through a temp name and a rename, their figures taken from the
+    rows, with no Spark job. Either way the dir holds only this write's
+    files, whichever branch wrote it before. The record's ``writer``
+    says which branch ran (``"spark"`` or ``"driver"``); every commit
+    over the chunk sums its totals from the record
+    (:func:`_chunk_totals`)."""
     t0 = time.time()
     dest = os.path.join(_data_path(path), f"chunk={k}")
     if isinstance(blocks, pa.Table):
@@ -1145,9 +1159,11 @@ def _write_chunk(
 
         fsio.delete_dir(spark, dest)
         os.makedirs(dest)
-        tmp = os.path.join(dest, ".part-00000.parquet.tmp")
-        pq.write_table(blocks, tmp)
-        os.replace(tmp, os.path.join(dest, "part-00000.parquet"))
+        cuts = _range_cuts(blocks.num_rows, n_files or 1)
+        for i, (lo, hi) in enumerate(zip(cuts[:-1], cuts[1:])):
+            tmp = os.path.join(dest, f".part-{i:05d}.parquet.tmp")
+            pq.write_table(blocks.slice(lo, hi - lo), tmp)
+            os.replace(tmp, os.path.join(dest, f"part-{i:05d}.parquet"))
         figures, writer = _block_figures(blocks), "driver"
     else:
         _write_data(blocks, dest, n_files)
@@ -1163,33 +1179,49 @@ def _write_chunk(
     return rec
 
 
-# The largest chunk the driver encodes: the salt cap (4 cells' worth),
-# so the driver branch's one collect stays bounded.
-DRIVER_WRITE_MAX_RAW = 4 * bk.TARGET_CELL_BYTES
+def _range_cuts(m: int, n: int) -> list[int]:
+    """File boundaries, as row offsets, for ``m`` sorted block rows
+    written as :func:`_write_data`'s ``repartitionByRange(n)`` writes
+    them: Spark's range bounds over a fully sampled input of distinct
+    keys (``RangePartitioner.determineBounds``, every row of weight 1),
+    with no file for an empty range and one file for no rows."""
+    step = m / n
+    target, cuts = step, [0]
+    for i in range(1, m + 1):
+        if len(cuts) == n:
+            break
+        if i >= target:
+            cuts.append(i)
+            target += step
+    if cuts[-1] != m or m == 0:
+        cuts.append(m)
+    return cuts
 
 
 def _write_on_driver(
     raw_bytes: int, rows: int, resolution: int, parallelism: int,
     effort: str, *, decode: bool = False,
 ) -> bool:
-    """The driver-side write gate of :func:`append_chunk` and
-    :func:`compact_chunks`: True when encoding ``rows`` rows of
-    ``raw_bytes`` raw bytes (and, for a compaction, ``decode`` decoding
-    them first) takes no longer in the driver than as a Spark write, and
-    the rows are at most ``DRIVER_WRITE_MAX_RAW`` (16 MiB). That is
-    ``placement.driver_wins`` with the one-core kernel time at
-    ``R_ENC[effort]`` (plus ``R_DEC``), spread by the plan over the
-    ``min(4^resolution, rows)`` encode groups, against the write plan's
-    fixed cost ``F_WRITE`` less the driver's own per-row keying
-    (``T_KEY``)."""
-    if raw_bytes > DRIVER_WRITE_MAX_RAW:
-        return False
+    """The driver-side write gate of :func:`encode_to_path`,
+    :func:`append_chunk` and :func:`compact_chunks`: True when encoding
+    ``rows`` rows of ``raw_bytes`` raw bytes (and, for a compaction,
+    ``decode`` decoding them first) takes no longer in the driver than
+    as a Spark write (``placement.driver_gate``, at most 16 MiB). The
+    one-core kernel time is ``raw_bytes / R_ENC[effort]`` (plus
+    ``/ R_DEC``), split into ``min(4^resolution, rows)`` encode groups
+    that both sides run in parallel. The driver alone keys the rows
+    (``T_KEY`` each) and, unless the rows come from its own decode,
+    collects them (``R_COLLECT``); the plan pays ``F_WRITE``."""
     kernel_s = raw_bytes / placement.R_ENC.get(effort, placement.R_ENC["max"])
+    local_s = rows * placement.T_KEY
     if decode:
         kernel_s += raw_bytes / placement.R_DEC
-    return placement.driver_wins(
-        kernel_s, min(4**resolution, rows), parallelism,
-        placement.F_WRITE - rows * placement.T_KEY,
+    else:
+        local_s += raw_bytes / placement.R_COLLECT
+    return placement.driver_gate(
+        "write", raw_bytes=raw_bytes, rows=rows,
+        units=min(4**resolution, rows), parallelism=parallelism,
+        kernel_s=kernel_s, fixed_s=placement.F_WRITE, local_s=local_s,
     )
 
 
@@ -1223,32 +1255,44 @@ def encode_to_path(
     """End-to-end encode job with chunked checkpoint-resume.
 
     Every table is chunked: chunk ``k`` lands in ``data/chunk=<k>``,
-    each an independently written Spark job followed by its lineage
-    record (rows, bytes, wall seconds), and the encode commits once
-    over ``chunks`` 0..n-1. One chunk (the default) encodes the whole
-    input with the table-wide placement; ``chunks > 1`` cuts the cells
-    into ``chunks`` contiguous ranges (``blockkey.chunk_col``), so an
-    encode unit never spans chunks and no chunk is empty while there
-    are at least as many hash cells as chunks.
-    ``resume=True`` skips chunks whose lineage record exists —
-    re-running a half-finished encode does not duplicate or re-encode
-    completed chunks. A legacy flat table at ``path`` is refused.
+    each independently written and followed by its lineage record
+    (rows, bytes, wall seconds), and the encode commits once over
+    ``chunks`` 0..n-1. One chunk (the default) encodes the whole input
+    with the table-wide placement; ``chunks > 1`` cuts the cells into
+    ``chunks`` contiguous ranges (``blockkey.chunk_col``), so an encode
+    unit never spans chunks and no chunk is empty while there are at
+    least as many hash cells as chunks. ``resume=True`` skips chunks
+    whose lineage record exists — re-running a half-finished encode does
+    not duplicate or re-encode completed chunks. A legacy flat table at
+    ``path`` is refused.
 
     Geometry comes from one bind-time stats job (:func:`bind_stats`):
     its raw-byte total picks the smallest resolution with at most 4 MiB
     raw per cell (see :func:`encode_table`), unless the caller passes
-    ``target_rows_per_block`` or ``resolution``."""
+    ``target_rows_per_block`` or ``resolution``.
+
+    Branch: the same raw-byte total feeds the write gate
+    (:func:`_write_on_driver`). On a local table with the hash shuffle,
+    ``avg`` salts and the sorted write, an input the gate admits (at
+    most 16 MiB raw) is collected once (``toArrow``), encoded on the
+    driver by :func:`encode_rows` and split into chunks by its block
+    keys (``blockkey.chunk_of_keys``); each chunk lands as many
+    block-ordered files as the Spark branch's. Otherwise each chunk is
+    an :func:`encode_table` plan. Both give the same payload bytes."""
     est_rows = kwargs.pop("est_rows", None)
     need_ts = (
         ts_col is not None
         and kwargs.get("ts_range") is None
         and ts_col in {f.name for f in df.schema.fields}
     )
-    need_raw = (
-        kwargs.get("target_rows_per_block") is None
-        and kwargs.get("est_raw_bytes") is None
-    )
-    if est_rows is None or need_ts or need_raw:
+    # the raw bytes size the geometry (the byte rule) and the write
+    # gate; without a sizing job for other reasons the gate goes unfed
+    need_raw = kwargs.get("est_raw_bytes") is None
+    if (
+        est_rows is None
+        or need_ts
+        or (need_raw and kwargs.get("target_rows_per_block") is None)
+    ):
         n, raw, ts_range = bind_stats(
             df, ts_col=ts_col if need_ts else None, raw=need_raw
         )
@@ -1279,20 +1323,53 @@ def encode_to_path(
     n_files = max(2, p) if one else max(1, p // chunks)
     if not one:
         kwargs["num_partitions"] = n_files
-    for k in range(chunks):
-        blocks, man = encode_table(
-            df,
-            url_col=url_col,
-            ts_col=ts_col,
-            est_rows=est_rows,
-            chunk=None if one else (k, chunks),
-            **kwargs,
+    from . import fsio
+
+    zlib_level = kwargs.get("zlib_level", 6)
+    man, *_ = _encode_spec(
+        columns_of(df), url_col=url_col, ts_col=ts_col, est_rows=est_rows,
+        **{k: v for k, v in kwargs.items()
+           if k not in ("zlib_level", "num_partitions", "salt_mode")},
+    )
+    raw = kwargs.get("est_raw_bytes")
+    if (
+        raw is not None
+        and sorted_write
+        and man["shuffle"] == "hash"
+        and kwargs.get("salt_mode", "avg") == "avg"
+        and not fsio.is_remote(path)
+        and _write_on_driver(
+            raw, est_rows, man["key"]["resolution"], p, man["effort"]
         )
-        if k not in done:
-            _write_chunk(
-                spark, path, k, blocks, n_files if sorted_write else None,
-                split=CHUNK_SPLIT,
+    ):
+        # the driver branch: one bounded collect, every chunk's groups
+        # encoded on one pool, each chunk's block rows cut by key
+        todo = [k for k in range(chunks) if k not in done]
+        if todo:
+            res = man["key"]["resolution"]
+            blocks = encode_rows(
+                df.toArrow(), man, zlib_level,
+                threads=placement.driver_threads(min(4**res, est_rows), p),
             )
+            of = bk.chunk_of_keys(blocks[BLOCK].to_numpy(), res, chunks)
+        for k in todo:
+            part = blocks if one else blocks.filter(pa.array(of == k))
+            _write_chunk(spark, path, k, part, n_files, split=CHUNK_SPLIT)
+    else:
+        for k in range(chunks):
+            blocks, man = encode_table(
+                df,
+                url_col=url_col,
+                ts_col=ts_col,
+                est_rows=est_rows,
+                chunk=None if one else (k, chunks),
+                **kwargs,
+            )
+            if k not in done:
+                _write_chunk(
+                    spark, path, k, blocks, n_files if sorted_write else None,
+                    split=CHUNK_SPLIT,
+                )
     # resumed chunks count from their records like the fresh ones; a
     # stale orphan chunk dir (a crashed append, a rollback awaiting
     # expiry) is outside the chunk set and never inflates the totals
@@ -1466,20 +1543,21 @@ def append_chunk(
         )
     from . import fsio
 
+    p = spark.sparkContext.defaultParallelism
     on_driver = _rows is not None or (
         shuffle == "hash"
         and not fsio.is_remote(path)
-        and _write_on_driver(
-            raw, n, key["resolution"], spark.sparkContext.defaultParallelism,
-            effort,
-        )
+        and _write_on_driver(raw, n, key["resolution"], p, effort)
     )
     k = _claim_chunk(spark, path, base_snap, _batch)
     if on_driver:
         # the driver branch: one bounded collect (or the compaction's
         # decoded rows), encoded in-process under the same manifest
         rows = _rows if _rows is not None else df.toArrow()
-        blocks = encode_rows(rows, chunk_man, zlib_level)
+        blocks = encode_rows(
+            rows, chunk_man, zlib_level,
+            threads=placement.driver_threads(min(4 ** key["resolution"], n), p),
+        )
     else:
         blocks, _ = encode_table(df, zlib_level=zlib_level, **geometry)
     # carry evolution metadata through re-finalization: the new chunk's
@@ -2511,6 +2589,7 @@ def compact_chunks(
     figs = [lin.get(c, {}) for c in sel]
     from . import fsio, reader
 
+    p = spark.sparkContext.defaultParallelism
     if (
         shuffle == "hash"
         and not fsio.is_remote(path)
@@ -2518,16 +2597,19 @@ def compact_chunks(
         and _write_on_driver(
             sum(int(f["raw_bytes"]) for f in figs),
             sum(int(f["rows"]) for f in figs), man["key"]["resolution"],
-            spark.sparkContext.defaultParallelism, effort, decode=True,
+            p, effort, decode=True,
         )
     ):
         # the driver branch: decode in-process by the reader's delete
-        # rule; no Spark plan is built
+        # rule, block rows on one pool; no Spark plan is built
         files = [f for f in reader.visible_files(path, cur) if f[0] in sel]
         sels = reader.select_block_rows(files, man, reader.Envelope(man))
         deletes = reader.load_deletes(path, entries)
+        threads = placement.driver_threads(sum(s.n_blocks for s in sels), p)
         rows, local = None, pa.Table.from_batches(
-            list(reader.iter_blocks(sels, man, names, deletes=deletes)),
+            list(reader.iter_blocks(
+                sels, man, names, deletes=deletes, threads=threads
+            )),
             schema=reader.arrow_schema(_scan._colspecs(man, names)),
         )
     else:

@@ -7,14 +7,20 @@ serial codec groups while cores idle — guide §2.5).
 :func:`plan` is the one entry point, shared by the planned encode
 placement (encode.py) and the per-block re-encode spread (scan.py).
 
-:func:`driver_wins` is the other placement decision: whether a small
+:func:`driver_gate` is the other placement decision: whether a small
 read or write runs in the driver process or as a Spark plan. Its one
-inequality gates both the driver-local read (``scan._read_on_driver``)
-and the driver-side chunk write (``encode._write_on_driver``)."""
+inequality (:func:`driver_wins`) gates both the driver-local reads
+(``scan._read_on_driver``) and the driver-side writes
+(``encode._write_on_driver``), and :func:`driver_map` runs the driver
+branch's kernels on one bounded pool of :func:`driver_threads`."""
 
 from __future__ import annotations
 
 import heapq
+import json
+import logging
+import os
+from concurrent.futures import ThreadPoolExecutor
 
 
 def murmur3_hash_long(v: int, seed: int = 42) -> int:
@@ -119,34 +125,108 @@ def plan(df, key_cols: list[str], cost_col, n_bins: int, cap: int):
     )
 
 
+
+
 # ------------------------------------------------- driver or plan ----
 #
-# Kernel rates and fixed plan costs, measured on a 4-core VM at
-# local[4] on the benchmark's webtext (1-2 KB raw per row):
+# Kernel rates, driver-only costs and fixed plan costs, measured on a
+# 4-core VM at local[4] on the benchmark's 6,000-row webtext table
+# (7.9 MB raw, 1-2 KB a row, 4 block rows; medians of 3-5):
 #
-# * R_DEC: one core decoded a whole 7.9 MB-raw block row in 0.34 s, and
-#   ~2 MB block rows at 20-21.5 MB/s.
-# * R_ENC: one core encodes 600-1,500-row groups at ~6.6 MB/s at max
-#   effort (bz2-led) and 50-90 MB/s at fast effort (zstd-led).
+# * R_DEC: one thread decoded its 4 block rows at 24.6 MB/s (0.32 s);
+#   2 threads took 0.18 s and 4 threads 0.11 s.
+# * R_ENC: one thread encoded its 4 groups at 7.5 MB/s at max effort
+#   (bz2-led, 1.06 s) and 73 MB/s at fast effort (zstd-led), keying
+#   excluded; 4 threads took the max-effort encode to 0.37 s.
 # * F_READ: a url lookup or one-day range costs 0.46-0.61 s more as a
-#   Spark plan than in-process (medians of 10).
+#   Spark plan than in-process; a full read_rows took 0.66 s as a plan
+#   and 0.38 s on the driver, hand-back included.
 # * F_WRITE: a 150-row append took 0.99-1.36 s as a Spark write and
-#   0.20-0.37 s from the driver; the plan's encode, write and recount
-#   jobs cost ~0.9 s more.
+#   0.20-0.37 s from the driver, and a 150-row encode_to_path 1.05 s
+#   and 0.33 s: the plan's encode, write and recount jobs cost ~0.7-0.9 s.
 # * T_KEY: the driver keys each row with a pure-Python XXH64 of its url
-#   (14 us for a 34-byte url), work the Spark plan does in the JVM.
-R_DEC = 23e6
-R_ENC = {"max": 6.6e6, "fast": 50e6}
+#   (0.08 s for the 6,000 rows), work the Spark plan does in the JVM.
+# * R_COLLECT: ``toArrow`` of the parquet input took 0.32 s, its job
+#   included.
+# * R_HAND: a driver result handed back as a DataFrame
+#   (``createDataFrame`` from Arrow, then the caller's ``toArrow``) took
+#   0.16 s.
+R_DEC = 24e6
+R_ENC = {"max": 7.5e6, "fast": 70e6}
 F_READ = 0.55
-F_WRITE = 0.9
-T_KEY = 15e-6
+F_WRITE = 0.8
+T_KEY = 14e-6
+R_COLLECT = 28e6
+R_HAND = 50e6
+
+# The most raw bytes any driver branch collects, reads or encodes: the
+# salt cap, 4 cells' worth (16 MiB).
+DRIVER_MAX_RAW = 16 << 20
+
+log = logging.getLogger(__name__)
 
 
-def driver_wins(kernel_s: float, units: int, parallelism: int, fixed_s: float) -> bool:
-    """True when ``kernel_s`` seconds of one-core kernel work run no
-    slower in the driver than as a Spark plan. The plan can spread the
-    work over ``min(units, parallelism)`` cores, saving ``kernel_s *
-    (1 - 1 / min(units, P))``, and pays ``fixed_s`` for its jobs; the
-    driver wins while that saving is at most ``fixed_s``."""
-    spread = max(1, min(units, parallelism))
-    return kernel_s * (1 - 1 / spread) <= fixed_s
+def driver_cores() -> int:
+    """Cores this driver process may run on."""
+    try:
+        return len(os.sched_getaffinity(0))
+    except AttributeError:  # pragma: no cover - not Linux
+        return os.cpu_count() or 1
+
+
+def driver_threads(units: int, parallelism: int) -> int:
+    """The driver plane's pool size for ``units`` independent kernel
+    calls: ``min(P, units, driver cores)``, P the session's
+    ``defaultParallelism``. 1 means serial, with no pool."""
+    return max(1, min(parallelism, units, driver_cores()))
+
+
+def driver_wins(
+    kernel_s: float, units: int, parallelism: int, threads: int,
+    fixed_s: float, local_s: float,
+) -> bool:
+    """True when ``kernel_s`` seconds of one-core kernel work, split
+    into ``units`` independent calls, finish no later in the driver
+    than as a Spark plan. The plan spreads them over ``min(units, P)``
+    cores and pays ``fixed_s`` for its jobs; the driver spreads them
+    over ``min(units, threads)`` cores and pays ``local_s`` for what
+    only it does (keying, the collect, the hand-back). With as many
+    driver threads as plan cores the kernel terms cancel, and the
+    driver-only costs meet the plan's fixed cost."""
+    plan_s = kernel_s / max(1, min(units, parallelism)) + fixed_s
+    local = kernel_s / max(1, min(units, threads)) + local_s
+    return local <= plan_s
+
+
+def driver_gate(
+    gate: str, *, raw_bytes: int, rows: int | None, units: int,
+    parallelism: int, kernel_s: float, fixed_s: float, local_s: float,
+) -> bool:
+    """One driver-or-plan decision: :func:`driver_wins` at the pool
+    size :func:`driver_threads` gives, refused above ``DRIVER_MAX_RAW``.
+    Logs one JSON record of its inputs, the branch and the threads."""
+    threads = driver_threads(units, parallelism)
+    on = raw_bytes <= DRIVER_MAX_RAW and driver_wins(
+        kernel_s, units, parallelism, threads, fixed_s, local_s
+    )
+    if log.isEnabledFor(logging.INFO):
+        log.info(json.dumps({
+            "gate": gate, "raw_bytes": raw_bytes, "rows": rows, "units": units,
+            "parallelism": parallelism, "driver_threads": threads,
+            "kernel_s": round(kernel_s, 4), "fixed_s": round(fixed_s, 4),
+            "local_s": round(local_s, 4), "branch": "driver" if on else "spark",
+            "threads": threads if on else 0,
+        }))
+    return on
+
+
+def driver_map(fn, items, threads: int):
+    """``fn`` over ``items``, results in ``items`` order. With
+    ``threads > 1`` one bounded pool of that many threads runs the
+    calls (the codec kernels release the GIL); otherwise the calls run
+    lazily in this thread and no pool starts."""
+    if threads <= 1:
+        yield from map(fn, items)
+        return
+    with ThreadPoolExecutor(max_workers=threads) as pool:
+        yield from pool.map(fn, items)

@@ -3,9 +3,9 @@
 The reference reads a value by decoding only the touched block,
 in-process (reference ``src/raster/st_raster_value.cpp:352-354``).
 This module is that read. It serves the datasource's partitions
-(``datasource.RaquetReader``) and the driver-local point and range
-reads of ``scan.point_lookup`` / ``scan.range_scan_ts``, in three
-steps:
+(``datasource.RaquetReader``), the driver-local reads of
+``scan.point_lookup`` / ``scan.range_scan_ts`` / ``scan.read_rows`` and
+the driver-side ``encode.compact_chunks``, in three steps:
 
 1. :func:`visible_files`: the parquet files of the chunks a snapshot
    lists. The ``chunk=-1`` manifest-row dir is never opened.
@@ -14,7 +14,8 @@ steps:
    pruned by footer min/max; the exact hash-cell / ts-bucket /
    ``stats.ts_min..ts_max`` match runs in numpy. No payload is read.
 3. :func:`iter_blocks`: reads the selected rows' payload columns and
-   decodes them through ``scan._block_rows``. An equality filter
+   decodes them through ``scan._block_rows``, on the driver on one
+   bounded pool (``placement.driver_map``). An equality filter
    decodes first, and a block it misses reads no other payload. The
    table's equality deletes (:func:`load_deletes`) apply by the
    sequence rule: a delete with sequence ``seq`` removes matching rows
@@ -334,15 +335,20 @@ def iter_blocks(
     *,
     eq_filter: tuple[str, object] | None = None,
     deletes: list = (),
+    threads: int = 1,
 ) -> Iterator[pa.RecordBatch]:
     """Decoded rows of the selected block rows, one batch per block
-    row, columns ``cols`` (default: all) in :func:`arrow_schema` types.
+    row in selection order, columns ``cols`` (default: all) in
+    :func:`arrow_schema` types.
 
     ``eq_filter=(col, value)`` keeps only rows with ``col == value``:
     that column's payload is read and decoded first, and a block with
     no match reads no other payload. ``deletes`` (from
     :func:`load_deletes`) drop deleted rows; their key columns are
-    decoded even when ``cols`` leaves them out."""
+    decoded even when ``cols`` leaves them out. ``threads > 1`` (a
+    driver read, ``placement.driver_threads``) decodes the block rows
+    on one bounded pool; datasource partitions keep 1 and stream."""
+    from .placement import driver_map
     from .scan import _block_rows, _colspecs, _eq_rows
 
     out_names = [s[0] for s in _colspecs(man, cols)]
@@ -357,53 +363,63 @@ def iter_blocks(
     if eq_filter is not None:
         fname, fval = eq_filter
         first, first_rows = _block_rows(man, [s for s in specs if s[0] == fname])
-    for sel in sels:
-        live = _live_deletes(deletes, sel.chunk)
-        pf = pq.ParquetFile(sel.path)
-        have = set(pf.schema_arrow.names)
 
-        def read(rg, blobs, offsets):
-            cols_ = ["n_rows"] + [b for b in blobs if b in have]
-            return pf.read_row_group(rg, columns=cols_).take(pa.array(offsets))
+    def units():
+        """``(live deletes, dec, hit)`` per selected block row: its
+        payloads read, its decode not yet run."""
+        for sel in sels:
+            live = _live_deletes(deletes, sel.chunk)
+            pf = pq.ParquetFile(sel.path)
+            have = set(pf.schema_arrow.names)
 
-        for rg, offsets in sel.rows:
-            hits = None
-            if eq_filter is None:
-                t = read(rg, blob_names, offsets)
-            else:
-                t = read(rg, first, offsets)
-                found = {}
-                for i, _, dec in first_rows(t):
-                    arr = dec(fname)
-                    j = _eq_rows(arr, fval)
-                    if len(j):
-                        found[i] = (pa.array(j), arr.take(pa.array(j)))
-                if not found:
-                    continue
-                keep = sorted(found)
-                t = t.take(pa.array(keep))
-                rest = [b for b in blob_names if b not in first]
-                if rest:
-                    t2 = read(rg, rest, [offsets[i] for i in keep])
-                    for b in t2.column_names[1:]:
-                        t = t.append_column(b, t2[b])
-                hits = [found[i] for i in keep]
-            for i, _, dec in block_rows(t):
-                if hits is None:
-                    arrays = [dec(name) for name, _, _ in specs]
+            def read(rg, blobs, offsets, pf=pf, have=have):
+                cols_ = ["n_rows"] + [b for b in blobs if b in have]
+                return pf.read_row_group(rg, columns=cols_).take(pa.array(offsets))
+
+            for rg, offsets in sel.rows:
+                hits = None
+                if eq_filter is None:
+                    t = read(rg, blob_names, offsets)
                 else:
-                    j, farr = hits[i]
-                    arrays = [
-                        farr if name == fname else dec(name).take(j)
-                        for name, _, _ in specs
-                    ]
-                batch = pa.RecordBatch.from_arrays(
-                    [a.cast(f.type) if a.type != f.type else a
-                     for a, f in zip(arrays, schema)],
-                    schema=schema,
-                )
-                if live:
-                    batch = _drop_deleted(batch, live)
-                if batch.num_rows:
-                    yield batch.select(out_names)
+                    t = read(rg, first, offsets)
+                    found = {}
+                    for i, _, dec in first_rows(t):
+                        arr = dec(fname)
+                        j = _eq_rows(arr, fval)
+                        if len(j):
+                            found[i] = (pa.array(j), arr.take(pa.array(j)))
+                    if not found:
+                        continue
+                    keep = sorted(found)
+                    t = t.take(pa.array(keep))
+                    rest = [b for b in blob_names if b not in first]
+                    if rest:
+                        t2 = read(rg, rest, [offsets[i] for i in keep])
+                        for b in t2.column_names[1:]:
+                            t = t.append_column(b, t2[b])
+                    hits = [found[i] for i in keep]
+                for i, _, dec in block_rows(t):
+                    yield live, dec, None if hits is None else hits[i]
 
+    def decode(unit) -> pa.RecordBatch:
+        live, dec, hit = unit
+        if hit is None:
+            arrays = [dec(name) for name, _, _ in specs]
+        else:
+            j, farr = hit
+            arrays = [
+                farr if name == fname else dec(name).take(j)
+                for name, _, _ in specs
+            ]
+        batch = pa.RecordBatch.from_arrays(
+            [a.cast(f.type) if a.type != f.type else a
+             for a, f in zip(arrays, schema)],
+            schema=schema,
+        )
+        if live:
+            batch = _drop_deleted(batch, live)
+        return batch.select(out_names)
+
+    for batch in driver_map(decode, units(), threads):
+        if batch.num_rows:
+            yield batch

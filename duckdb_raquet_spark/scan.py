@@ -19,13 +19,14 @@ The same three prunes run in two places. Spark plans use pushed
 predicates (:func:`prune_blocks_for_url_hash`,
 :func:`prune_blocks_for_ts`). The in-process block reader
 (``reader.py``) applies them with footer statistics and numpy.
-:func:`point_lookup` and :func:`range_scan_ts` on a local table first
-select their block rows with that reader. When :func:`_read_on_driver`
-finds the selected rows' decode cheaper than a Spark plan's fixed cost,
-the read runs on the driver: no Spark job, and the rows come back as a
-local DataFrame. Otherwise, and for ``scheme://`` paths, the Spark plan
-runs. Data reads declare the manifest's schema and never open the
-``chunk=-1`` manifest-row dir.
+:func:`point_lookup`, :func:`range_scan_ts` and :func:`read_rows` on a
+local table first select their block rows with that reader. When
+:func:`_read_on_driver` finds the selected rows' decode no slower in
+the driver than as a Spark plan, the read runs on the driver, its
+block rows decoded on one bounded pool: no Spark job, and the rows come
+back as a local DataFrame. Otherwise, and for ``scheme://`` paths, the
+Spark plan runs. Data reads declare the manifest's schema and never
+open the ``chunk=-1`` manifest-row dir.
 """
 
 from __future__ import annotations
@@ -142,6 +143,20 @@ def read_blocks_at(
         if snapshot_id is not None or as_of_unix is not None:
             raise FileNotFoundError(f"no snapshot log at {path}")
         return read_blocks(spark, path)
+    snap = _pick_snapshot(spark, path, snaps, snapshot_id, as_of_unix)
+    # raw read, NOT read_blocks: a pre-rollback snapshot may reference
+    # chunks the current snapshot no longer shows (still on disk until
+    # expire_snapshots reclaims them)
+    return _data_rows(_read_raw(spark, path), snap["chunks"])
+
+
+def _pick_snapshot(
+    spark, path: str, snaps: dict, snapshot_id: int | None,
+    as_of_unix: float | None,
+) -> dict:
+    """The snapshot of ``snaps`` (a non-empty log) a time-travel read
+    names: ``snapshot_id``, the last at or before ``as_of_unix``, or
+    the current one."""
     if snapshot_id is not None and as_of_unix is not None:
         raise ValueError("pass snapshot_id OR as_of_unix, not both")
     if snapshot_id is not None:
@@ -149,17 +164,13 @@ def read_blocks_at(
             raise KeyError(
                 f"no snapshot {snapshot_id} at {path}; have {sorted(snaps)}"
             )
-        snap = snaps[snapshot_id]
-    elif as_of_unix is not None:
+        return snaps[snapshot_id]
+    if as_of_unix is not None:
         snap = mf.snapshot_as_of(path, as_of_unix, spark)
         if snap is None:
             raise KeyError(f"no snapshot at or before {as_of_unix} in {path}")
-    else:
-        snap = snaps[max(snaps)]
-    # raw read, NOT read_blocks: a pre-rollback snapshot may reference
-    # chunks the current snapshot no longer shows (still on disk until
-    # expire_snapshots reclaims them)
-    return _data_rows(_read_raw(spark, path), snap["chunks"])
+        return snap
+    return snaps[max(snaps)]
 
 
 def _guard_rewrites(snaps: dict, from_id: int, to_id: int, what: str) -> None:
@@ -613,29 +624,26 @@ def read_delete_entries(
     live list in its snapshot, so the entry list at snapshot S is S's
     own record — a snapshot without the key predates all deletes.
     Tables without a snapshot log fall back to the sidecar manifest."""
+    return _snapshot_entries(spark, path, snapshot_id, as_of_unix)[1]
+
+
+def _snapshot_entries(
+    spark: SparkSession, path: str, snapshot_id: int | None,
+    as_of_unix: float | None,
+) -> tuple[dict | None, list[dict]]:
+    """``(snapshot, delete entries)`` a read at ``snapshot_id`` /
+    ``as_of_unix`` (default: current) sees; the snapshot is ``None``
+    on a table without a snapshot log."""
     snaps = mf.read_snapshots(path, spark)
     if not snaps:
         man = mf.read_sidecar(path, spark)
-        return list((man or {}).get("delete_files", []))
-    if snapshot_id is not None and as_of_unix is not None:
-        raise ValueError("pass snapshot_id OR as_of_unix, not both")
-    if snapshot_id is not None:
-        if snapshot_id not in snaps:
-            raise KeyError(
-                f"no snapshot {snapshot_id} at {path}; have {sorted(snaps)}"
-            )
-        snap = snaps[snapshot_id]
-    elif as_of_unix is not None:
-        snap = mf.snapshot_as_of(path, as_of_unix, spark)
-        if snap is None:
-            raise KeyError(f"no snapshot at or before {as_of_unix} in {path}")
-    else:
-        snap = snaps[max(snaps)]
+        return None, list((man or {}).get("delete_files", []))
+    snap = _pick_snapshot(spark, path, snaps, snapshot_id, as_of_unix)
     # replay rename-column ops committed AFTER this snapshot so its
     # entries resolve against the CURRENT manifest's names (decoded
     # rows always carry current names; the value files themselves are
     # read positionally, so only the logical label needs updating)
-    return mf.remap_delete_entries(
+    return snap, mf.remap_delete_entries(
         snaps, snap["snapshot_id"], list(snap.get("delete_files", []))
     )
 
@@ -772,24 +780,34 @@ def read_rows(
     man: dict | None = None,
 ) -> DataFrame:
     """The table-level reader: time-travel block scan + decode +
-    merge-on-read equality-delete anti-join. This is what SELECT means
-    on a table with row-level deletes; ``read_blocks``/``decode_blocks``
+    merge-on-read equality deletes. This is what SELECT means on a
+    table with row-level deletes; ``read_blocks``/``decode_blocks``
     stay the physical layer underneath (deletes not applied).
-    ``ref`` reads at a named tag (``encode.create_tag``)."""
+    ``ref`` reads at a named tag (``encode.create_tag``).
+
+    On a local table whose decode :func:`_read_on_driver` admits (at
+    most 16 MiB raw), the in-process reader decodes the snapshot's
+    block rows on the driver's pool, drops deleted rows by its
+    sequence rule and returns a local DataFrame (evaluated now, not at
+    the first action). Otherwise the Spark plan runs: ``mapInArrow``
+    decode and a broadcast anti-join per delete key set. Both sides
+    return the same rows under the same schema."""
     if ref is not None:
         if snapshot_id is not None or as_of_unix is not None:
             raise ValueError("pass snapshot_id, as_of_unix OR ref, not both")
         snapshot_id = mf.resolve_ref(path, ref, spark)
     man = man or read_manifest(spark, path)
+    snap, entries = _snapshot_entries(spark, path, snapshot_id, as_of_unix)
+    if snap is None and (snapshot_id is not None or as_of_unix is not None):
+        raise FileNotFoundError(f"no snapshot log at {path}")
+    entries = entries if apply_deletes else []
+    local = _driver_read(
+        spark, path, man, reader.Envelope(man), cols, at=(snap, entries)
+    )
+    if local is not None:
+        return _local_frame(spark, man, local, cols)
     blocks = read_blocks_at(
         spark, path, snapshot_id=snapshot_id, as_of_unix=as_of_unix
-    )
-    entries = (
-        read_delete_entries(
-            spark, path, snapshot_id=snapshot_id, as_of_unix=as_of_unix
-        )
-        if apply_deletes
-        else []
     )
     return _decode_with_entries(spark, path, blocks, man, cols, entries)
 
@@ -1033,12 +1051,16 @@ def read_changes(
 # ------------------------------------------------------------ point/range ----
 
 
-def _read_on_driver(raw_bytes: int, n_blocks: int, parallelism: int) -> bool:
+def _read_on_driver(
+    raw_bytes: int, n_blocks: int, parallelism: int, hand_back: int
+) -> bool:
     """The driver-local read gate: True when decoding ``n_blocks``
-    selected block rows holding ``raw_bytes`` raw bytes in-process is
-    no slower than a Spark plan (``placement.driver_wins`` with the
-    decode rate ``R_DEC`` and the read plan's fixed cost ``F_READ``).
-    The only parallelism the Spark path offers is across block rows.
+    selected block rows holding ``raw_bytes`` raw bytes in-process, on
+    the driver's pool, is no slower than a Spark plan
+    (``placement.driver_gate``, at most 16 MiB raw). Both sides spread
+    the decode (``R_DEC``) over the block rows; the driver alone hands
+    ``hand_back`` raw bytes of result back as a DataFrame (``R_HAND``),
+    and the plan pays ``F_READ``.
 
     Measured on a 4-core VM at ``local[4]``, on the benchmark's
     6,000-row webtext table (7.9 MB raw): as one block row, a url
@@ -1048,8 +1070,10 @@ def _read_on_driver(raw_bytes: int, n_blocks: int, parallelism: int) -> bool:
     0.77-0.81 s against 0.23-0.24 s and a range 0.73-0.74 s against
     0.27-0.28 s, so the plan costs 0.46-0.56 s more per read.
     """
-    return placement.driver_wins(
-        raw_bytes / placement.R_DEC, n_blocks, parallelism, placement.F_READ
+    return placement.driver_gate(
+        "read", raw_bytes=raw_bytes, rows=None, units=n_blocks,
+        parallelism=parallelism, kernel_s=raw_bytes / placement.R_DEC,
+        fixed_s=placement.F_READ, local_s=hand_back / placement.R_HAND,
     )
 
 
@@ -1061,29 +1085,38 @@ def _driver_read(
     cols: list[str] | None,
     *,
     eq_filter: tuple[str, object] | None = None,
+    at: tuple[dict | None, list[dict]] | None = None,
 ):
     """The decoded rows (an Arrow table) of a read that
     :func:`_read_on_driver` keeps on the driver, by the in-process
-    reader: the current snapshot's block rows ``env`` selects, the
-    table's equality deletes applied. ``None`` when the read runs as a
-    Spark plan instead: a ``scheme://`` path, or too much decode work."""
+    reader: the block rows ``env`` selects and the equality deletes
+    applied, at ``at = (snapshot, delete entries)`` (default: the
+    current snapshot and ``man``'s deletes). The block rows decode on
+    the driver's pool. ``None`` when the read runs as a Spark plan
+    instead: a ``scheme://`` path, or too much decode work."""
     from . import fsio
 
     if fsio.is_remote(path):
         return None
-    files = reader.visible_files(path, mf.current_snapshot(path, spark))
+    snap, entries = at or (
+        mf.current_snapshot(path, spark), man.get("delete_files") or []
+    )
+    files = reader.visible_files(path, snap)
     sels = reader.select_block_rows(files, man, env)
-    if not _read_on_driver(
-        sum(s.raw_bytes for s in sels),
-        sum(s.n_blocks for s in sels),
-        spark.sparkContext.defaultParallelism,
-    ):
+    raw = sum(s.raw_bytes for s in sels)
+    n_blocks = sum(s.n_blocks for s in sels)
+    p = spark.sparkContext.defaultParallelism
+    # an equality filter hands back its few matching rows
+    if not _read_on_driver(raw, n_blocks, p, 0 if eq_filter else raw):
         return None
     import pyarrow as pa
 
-    deletes = reader.load_deletes(path, man.get("delete_files") or [])
+    deletes = reader.load_deletes(path, entries)
     return pa.Table.from_batches(
-        list(reader.iter_blocks(sels, man, cols, eq_filter=eq_filter, deletes=deletes)),
+        list(reader.iter_blocks(
+            sels, man, cols, eq_filter=eq_filter, deletes=deletes,
+            threads=placement.driver_threads(n_blocks, p),
+        )),
         schema=reader.arrow_schema(_colspecs(man, cols)),
     )
 

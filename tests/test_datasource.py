@@ -2,8 +2,8 @@
 
 The writer is the map-only encode through Spark's own commit protocol
 (the table's one commit written LAST in commit()); the reader serves the
-LOGICAL schema with url/warc_ts predicates pruning files and row groups
-via parquet footer statistics on the sorted block column."""
+LOGICAL schema, one partition per visible data file, and Spark applies
+every predicate to the decoded rows."""
 
 from __future__ import annotations
 
@@ -168,34 +168,25 @@ def test_datasource_reads_engine_tables_with_pushdown(registered, tmp_path):
     assert back.where(F.col("warc_ts") <= cutoff).count() == want
 
 
-def test_reader_prunes_partitions_on_sorted_layout(registered, tmp_path):
-    """On a block-sorted table (multiple range-partitioned files), a url
-    equality pinned to its capture time (one block key) must prune file
-    partitions via footer min/max. A url alone selects one block per
-    time cell, which this table spreads over every file; the data
-    files of an unfiltered read exclude the chunk=-1 manifest row."""
+def test_requery_of_one_loaded_frame(registered, tmp_path):
+    """One loaded DataFrame, queried with a filter and then without:
+    the unfiltered count and a write see every row. Spark reuses a
+    filtered query's planned partitions for a later query that pushes
+    no filter, so no filter may narrow them. The partitions exclude the
+    chunk=-1 manifest row."""
     spark = registered
-    df = synth.synth_webtext(spark, 400, num_partitions=4)
-    path = str(tmp_path / "sorted_table")
-    encode.encode_to_path(
-        spark, df, path, target_rows_per_block=16, resolution=5, num_partitions=4
-    )
-    row = df.orderBy("url").first()
-    r_all = RaquetReader({"path": path}, None)
-    parts = r_all.partitions()
-    n_all = len(parts)
-    assert all("chunk=-1" not in p.path for p in parts)
-    r = RaquetReader({"path": path}, None)
-    from pyspark.sql.datasource import EqualTo
-
-    list(r.pushFilters([EqualTo(("url",), row["url"]),
-                        EqualTo(("warc_ts",), row["warc_ts"])]))
-    pruned = r.partitions()
-    assert n_all >= 2
-    assert 1 <= len(pruned) < n_all
-    got = [b for p in pruned for b in r.read(p)]
-    urls = [u for b in got for u in b.column("url").to_pylist()]
-    assert row["url"] in urls
+    df = synth.synth_webtext(spark, 120, num_partitions=2)
+    path = str(tmp_path / "two_chunks")
+    encode.encode_to_path(spark, df, path, chunks=2, target_rows_per_block=16)
+    parts = RaquetReader({"path": path}, None).partitions()
+    assert parts and all("chunk=-1" not in p.path for p in parts)
+    back = spark.read.format("raquet").load(path)
+    u = df.orderBy("url").first()["url"]
+    assert back.where(back.url == u).count() == 1
+    assert back.count() == 120
+    out = str(tmp_path / "rewritten")
+    back.write.format("raquet").mode("overwrite").save(out)
+    assert spark.read.format("raquet").load(out).count() == 120
 
 
 def test_datasource_and_compact_on_column_groups(registered, tmp_path):

@@ -311,13 +311,16 @@ def test_compact_merges_v1_entries(spark, comp_table, tmp_path):
     assert got == want
 
 
-def test_stream_accumulation_plan_bounded(spark, tmp_path):
+def test_stream_accumulation_plan_bounded(spark, tmp_path, monkeypatch):
     """The VERDICT r4 perf-weak item, measured: a CDC stream of
     micro-batch upserts accumulates one delete file per batch; the
     read plan must stay O(#key sets) — one multi-path scan, one
     broadcast anti-join — regardless of commit count, and compaction
-    collapses the file count itself back to one per key set."""
+    collapses the file count itself back to one per key set. The
+    plans asserted are the Spark side of the driver-local read gate."""
     from duckdb_raquet_spark import streaming
+
+    monkeypatch.setattr(scan, "_read_on_driver", lambda *a: False)
 
     base = _webtext(spark, n=40)
     path = str(tmp_path / "tbl")

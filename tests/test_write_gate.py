@@ -263,18 +263,23 @@ def test_stream_batch_and_replay_across_branches(spark, tmp_path, monkeypatch, b
 
 
 def test_gate_bounds_the_collect(spark, tmp_path, monkeypatch, bases):
-    """Unpinned, a small append runs on the driver; with the encode
-    rate pinned low the same delta's kernel time, spread over its
-    cells, exceeds the plan's fixed cost and it runs as a Spark write.
-    Above 16 MiB raw the gate never admits, whatever the rates; a
-    one-cell table leaves the plan nothing to spread."""
-    cap = encode.DRIVER_WRITE_MAX_RAW
+    """Above 16 MiB raw the gate never admits, whatever the rates. Below
+    it, with as many driver threads as plan cores the kernel time
+    cancels and the driver-only costs (keying, the collect) meet the
+    plan's fixed cost. A driver with fewer cores than the plan loses
+    once the kernel dominates: unpinned, a small append runs on the
+    driver, and with one driver core and the encode rate pinned low the
+    same delta runs as a Spark write."""
+    cap = placement.DRIVER_MAX_RAW
     assert not encode._write_on_driver(cap + 1, 1000, 0, 4, "fast")
     assert encode._write_on_driver(cap, 1000, 0, 4, "max")
-    assert not encode._write_on_driver(cap, 1000, 1, 4, "max")
+    assert encode._write_on_driver(cap, 1000, 1, 4, "max")
     # the driver's per-row keying counts against the plan's fixed cost
     assert encode._write_on_driver(0, 10_000, 3, 4, "max")
     assert not encode._write_on_driver(0, 100_000, 3, 4, "max")
+    monkeypatch.setattr(placement, "driver_cores", lambda: 1)
+    assert encode._write_on_driver(cap, 1000, 0, 4, "max")
+    assert not encode._write_on_driver(cap, 1000, 1, 4, "max")
     delta = _webtext(spark, 200, 230)
     for slow, writer in ((False, "driver"), (True, "spark")):
         path = str(tmp_path / f"slow-{slow}")

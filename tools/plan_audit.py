@@ -75,8 +75,8 @@ def main() -> None:
         entry._encoded(spark, args.sf_dir)
     man = scan.read_manifest(spark, enc_path)
     url0 = "https://example-0.com/page/0"
-    # lookups and ranges small enough run on the driver, without a plan:
-    # the plans audited here are the Spark side of that gate
+    # lookups, ranges and table reads small enough run on the driver,
+    # without a plan: the plans audited here are the Spark side of that gate
     spark_side = mock.patch.object(scan, "_read_on_driver", lambda *a: False)
     with spark_side:
         p = formatted(
@@ -259,7 +259,8 @@ def main() -> None:
             small.limit(40).select("url"),
         )
         encode.delete_rows(spark, del_path, "lang", ["de"])
-    p = formatted(scan.read_rows(spark, del_path, ["url", "text"]))
+    with spark_side:
+        p = formatted(scan.read_rows(spark, del_path, ["url", "text"]))
     n_anti = len(re.findall(r"BroadcastHashJoin .*LeftAnti", p))
     sections.append(
         (
@@ -454,15 +455,16 @@ def main() -> None:
     #     (per-partition top-k merged on the driver — never a global
     #     sort), and the pruned decode must read ONLY the requested
     #     column's blob (url_blob, not text/html)
-    bk_df = (
-        scan.read_rows(spark, enc_path, cols=["url"], man=man)
-        .where(F.col("url").isNotNull())
-        .select(scan.ndv_hash_col(F.col("url")).alias("h"))
-        .distinct()
-        .orderBy("h")
-        .limit(scan.NDV_SKETCH_K)
-    )
-    p = formatted(bk_df)
+    with spark_side:
+        bk_df = (
+            scan.read_rows(spark, enc_path, cols=["url"], man=man)
+            .where(F.col("url").isNotNull())
+            .select(scan.ndv_hash_col(F.col("url")).alias("h"))
+            .distinct()
+            .orderBy("h")
+            .limit(scan.NDV_SKETCH_K)
+        )
+        p = formatted(bk_df)
     sections.append(
         (
             "analyze_ndv (bottom-k sketch scan)",
