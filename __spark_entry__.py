@@ -1551,8 +1551,8 @@ def q_rt_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     encode 2 chunks, DELETE the doc_id%7==0 urls (seq=1), append a
     chunk RE-INSERTING the %14==0 half under fresh doc_ids (chunk 2 >
     seq — the sequence rule keeps them visible), DELETE lang='de'
-    (seq=2, applies everywhere). No data file is rewritten; the read is
-    decode + two broadcast anti-joins (scan.read_rows)."""
+    (seq=2, applies everywhere). No data file is rewritten; the read
+    drops deleted rows inside the block decode (scan.read_rows)."""
     tag = sf_dir.strip("/").replace("/", "_")
     path = f"/tmp/raquet_entry_del_{tag}_v{drs.__version__}"
     need = True
@@ -1596,7 +1596,7 @@ def q_rt_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     row (lang -> 'xx', matched on url) and INSERTS the doc_id%25==0
     docs under fresh urls/doc_ids. One equality delete + one appended
     chunk; no existing data file is rewritten — the read resolves the
-    merge via the sequence-rule anti-join."""
+    merge by the sequence rule inside the block decode."""
     tag = sf_dir.strip("/").replace("/", "_")
     path = f"/tmp/raquet_entry_ups_{tag}_v{drs.__version__}"
     need = True
@@ -1649,8 +1649,8 @@ def q_rt_upsert_composite(spark: SparkSession, sf_dir: str) -> DataFrame:
     pages — SAME url, new warc_ts (+30 s, off the 60 s grid, so the
     tuple is provably fresh). One equality-delete file whose v2 value
     parquet carries both key columns (_k0/_k1 + per-row _dseq) plus one
-    appended chunk; the read resolves the merge with a single broadcast
-    anti-join on the pair (encode.delete_rows / scan._delete_sides)."""
+    appended chunk; the read resolves the merge by matching the pair
+    inside the block decode (encode.delete_rows / reader.load_deletes)."""
     tag = sf_dir.strip("/").replace("/", "_")
     path = f"/tmp/raquet_entry_upsc_{tag}_v{drs.__version__}"
     need = True
@@ -1708,7 +1708,8 @@ def q_rt_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     fresh urls/doc_ids (snapshot 1), DELETE the doc_id%4==0 urls
     (snapshot 2). changes(0 -> 2) = the appended rows as inserts
     (partition-pruned to the new chunk) + the %4 rows as deletes
-    (broadcast flag join) — O(delta), no full-table diff."""
+    (kept by the delete's key set in the block decode) — O(delta), no
+    full-table diff."""
     tag = sf_dir.strip("/").replace("/", "_")
     path = f"/tmp/raquet_entry_chg_{tag}_v{drs.__version__}"
     need = True

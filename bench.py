@@ -517,8 +517,8 @@ def run_headline(sf_dir: str, cpus: int, rows: int) -> dict:
     )
 
     # merge-on-read overhead: chunked twin of the table (untimed), one
-    # ~2% equality delete, then full decode WITHOUT vs WITH the
-    # broadcast anti-join — the delta is the cost of row-level deletes
+    # ~2% equality delete, then full decode WITHOUT vs WITH the delete
+    # set applied in the decode — the delta is the cost of row-level deletes
     # on the read path (the write side is O(delete set) by design)
     from duckdb_raquet_spark import encode as _enc
 
@@ -561,7 +561,7 @@ def run_headline(sf_dir: str, cpus: int, rows: int) -> dict:
     # one), then the changelog scan. read_changes(1->2) prunes to the
     # appended chunk's partition — O(delta) rows touched; the 0->2
     # variant also emits the delete's rows, which costs one key-column
-    # decode of the surviving chunks + a broadcast flag join (the
+    # decode of the surviving chunks, kept by the delete's key set (the
     # documented floor for emitting deleted ROWS, not just keys)
     cdc_delta = (
         spark.read.parquet(input_path)

@@ -217,7 +217,7 @@ class RaquetReader(DataSourceReader):
             )
         # equality-delete key sets (encode.delete_rows) load
         # driver-side and ship with the pickled reader — the same
-        # broadcast-sized contract as scan._apply_delete_entries
+        # broadcast-sized sets scan.decode_blocks ships to its tasks
         entries = (
             snap_entries
             if snap_entries is not None

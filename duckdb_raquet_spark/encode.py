@@ -2138,11 +2138,23 @@ def evolve_widen_column(
 # matches on and a SEQUENCE number (the highest chunk id visible when
 # it committed): it deletes matching rows only in chunks <= seq, so a
 # later append may re-insert a deleted key and stay visible (Iceberg's
-# sequence-number rule for equality deletes). Readers apply deletes as
-# a broadcast anti-join (scan.read_rows); scan.purge_deletes rewrites
-# the table with deletes applied physically and clears the list.
+# sequence-number rule for equality deletes). Readers drop deleted rows
+# inside the block decode (scan.read_rows, reader.iter_blocks);
+# scan.purge_deletes rewrites the table with deletes applied
+# physically and clears the list.
 
 DELETES_DIR = "_deletes"
+
+
+def _write_delete_file(spark: SparkSession, dest: str, tbl: "pa.Table") -> None:
+    """``tbl`` as the one parquet file of the delete dir ``dest``."""
+    import pyarrow.parquet as pq
+
+    from . import fsio
+
+    sink = pa.BufferOutputStream()
+    pq.write_table(tbl, sink)
+    fsio.write_bytes(spark, dest, "part-0.parquet", sink.getvalue().to_pybytes())
 
 
 def _delete_arrow_types(specs: list[dict]) -> list:
@@ -2166,19 +2178,18 @@ def delete_rows(
     warc_ts)`` — and ``values`` is a list/tuple/set of literals (tuples
     for composite keys) or a DataFrame carrying the key columns (e.g.
     a dedup pipeline's drop list — written distributed, never
-    collected). Delete files are broadcast to readers, so keep a
-    single delete commit to broadcast-able size (millions of keys, not
-    billions); bigger retention sweeps belong in
-    ``scan.transform_blocks`` rewrites.
+    collected). Readers load delete sets whole and ship them to their
+    decode tasks, so keep a single delete commit to broadcast-able
+    size (millions of keys, not billions); bigger retention sweeps
+    belong in ``scan.transform_blocks`` rewrites.
 
     The value file is the v2 layout: fixed internal columns
     ``_k0.._k{n-1}`` (key values, entry-``cols`` order) + ``_dseq``
     (the sequence number, PER ROW). Fixed names make every v2 file of
-    a key-set schema-identical — even across later column renames — so
-    the read path folds all of them into ONE multi-path parquet scan
-    instead of a per-file union chain, and a per-row sequence lets
-    ``compact_delete_files`` merge files from different commits without
-    losing each value's own visibility horizon.
+    a key-set schema-identical — even across later column renames —
+    and a per-row sequence lets ``compact_delete_files`` merge files
+    from different commits without losing each value's own visibility
+    horizon.
 
     Returns the updated manifest. The delete applies to rows in chunks
     visible NOW (chunk id <= the recorded sequence number); chunks
@@ -2233,17 +2244,12 @@ def delete_rows(
         if n == 0:
             # same contract as the literal path: an empty delete set is
             # a caller bug, and committing it would tax every future
-            # read with a pointless anti-join
+            # read with a pointless delete set
             from . import fsio
 
             fsio.delete_dir(spark, dest)
             raise ValueError("empty delete set")
     else:
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        from . import fsio
-
         rows = [
             v if isinstance(v, tuple) else (v,) for v in values
         ]
@@ -2266,10 +2272,7 @@ def delete_rows(
                 # columns (table_job --values 5,7) — cast, don't fail
                 arrays.append(pa.array(col_vals).cast(want))
         arrays.append(pa.array([int(seq)] * len(rows), type=pa.int64()))
-        tbl = pa.table(dict(zip(knames + ["_dseq"], arrays)))
-        sink = pa.BufferOutputStream()
-        pq.write_table(tbl, sink)
-        fsio.write_bytes(spark, dest, "part-0.parquet", sink.getvalue().to_pybytes())
+        _write_delete_file(spark, dest, pa.table(dict(zip(knames + ["_dseq"], arrays))))
         n = len(rows)
     entry = {
         "dir": f"{DELETES_DIR}/{rel}",
@@ -2337,7 +2340,7 @@ def upsert_rows(
     their cost model: one equality delete on df's keys (O(|df|) — the
     delete's sequence number covers only chunks visible NOW) plus one
     appended chunk carrying df's rows (chunk id > seq, so the fresh
-    versions survive the anti-join). No existing data file is
+    versions survive the delete). No existing data file is
     rewritten; a 100-row upsert into a 100 TB table moves ~100 rows.
 
     df must carry the table's full column set (this engine stores whole
@@ -2402,10 +2405,12 @@ def compact_delete_files(spark: SparkSession, path: str) -> dict:
     Why it matters: ``streaming.upsert_stream`` commits one delete file
     per micro-batch; without this step the read path opens O(#commits)
     parquet files per scan (one multi-path scan node, but the file
-    count still grows). After compaction the broadcast side of
-    ``read_rows`` is exactly one file per key set, forever O(#key
-    sets). Per-VALUE sequence numbers (``_dseq``) are preserved by
-    max-merging, so the Iceberg sequence rule — a key re-inserted
+    count still grows). After compaction every read loads exactly one
+    file per key set, forever O(#key sets). The merge runs as Arrow on
+    the driver: each key set's files load through
+    ``reader.load_deletes``, concatenate at the widest key type and
+    group by key. Per-VALUE sequence numbers (``_dseq``) are preserved
+    by max-merging, so the Iceberg sequence rule — a key re-inserted
     after its delete stays visible — survives compaction bit-for-bit:
     pre-merge a row is dropped iff chunk <= seq in ANY file, which
     equals chunk <= max(seq) per value.
@@ -2415,10 +2420,9 @@ def compact_delete_files(spark: SparkSession, path: str) -> dict:
     reclaims them once no retained snapshot does. Returns the updated
     manifest; a no-op (already exactly one v2 file per key set) returns
     it unchanged without committing."""
-    import uuid
+    import pyarrow.compute as pc
 
-    from . import fsio
-    from . import scan as _scan
+    from . import fsio, reader
 
     man, cur = _writable_base(spark, path)
     entries = list(man.get("delete_files") or [])
@@ -2440,24 +2444,27 @@ def compact_delete_files(spark: SparkSession, path: str) -> dict:
             new_entries.append(es[0])
             continue
         knames = [f"_k{i}" for i in range(len(cols))]
-        # the read path's delete frame (v1/v2 union, widening-robust
-        # grouped v2 scan), its _dv{i} value columns renamed back
-        [(_, dd)] = _scan._delete_sides(spark, path, es)
-        dd = dd.toDF(*knames, "_dseq")
-        merged = dd.groupBy(*knames).agg(F.max("_dseq").alias("_dseq"))
+        merged = pa.concat_tables(
+            [
+                keys.rename_columns(knames).append_column(
+                    "_dseq", pa.array(np.full(keys.num_rows, seq), pa.int64())
+                )
+                for _, seq, keys in reader.load_deletes(path, es)
+            ],
+            promote_options="permissive",
+        ).group_by(knames).aggregate([("_dseq", "max")])
+        merged = merged.select([*knames, "_dseq_max"]).rename_columns(
+            [*knames, "_dseq"]
+        )
+        span = pc.min_max(merged["_dseq"]).as_py()
         rel = f"merged-{snap_id:05d}-{uuid.uuid4().hex[:10]}"
         dest = os.path.join(path, DELETES_DIR, rel)
-        merged.coalesce(1).write.mode("overwrite").parquet(dest)
-        stats = spark.read.parquet(dest).agg(
-            F.count("*").alias("n"),
-            F.min("_dseq").alias("smin"),
-            F.max("_dseq").alias("smax"),
-        ).collect()[0]
+        _write_delete_file(spark, dest, merged)
         entry = {
             "dir": f"{DELETES_DIR}/{rel}",
             "cols": list(cols),
             "seq": max(int(e["seq"]) for e in es),
-            "n": int(stats["n"]),
+            "n": merged.num_rows,
             "v": 2,
             "merged_from": len(es),
         }
@@ -2467,7 +2474,7 @@ def compact_delete_files(spark: SparkSession, path: str) -> dict:
         # _dseq values differ. Stamp it only when they are homogeneous
         # (entry seq == every row's seq); otherwise a legacy reader
         # fails loud on the missing key instead of silently mis-reading
-        if len(cols) == 1 and stats["smin"] == stats["smax"]:
+        if len(cols) == 1 and span["min"] == span["max"]:
             entry["col"] = cols[0]
         new_entries.append(entry)
         written.append(dest)
@@ -2589,6 +2596,7 @@ def compact_chunks(
     figs = [lin.get(c, {}) for c in sel]
     from . import fsio, reader
 
+    deletes = reader.load_deletes(path, entries)
     p = spark.sparkContext.defaultParallelism
     if (
         shuffle == "hash"
@@ -2604,7 +2612,6 @@ def compact_chunks(
         # rule, block rows on one pool; no Spark plan is built
         files = [f for f in reader.visible_files(path, cur) if f[0] in sel]
         sels = reader.select_block_rows(files, man, reader.Envelope(man))
-        deletes = reader.load_deletes(path, entries)
         threads = placement.driver_threads(sum(s.n_blocks for s in sels), p)
         rows, local = None, pa.Table.from_batches(
             list(reader.iter_blocks(
@@ -2614,10 +2621,8 @@ def compact_chunks(
         )
     else:
         blocks = _scan.read_blocks(spark, path).where(F.col("chunk").isin(sel))
-        rows = _scan.decode_blocks(blocks, man, names, with_chunk=True)
-        if entries:
-            rows = _scan._apply_delete_entries(spark, path, rows, entries)
-        rows, local = rows.select(*names), None
+        rows = _scan.decode_blocks(blocks, man, names, _deletes=deletes)
+        local = None
     return append_chunk(
         spark,
         rows,

@@ -19,10 +19,11 @@ the driver-side ``encode.compact_chunks``, in three steps:
    decodes first, and a block it misses reads no other payload. The
    table's equality deletes (:func:`load_deletes`) apply by the
    sequence rule: a delete with sequence ``seq`` removes matching rows
-   of chunks ``<= seq``. This is the one in-process delete rule; Spark
-   plans apply the same rule as a broadcast anti-join
-   (``scan._apply_delete_entries``). ``scan.compact_to_path`` and
-   ``scan.purge_deletes`` rewrite a table by this rule too.
+   of chunks ``<= seq``. This is the package's one delete rule
+   (:func:`_live_deletes`, :func:`_deleted_mask`): Spark plans apply
+   it per block row inside ``scan.decode_blocks``, and
+   ``scan.compact_to_path`` / ``scan.purge_deletes`` rewrite a table
+   by it.
 
 Nothing here needs a session on a local table: datasource partitions
 run it in Python workers. Of a ``scheme://`` table only the delete
@@ -264,10 +265,10 @@ def load_deletes(path: str, entries: list[dict]) -> list[tuple[tuple[str, ...], 
     predate a column rename).
 
     The sets are loaded whole into this process: delete sets are
-    broadcast-sized by contract, the bound the Spark broadcast
-    anti-join (``scan._apply_delete_entries``) relies on too. A
-    ``scheme://`` table's delete dirs are read through ``fsio`` with
-    the process's session; a local one's directly, with no session."""
+    broadcast-sized by contract, and a Spark decode ships them to its
+    tasks in the decode closure. A ``scheme://`` table's delete dirs
+    are read through ``fsio`` with the process's session; a local
+    one's directly, with no session."""
     import pyarrow.dataset as pa_ds
 
     from . import fsio
@@ -308,9 +309,9 @@ def _live_deletes(deletes, chunk: int | None) -> list[tuple[tuple[str, ...], lis
     return sorted(by.items())
 
 
-def _drop_deleted(batch: pa.RecordBatch, live) -> pa.RecordBatch:
-    """``batch`` without the rows whose key tuple is in a live key set
-    (Arrow semi-join: NULL keys never match, as in the Spark anti-join)."""
+def _deleted_mask(batch: pa.RecordBatch, live) -> np.ndarray:
+    """True for each row of ``batch`` whose key tuple is in a live key
+    set (an Arrow semi-join per set: NULL keys never match)."""
     n = batch.num_rows
     hit = np.zeros(n, dtype=bool)
     for kc, tables in live:
@@ -322,6 +323,12 @@ def _drop_deleted(batch: pa.RecordBatch, live) -> pa.RecordBatch:
         for keys in tables:
             m = probe.join(keys.cast(key_schema), keys=list(kc), join_type="left semi")
             hit[m["__row"].to_numpy()] = True
+    return hit
+
+
+def _drop_deleted(batch: pa.RecordBatch, live) -> pa.RecordBatch:
+    """``batch`` without the rows :func:`_deleted_mask` marks."""
+    hit = _deleted_mask(batch, live)
     return batch.filter(pa.array(~hit)) if hit.any() else batch
 
 

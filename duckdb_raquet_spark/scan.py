@@ -432,12 +432,10 @@ def _block_rows(man: dict, specs: list[tuple[str, str, str]]):
     return blob_names, rows
 
 
-def _decode_ddl(specs, *, with_chunk: bool = False, with_block: bool = False) -> str:
+def _decode_ddl(specs, *, with_block: bool = False) -> str:
     """The DDL of decoded rows: :func:`decode_blocks`' output schema,
     and the schema the driver-local reads hand Spark."""
-    parts = ["chunk int"] if with_chunk else []
-    if with_block:
-        parts += [f"{BLOCK} long", f"{SALT} int"]
+    parts = [f"{BLOCK} long", f"{SALT} int"] if with_block else []
     return ", ".join(parts + [f"`{n}` {t}" for n, t, _ in specs])
 
 
@@ -494,9 +492,10 @@ def decode_blocks(
     cols: list[str] | None = None,
     *,
     with_block: bool = False,
-    with_chunk: bool = False,
     eq_filter: tuple[str, object] | None = None,
     rebalance: bool | None = None,
+    _deletes=(),
+    _hits=None,
 ) -> DataFrame:
     """blocks -> original rows via mapInArrow (payload bytes in, Arrow
     arrays out — decoded strings never materialize as Python objects;
@@ -509,22 +508,42 @@ def decode_blocks(
     filter column decodes FIRST; blocks with no matching row skip every
     other payload entirely, and matching blocks emit only the matching
     rows (element take, not full-block Arrow transfer). Point lookups
-    over many candidate blocks decode exactly one payload per miss."""
+    over many candidate blocks decode exactly one payload per miss.
+
+    ``_deletes`` (``reader.load_deletes`` sets, loaded once on the
+    driver and shipped in the closure) drop each block row's deleted
+    rows by the package's one delete rule: the sets live for the row's
+    chunk (``reader._live_deletes``), then ``reader._deleted_mask``.
+    ``_hits`` (sets of the same form) keeps only the rows a live set
+    does delete, the change-data reads' "deleted by these files". With
+    either, the ``chunk`` partition column and the key columns are read
+    too and the rows project back to ``cols``."""
     import pyarrow as pa
 
     from pyspark.sql import types as T
     from pyspark.sql.pandas.types import to_arrow_schema
 
-    specs = _colspecs(man, cols)
-    if eq_filter is not None and eq_filter[0] not in {s[0] for s in specs}:
+    out_specs = _colspecs(man, cols)
+    if eq_filter is not None and eq_filter[0] not in {s[0] for s in out_specs}:
         raise ValueError(f"eq_filter column {eq_filter[0]!r} not in decode set")
+    filtering = bool(_deletes) or _hits is not None
+    dcols = [c for kc, _, _ in [*_deletes, *(_hits or ())] for c in kc]
+    unknown = set(dcols) - {c["name"] for c in man["columns"]}
+    if unknown:
+        raise ValueError(
+            f"delete files reference missing columns {sorted(unknown)} "
+            "(renamed or dropped after the delete?)"
+        )
+    specs = out_specs
+    if cols is not None and dcols:
+        specs = _colspecs(man, list(dict.fromkeys([*cols, *dcols])))
     blob_names, block_rows = _block_rows(man, specs)
     needed = [BLOCK, SALT, "n_rows"] + blob_names
-    if with_chunk:
-        # chunk is the partition column of the chunked layout; rows
-        # need it so equality deletes apply per their sequence number
-        if "chunk" not in blocks.columns:
-            raise ValueError("with_chunk requires a chunked-layout read")
+    # chunk is the partition column of the chunked layout: each block
+    # row's deletes live by its sequence number (a legacy flat table
+    # has none, read as chunk 0)
+    chunked = filtering and "chunk" in blocks.columns
+    if chunked:
         needed.insert(0, "chunk")
     src = blocks.select(*needed)  # Parquet reads only these payloads
     # Full decodes are codec-CPU-bound and per-block cost varies with
@@ -566,17 +585,30 @@ def decode_blocks(
                 # kernel is ~10x cheaper per block than re-encode, so
                 # the placement tax is never paid back
                 src = src.repartition(2 * sc.defaultParallelism)
-    out_schema = _decode_ddl(specs, with_chunk=with_chunk, with_block=with_block)
+    out_schema = _decode_ddl(out_specs, with_block=with_block)
     arrow_schema = to_arrow_schema(T._parse_datatype_string(out_schema))
-
-    key_cols = (["chunk"] if with_chunk else []) + (
-        [BLOCK, SALT] if with_block else []
-    )
+    dec_schema = reader.arrow_schema(specs)
+    out_names = [s[0] for s in out_specs]
+    key_cols = [BLOCK, SALT] if with_block else []
 
     def fn(batches):
+        live: dict = {}  # chunk -> (live deletes, live hits)
         for rb in batches:
             keys = [rb.column(c).to_pylist() for c in key_cols]
+            chunks = rb.column("chunk").to_pylist() if chunked else None
             for i, n, dec in block_rows(rb):
+                drop = hits = None
+                if filtering:
+                    c = chunks[i] if chunked else None
+                    if c not in live:
+                        live[c] = (
+                            reader._live_deletes(_deletes, c),
+                            None if _hits is None
+                            else reader._live_deletes(_hits, c),
+                        )
+                    drop, hits = live[c]
+                    if hits == []:
+                        continue  # no set deletes rows of this chunk
                 take_idx = None
                 decoded: dict[str, pa.Array] = {}
                 if eq_filter is not None:
@@ -589,8 +621,7 @@ def decode_blocks(
                         continue
                     take_idx = pa.array(idx)
                     decoded[fname] = farr.take(take_idx)
-                    n = len(idx)
-                arrays = [pa.array(np.full(n, k[i])) for k in keys]
+                arrays = []
                 for name, _, _ in specs:
                     arr = decoded.get(name)
                     if arr is None:
@@ -598,6 +629,24 @@ def decode_blocks(
                         if take_idx is not None:
                             arr = arr.take(take_idx)
                     arrays.append(arr)
+                batch = pa.RecordBatch.from_arrays(
+                    [
+                        a.cast(f.type) if a.type != f.type else a
+                        for a, f in zip(arrays, dec_schema)
+                    ],
+                    schema=dec_schema,
+                )
+                if filtering:
+                    keep = ~reader._deleted_mask(batch, drop)
+                    if hits is not None:
+                        keep &= reader._deleted_mask(batch, hits)
+                    if not keep.all():
+                        batch = batch.filter(pa.array(keep))
+                    if not batch.num_rows:
+                        continue
+                n = batch.num_rows
+                arrays = [pa.array(np.full(n, k[i])) for k in keys]
+                arrays += [batch.column(name) for name in out_names]
                 yield pa.RecordBatch.from_arrays(
                     [
                         a.cast(f.type) if a.type != f.type else a
@@ -648,126 +697,6 @@ def _snapshot_entries(
     )
 
 
-def _apply_delete_entries(
-    spark: SparkSession,
-    path: str,
-    rows: DataFrame,
-    entries: list[dict],
-    chunk_col: str = "chunk",
-) -> DataFrame:
-    """Merge-on-read: anti-join decoded rows against each equality
-    delete key-set's (values, seq) rows. Delete files are small by
-    contract, so the join is a BROADCAST hash anti-join — no shuffle of
-    the data side; the residual ``chunk <= seq`` sequence predicate
-    keeps rows appended AFTER a delete visible even when their key
-    matches (Iceberg's sequence-number rule).
-
-    Plan size is O(#key sets), not O(#delete commits): v2 files of a
-    key set share one fixed schema (``_k0.., _dseq`` — sequence per
-    ROW), so all of them load through a single multi-path parquet
-    read; only legacy v1 files (constant per-file seq, arbitrary
-    internal name) still need a per-file union."""
-    for cols, dd in _delete_sides(spark, path, entries):
-        cond = F.col(chunk_col) <= F.col("_dseq")
-        for i, c in enumerate(cols):
-            cond = cond & (F.col(c) == F.col(f"_dv{i}"))
-        rows = rows.join(F.broadcast(dd), on=cond, how="left_anti")
-    return rows
-
-
-def _read_v2_delete_dirs(spark, dirs: list[str]) -> DataFrame:
-    """One DataFrame over many v2 delete dirs, robust to key-column
-    type WIDENING between commits: a multi-path parquet scan takes its
-    schema from one arbitrary footer, so an int32 ``_k0`` file next to
-    a post-widen int64 one fails (or silently mis-reads) at scan time.
-    Dirs are grouped by footer schema — one multi-path scan per group
-    (O(#widens+1) groups, not O(#commits)) — and the groups union;
-    Spark's set-operation widening coerces the key types to the widest
-    member, matching the table's evolved logical type."""
-    by_schema: dict[tuple, list[str]] = {}
-    for d in dirs:
-        key = tuple(
-            (f.name, f.dataType.simpleString())
-            for f in spark.read.parquet(d).schema.fields
-        )
-        by_schema.setdefault(key, []).append(d)
-    parts = [spark.read.parquet(*ds) for ds in by_schema.values()]
-    dd = parts[0]
-    for p in parts[1:]:
-        dd = dd.unionByName(p)
-    return dd
-
-
-def _delete_sides(spark, path, entries):
-    """Group equality-delete entries by key-column set and build one
-    broadcast-side DataFrame per set with columns ``_dv0.._dv{k-1},
-    _dseq``. v2 entries fold into ONE multi-path parquet scan."""
-    groups: dict[tuple, list[dict]] = {}
-    for e in entries:
-        groups.setdefault(tuple(mf.delete_entry_cols(e)), []).append(e)
-    out = []
-    for cols, es in sorted(groups.items()):
-        dvs = [F.col(f"_k{i}").alias(f"_dv{i}") for i in range(len(cols))]
-        v2_dirs = [
-            os.path.join(path, e["dir"]) for e in es if e.get("v", 1) >= 2
-        ]
-        dd = None
-        if v2_dirs:
-            dd = _read_v2_delete_dirs(spark, v2_dirs).select(*dvs, "_dseq")
-        for e in es:
-            if e.get("v", 1) >= 2:
-                continue
-            d0 = spark.read.parquet(os.path.join(path, e["dir"]))
-            # POSITIONAL select of the single value column: a v1 file
-            # written before evolve_rename_column keeps the old name
-            # internally while the entry's `col` follows the rename
-            d = d0.select(
-                F.col(d0.columns[0]).alias("_dv0"),
-                F.lit(int(e["seq"])).cast("long").alias("_dseq"),
-            )
-            dd = d if dd is None else dd.unionByName(d)
-        out.append((cols, dd))
-    return out
-
-
-def _dcols_of(entries) -> set[str]:
-    return {c for e in entries for c in mf.delete_entry_cols(e)}
-
-
-def _delete_flag_join(
-    spark: SparkSession,
-    path: str,
-    rows: DataFrame,
-    entries: list[dict],
-    chunk_col: str = "chunk",
-):
-    """Broadcast LEFT joins that FLAG (not drop) rows matching the
-    given equality-delete entries. Returns ``(flagged_df, any_match)``;
-    the right side is uniqued per key tuple with max(seq), so the join
-    can never fan out. Used where the matching rows themselves are the
-    result (changelog deletes/resurrections) — the read path's
-    anti-join stays :func:`_apply_delete_entries`."""
-    from functools import reduce
-
-    conds = []
-    for gi, (cols, dd) in enumerate(_delete_sides(spark, path, entries)):
-        dvs = [f"_dv{i}" for i in range(len(cols))]
-        dd = (
-            dd.groupBy(*dvs)
-            .agg(F.max("_dseq").alias("_dseq"))
-            .select(
-                *[F.col(v).alias(f"_g{gi}{v}") for v in dvs],
-                F.col("_dseq").alias(f"_g{gi}_ds"),
-            )
-        )
-        cond = F.col(chunk_col) <= F.col(f"_g{gi}_ds")
-        for i, c in enumerate(cols):
-            cond = cond & (F.col(c) == F.col(f"_g{gi}_dv{i}"))
-        rows = rows.join(F.broadcast(dd), on=cond, how="left")
-        conds.append(F.col(f"_g{gi}_dv0").isNotNull())
-    return rows, reduce(lambda a, b: a | b, conds)
-
-
 def read_rows(
     spark: SparkSession,
     path: str,
@@ -787,11 +716,12 @@ def read_rows(
 
     On a local table whose decode :func:`_read_on_driver` admits (at
     most 16 MiB raw), the in-process reader decodes the snapshot's
-    block rows on the driver's pool, drops deleted rows by its
-    sequence rule and returns a local DataFrame (evaluated now, not at
-    the first action). Otherwise the Spark plan runs: ``mapInArrow``
-    decode and a broadcast anti-join per delete key set. Both sides
-    return the same rows under the same schema."""
+    block rows on the driver's pool and returns a local DataFrame
+    (evaluated now, not at the first action). Otherwise the Spark plan
+    runs: a ``mapInArrow`` decode. Both sides drop deleted rows inside
+    the block decode by the one sequence rule (``reader.load_deletes``
+    sets, built once here) and return the same rows under the same
+    schema."""
     if ref is not None:
         if snapshot_id is not None or as_of_unix is not None:
             raise ValueError("pass snapshot_id, as_of_unix OR ref, not both")
@@ -809,34 +739,9 @@ def read_rows(
     blocks = read_blocks_at(
         spark, path, snapshot_id=snapshot_id, as_of_unix=as_of_unix
     )
-    return _decode_with_entries(spark, path, blocks, man, cols, entries)
-
-
-def _decode_with_entries(
-    spark: SparkSession,
-    path: str,
-    blocks: DataFrame,
-    man: dict,
-    cols: list[str] | None,
-    entries: list[dict],
-) -> DataFrame:
-    """Decode + merge-on-read equality-delete anti-join — the shared
-    tail of :func:`read_rows` and :func:`read_staged_rows`."""
-    if not entries:
-        return decode_blocks(blocks, man, cols)
-    names = [c["name"] for c in man["columns"]]
-    want = list(cols) if cols is not None else names
-    dcols = sorted(_dcols_of(entries))
-    unknown = set(dcols) - set(names)
-    if unknown:
-        raise ValueError(
-            f"delete files reference missing columns {sorted(unknown)} "
-            "(renamed or dropped after the delete?)"
-        )
-    dec_cols = list(dict.fromkeys(want + dcols))
-    rows = decode_blocks(blocks, man, dec_cols, with_chunk=True)
-    rows = _apply_delete_entries(spark, path, rows, entries)
-    return rows.select(*want)
+    return decode_blocks(
+        blocks, man, cols, _deletes=reader.load_deletes(path, entries)
+    )
 
 
 def read_staged_rows(
@@ -870,8 +775,10 @@ def read_staged_rows(
             "drop_staged and re-stage against the new schema"
         )
     blocks = _data_rows(_read_raw(spark, path), rec["chunks"])
-    entries = list(man.get("delete_files") or [])
-    return _decode_with_entries(spark, path, blocks, man, cols, entries)
+    entries = man.get("delete_files") or []
+    return decode_blocks(
+        blocks, man, cols, _deletes=reader.load_deletes(path, entries)
+    )
 
 
 def _clear_reused_dest(spark: SparkSession, src: str, dst: str) -> None:
@@ -896,12 +803,12 @@ def purge_deletes(
     """Physically apply a table's equality-delete files into a NEW
     committed table (merge-on-read -> copy-on-write compaction step):
     the :func:`compact_to_path` rewrite with the live deletes applied
-    by the in-process reader's rule (``reader._live_deletes`` /
+    by the package's one delete rule (``reader._live_deletes`` /
     ``_drop_deleted``), so the output is compacted too: one row per
     block key under the row cap. Blocks no live delete touches and
     that are already one row pass through with payloads unread. The
     output table carries no delete files (and fresh chunk ids), so its
-    reads skip the anti-join entirely."""
+    reads apply no deletes."""
     man = read_manifest(spark, src)
     if not man.get("delete_files"):
         raise ValueError(
@@ -925,8 +832,8 @@ def read_changes(
       alive at ``to`` (a row inserted and deleted inside the range is a
       net no-op and appears as neither);
     * deletes — rows alive at ``from`` that equality-delete files
-      committed in the range remove (broadcast left-join flags, no
-      shuffle of the decoded side), plus all alive-at-``from`` rows of
+      committed in the range remove (kept by those files' sets in the
+      block decode, no join), plus all alive-at-``from`` rows of
       chunks a rollback removed in the range.
 
     Chunk immutability makes the insert side partition-pruned to the
@@ -969,37 +876,26 @@ def read_changes(
     removed = sorted(chunks_from - chunks_to)
     surviving = sorted(chunks_from & chunks_to)
 
+    def part(snap_id, chunks, kind, drop, hits=None):
+        """The rows of ``chunks`` at ``snap_id`` that the entries
+        ``drop`` do not delete (and, given ``hits``, those entries do),
+        tagged ``kind``."""
+        blocks = read_blocks_at(spark, path, snapshot_id=snap_id).where(
+            F.col("chunk").isin(chunks)
+        )
+        rows = decode_blocks(
+            blocks, man, want, rebalance=False,
+            _deletes=reader.load_deletes(path, drop),
+            _hits=None if hits is None else reader.load_deletes(path, hits),
+        )
+        return rows.withColumn("_change_type", F.lit(kind))
+
     parts: list[DataFrame] = []
     if added:
-        blocks_new = read_blocks_at(spark, path, snapshot_id=to_id).where(
-            F.col("chunk").isin(added)
-        )
-        dcols = sorted(_dcols_of(entries_to))
-        dec = list(dict.fromkeys(want + dcols))
-        rows_new = decode_blocks(
-            blocks_new, man, dec, with_chunk=True, rebalance=False
-        )
-        if entries_to:
-            rows_new = _apply_delete_entries(spark, path, rows_new, entries_to)
-        parts.append(
-            rows_new.select(*want).withColumn("_change_type", F.lit("insert"))
-        )
+        parts.append(part(to_id, added, "insert", entries_to))
     if new_entries and surviving:
-        blocks_old = read_blocks_at(
-            spark, path, snapshot_id=from_snapshot_id
-        ).where(F.col("chunk").isin(surviving))
-        dcols = sorted(_dcols_of(entries_from) | _dcols_of(new_entries))
-        rows_old = decode_blocks(
-            blocks_old, man, list(dict.fromkeys(want + dcols)),
-            with_chunk=True, rebalance=False,
-        )
-        if entries_from:
-            rows_old = _apply_delete_entries(spark, path, rows_old, entries_from)
-        flagged, cond = _delete_flag_join(spark, path, rows_old, new_entries)
         parts.append(
-            flagged.where(cond)
-            .select(*want)
-            .withColumn("_change_type", F.lit("delete"))
+            part(from_snapshot_id, surviving, "delete", entries_from, new_entries)
         )
     removed_entries = [
         e
@@ -1009,37 +905,11 @@ def read_changes(
     if removed_entries and surviving:
         # rows a rollback RESURRECTED: dead at `from` because of a
         # since-removed delete file, alive at `to` — net inserts
-        blocks_srv = read_blocks_at(spark, path, snapshot_id=to_id).where(
-            F.col("chunk").isin(surviving)
-        )
-        dcols = sorted(_dcols_of(entries_to) | _dcols_of(removed_entries))
-        rows_srv = decode_blocks(
-            blocks_srv, man, list(dict.fromkeys(want + dcols)),
-            with_chunk=True, rebalance=False,
-        )
-        flagged, cond = _delete_flag_join(
-            spark, path, rows_srv, removed_entries
-        )
-        was_dead = flagged.where(cond)
-        if entries_to:
-            was_dead = _apply_delete_entries(spark, path, was_dead, entries_to)
         parts.append(
-            was_dead.select(*want).withColumn("_change_type", F.lit("insert"))
+            part(to_id, surviving, "insert", entries_to, removed_entries)
         )
     if removed:
-        blocks_rm = read_blocks_at(
-            spark, path, snapshot_id=from_snapshot_id
-        ).where(F.col("chunk").isin(removed))
-        dcols = sorted(_dcols_of(entries_from))
-        rows_rm = decode_blocks(
-            blocks_rm, man, list(dict.fromkeys(want + dcols)),
-            with_chunk=True, rebalance=False,
-        )
-        if entries_from:
-            rows_rm = _apply_delete_entries(spark, path, rows_rm, entries_from)
-        parts.append(
-            rows_rm.select(*want).withColumn("_change_type", F.lit("delete"))
-        )
+        parts.append(part(from_snapshot_id, removed, "delete", entries_from))
     if not parts:
         empty = read_blocks_at(spark, path, snapshot_id=to_id).limit(0)
         return decode_blocks(empty, man, want).withColumn(
@@ -1148,9 +1018,9 @@ def point_lookup(
     plan's fixed cost, decodes them on the driver and returns the rows
     as a local DataFrame (evaluated now, not at the first action).
     Otherwise, and for ``scheme://`` paths, the Spark plan runs: the
-    equality (or pre-scanned isin) predicate pushed to Parquet, a
-    ``mapInArrow`` decode and a broadcast anti-join for deletes. Both
-    sides return the same rows under the same schema."""
+    equality (or pre-scanned isin) predicate pushed to Parquet and a
+    ``mapInArrow`` decode. Both sides apply deletes inside the block
+    decode and return the same rows under the same schema."""
     man = man or read_manifest(spark, path)
     res = man["key"]["resolution"]
     bucket = man["key"]["bucket_seconds"]
@@ -1171,22 +1041,10 @@ def point_lookup(
         pruned = blocks.where(F.col(BLOCK) == key)
     else:
         pruned = prune_blocks_for_url_hash(blocks, man, bk.hash_x_from_url(url))
-    entries = man.get("delete_files") or []
-    if entries and "chunk" in blocks.columns:
-        # row-level deletes: decode the delete columns too, anti-join
-        # per sequence rule, then project back down
-        dcols = sorted(_dcols_of(entries))
-        dec_cols = (
-            None if want is None else list(dict.fromkeys(want + dcols))
-        )
-        decoded = decode_blocks(
-            pruned, man, dec_cols, with_chunk=True, eq_filter=(url_col, url)
-        )
-        decoded = _apply_delete_entries(spark, path, decoded, entries)
-        names = [c["name"] for c in man["columns"]]
-        decoded = decoded.select(*(want if want is not None else names))
-    else:
-        decoded = decode_blocks(pruned, man, want, eq_filter=(url_col, url))
+    decoded = decode_blocks(
+        pruned, man, want, eq_filter=(url_col, url),
+        _deletes=reader.load_deletes(path, man.get("delete_files") or []),
+    )
     out = decoded.where(F.col(url_col) == url)  # no-op safety re-check
     return out.select(*cols) if cols is not None else out
 
@@ -1288,20 +1146,10 @@ def range_scan_ts(
         keep = pc.and_(pc.greater_equal(us, lo_us), pc.less(us, hi_us))
         return _local_frame(spark, man, local.filter(keep), cols)
     blocks = prune_blocks_for_ts(read_blocks(spark, path), man, lo_epoch, hi_epoch)
-    entries = man.get("delete_files") or []
-    if entries and "chunk" in blocks.columns:
-        # merge-on-read: decode delete columns too, anti-join per the
-        # sequence rule, project back down (mirrors point_lookup)
-        dcols = sorted(_dcols_of(entries))
-        dec_cols = None if want is None else list(dict.fromkeys(want + dcols))
-        decoded = decode_blocks(
-            blocks, man, dec_cols, with_chunk=True, rebalance=False
-        )
-        decoded = _apply_delete_entries(spark, path, decoded, entries)
-        names = [c["name"] for c in man["columns"]]
-        decoded = decoded.select(*(want if want is not None else names))
-    else:
-        decoded = decode_blocks(blocks, man, want, rebalance=False)
+    decoded = decode_blocks(
+        blocks, man, want, rebalance=False,
+        _deletes=reader.load_deletes(path, man.get("delete_files") or []),
+    )
     out = decoded.where(
         (F.col(ts_col) >= F.timestamp_seconds(F.lit(lo_epoch)))
         & (F.col(ts_col) < F.timestamp_seconds(F.lit(hi_epoch)))
@@ -2184,7 +2032,7 @@ def read_blocks_table(spark: SparkSession, name: str) -> DataFrame:
 def register_rows_view(spark: SparkSession, path: str, name: str) -> None:
     """Expose a table's DECODED ROWS as a SQL view — `SELECT ... FROM
     name` is then the full table-level read (current snapshot, schema
-    evolution applied, equality deletes anti-joined via
+    evolution applied, equality deletes applied via
     :func:`read_rows`), the `read_raquet` table-macro analog at row
     granularity. The view pins the state at registration time;
     re-register after DML to see new commits."""

@@ -234,8 +234,9 @@ def main() -> None:
         )
     )
 
-    # 8. merge-on-read deletes: the equality-delete sets join as
-    #    BROADCAST anti-joins — no Exchange of the decoded fact side
+    # 8. merge-on-read deletes: the equality-delete sets apply inside
+    #    the block decode — no join against the delete files, no
+    #    Exchange of the decoded fact side
     del_path = (
         f"/tmp/raquet_audit_del_{os.path.basename(args.sf_dir)}"
         f"_v{drs.__version__}"
@@ -261,13 +262,15 @@ def main() -> None:
         encode.delete_rows(spark, del_path, "lang", ["de"])
     with spark_side:
         p = formatted(scan.read_rows(spark, del_path, ["url", "text"]))
-    n_anti = len(re.findall(r"BroadcastHashJoin .*LeftAnti", p))
     sections.append(
         (
             "read_rows (equality deletes)",
             p,
             [
-                ("two broadcast anti-joins", n_anti == 2),
+                (
+                    "no join against delete files",
+                    "Join" not in p and encode.DELETES_DIR not in p,
+                ),
                 (
                     "no shuffle of the decoded side",
                     not re.search(r"Exchange hashpartitioning", p),
@@ -327,9 +330,9 @@ def main() -> None:
         )
     )
 
-    # 12. staged audit read (write-audit-publish): shares read_rows'
-    #     decode+delete tail — parent deletes apply as broadcast
-    #     anti-joins, the decoded side never shuffles
+    # 12. staged audit read (write-audit-publish): like read_rows,
+    #     parent deletes apply inside the block decode and the decoded
+    #     side never shuffles
     wap_path = (
         f"/tmp/raquet_audit_wap_{os.path.basename(args.sf_dir)}"
         f"_v{drs.__version__}"
@@ -354,8 +357,8 @@ def main() -> None:
             p,
             [
                 (
-                    "parent deletes as broadcast anti-join",
-                    "LeftAnti" in p and "BroadcastHashJoin" in p,
+                    "parent deletes in the decode, no join",
+                    "Join" not in p and encode.DELETES_DIR not in p,
                 ),
                 (
                     "no shuffle of the decoded side",
