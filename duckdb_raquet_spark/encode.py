@@ -2407,11 +2407,12 @@ def compact_delete_files(spark: SparkSession, path: str) -> dict:
     parquet files per scan (one multi-path scan node, but the file
     count still grows). After compaction every read loads exactly one
     file per key set, forever O(#key sets). The merge runs as Arrow on
-    the driver: each key set's files load through
-    ``reader.load_deletes``, concatenate at the widest key type and
-    group by key. Per-VALUE sequence numbers (``_dseq``) are preserved
-    by max-merging, so the Iceberg sequence rule — a key re-inserted
-    after its delete stays visible — survives compaction bit-for-bit:
+    the driver and writes what ``reader.load_deletes`` gives every
+    read: a key set's files concatenated at the widest key type, each
+    distinct non-NULL key kept once. Per-VALUE sequence numbers
+    (``_dseq``) are preserved by max-merging, so the Iceberg sequence
+    rule — a key re-inserted after its delete stays visible — survives
+    compaction bit-for-bit:
     pre-merge a row is dropped iff chunk <= seq in ANY file, which
     equals chunk <= max(seq) per value.
 
@@ -2443,18 +2444,9 @@ def compact_delete_files(spark: SparkSession, path: str) -> dict:
         if len(es) == 1 and es[0].get("v", 1) >= 2:
             new_entries.append(es[0])
             continue
-        knames = [f"_k{i}" for i in range(len(cols))]
-        merged = pa.concat_tables(
-            [
-                keys.rename_columns(knames).append_column(
-                    "_dseq", pa.array(np.full(keys.num_rows, seq), pa.int64())
-                )
-                for _, seq, keys in reader.load_deletes(path, es)
-            ],
-            promote_options="permissive",
-        ).group_by(knames).aggregate([("_dseq", "max")])
-        merged = merged.select([*knames, "_dseq_max"]).rename_columns(
-            [*knames, "_dseq"]
+        (dset,) = reader.load_deletes(path, es)
+        merged = dset.keys.rename_columns(
+            [f"_k{i}" for i in range(len(cols))] + ["_dseq"]
         )
         span = pc.min_max(merged["_dseq"]).as_py()
         rel = f"merged-{snap_id:05d}-{uuid.uuid4().hex[:10]}"

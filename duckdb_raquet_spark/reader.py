@@ -20,7 +20,7 @@ the driver-side ``encode.compact_chunks``, in three steps:
    table's equality deletes (:func:`load_deletes`) apply by the
    sequence rule: a delete with sequence ``seq`` removes matching rows
    of chunks ``<= seq``. This is the package's one delete rule
-   (:func:`_live_deletes`, :func:`_deleted_mask`): Spark plans apply
+   (:class:`DeleteSet`, :func:`_apply_deletes`): Spark plans apply
    it per block row inside ``scan.decode_blocks``, and
    ``scan.compact_to_path`` / ``scan.purge_deletes`` rewrite a table
    by it.
@@ -35,6 +35,7 @@ from __future__ import annotations
 
 import dataclasses
 import os
+import threading
 from typing import Iterator
 
 import numpy as np
@@ -257,12 +258,14 @@ def select_block_rows(
 # ------------------------------------------------------------ deletes ----
 
 
-def load_deletes(path: str, entries: list[dict]) -> list[tuple[tuple[str, ...], int, pa.Table]]:
-    """Equality-delete key sets of ``entries`` as ``(key columns, seq,
-    keys)``, ``keys`` a table with one column per key column. A v2 file
-    carries a sequence per row, so it can give several sets; a v1 file
-    gives one, its single value column read by position (its name may
-    predate a column rename).
+def load_deletes(path: str, entries: list[dict]) -> list["DeleteSet"]:
+    """Equality-delete sets of ``entries``, one :class:`DeleteSet` per
+    key-column tuple: the non-NULL key tuples of its files at the
+    widest key type, each with its sequence. A v2 file carries a
+    sequence per row (``_dseq``); a v1 file's single value column is
+    read by position (its name may predate a column rename) under the
+    entry's ``seq``. Timestamp keys are read as UTC microseconds, so a
+    Spark-written naive file merges with an aware one.
 
     The sets are loaded whole into this process: delete sets are
     broadcast-sized by contract, and a Spark decode ships them to its
@@ -285,51 +288,158 @@ def load_deletes(path: str, entries: list[dict]) -> list[tuple[tuple[str, ...], 
             if f.endswith(".parquet")
         )
 
-    out = []
+    def plain(f: pa.Field) -> pa.Field:
+        if pa.types.is_timestamp(f.type):
+            return f.with_type(pa.timestamp("us", "UTC"))
+        return f.with_type(pa.int64()) if f.name == "_dseq" else f
+
+    groups: dict[tuple[str, ...], list[pa.Table]] = {}
     for e in entries:
         kc = tuple(mf.delete_entry_cols(e))
         tbl = read(os.path.join(path, e["dir"]))
         if e.get("v", 1) >= 2:
-            keys = tbl.select([f"_k{i}" for i in range(len(kc))]).rename_columns(list(kc))
-            seqs = tbl["_dseq"]
-            for s in sorted(pc.unique(seqs).to_pylist()):
-                out.append((kc, int(s), keys.filter(pc.equal(seqs, s))))
+            t = tbl.select([f"_k{i}" for i in range(len(kc))] + ["_dseq"])
         else:
-            out.append((kc, int(e["seq"]), tbl.select([0]).rename_columns(list(kc))))
+            seq = np.full(tbl.num_rows, int(e["seq"]), dtype=np.int64)
+            t = tbl.select([0]).append_column("_dseq", pa.array(seq))
+        t = t.rename_columns([*kc, "_dseq"])
+        groups.setdefault(kc, []).append(t.cast(pa.schema(map(plain, t.schema))))
+    out = []
+    for kc, ts in sorted(groups.items()):
+        t = pa.concat_tables(ts, promote_options="permissive").drop_null()
+        for k in kc:  # NaN keys never match
+            if pa.types.is_floating(t.schema.field(k).type):
+                t = t.filter(pc.invert(pc.is_nan(t[k])))
+        # a row of chunk c is deleted iff c <= seq in ANY file, which
+        # equals c <= max(seq) per key tuple
+        t = t.group_by(list(kc)).aggregate([("_dseq", "max")])
+        t = t.select([*kc, "_dseq_max"]).rename_columns([*kc, "_dseq"])
+        # one chunk per column, so the closure pickles each buffer once
+        out.append(DeleteSet(kc, t.combine_chunks()))
     return out
 
 
-def _live_deletes(deletes, chunk: int | None) -> list[tuple[tuple[str, ...], list[pa.Table]]]:
-    """The key sets that apply to rows of ``chunk``: sequence ``>=``
-    the chunk id (rows appended after a delete stay visible)."""
-    by: dict[tuple[str, ...], list[pa.Table]] = {}
-    for kc, seq, keys in deletes:
-        if (chunk or 0) <= seq:
-            by.setdefault(kc, []).append(keys)
-    return sorted(by.items())
+class DeleteSet:
+    """One key set of :func:`load_deletes`: ``cols``, its key columns;
+    ``keys``, a table of its distinct key tuples (one column per key
+    column) and ``_dseq``, the highest sequence that deletes the tuple;
+    ``top``, the highest ``_dseq``. A row of chunk ``c`` is deleted iff
+    its tuple is in ``keys`` with ``c <= _dseq``.
+
+    :meth:`mask` probes a hash index over ``keys``. The index is built
+    on the first probe, once per process, then only read: a lock
+    guards the build, so a driver read's decode threads share one. It
+    is not pickled, so a Spark task builds it at most once from the
+    sets its decode closure ships."""
+
+    def __init__(self, cols: tuple[str, ...], keys: pa.Table) -> None:
+        top = pc.max(keys["_dseq"]).as_py()
+        self.__setstate__((tuple(cols), keys, -1 if top is None else int(top)))
+
+    def __getstate__(self):
+        return self.cols, self.keys, self.top
+
+    def __setstate__(self, state) -> None:
+        self.cols, self.keys, self.top = state
+        self._index = None
+        self._lock = threading.Lock()
+
+    def mask(self, batch, chunk: int | None) -> np.ndarray:
+        """True for each row of ``batch`` (rows of ``chunk``; a legacy
+        flat table's are chunk 0) whose key tuple is in ``keys`` with
+        ``chunk <= _dseq``. NULL keys never match."""
+        n, c = batch.num_rows, chunk or 0
+        hit = np.zeros(n, dtype=bool)
+        if c > self.top:
+            return hit
+        arrays = [batch.column(k) for k in self.cols]
+        with self._lock:
+            if self._index is None:
+                self._index = self._build([a.type for a in arrays])
+        types, index, seq = self._index
+        arrays = [a.cast(t) for a, t in zip(arrays, types)]
+        ok = np.ones(n, dtype=bool)
+        for a in arrays:
+            if a.null_count:
+                ok &= a.is_valid().to_numpy(zero_copy_only=False)
+        rows = np.flatnonzero(ok)
+        if len(rows) < n:
+            arrays = [a.take(pa.array(rows)) for a in arrays]
+        pos = _probe(index, arrays)
+        found = pos >= 0
+        found[found] = seq[pos[found]] >= c
+        hit[rows] = found
+        return hit
+
+    def _build(self, types: list[pa.DataType]):
+        """``(key types, index, seq)``: the key types of the probed
+        batch, a pandas index over ``keys`` cast to them (a
+        ``MultiIndex`` for a composite key) and ``_dseq`` by position."""
+        import pandas as pd
+
+        keys = self.keys.cast(pa.schema(
+            [pa.field(k, t) for k, t in zip(self.cols, types)]
+            + [self.keys.schema.field("_dseq")]
+        ))
+        values = [keys[k].to_numpy(zero_copy_only=False) for k in self.cols]
+        index = pd.Index(values[0]) if len(values) == 1 else _multi_index(values)
+        # a first probe fills the hash tables, so later probes from
+        # other threads only read them
+        _probe(index, [keys[k].slice(0, 1) for k in self.cols])
+        return types, index, keys["_dseq"].to_numpy()
 
 
-def _deleted_mask(batch: pa.RecordBatch, live) -> np.ndarray:
-    """True for each row of ``batch`` whose key tuple is in a live key
-    set (an Arrow semi-join per set: NULL keys never match)."""
-    n = batch.num_rows
-    hit = np.zeros(n, dtype=bool)
-    for kc, tables in live:
-        probe = pa.table(
-            [batch.column(c) for c in kc] + [pa.array(np.arange(n))],
-            names=[*kc, "__row"],
-        )
-        key_schema = pa.schema([probe.schema.field(c) for c in kc])
-        for keys in tables:
-            m = probe.join(keys.cast(key_schema), keys=list(kc), join_type="left semi")
-            hit[m["__row"].to_numpy()] = True
-    return hit
+def _probe(index, arrays) -> np.ndarray:
+    """The position in ``index`` (a :meth:`DeleteSet._build` index) of
+    each key tuple of ``arrays`` (NULL-free, one per key column), ``-1``
+    if absent."""
+    values = [a.to_numpy(zero_copy_only=False) for a in arrays]
+    if len(values) == 1:
+        return index.get_indexer(values[0])
+    return index.get_indexer(_multi_index(values))
 
 
-def _drop_deleted(batch: pa.RecordBatch, live) -> pa.RecordBatch:
-    """``batch`` without the rows :func:`_deleted_mask` marks."""
-    hit = _deleted_mask(batch, live)
-    return batch.filter(pa.array(~hit)) if hit.any() else batch
+def _multi_index(values: list[np.ndarray]):
+    """A pandas ``MultiIndex`` over the key columns ``values``, its
+    levels in first-seen order: hashed, not sorted as ``from_arrays``
+    sorts them."""
+    import pandas as pd
+
+    codes, levels = zip(*(pd.factorize(v) for v in values))
+    return pd.MultiIndex(levels=levels, codes=codes, verify_integrity=False)
+
+
+def _live(sets: list[DeleteSet], chunk: int | None) -> bool:
+    """Whether some set can delete rows of ``chunk``."""
+    return any((chunk or 0) <= s.top for s in sets)
+
+
+def _decode_cols(cols: list[str] | None, *set_lists) -> list[str] | None:
+    """``cols`` widened by the key columns of the delete sets (default:
+    all columns): a decode that applies deletes reads them too."""
+    if cols is None:
+        return None
+    keys = [c for sets in set_lists for s in sets or () for c in s.cols]
+    return list(dict.fromkeys([*cols, *keys]))
+
+
+def _apply_deletes(batch, chunk: int | None, drop, hits=None, names=None):
+    """``batch`` (rows of ``chunk``) without the rows a set of ``drop``
+    deletes and, given ``hits``, with only the rows a set of ``hits``
+    does delete (a change-data read's "deleted by these files"),
+    projected to ``names`` (default: all). The package's one delete
+    rule: every read that applies deletes calls it per block row."""
+    keep = np.ones(batch.num_rows, dtype=bool)
+    for s in drop:
+        keep &= ~s.mask(batch, chunk)
+    if hits is not None:
+        hit = np.zeros(batch.num_rows, dtype=bool)
+        for s in hits:
+            hit |= s.mask(batch, chunk)
+        keep &= hit
+    if not keep.all():
+        batch = batch.filter(pa.array(keep))
+    return batch if names is None else batch.select(names)
 
 
 # -------------------------------------------------------------- decode ----
@@ -359,11 +469,7 @@ def iter_blocks(
     from .scan import _block_rows, _colspecs, _eq_rows
 
     out_names = [s[0] for s in _colspecs(man, cols)]
-    dec_cols = None
-    if cols is not None:
-        dcols = [c for kc, _, _ in deletes for c in kc]
-        dec_cols = list(dict.fromkeys(list(cols) + dcols))
-    specs = _colspecs(man, dec_cols)
+    specs = _colspecs(man, _decode_cols(cols, deletes))
     schema = arrow_schema(specs)
     blob_names, block_rows = _block_rows(man, specs)
     first: list[str] = []
@@ -372,10 +478,9 @@ def iter_blocks(
         first, first_rows = _block_rows(man, [s for s in specs if s[0] == fname])
 
     def units():
-        """``(live deletes, dec, hit)`` per selected block row: its
-        payloads read, its decode not yet run."""
+        """``(chunk, dec, hit)`` per selected block row: its payloads
+        read, its decode not yet run."""
         for sel in sels:
-            live = _live_deletes(deletes, sel.chunk)
             pf = pq.ParquetFile(sel.path)
             have = set(pf.schema_arrow.names)
 
@@ -406,10 +511,10 @@ def iter_blocks(
                             t = t.append_column(b, t2[b])
                     hits = [found[i] for i in keep]
                 for i, _, dec in block_rows(t):
-                    yield live, dec, None if hits is None else hits[i]
+                    yield sel.chunk, dec, None if hits is None else hits[i]
 
     def decode(unit) -> pa.RecordBatch:
-        live, dec, hit = unit
+        chunk, dec, hit = unit
         if hit is None:
             arrays = [dec(name) for name, _, _ in specs]
         else:
@@ -423,9 +528,7 @@ def iter_blocks(
              for a, f in zip(arrays, schema)],
             schema=schema,
         )
-        if live:
-            batch = _drop_deleted(batch, live)
-        return batch.select(out_names)
+        return _apply_deletes(batch, chunk, deletes, names=out_names)
 
     for batch in driver_map(decode, units(), threads):
         if batch.num_rows:

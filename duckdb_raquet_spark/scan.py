@@ -512,10 +512,10 @@ def decode_blocks(
 
     ``_deletes`` (``reader.load_deletes`` sets, loaded once on the
     driver and shipped in the closure) drop each block row's deleted
-    rows by the package's one delete rule: the sets live for the row's
-    chunk (``reader._live_deletes``), then ``reader._deleted_mask``.
-    ``_hits`` (sets of the same form) keeps only the rows a live set
-    does delete, the change-data reads' "deleted by these files". With
+    rows by the package's one delete rule, ``reader._apply_deletes``
+    with the row's chunk; each set's lookup is built once per task.
+    ``_hits`` (sets of the same form) keeps only the rows a set does
+    delete, the change-data reads' "deleted by these files". With
     either, the ``chunk`` partition column and the key columns are read
     too and the rows project back to ``cols``."""
     import pyarrow as pa
@@ -527,16 +527,14 @@ def decode_blocks(
     if eq_filter is not None and eq_filter[0] not in {s[0] for s in out_specs}:
         raise ValueError(f"eq_filter column {eq_filter[0]!r} not in decode set")
     filtering = bool(_deletes) or _hits is not None
-    dcols = [c for kc, _, _ in [*_deletes, *(_hits or ())] for c in kc]
+    dcols = [c for d in [*_deletes, *(_hits or ())] for c in d.cols]
     unknown = set(dcols) - {c["name"] for c in man["columns"]}
     if unknown:
         raise ValueError(
             f"delete files reference missing columns {sorted(unknown)} "
             "(renamed or dropped after the delete?)"
         )
-    specs = out_specs
-    if cols is not None and dcols:
-        specs = _colspecs(man, list(dict.fromkeys([*cols, *dcols])))
+    specs = _colspecs(man, reader._decode_cols(cols, _deletes, _hits))
     blob_names, block_rows = _block_rows(man, specs)
     needed = [BLOCK, SALT, "n_rows"] + blob_names
     # chunk is the partition column of the chunked layout: each block
@@ -592,23 +590,13 @@ def decode_blocks(
     key_cols = [BLOCK, SALT] if with_block else []
 
     def fn(batches):
-        live: dict = {}  # chunk -> (live deletes, live hits)
         for rb in batches:
             keys = [rb.column(c).to_pylist() for c in key_cols]
             chunks = rb.column("chunk").to_pylist() if chunked else None
             for i, n, dec in block_rows(rb):
-                drop = hits = None
-                if filtering:
-                    c = chunks[i] if chunked else None
-                    if c not in live:
-                        live[c] = (
-                            reader._live_deletes(_deletes, c),
-                            None if _hits is None
-                            else reader._live_deletes(_hits, c),
-                        )
-                    drop, hits = live[c]
-                    if hits == []:
-                        continue  # no set deletes rows of this chunk
+                chunk = chunks[i] if chunked else None
+                if _hits is not None and not reader._live(_hits, chunk):
+                    continue  # no set deletes rows of this chunk
                 take_idx = None
                 decoded: dict[str, pa.Array] = {}
                 if eq_filter is not None:
@@ -621,6 +609,7 @@ def decode_blocks(
                         continue
                     take_idx = pa.array(idx)
                     decoded[fname] = farr.take(take_idx)
+                    n = len(idx)
                 arrays = []
                 for name, _, _ in specs:
                     arr = decoded.get(name)
@@ -629,24 +618,21 @@ def decode_blocks(
                         if take_idx is not None:
                             arr = arr.take(take_idx)
                     arrays.append(arr)
-                batch = pa.RecordBatch.from_arrays(
-                    [
-                        a.cast(f.type) if a.type != f.type else a
-                        for a, f in zip(arrays, dec_schema)
-                    ],
-                    schema=dec_schema,
-                )
                 if filtering:
-                    keep = ~reader._deleted_mask(batch, drop)
-                    if hits is not None:
-                        keep &= reader._deleted_mask(batch, hits)
-                    if not keep.all():
-                        batch = batch.filter(pa.array(keep))
-                    if not batch.num_rows:
+                    batch = reader._apply_deletes(
+                        pa.RecordBatch.from_arrays(
+                            [
+                                a.cast(f.type) if a.type != f.type else a
+                                for a, f in zip(arrays, dec_schema)
+                            ],
+                            schema=dec_schema,
+                        ),
+                        chunk, _deletes, _hits, out_names,
+                    )
+                    n, arrays = batch.num_rows, batch.columns
+                    if not n:
                         continue
-                n = batch.num_rows
-                arrays = [pa.array(np.full(n, k[i])) for k in keys]
-                arrays += [batch.column(name) for name in out_names]
+                arrays = [pa.array(np.full(n, k[i])) for k in keys] + arrays
                 yield pa.RecordBatch.from_arrays(
                     [
                         a.cast(f.type) if a.type != f.type else a
@@ -803,8 +789,8 @@ def purge_deletes(
     """Physically apply a table's equality-delete files into a NEW
     committed table (merge-on-read -> copy-on-write compaction step):
     the :func:`compact_to_path` rewrite with the live deletes applied
-    by the package's one delete rule (``reader._live_deletes`` /
-    ``_drop_deleted``), so the output is compacted too: one row per
+    by the package's one delete rule (``reader._apply_deletes``), so
+    the output is compacted too: one row per
     block key under the row cap. Blocks no live delete touches and
     that are already one row pass through with payloads unread. The
     output table carries no delete files (and fresh chunk ids), so its
@@ -2078,11 +2064,10 @@ def compact_blocks(
     contiguous salted sub-rows of the block-local sort order.
 
     ``_deletes`` (``reader.load_deletes`` sets, shipped in the closure)
-    are dropped from each decoded block row by the in-process reader's
-    rule: the sets live for the row's chunk (``reader._live_deletes``),
-    then an Arrow semi-join (``reader._drop_deleted``). A row any set
-    applies to is decoded even when it is alone in its block, and a
-    block left with no rows emits none. Legacy flat tables (no
+    are dropped from each decoded block row by the package's one delete
+    rule (``reader._apply_deletes`` with the row's chunk). A row some
+    set can apply to is decoded even when it is alone in its block, and
+    a block left with no rows emits none. Legacy flat tables (no
     ``chunk`` column) carry no deletes.
     """
     import pyarrow as pa
@@ -2105,14 +2090,16 @@ def compact_blocks(
         block = key[0]
         block = int(block.as_py() if hasattr(block, "as_py") else block)
         chunks = tbl["chunk"].to_pylist() if _deletes else [None] * tbl.num_rows
-        live = [reader._live_deletes(_deletes, c) for c in chunks]
         total = int(pc.sum(tbl["n_rows"]).as_py() or 0)
-        if tbl.num_rows == 1 and total <= max_rows_per_block and not live[0]:
+        if (
+            tbl.num_rows == 1 and total <= max_rows_per_block
+            and not reader._live(_deletes, chunks[0])
+        ):
             return tbl.select(out_names)  # passthrough: no decode
         parts = []
         for i, _, dec in block_rows(tbl):
             part = pa.table({name: dec(name) for name, _, _ in specs})
-            parts.append(reader._drop_deleted(part, live[i]) if live[i] else part)
+            parts.append(reader._apply_deletes(part, chunks[i], _deletes))
         merged = pa.concat_tables(parts).combine_chunks()
         total = merged.num_rows
         if not total:

@@ -1,6 +1,6 @@
 """A reference for equality deletes that shares no code with the
-package's delete rule (``reader.load_deletes`` / ``_live_deletes`` /
-``_deleted_mask``).
+package's delete rule (``reader.load_deletes`` / ``DeleteSet`` /
+``_apply_deletes``).
 
 Rows decode with no deletes applied, each tagged with its chunk. The
 delete files are read straight with ``pyarrow.parquet``. A row is
@@ -54,13 +54,12 @@ def live_table(
     path: str,
     cols: list[str] | None = None,
     *,
-    snapshot_id: int | None = None,
     staged: str | None = None,
     apply_deletes: bool = True,
 ) -> pa.Table:
-    """The rows of ``path`` at ``snapshot_id`` (default: current), or
-    of the staged commit ``staged``'s view, columns ``cols`` (default:
-    all), with the deletes applied by the reference rule."""
+    """The rows of ``path`` at its current snapshot, or of the staged
+    commit ``staged``'s view, columns ``cols`` (default: all), with the
+    deletes applied by the reference rule."""
     local = path.removeprefix("file://")
     man = scan.read_manifest(spark, path)
     if staged is not None:
@@ -68,8 +67,7 @@ def live_table(
         man = rec["manifest"]
         snap, entries = {"chunks": rec["chunks"]}, man.get("delete_files") or []
     else:
-        snaps = mf.read_snapshots(local)
-        snap = mf.current_snapshot(local) if snapshot_id is None else snaps[snapshot_id]
+        snap = mf.current_snapshot(local)
         # the entries a read at that snapshot sees, renamed columns
         # replayed to the current names
         entries = scan.read_delete_entries(spark, path, snapshot_id=snap["snapshot_id"])

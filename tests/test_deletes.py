@@ -542,3 +542,133 @@ def test_upsert_empty_df_is_noop(spark, tmp_path):
     encode.upsert_rows(spark, web.where(F.lit(False)), path, "url")
     assert mf.current_snapshot(path, spark)["snapshot_id"] == before
     assert scan.read_rows(spark, path).count() == 10
+
+
+def test_delete_set_mask_matches_brute_force(tmp_path):
+    """``reader.load_deletes`` + ``DeleteSet.mask`` against a brute-force
+    rule over keys that trip hash lookups: NULL and NaN keys (never
+    match), int64 keys past 2**53 probed by a column with NULLs, an
+    int32 v1 file merged with an int64 v2 file, naive-ns timestamps
+    merged with aware-us ones, a three-column key, one key in several
+    files under different sequences."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from duckdb_raquet_spark import reader
+
+    big = 2**60
+    ts = lambda us, tz=None: pa.array(us, pa.timestamp("us", tz))
+
+    def write(name, tbl):
+        d = tmp_path / name
+        d.mkdir()
+        pq.write_table(tbl, d / "part-0.parquet")
+        return name
+
+    entries = [
+        {"dir": write("v1", pa.table({"old_id": pa.array([1, 2, None], pa.int32())})),
+         "col": "id", "seq": 1},
+        {"dir": write("v2", pa.table({
+            "_k0": pa.array([2, big + 1, 3], pa.int64()),
+            "_dseq": pa.array([4, 2, 0], pa.int64())})),
+         "cols": ["id"], "seq": 4, "v": 2},
+        {"dir": write("f", pa.table({
+            "_k0": pa.array([0.5, float("nan")]), "_dseq": pa.array([3, 3])})),
+         "cols": ["f"], "seq": 3, "v": 2},
+        {"dir": write("ns", pa.table({
+            "_k0": pa.array(["a", "b"]),
+            "_k1": pa.array([1000, 2000], pa.timestamp("ns")),
+            "_k2": pa.array([7, 7], pa.int64()),
+            "_dseq": pa.array([1, 3])})),
+         "cols": ["u", "t", "id"], "seq": 3, "v": 2},
+        {"dir": write("us", pa.table({
+            "_k0": pa.array(["a", None]),
+            "_k1": ts([1, 2], "UTC"),
+            "_k2": pa.array([7, 7], pa.int64()),
+            "_dseq": pa.array([2, 3])})),
+         "cols": ["u", "t", "id"], "seq": 3, "v": 2},
+    ]
+    sets = reader.load_deletes(str(tmp_path), entries)
+    # merged to distinct non-NULL, non-NaN tuples
+    assert [(s.cols, s.keys.num_rows) for s in sets] == [
+        (("f",), 1), (("id",), 4), (("u", "t", "id"), 2)
+    ]
+
+    # brute force: key tuple -> highest seq, NULL and NaN keys absent
+    horizon = {
+        ("id",): {(1,): 1, (2,): 4, (big + 1,): 2, (3,): 0},
+        ("f",): {(0.5,): 3},
+        ("u", "t", "id"): {("a", 1, 7): 2, ("b", 2, 7): 3},
+    }
+    batch = pa.record_batch({
+        "id": pa.array([1, 2, 3, big, big + 1, None, 7, 7], pa.int64()),
+        "f": pa.array([0.5, float("nan"), None, 1.0, 0.5, 0.5, 2.0, 0.5]),
+        "u": pa.array(["a", "b", "a", "a", None, "b", "a", "b"]),
+        "t": ts([1, 2, 2, 1, 1, 2, 1, 2], "UTC"),
+    })
+    rows = batch.to_pylist()
+    for chunk in (None, 0, 1, 2, 3, 4, 5):
+        want = np.array([
+            any(
+                (chunk or 0) <= horizon[s.cols].get(
+                    tuple(
+                        int(r[c].timestamp() * 1e6) if c == "t" else r[c]
+                        for c in s.cols
+                    ),
+                    -1,
+                )
+                for s in sets
+            )
+            for r in rows
+        ])
+        got = np.zeros(len(rows), dtype=bool)
+        for s in sets:
+            got |= s.mask(batch, chunk)
+        assert got.tolist() == want.tolist(), chunk
+        kept = reader._apply_deletes(batch, chunk, sets, names=["id"])
+        assert kept.column_names == ["id"] and kept.num_rows == (~want).sum()
+
+
+def test_delete_set_lookup_shared_by_threads():
+    """A driver read's decode threads share one ``DeleteSet``: 16
+    threads that probe a fresh set at once, with a short
+    switch interval, all see the full lookup, never a half-built one."""
+    import sys
+    import threading
+
+    import numpy as np
+    import pyarrow as pa
+
+    from duckdb_raquet_spark import reader
+
+    n = 200_000
+    keys = pa.table({
+        "u": pa.array([f"k{i}" for i in range(n)]),
+        "_dseq": pa.array(np.arange(n) % 3, pa.int64()),
+    })
+    probe = pa.record_batch({"u": pa.array([f"k{i}" for i in range(0, 2 * n, 7)])})
+    idx = np.arange(0, 2 * n, 7)
+    want = (idx < n) & (idx % 3 >= 1)  # chunk 1 <= _dseq
+    dset = reader.DeleteSet(("u",), keys)
+    got, errors = [], []
+
+    def run():
+        try:
+            got.append(dset.mask(probe, 1))
+        except Exception as e:  # noqa: BLE001 - reported below
+            errors.append(e)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=run) for _ in range(16)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors and len(got) == len(threads)
+    assert all(g.tolist() == want.tolist() for g in got)
